@@ -7872,7 +7872,7 @@ object SparkEntry {
     // Q315 — curation v11, the FULL-SIGNAL streaming capstone: one
     // pass over on-disk WARCs through the streaming multi-carrier
     // router now yields the final keep-set with EVERY single-pass
-    // signal composed — X-Robots gate, length gate, the two-expression
+    // signal composed — X-Robots gate, length gate, the one-kernel
     // LangId ([[graft.llm.LangId.withCrawlLang]], gating only on a
     // CONFIDENT foreign verdict: lang_total >= 8 AND pred_lang <> 'en'
     // — a two-word function-word tie is no reason to drop a short
@@ -7998,8 +7998,8 @@ object SparkEntry {
     // Q337 — curation v14: the URL gate IN FRONT. q336's pre-fetch
     // filter composes as the capstone's first stage — the domain
     // blocklist (a MAP-SIDE label-boundary expression over the
-    // O(list) literal: arrays_overlap of the host's label-suffix set,
-    // since r18 — the r17 suffix-explode semi-join re-executed the
+    // O(list) literal: one host/suffix comparison per blocked domain
+    // since r21 — the r17 suffix-explode semi-join re-executed the
     // whole WARC router a second time; r17 verdict item 1) and URL
     // term gate run on the router's url column BEFORE any text-level
     // work, so at 100 TB the blocked records' LangId/quality

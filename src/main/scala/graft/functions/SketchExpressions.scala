@@ -82,6 +82,23 @@ case class MinHashSignature(child: Expression, a: Seq[Long], b: Seq[Long])
   * dedups masked values — two 64-bit hashes colliding in the low 31
   * bits are ONE element there). Returns null when tokens < n. */
 private[functions] object ShingleWalk {
+  /** Largest power-of-two JVM array length (2^30). */
+  val MaxTableCapacity: Int = 1 << 30
+
+  /** Dedup-table size for `windows` hashes: the smallest power of two
+    * ≥ 2·windows (at least 16), sized in `Long` so the doubling
+    * cannot wrap `Int`. Past [[MaxTableCapacity]] (more than 2^29
+    * windows) it fails with a clear error rather than loop. */
+  def tableCapacity(windows: Int): Int = {
+    val need = 2L * windows
+    require(need <= MaxTableCapacity,
+      s"ShingleWalk: $windows shingle windows need a $need-slot dedup " +
+        s"table, past the $MaxTableCapacity-slot maximum array size")
+    var cap = 16L
+    while (cap < need) cap <<= 1
+    cap.toInt
+  }
+
   /** (first-occurrence-ordered distinct hashes, count), or null. */
   def distinctWindowHashes(bytes: Array[Byte], n: Int, mask: Long): (Array[Long], Int) = {
     var tokens = 1; var i = 0
@@ -95,8 +112,7 @@ private[functions] object ShingleWalk {
     }
     starts(tokens) = bytes.length + 1 // end of token j is starts(j+1)-1
     val windows = tokens - n + 1
-    var cap = 16
-    while (cap < windows * 2) cap <<= 1
+    val cap = tableCapacity(windows)
     val table = new Array[Long](cap); val used = new Array[Boolean](cap)
     val order = new Array[Long](windows); var cnt = 0
     var w = 0

@@ -161,67 +161,30 @@ object LangId {
       .select(col(idCol), col("pred_lang"), col("lang_score").as("score"),
         col("lang_total").as("total"), col("lang_conf_bp").as("conf_bp"))
 
-  /** The composable form of [[predictCrawl]]: appends `pred_lang`,
-    * `lang_score`, `lang_total`, `lang_conf_bp` while PRESERVING
-    * every existing column — the shape a curation chain needs to
-    * gate rows keyed by more than one column without a join. Same
-    * two single-pass native expressions; map-only, no shuffle. */
+  /** The composable form of [[predictCrawl]]: appends `lang_score`,
+    * `pred_lang`, `lang_total`, `lang_conf_bp` while PRESERVING every
+    * existing column — the shape a curation chain needs to gate rows
+    * keyed by more than one column without a join. The four columns
+    * are the fields of ONE [[graft.functions.CrawlLangScores]] call
+    * (one char walk, one tokenize+probe pass); map-only, no shuffle.
+    *
+    * Cost rule for callers: a filter on these columns inlines the
+    * kernel call once per column it references (Catalyst substitutes
+    * a projected alias per reference, and `FilterExec` does no
+    * common-subexpression elimination), and a higher-order function
+    * anywhere in the same condition takes the filter out of whole-
+    * stage codegen. Gate on as few of the columns as possible, and
+    * keep `transform`/`aggregate`/`filter` lambdas out of the gate. */
   def withCrawlLang(df: DataFrame, textCol: String,
                     profiles: Map[String, CrawlProfile] = CrawlProfiles): DataFrame = {
     require(profiles.nonEmpty, "LangId.withCrawlLang: need at least one profile")
     val langs = profiles.keys.toSeq.sorted
-    // TWO single-pass native expressions compute everything the 31
-    // scores need (the SCALE.md upgrades; previously each script
-    // range cost a regexp_replace pass and each worded language a
-    // higher-order filter over the token array):
-    // [[graft.functions.ScriptBlockCounts]] — one char walk, every
-    // distinct script-block count; [[graft.functions
-    // .ProfileWordHits]] — one tokenize+hash-probe pass, every
-    // language's function-word hit count. Both differential-pinned
-    // against the original formulas in LangIdSpec.
-    val ranges: Seq[(Int, Int)] = langs.flatMap(l =>
-      profiles(l).scripts.map(s => (s._1.toInt, s._2.toInt))).distinct
-    val countsAt: Map[(Int, Int), Int] = ranges.zipWithIndex.toMap
-    val wordLists: Seq[Seq[String]] = langs.map(l => profiles(l).words)
-    val withCounts = {
-      val sc =
-        if (ranges.isEmpty) array().cast("array<bigint>")
-        else graft.functions.ScriptBlockCounts(col(textCol), ranges)
-      df.withColumn("__script_counts", sc)
-        .withColumn("__word_hits",
-          graft.functions.ProfileWordHits(col(textCol), wordLists))
-    }
-    def score(l: String): Column = {
-      val p = profiles(l)
-      val wordPart: Column =
-        if (p.words.isEmpty) lit(0L)
-        else element_at(col("__word_hits"), langs.indexOf(l) + 1)
-      p.scripts.foldLeft(wordPart) { case (acc, (from, to, wt)) =>
-        acc + element_at(col("__script_counts"),
-          countsAt((from.toInt, to.toInt)) + 1) * wt
-      }
-    }
-    // ONE array column carries all 31 scores: the argmax over the
-    // (alphabetically sorted) array IS the alphabetical-first tie
-    // rule, and — critically — every derived column is a SMALL
-    // expression over this single alias, so a predicate pushed down
-    // through the projection substitutes one bounded tree instead of
-    // a 31-branch x 30-comparison WHEN chain (which made downstream
-    // filters explode the analyzed plan).
-    val scored = withCounts.withColumn("__scores",
-      array(langs.map(score): _*))
-    val langLits = array(langs.map(lit): _*)
-    scored
-      .withColumn("lang_score", array_max(col("__scores")))
-      .withColumn("pred_lang", element_at(langLits,
-        array_position(col("__scores"), array_max(col("__scores")))
-          .cast("int")))
-      .withColumn("lang_total", aggregate(col("__scores"),
-        lit(0L), (acc, v) => acc + v))
-      // integer basis points via SQL DIV — exact integer semantics in
-      // both engines, no ROUND half-even/half-up drift
-      .withColumn("lang_conf_bp", expr(
-        "CASE WHEN lang_total > 0 THEN lang_score * 10000 DIV lang_total END"))
-      .drop("__script_counts", "__word_hits", "__scores")
+    val scores = graft.functions.CrawlLangScores(col(textCol), langs,
+      langs.map(profiles(_).words),
+      langs.map(profiles(_).scripts.map { case (from, to, wt) =>
+        (from.toInt, to.toInt, wt) }))
+    graft.functions.CrawlLangScores.resultType.fieldNames
+      .foldLeft(df.withColumn("__lang", scores))((d, f) =>
+        d.withColumn(f, col(s"__lang.$f"))).drop("__lang")
   }
 }

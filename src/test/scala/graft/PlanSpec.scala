@@ -677,8 +677,9 @@ class PlanSpec extends SparkSpec {
     // semi-join whose build side RE-EXECUTED the whole WARC router
     // (a second MapPartitions leg) just to read `url` — doubling the
     // pipeline's dominant decode cost at 100 TB. The blocklist is now
-    // a map-side arrays_overlap over the O(list) literal: exactly one
-    // MapPartitions (the router kernel) and ZERO joins in both plans.
+    // a map-side OR of host/suffix comparisons over the O(list)
+    // literal: exactly one MapPartitions (the router kernel) and ZERO
+    // joins in both plans.
     for (q <- Seq("q337_curation_v14", "q344_curation_v15")) {
       val p = plan(q)
       val nMapPartitions = p.linesIterator.count(_.contains("MapPartitions"))

@@ -82,6 +82,29 @@ class CodegenSpec extends AnyFunSuite {
     assert(genEval(e, null).isNullAt(0))
   }
 
+  test("crawl_lang_scores: generated == interpreted incl. NULL conf, not CodegenFallback") {
+    val e = CrawlLangScores(BoundReference(0, StringType, nullable = true),
+      Seq("aa", "bb", "cc"), Seq(Seq("x", "y"), Seq("y"), Nil),
+      Seq(Nil, Nil, Seq((0x400, 0x4FF, 2))))
+    assert(!e.isInstanceOf[CodegenFallback])
+    def interp(t: String): InternalRow = e.eval(InternalRow(
+      if (t == null) null else UTF8String.fromString(t))).asInstanceOf[InternalRow]
+    for ((t, want) <- Seq(
+        "X y x" -> ((3L, "aa", 4L, Some(7500L))), // case-folded word hits
+        "y z" -> ((1L, "aa", 2L, Some(5000L))), // aa/bb tie: first wins
+        "мир y" -> ((6L, "cc", 8L, Some(7500L))), // script chars × weight
+        "" -> ((0L, "aa", 0L, None)))) { // all zero: NULL confidence
+      val g = genEval(e, t).getStruct(0, 4)
+      val i = interp(t)
+      val got = (g.getLong(0), g.getUTF8String(1).toString, g.getLong(2),
+        if (g.isNullAt(3)) None else Some(g.getLong(3)))
+      assert(got == want, t)
+      assert(got == ((i.getLong(0), i.getUTF8String(1).toString, i.getLong(2),
+        if (i.isNullAt(3)) None else Some(i.getLong(3)))), t)
+    }
+    assert(genEval(e, null).isNullAt(0) && interp(null) == null)
+  }
+
   test("kernel-codegen sweep: every converted expression generates and agrees") {
     // the r17 fallback retirement (KernelCodegen traits): for each
     // expression, generate an UnsafeProjection — which THROWS on bad

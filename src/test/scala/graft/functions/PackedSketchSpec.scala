@@ -126,6 +126,22 @@ class PackedSketchSpec extends SparkSpec {
     assert(gotW == wantW)
   }
 
+  test("ShingleWalk table sizing: Long arithmetic, clear error past 2^29 windows") {
+    // ADVICE r20: `while (cap < windows * 2)` wrapped Int above 2^29
+    // windows and never ended; sizing is now its own function, so the
+    // bounds are checked without a multi-GB input
+    import ShingleWalk.{tableCapacity, MaxTableCapacity}
+    assert(tableCapacity(0) == 16 && tableCapacity(8) == 16)
+    assert(tableCapacity(9) == 32 && tableCapacity(1000) == 2048)
+    assert(tableCapacity(1 << 28) == (1 << 29))
+    assert(tableCapacity((1 << 29) - 1) == MaxTableCapacity)
+    assert(tableCapacity(1 << 29) == MaxTableCapacity)
+    for (w <- Seq((1 << 29) + 1, 1 << 30, Int.MaxValue)) {
+      val e = intercept[IllegalArgumentException](tableCapacity(w))
+      assert(e.getMessage.contains("maximum array size"), e.getMessage)
+    }
+  }
+
   test("BandKeys: equal band words collide, differing band words (almost surely) do not") {
     val sig1 = (0L until 64L).toArray
     val sig2 = sig1.clone; sig2(10) = 999L // band 5 of 32×2 differs

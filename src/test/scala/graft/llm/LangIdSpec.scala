@@ -81,68 +81,91 @@ class LangIdSpec extends SparkSpec {
     assert(got(5L) == "th", got.toString)
   }
 
-  test("single-pass ScriptBlockCounts agrees with the regexp_replace " +
-       "formula on every profile range (differential)") {
+  /** The original 31-score crawl scorer, before any fused kernel: one
+    * `regexp_replace` length diff per script range, one higher-order
+    * `filter`/`array_contains` over the `\s+` tokens per worded
+    * language, the scores in ONE array, `array_max` + `array_position`
+    * for the alphabetical-first argmax, an `aggregate` sum and `DIV`
+    * basis points, appended as lang_score, pred_lang, lang_total,
+    * lang_conf_bp — the reference the fused kernel is pinned to. */
+  private def originalCrawlScorer(df: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
-    val ranges: Seq[(Int, Int)] = LangId.CrawlProfiles.values.toSeq
-      .flatMap(_.scripts.map(s => (s._1.toInt, s._2.toInt))).distinct.sorted
-    val texts = LangId.CrawlSamples.values.toSeq ++ Seq(
+    val langs = LangId.CrawlProfiles.keys.toSeq.sorted
+    val toks = split(lower(col("text")), "\\s+")
+    def scriptCount(f: Char, t: Char) =
+      (length(col("text")) -
+        length(regexp_replace(col("text"), s"[$f-$t]", ""))).cast("long")
+    val scores = array(langs.map { l =>
+      val p = LangId.CrawlProfiles(l)
+      val words = array(p.words.map(lit): _*)
+      val wordPart =
+        if (p.words.isEmpty) lit(0L)
+        else size(filter(toks, t => array_contains(words, t))).cast("long")
+      p.scripts.foldLeft(wordPart) { case (acc, (f, t, wt)) =>
+        acc + scriptCount(f, t) * wt }
+    }: _*)
+    val argmax = array_position(col("__scores"), array_max(col("__scores")))
+      .cast("int")
+    df.withColumn("__scores", scores)
+      .withColumn("lang_score", array_max(col("__scores")))
+      // guarded: under ANSI, element_at over a null-free array declares
+      // a non-null result even for a null index, and the null-text row
+      // then fails the projection instead of yielding NULL
+      .withColumn("pred_lang", when(argmax.isNotNull,
+        element_at(array(langs.map(lit): _*), argmax)))
+      .withColumn("lang_total", aggregate(col("__scores"), lit(0L),
+        (acc, v) => acc + v))
+      .withColumn("lang_conf_bp", expr(
+        "CASE WHEN lang_total > 0 THEN lang_score * 10000 DIV lang_total END"))
+  }
+
+  private def langById(scored: org.apache.spark.sql.DataFrame)
+      : Map[Long, (Any, Any, Any, Any)] =
+    scored.select("id", "lang_score", "pred_lang", "lang_total", "lang_conf_bp")
+      .collect().map(r => r.getLong(0) -> ((r.get(1), r.get(2), r.get(3), r.get(4))))
+      .toMap
+
+  /** Rows every differential below adds to its own inputs: null text,
+    * empty text, an all-zero score (→ the first language, conf NULL)
+    * and ties — a stopword four profiles share, and Cyrillic script
+    * with no function word (ru/uk/bg score equal). */
+  private val edgeTexts: Seq[String] =
+    Seq(null, "", "xyzzy plugh", "que", "привет мир")
+
+  private def assertFusedMatchesOriginal(texts: Seq[String]): Unit = {
+    val all = texts ++ edgeTexts
+    val df = all.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("id", "text")
+    val fused = langById(LangId.withCrawlLang(df, "text"))
+    val original = langById(originalCrawlScorer(df))
+    all.indices.foreach { i =>
+      assert(fused(i.toLong) == original(i.toLong),
+        s"text $i: ${all(i)}: fused ${fused(i.toLong)} vs original " +
+          s"${original(i.toLong)}")
+    }
+    val base = texts.length
+    assert(fused(base.toLong) == ((null, null, null, null)), "null in, null out")
+    assert(fused(base + 2L) == ((0L, "ar", 0L, null)), "all-zero row")
+    assert(fused(base + 3L) == ((1L, "ca", 4L, 2500L)), "ca/es/fr/pt tie")
+    assert(fused(base + 4L) == ((9L, "bg", 27L, 3333L)), "bg/ru/uk tie")
+  }
+
+  test("single-pass CrawlLangScores agrees with the original regexp_replace " +
+       "scorer on every profile range (differential)") {
+    assertFusedMatchesOriginal(LangId.CrawlSamples.values.toSeq ++ Seq(
       "plain ascii only",
       "mixed это ไทย 한국어 かな 中文 ωμέγα עברית مرحبا हिन्दी",
       "", "😀 emoji outside every block 🎉",
-      "edge chars: Ѐӿ฀๿぀ゟ")
-    val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
-      .toDF("id", "text")
-    val viaExpr = df.select(col("id"),
-      graft.functions.ScriptBlockCounts(col("text"), ranges).as("c"))
-      .as[(Long, Seq[Long])].collect().toMap
-    val viaRegex = df.select(
-      (col("id") +: ranges.zipWithIndex.map { case ((f, t), k) =>
-        (length(col("text")) - length(regexp_replace(col("text"),
-          s"[${f.toChar}-${t.toChar}]", ""))).cast("long").as(s"r$k")
-      }): _*).collect().map(r =>
-        r.getLong(0) -> ranges.indices.map(k => r.getLong(k + 1))).toMap
-    texts.indices.foreach { i =>
-      assert(viaExpr(i.toLong) == viaRegex(i.toLong),
-        s"text $i: ${texts(i)}")
-    }
-    // null text nulls out, and the expression survives a null column
-    val n = Seq((1L, null.asInstanceOf[String])).toDF("id", "text")
-      .select(graft.functions.ScriptBlockCounts(col("text"), ranges).as("c"))
-      .collect()
-    assert(n.head.isNullAt(0))
+      "edge chars: Ѐӿ฀๿぀ゟ"))
   }
 
-  test("single-pass ProfileWordHits agrees with the filter/" +
-       "array_contains formula on every profile (differential)") {
-    import org.apache.spark.sql.functions._
-    val langs = LangId.CrawlProfiles.keys.toSeq.sorted
-    val wordLists = langs.map(l => LangId.CrawlProfiles(l).words)
-    val texts = LangId.CrawlSamples.values.toSeq ++ Seq(
+  test("single-pass CrawlLangScores agrees with the original filter/" +
+       "array_contains scorer on every profile (differential)") {
+    assertFusedMatchesOriginal(LangId.CrawlSamples.values.toSeq ++ Seq(
       "the the THE tHe of and", // multiplicity + case folding
       "  leading and trailing  ", // \s+ split's empty-token edge
       "de het een the der die el que", // words shared across profiles
-      "tabs\tand\nnewlines the of", "", "no stopwords here xyzzy")
-    val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
-      .toDF("id", "text")
-    val viaExpr = df.select(col("id"),
-      graft.functions.ProfileWordHits(col("text"), wordLists).as("h"))
-      .as[(Long, Seq[Long])].collect().toMap
-    val toks = split(lower(col("text")), "\\s+")
-    val viaHof = df.select(
-      (col("id") +: langs.zipWithIndex.map { case (l, k) =>
-        val words = array(LangId.CrawlProfiles(l).words.map(lit): _*)
-        (if (LangId.CrawlProfiles(l).words.isEmpty) lit(0L)
-         else size(filter(toks, t => array_contains(words, t))).cast("long"))
-          .as(s"w$k")
-      }): _*).collect().map(r =>
-        r.getLong(0) -> langs.indices.map(k => r.getLong(k + 1))).toMap
-    texts.indices.foreach { i =>
-      assert(viaExpr(i.toLong) == viaHof(i.toLong), s"text $i: ${texts(i)}")
-    }
-    val n = Seq((1L, null.asInstanceOf[String])).toDF("id", "text")
-      .select(graft.functions.ProfileWordHits(col("text"), wordLists).as("h"))
-      .collect()
-    assert(n.head.isNullAt(0))
+      "tabs\tand\nnewlines the of", "", "no stopwords here xyzzy"))
   }
 }
