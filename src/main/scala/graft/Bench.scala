@@ -452,6 +452,47 @@ object Bench {
     }
   }
 
+  // 10× documents for the dedup-family scale trends: replica-tagged
+  // ids AND replica-tagged words (see the q27_x10 comment in main).
+  // Word tagging is the native [[TagWords]] byte pass — byte-exact
+  // with the r19 regexp_replace form (BenchFixtureSpec pins it),
+  // minus the per-document Java-regex scan the four x10 entries
+  // were paying inside their timed windows (optimization r20).
+  // Spread over `partitions` (main passes the session's parallelism —
+  // executor cores on a cluster): the base fixture is one parquet
+  // file = one task.
+  private[graft] def docsX10(spark: SparkSession, dir: String,
+                             partitions: Int) = {
+    import org.apache.spark.sql.functions._
+    spark.read.parquet(s"$dir/documents.parquet")
+      .crossJoin(spark.range(10).select(col("id").as("rep")))
+      .select((col("doc_id") * 10 + col("rep")).as("doc_id"),
+        TagWords(col("text"), col("rep")).as("text"))
+      .repartition(partitions)
+  }
+
+  // 10× embeddings: replicas carry their replica id as a SCOPE
+  // column (q37_x10 passes it as cosineNearDupsLsh's scopeCols), so
+  // cross-replica pairs are STRUCTURALLY impossible — the pair
+  // structure replicates exactly 10× (the embedding analogue of
+  // docsX10's word tagging; an earlier sign-flip-only construction
+  // was merely statistical). The per-replica sign flips remain so
+  // the ten replicas don't produce ten identical bucket histograms
+  // (same per-scope occupancy, more realistic key spread). Within a
+  // replica both vectors of a pair flip identically — every cosine
+  // is preserved exactly.
+  private[graft] def embX10(spark: SparkSession, dir: String,
+                            partitions: Int) = {
+    import org.apache.spark.sql.functions._
+    spark.read.parquet(s"$dir/embeddings.parquet")
+      .crossJoin(spark.range(10).select(col("id").as("rep")))
+      .select((col("vec_id") * 10 + col("rep")).as("vec_id"), col("rep"),
+        transform(col("embedding"), (x, i) =>
+          (x * (pmod(hash(col("rep"), i), lit(2)) * 2 - 1)).cast("float"))
+          .as("embedding"))
+      .repartition(partitions)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -577,41 +618,8 @@ object Bench {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
     }
 
-    // 10× documents for the dedup-family scale trends: replica-tagged
-    // ids AND replica-tagged words (see the q27_x10 comment below).
-    // Word tagging is the native [[TagWords]] byte pass — byte-exact
-    // with the r19 regexp_replace form (BenchFixtureSpec pins it),
-    // minus the per-document Java-regex scan the four x10 entries
-    // were paying inside their timed windows (optimization r20).
-    def docsX10(spark: SparkSession, dir: String) = {
-      import org.apache.spark.sql.functions._
-      spark.read.parquet(s"$dir/documents.parquet")
-        .crossJoin(spark.range(10).select(col("id").as("rep")))
-        .select((col("doc_id") * 10 + col("rep")).as("doc_id"),
-          TagWords(col("text"), col("rep")).as("text"))
-        .repartition(32)
-    }
-
-    // 10× embeddings: replicas carry their replica id as a SCOPE
-    // column (q37_x10 passes it as cosineNearDupsLsh's scopeCols), so
-    // cross-replica pairs are STRUCTURALLY impossible — the pair
-    // structure replicates exactly 10× (the embedding analogue of
-    // docsX10's word tagging; an earlier sign-flip-only construction
-    // was merely statistical). The per-replica sign flips remain so
-    // the ten replicas don't produce ten identical bucket histograms
-    // (same per-scope occupancy, more realistic key spread). Within a
-    // replica both vectors of a pair flip identically — every cosine
-    // is preserved exactly.
-    def embX10(spark: SparkSession, dir: String) = {
-      import org.apache.spark.sql.functions._
-      spark.read.parquet(s"$dir/embeddings.parquet")
-        .crossJoin(spark.range(10).select(col("id").as("rep")))
-        .select((col("vec_id") * 10 + col("rep")).as("vec_id"), col("rep"),
-          transform(col("embedding"), (x, i) =>
-            (x * (pmod(hash(col("rep"), i), lit(2)) * 2 - 1)).cast("float"))
-            .as("embedding"))
-        .repartition(32)
-    }
+    // the x10 fixtures' partition count: one task per core
+    val parallelism = spark.sparkContext.defaultParallelism
 
     // On-disk WARC fixture for the split-streaming front door: 8
     // member-per-record .warc.gz files, ~40 MB inflated each (~320 MB
@@ -693,13 +701,14 @@ object Bench {
       // documents (replicated, then spread over the cores — the base
       // fixture is one parquet file = one task, so the x10 also shows
       // what the partitioned layout buys). Linear per-doc cost is the
-      // claim; wall-clock should grow ~10×/32-way-parallel.
+      // claim; wall-clock should grow ~10× divided by the session
+      // parallelism.
       "q64_x10" -> (() => noopRun {
         import org.apache.spark.sql.functions._
         val d = spark.read.parquet(s"$sfDir/documents.parquet")
           .crossJoin(spark.range(10).select(col("id").as("rep")))
           .select((col("doc_id") * 10 + col("rep")).as("doc_id"), col("text"))
-          .repartition(32)
+          .repartition(parallelism)
         graft.llm.Repetition.signals(d, "doc_id", "text")
       }),
       // Dedup-family scale trends: MinHash sketch→verify and the
@@ -711,13 +720,13 @@ object Bench {
       // measure a different workload, not scaling).
       "q27_x10" -> (() => noopRun {
         graft.llm.Dedup.minHashVerifiedPairs(
-          docsX10(spark, sfDir), "doc_id", "text", 3, 0.5)
+          docsX10(spark, sfDir, parallelism), "doc_id", "text", 3, 0.5)
       }),
       "q49_x10" -> (() => noopRun {
         import org.apache.spark.sql.functions._
         graft.llm.Dedup.components(
           graft.llm.Dedup.minHashVerifiedPairs(
-            docsX10(spark, sfDir), "doc_id", "text", 3, 0.5))
+            docsX10(spark, sfDir, parallelism), "doc_id", "text", 3, 0.5))
           .groupBy("comp_id")
           .agg(count(lit(1)).as("n_docs"), sum("id").as("id_sum"))
       }),
@@ -726,7 +735,7 @@ object Bench {
       // so the claim under test is linear pair growth.
       "q150_x10" -> (() => noopRun {
         import org.apache.spark.sql.functions._
-        graft.llm.SetSimJoin.jaccardPairs(docsX10(spark, sfDir),
+        graft.llm.SetSimJoin.jaccardPairs(docsX10(spark, sfDir, parallelism),
             "doc_id", "text", 1, 2, ngram = 3)
           .select(col("id1"), col("id2"), col("inter"), col("n1"), col("n2"))
       }),
@@ -739,7 +748,7 @@ object Bench {
       // the engine's actual 100 TB recipe: more planes, same math.
       "q37_x10" -> (() => noopRun {
         graft.llm.Similarity.cosineNearDupsLsh(
-          embX10(spark, sfDir), 64, 0.35, nPlanes = 12,
+          embX10(spark, sfDir, parallelism), 64, 0.35, nPlanes = 12,
           scopeCols = Seq("rep"))
       }),
       // Exact-substring extents at 10×: docsX10's replica-tagged words
@@ -749,7 +758,7 @@ object Bench {
       // plan's linear growth in corpus positions.
       "q217_x10" -> (() => noopRun {
         graft.llm.ExactSubstring.duplicatedExtents(
-          docsX10(spark, sfDir), "doc_id", "text", 8)
+          docsX10(spark, sfDir, parallelism), "doc_id", "text", 8)
       }),
       // The split-streaming crawl front door at its design scale:
       // ~320 MB of member-per-record gzip WARC across 8 on-disk files

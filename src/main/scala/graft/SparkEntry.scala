@@ -87,8 +87,8 @@ object SparkEntry {
   private def emb(s: SparkSession, d: String) = Tables.embeddings(s, d)
 
   /** q266's per-id AVI bytes (junk every 50th id) — a pure function
-    * of the id, shared by the on-disk fixture writer
-    * ([[aviV6FixturePaths]]) and the r20 ProfileStages synthesis
+    * of the id, shared by the on-disk fixture (`avi_v6_v1` in
+    * [[diskFixtures]]) and the r20 ProfileStages synthesis
     * probe. Building ~4,900 AVIs per run in-plan was ~half the
     * entry's cpu_sec (fixture apparatus, not engine work —
     * optimization r20 item 3, following the q344 on-disk pattern). */
@@ -117,27 +117,6 @@ object SparkEntry {
     docIds(s, d).map(id => (id, q266AviBytes(id))).toDF("doc_id", "vid")
   }
 
-  /** On-disk fixture for curation v6 (q266): one AVI (or junk) file
-    * per doc id, bytes identical to the r19 in-plan synthesis
-    * (existence-keyed, tmp-write-rename — the q344 discipline), so
-    * the timed entry measures the decode+pipeline, not the fixture
-    * encoder. */
-  private def aviV6FixturePaths(s: SparkSession, d: String): Seq[String] = {
-    import s.implicits._
-    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_avi_v6_v1_${Integer.toHexString(d.hashCode)}")
-    docIds(s, d).map { id =>
-      val f = new java.io.File(dir, f"v$id%08d.avi")
-      if (!f.exists) {
-        dir.mkdirs()
-        val tmp = java.io.File.createTempFile("av6tmp", ".part", dir)
-        val out = new java.io.FileOutputStream(tmp)
-        try out.write(q266AviBytes(id)) finally out.close()
-        if (!tmp.renameTo(f)) tmp.delete()
-      }
-      f.getAbsolutePath
-    }.collect().toSeq.sorted
-  }
 
   // PNG fixture plumbing shared by q242/q244/q249 (executor-side:
   // static object methods serialize as calls, not captured state)
@@ -543,34 +522,82 @@ object SparkEntry {
     }
     out
   }
+  /** One WARC record around `payload` — the framing every WARC
+    * fixture shares. A null `uri` leaves out WARC-Target-URI;
+    * `headers` (CRLF-terminated lines) go just before Content-Length
+    * (q334's digest and refers-to fields). */
+  private def warcRecord(wtype: String, uri: String, payload: Array[Byte],
+                         headers: String = ""): Array[Byte] =
+    (s"WARC/1.0\r\nWARC-Type: $wtype\r\n" +
+      (if (uri != null) s"WARC-Target-URI: $uri\r\n" else "") + headers +
+      s"Content-Length: ${payload.length}\r\n\r\n").getBytes("ISO-8859-1") ++
+      payload ++ "\r\n\r\n".getBytes("ISO-8859-1")
+  /** One HTTP/1.1 response. `status` carries the reason phrase
+    * (`200 OK`, `301 Moved`, `200 X`); `headers` (CRLF-terminated
+    * lines) follow Content-Type. */
+  private def httpResponse(status: String, ctype: String, body: Array[Byte],
+                           headers: String = ""): Array[Byte] =
+    s"HTTP/1.1 $status\r\nContent-Type: $ctype\r\n$headers\r\n"
+      .getBytes("ISO-8859-1") ++ body
+  /** A `200 OK` response record — the page form most fixtures use. */
+  private def warcRespRec(uri: String, ctype: String, body: Array[Byte],
+                          extra: String = ""): Array[Byte] =
+    warcRecord("response", uri, httpResponse("200 OK", ctype, body, extra))
+  /** A bodiless 3xx response record moving `uri` to `loc`; `status`
+    * carries the reason phrase, as in [[httpResponse]]. */
+  private def warcRedirect(uri: String, status: String, loc: String,
+                           ctype: String = "text/html"): Array[Byte] =
+    warcRecord("response", uri, httpResponse(status, ctype,
+      Array.emptyByteArray, s"Location: $loc\r\n"))
+  private def warcInfo: Array[Byte] =
+    warcRecord("warcinfo", null, "software: graft\r\n".getBytes("ISO-8859-1"))
+  private def warcRequest(uri: String): Array[Byte] =
+    warcRecord("request", uri, "GET / HTTP/1.1\r\n\r\n".getBytes("ISO-8859-1"))
+  /** The 404 and image/png responses a text pass must exclude. */
+  private def warcExcluded(id: Long): Array[Byte] =
+    warcRecord("response", s"http://ex.com/$id/gone", httpResponse("404 OK",
+      "text/html", s"<p>gone $id</p>".getBytes("UTF-8"))) ++
+      warcRespRec(s"http://ex.com/$id/img", "image/png",
+        s"PNGDATA$id".getBytes("UTF-8"))
+
+  /** Junk bytes (`<kind>? no`) every 50th id, so the loud-drop path
+    * has work; `mk` otherwise. */
+  private def junkEvery50th(id: Long, kind: String)(
+      mk: => Array[Byte]): Array[Byte] =
+    if (id % 50 == 0) s"$kind? no".getBytes("UTF-8") else mk
+  private def gzipEvery4th(id: Long, b: Array[Byte]): Array[Byte] =
+    if (id % 4 == 1) gzipBytes(b) else b
+  /** The crawl container rule: junk every 50th id, gzip every 4th. */
+  private def warcContainer(id: Long)(records: => Array[Byte]): Array[Byte] =
+    junkEvery50th(id, "warc")(gzipEvery4th(id, records))
+  /** `z`-compressed, as TWO concatenated frames every 4th id (the split
+    * is deliberately mid-record — frames are a transport layer, not a
+    * record layer). */
+  private def twoFramesEvery4th(id: Long, b: Array[Byte])(
+      z: Array[Byte] => Array[Byte]): Array[Byte] =
+    if (id % 4 == 1) z(b.take(b.length / 2)) ++ z(b.drop(b.length / 2))
+    else z(b)
+  /** In-plan `(doc_id, warc)` payload frame: `mk(id)` per document,
+    * junk every 50th id. */
+  private def warcPayloads(s: SparkSession, d: String)(
+      mk: Long => Array[Byte]): DataFrame = {
+    import s.implicits._
+    docIds(s, d).map(id => (id, junkEvery50th(id, "warc")(mk(id))))
+      .toDF("doc_id", "warc")
+  }
+
   /** WARC fixture (q270/q271): warcinfo, then per page a request +
     * response pair (text/html 200), then a 404 and an image/png
     * response — both of which the text pass must exclude. Fixed-width
     * HTTP preamble (44 bytes + body) keeps Content-Length
     * SQL-replayable. */
   private def warcFixture(id: Long): Array[Byte] = {
-    def rec(wtype: String, uri: String, payload: Array[Byte]): Array[Byte] = {
-      val hdr = (s"WARC/1.0\r\nWARC-Type: $wtype\r\n" +
-        (if (uri != null) s"WARC-Target-URI: $uri\r\n" else "") +
-        s"Content-Length: ${payload.length}\r\n\r\n").getBytes("ISO-8859-1")
-      hdr ++ payload ++ "\r\n\r\n".getBytes("ISO-8859-1")
-    }
-    def http(status: Int, ctype: String, body: String): Array[Byte] =
-      (s"HTTP/1.1 $status OK\r\nContent-Type: $ctype\r\n\r\n")
-        .getBytes("ISO-8859-1") ++ body.getBytes("UTF-8")
-    val np = (1 + id % 2).toInt
-    val pages = (0 until np).flatMap { j =>
+    val pages = (0 until (1 + id % 2).toInt).flatMap { j =>
       val uri = s"http://ex.com/$id/$j"
-      rec("request", uri, "GET / HTTP/1.1\r\n\r\n".getBytes("ISO-8859-1")) ++
-        rec("response", uri, http(200, "text/html",
-          s"<h1>Page $id $j</h1><p>text $id &amp; $j</p>"))
+      warcRequest(uri) ++ warcRespRec(uri, "text/html",
+        s"<h1>Page $id $j</h1><p>text $id &amp; $j</p>".getBytes("UTF-8"))
     }
-    rec("warcinfo", null, "software: graft\r\n".getBytes("ISO-8859-1")) ++
-      pages.toArray ++
-      rec("response", s"http://ex.com/$id/gone",
-        http(404, "text/html", s"<p>gone $id</p>")) ++
-      rec("response", s"http://ex.com/$id/img",
-        http(200, "image/png", s"PNGDATA$id"))
+    warcInfo ++ pages ++ warcExcluded(id)
   }
   /** Mixed-carrier WARC fixture (q289): per document an HTML response
     * AND an application/pdf response (a real PDF from the engine's
@@ -579,28 +606,13 @@ object SparkEntry {
     * Record indexes: warcinfo 0, request 1, html 2, pdf 3, 404 4,
     * png 5. */
   private def warcMixedFixture(id: Long): Array[Byte] = {
-    def rec(wtype: String, uri: String, payload: Array[Byte]): Array[Byte] = {
-      val hdr = (s"WARC/1.0\r\nWARC-Type: $wtype\r\n" +
-        (if (uri != null) s"WARC-Target-URI: $uri\r\n" else "") +
-        s"Content-Length: ${payload.length}\r\n\r\n").getBytes("ISO-8859-1")
-      hdr ++ payload ++ "\r\n\r\n".getBytes("ISO-8859-1")
-    }
-    def http(status: Int, ctype: String, body: Array[Byte]): Array[Byte] =
-      (s"HTTP/1.1 $status OK\r\nContent-Type: $ctype\r\n\r\n")
-        .getBytes("ISO-8859-1") ++ body
     val pdf = graft.sources.Pdf.buildSimplePdf(
       Seq(Seq(s"pdf doc $id", s"second line $id")), flate = id % 2 == 1)
-    rec("warcinfo", null, "software: graft\r\n".getBytes("ISO-8859-1")) ++
-      rec("request", s"http://ex.com/$id/h",
-        "GET / HTTP/1.1\r\n\r\n".getBytes("ISO-8859-1")) ++
-      rec("response", s"http://ex.com/$id/h",
-        http(200, "text/html", s"<p>html $id</p>".getBytes("UTF-8"))) ++
-      rec("response", s"http://ex.com/$id/doc.pdf",
-        http(200, "application/pdf", pdf)) ++
-      rec("response", s"http://ex.com/$id/gone",
-        http(404, "text/html", s"<p>gone $id</p>".getBytes("UTF-8"))) ++
-      rec("response", s"http://ex.com/$id/img",
-        http(200, "image/png", s"PNGDATA$id".getBytes("UTF-8")))
+    warcInfo ++ warcRequest(s"http://ex.com/$id/h") ++
+      warcRespRec(s"http://ex.com/$id/h", "text/html",
+        s"<p>html $id</p>".getBytes("UTF-8")) ++
+      warcRespRec(s"http://ex.com/$id/doc.pdf", "application/pdf", pdf) ++
+      warcExcluded(id)
   }
   /** Multi-carrier curation fixture (q292): quintets (b = id/5)
     * publish the SAME html page under messy URL aliases (case /
@@ -610,15 +622,6 @@ object SparkEntry {
     * too-short page the length gate must drop. Record indexes:
     * warcinfo 0, request 1, html 2, pdf 3, markdown 4, short 5. */
   private def warcV9Fixture(id: Long): Array[Byte] = {
-    def rec(wtype: String, uri: String, payload: Array[Byte]): Array[Byte] = {
-      val hdr = (s"WARC/1.0\r\nWARC-Type: $wtype\r\n" +
-        (if (uri != null) s"WARC-Target-URI: $uri\r\n" else "") +
-        s"Content-Length: ${payload.length}\r\n\r\n").getBytes("ISO-8859-1")
-      hdr ++ payload ++ "\r\n\r\n".getBytes("ISO-8859-1")
-    }
-    def http(ctype: String, body: Array[Byte]): Array[Byte] =
-      (s"HTTP/1.1 200 OK\r\nContent-Type: $ctype\r\n\r\n")
-        .getBytes("ISO-8859-1") ++ body
     val b = id / 5
     val htmlUrl = (id % 3) match {
       case 0 => s"http://EX.com/h/$b"
@@ -629,18 +632,15 @@ object SparkEntry {
       Seq(Seq(s"pdf doc ${b % 7} line one keeps",
         s"pdf doc ${b % 7} line two")), flate = id % 2 == 1)
     val md = s"# Doc $id\n\nmarkdown note $id with [a link](http://x/$id) kept.\n"
-    rec("warcinfo", null, "software: graft\r\n".getBytes("ISO-8859-1")) ++
-      rec("request", htmlUrl,
-        "GET / HTTP/1.1\r\n\r\n".getBytes("ISO-8859-1")) ++
-      rec("response", htmlUrl, http("text/html",
-        (s"<p>html body for bucket $b carries enough words to keep.</p>")
-          .getBytes("UTF-8"))) ++
-      rec("response", s"http://ex.com/d/$id.pdf",
-        http("application/pdf", pdf)) ++
-      rec("response", s"http://ex.com/m/$id", http("text/markdown",
-        md.getBytes("UTF-8"))) ++
-      rec("response", s"http://ex.com/s/$id",
-        http("text/html", "<p>tiny</p>".getBytes("UTF-8")))
+    warcInfo ++ warcRequest(htmlUrl) ++
+      warcRespRec(htmlUrl, "text/html",
+        s"<p>html body for bucket $b carries enough words to keep.</p>"
+          .getBytes("UTF-8")) ++
+      warcRespRec(s"http://ex.com/d/$id.pdf", "application/pdf", pdf) ++
+      warcRespRec(s"http://ex.com/m/$id", "text/markdown",
+        md.getBytes("UTF-8")) ++
+      warcRespRec(s"http://ex.com/s/$id", "text/html",
+        "<p>tiny</p>".getBytes("UTF-8"))
   }
   private def gzipBytes(b: Array[Byte]): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
@@ -648,137 +648,11 @@ object SparkEntry {
     g.write(b); g.close()
     bos.toByteArray
   }
-  /** On-disk WARC fixture for the split-streaming reader (q275/q276):
-    * one file per document under java.io.tmpdir (`w<id>.warc`, q270's
-    * record formulas; gzipped every 4th id, junk bytes every 50th so
-    * the loud-drop path has work). Files are written in EXECUTORS (the
-    * fixture is data, the driver only collects the path strings —
-    * O(files) metadata, the same class as Spark's own file listings)
-    * and cached by existence across runs; tmp-write + rename keeps
-    * concurrent generations safe. ASSUMPTION: executors and the
-    * reader tasks share one filesystem (true for local[N], the only
-    * harness this fixture serves). On a multi-node cluster point the
-    * generation at a shared directory (HDFS/NFS) instead — the reader
-    * itself ([[graft.sources.Warc.warcPathsHtmlText]]) is
-    * location-agnostic. */
-  private def warcStreamFixturePaths(s: SparkSession, d: String): Seq[String] = {
-    import s.implicits._
-    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_warc_stream_v1_${Integer.toHexString(d.hashCode)}")
-    docIds(s, d).map { id =>
-      val f = new java.io.File(dir, f"w$id%08d.warc")
-      if (!f.exists) {
-        dir.mkdirs()
-        val bytes =
-          if (id % 50 == 0) "warc? no".getBytes("UTF-8")
-          else if (id % 4 == 1) gzipBytes(warcFixture(id))
-          else warcFixture(id)
-        val tmp = java.io.File.createTempFile("wtmp", ".part", dir)
-        val out = new java.io.FileOutputStream(tmp)
-        try out.write(bytes) finally out.close()
-        if (!tmp.renameTo(f)) tmp.delete()
-      }
-      f.getAbsolutePath
-    }.collect().toSeq.sorted
-  }
-  /** On-disk TAR fixture for the split-streaming archive reader
-    * (q284): one file per document (`t<id>.tar`; gzipped every 3rd id,
-    * junk bytes every 50th), carrying q269's two BMP members plus a
-    * directory and a text member the media pass must route around.
-    * Same executor-side generation discipline as
-    * [[warcStreamFixturePaths]]. */
-  private def tarStreamFixturePaths(s: SparkSession, d: String): Seq[String] = {
-    import s.implicits._
-    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_tar_stream_v1_${Integer.toHexString(d.hashCode)}")
-    docIds(s, d).map { id =>
-      val f = new java.io.File(dir, f"t$id%08d.tar")
-      if (!f.exists) {
-        dir.mkdirs()
-        val bytes =
-          if (id % 50 == 0) "tar? no".getBytes("UTF-8")
-          else {
-            val t = tarFixture((0 until 2).map(k =>
-              (s"img$k.bmp", bmp24Fixture(10, 8, (x, y) => (
-                ((id * 7 + k * 31 + x * 13 + y * 29) % 256).toInt,
-                ((id * 5 + k * 17 + x * 3 + y * 11) % 256).toInt,
-                ((id * 3 + k * 7 + x + y * 7) % 256).toInt)))) ++
-              Seq("notes/" -> Array.empty[Byte],
-                "note.txt" -> s"doc $id".getBytes("UTF-8")))
-            if (id % 3 == 1) gzipBytes(t) else t
-          }
-        val tmp = java.io.File.createTempFile("ttmp", ".part", dir)
-        val out = new java.io.FileOutputStream(tmp)
-        try out.write(bytes) finally out.close()
-        if (!tmp.renameTo(f)) tmp.delete()
-      }
-      f.getAbsolutePath
-    }.collect().toSeq.sorted
-  }
   private def zstBytes(b: Array[Byte]): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
     val z = new com.github.luben.zstd.ZstdOutputStream(bos)
     z.write(b); z.close()
     bos.toByteArray
-  }
-  /** On-disk .warc.zst fixture (q298): q276's record formulas behind
-    * the zstd door — whole-file single frame normally, TWO
-    * concatenated frames every 4th id (the frame-concatenation form;
-    * the split point is deliberately mid-record — frames are a
-    * transport layer, not a record layer), junk bytes every 50th.
-    * Same executor-side generation discipline as
-    * [[warcStreamFixturePaths]]. */
-  private def warcZstFixturePaths(s: SparkSession, d: String): Seq[String] = {
-    import s.implicits._
-    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_warc_zst_v1_${Integer.toHexString(d.hashCode)}")
-    docIds(s, d).map { id =>
-      val f = new java.io.File(dir, f"w$id%08d.warc.zst")
-      if (!f.exists) {
-        dir.mkdirs()
-        val bytes =
-          if (id % 50 == 0) "warc? no".getBytes("UTF-8")
-          else {
-            val w = warcFixture(id)
-            if (id % 4 == 1)
-              zstBytes(w.take(w.length / 2)) ++ zstBytes(w.drop(w.length / 2))
-            else zstBytes(w)
-          }
-        val tmp = java.io.File.createTempFile("wztmp", ".part", dir)
-        val out = new java.io.FileOutputStream(tmp)
-        try out.write(bytes) finally out.close()
-        if (!tmp.renameTo(f)) tmp.delete()
-      }
-      f.getAbsolutePath
-    }.collect().toSeq.sorted
-  }
-  /** On-disk .tar.zst fixture (q300): q284's member composition
-    * behind the zstd door (every file zstd-compressed; junk every
-    * 50th). */
-  private def tarZstFixturePaths(s: SparkSession, d: String): Seq[String] = {
-    import s.implicits._
-    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_tar_zst_v1_${Integer.toHexString(d.hashCode)}")
-    docIds(s, d).map { id =>
-      val f = new java.io.File(dir, f"t$id%08d.tar.zst")
-      if (!f.exists) {
-        dir.mkdirs()
-        val bytes =
-          if (id % 50 == 0) "tar? no".getBytes("UTF-8")
-          else zstBytes(tarFixture((0 until 2).map(k =>
-            (s"img$k.bmp", bmp24Fixture(10, 8, (x, y) => (
-              ((id * 7 + k * 31 + x * 13 + y * 29) % 256).toInt,
-              ((id * 5 + k * 17 + x * 3 + y * 11) % 256).toInt,
-              ((id * 3 + k * 7 + x + y * 7) % 256).toInt)))) ++
-            Seq("notes/" -> Array.empty[Byte],
-              "note.txt" -> s"doc $id".getBytes("UTF-8"))))
-        val tmp = java.io.File.createTempFile("tztmp", ".part", dir)
-        val out = new java.io.FileOutputStream(tmp)
-        try out.write(bytes) finally out.close()
-        if (!tmp.renameTo(f)) tmp.delete()
-      }
-      f.getAbsolutePath
-    }.collect().toSeq.sorted
   }
   private def bz2Bytes(b: Array[Byte]): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
@@ -794,412 +668,237 @@ object SparkEntry {
     z.write(b); z.close()
     bos.toByteArray
   }
-  /** On-disk .warc.bz2 fixture (q301): q276's record formulas behind
-    * the bzip2 door (the Wikipedia-dump compression) — whole-file
-    * normally, TWO concatenated bz2 members every 4th id, junk every
-    * 50th. */
-  private def warcBz2FixturePaths(s: SparkSession, d: String): Seq[String] = {
-    import s.implicits._
-    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_warc_bz2_v1_${Integer.toHexString(d.hashCode)}")
-    docIds(s, d).map { id =>
-      val f = new java.io.File(dir, f"w$id%08d.warc.bz2")
-      if (!f.exists) {
-        dir.mkdirs()
-        val bytes =
-          if (id % 50 == 0) "warc? no".getBytes("UTF-8")
-          else {
-            val w = warcFixture(id)
-            if (id % 4 == 1)
-              bz2Bytes(w.take(w.length / 2)) ++ bz2Bytes(w.drop(w.length / 2))
-            else bz2Bytes(w)
-          }
-        val tmp = java.io.File.createTempFile("wbtmp", ".part", dir)
-        val out = new java.io.FileOutputStream(tmp)
-        try out.write(bytes) finally out.close()
-        if (!tmp.renameTo(f)) tmp.delete()
-      }
-      f.getAbsolutePath
-    }.collect().toSeq.sorted
-  }
-  /** On-disk .tar.xz fixture (q302): q284's member composition behind
-    * the xz door (junk every 50th). */
-  private def tarXzFixturePaths(s: SparkSession, d: String): Seq[String] = {
-    import s.implicits._
-    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_tar_xz_v1_${Integer.toHexString(d.hashCode)}")
-    docIds(s, d).map { id =>
-      val f = new java.io.File(dir, f"t$id%08d.tar.xz")
-      if (!f.exists) {
-        dir.mkdirs()
-        val bytes =
-          if (id % 50 == 0) "tar? no".getBytes("UTF-8")
-          else xzBytes(tarFixture((0 until 2).map(k =>
-            (s"img$k.bmp", bmp24Fixture(10, 8, (x, y) => (
-              ((id * 7 + k * 31 + x * 13 + y * 29) % 256).toInt,
-              ((id * 5 + k * 17 + x * 3 + y * 11) % 256).toInt,
-              ((id * 3 + k * 7 + x + y * 7) % 256).toInt)))) ++
-            Seq("notes/" -> Array.empty[Byte],
-              "note.txt" -> s"doc $id".getBytes("UTF-8"))))
-        val tmp = java.io.File.createTempFile("txtmp", ".part", dir)
-        val out = new java.io.FileOutputStream(tmp)
-        try out.write(bytes) finally out.close()
-        if (!tmp.renameTo(f)) tmp.delete()
-      }
-      f.getAbsolutePath
-    }.collect().toSeq.sorted
-  }
-  /** On-disk mixed-carrier WARC fixture (q306): q289's
-    * warcMixedFixture files (html + pdf + exclusions; gzipped every
-    * 4th id, junk every 50th) for the STREAMING doc router. */
-  private def warcDocsFixturePaths(s: SparkSession, d: String): Seq[String] = {
-    import s.implicits._
-    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_warc_docs_v1_${Integer.toHexString(d.hashCode)}")
-    docIds(s, d).map { id =>
-      val f = new java.io.File(dir, f"w$id%08d.warc")
-      if (!f.exists) {
-        dir.mkdirs()
-        val bytes =
-          if (id % 50 == 0) "warc? no".getBytes("UTF-8")
-          else {
-            val b = warcMixedFixture(id)
-            if (id % 4 == 1) gzipBytes(b) else b
-          }
-        val tmp = java.io.File.createTempFile("wdtmp", ".part", dir)
-        val out = new java.io.FileOutputStream(tmp)
-        try out.write(bytes) finally out.close()
-        if (!tmp.renameTo(f)) tmp.delete()
-      }
-      f.getAbsolutePath
-    }.collect().toSeq.sorted
-  }
-  /** On-disk fixture for curation v10 (q308): the v9 container PLUS
-    * one header-noindex'd html record (idx 6) whose long UNIQUE text
-    * would survive every other stage — so the X-Robots-Tag gate is
-    * load-bearing in the oracle. Gzipped every 4th id, junk every
-    * 50th. */
-  private def warcV10FixturePaths(s: SparkSession, d: String): Seq[String] = {
-    import s.implicits._
-    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_warc_v10_v1_${Integer.toHexString(d.hashCode)}")
-    docIds(s, d).map { id =>
-      val f = new java.io.File(dir, f"w$id%08d.warc")
-      if (!f.exists) {
-        dir.mkdirs()
-        val bytes =
-          if (id % 50 == 0) "warc? no".getBytes("UTF-8")
-          else {
-            val noindexed = {
-              val body = (s"<p>secret page $id would pass every gate " +
-                "but the publisher opted out.</p>").getBytes("UTF-8")
-              val http = ("HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n" +
-                "X-Robots-Tag: noindex\r\n\r\n").getBytes("ISO-8859-1") ++ body
-              (s"WARC/1.0\r\nWARC-Type: response\r\n" +
-                s"WARC-Target-URI: http://ex.com/n/$id\r\n" +
-                s"Content-Length: ${http.length}\r\n\r\n").getBytes("ISO-8859-1") ++
-                http ++ "\r\n\r\n".getBytes("ISO-8859-1")
-            }
-            val b = warcV9Fixture(id) ++ noindexed
-            if (id % 4 == 1) gzipBytes(b) else b
-          }
-        val tmp = java.io.File.createTempFile("w10tmp", ".part", dir)
-        val out = new java.io.FileOutputStream(tmp)
-        try out.write(bytes) finally out.close()
-        if (!tmp.renameTo(f)) tmp.delete()
-      }
-      f.getAbsolutePath
-    }.collect().toSeq.sorted
-  }
-  /** v11 fixture: the v10 fixture VERBATIM (so survivor parity is by
-    * construction) plus two planted records the new single-pass
-    * signal gates must drop — a confidently-Russian page (the q288
-    * sample text: high lang_total, pred_lang 'ru') and a gibberish
-    * page (low quality score but too weak a language signal to trip
-    * the confident-foreign gate — only the quality gate can drop
-    * it). Same executor-side tmp-write-rename discipline. */
-  private def warcV11FixturePaths(s: SparkSession, d: String): Seq[String] = {
-    import s.implicits._
-    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_warc_v11_v1_${Integer.toHexString(d.hashCode)}")
-    val ruSample = graft.llm.LangId.CrawlSamples("ru")
-    docIds(s, d).map { id =>
-      val f = new java.io.File(dir, f"w$id%08d.warc")
-      if (!f.exists) {
-        dir.mkdirs()
-        val bytes =
-          if (id % 50 == 0) "warc? no".getBytes("UTF-8")
-          else {
-            def rec(uri: String, body: String, extra: String = ""): Array[Byte] = {
-              val payload = body.getBytes("UTF-8")
-              val http = ("HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n" +
-                extra + "\r\n").getBytes("ISO-8859-1") ++ payload
-              (s"WARC/1.0\r\nWARC-Type: response\r\n" +
-                s"WARC-Target-URI: $uri\r\n" +
-                s"Content-Length: ${http.length}\r\n\r\n")
-                .getBytes("ISO-8859-1") ++
-                http ++ "\r\n\r\n".getBytes("ISO-8859-1")
-            }
-            val noindexed = rec(s"http://ex.com/n/$id",
-              s"<p>secret page $id would pass every gate " +
-                "but the publisher opted out.</p>", "X-Robots-Tag: noindex\r\n")
-            val foreign = rec(s"http://ex.com/ru/$id", s"<p>$ruSample</p>")
-            val gibberish = rec(s"http://ex.com/g/$id",
-              "<p>zzz 0101 #### @@@@ !!!! 0101 zzz qqq 0101 xxxx</p>")
-            val b = warcV9Fixture(id) ++ noindexed ++ foreign ++ gibberish
-            if (id % 4 == 1) gzipBytes(b) else b
-          }
-        val tmp = java.io.File.createTempFile("w11tmp", ".part", dir)
-        val out = new java.io.FileOutputStream(tmp)
-        try out.write(bytes) finally out.close()
-        if (!tmp.renameTo(f)) tmp.delete()
-      }
-      f.getAbsolutePath
-    }.collect().toSeq.sorted
-  }
-  /** v12 fixture: the v11 fixture VERBATIM plus the two records the
-    * extraction-confidence gate adjudicates — a CLEAN Type0 PDF
-    * (every CID mapped by its /ToUnicode CMap; must SURVIVE, proving
-    * the gate is a ratio, not a carrier filter) and a no-ToUnicode
-    * SUBSET PDF whose Identity-decoded text reads as perfectly
-    * plausible English (passes length, language, and quality gates —
-    * ONLY the unmapped-code ratio can drop it, which is exactly the
-    * real-web mojibake failure: subset-font CIDs are glyph ids, not
-    * codepoints, and no text-level signal sees it). */
-  private def warcV12FixturePaths(s: SparkSession, d: String): Seq[String] = {
-    import s.implicits._
-    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_warc_v12_v1_${Integer.toHexString(d.hashCode)}")
-    val ruSample = graft.llm.LangId.CrawlSamples("ru")
-    docIds(s, d).map { id =>
-      val f = new java.io.File(dir, f"w$id%08d.warc")
-      if (!f.exists) {
-        dir.mkdirs()
-        val bytes =
-          if (id % 50 == 0) "warc? no".getBytes("UTF-8")
-          else {
-            def rec(uri: String, ctype: String, body: Array[Byte],
-                    extra: String = ""): Array[Byte] = {
-              val http = (s"HTTP/1.1 200 OK\r\nContent-Type: $ctype\r\n" +
-                extra + "\r\n").getBytes("ISO-8859-1") ++ body
-              (s"WARC/1.0\r\nWARC-Type: response\r\n" +
-                s"WARC-Target-URI: $uri\r\n" +
-                s"Content-Length: ${http.length}\r\n\r\n")
-                .getBytes("ISO-8859-1") ++
-                http ++ "\r\n\r\n".getBytes("ISO-8859-1")
-            }
-            val noindexed = rec(s"http://ex.com/n/$id", "text/html",
-              (s"<p>secret page $id would pass every gate " +
-                "but the publisher opted out.</p>").getBytes("UTF-8"),
-              "X-Robots-Tag: noindex\r\n")
-            val foreign = rec(s"http://ex.com/ru/$id", "text/html",
-              s"<p>$ruSample</p>".getBytes("UTF-8"))
-            val gibberish = rec(s"http://ex.com/g/$id", "text/html",
-              "<p>zzz 0101 #### @@@@ !!!! 0101 zzz qqq 0101 xxxx</p>"
-                .getBytes("UTF-8"))
-            val cleanPdf = rec(s"http://ex.com/t0/$id", "application/pdf",
-              graft.sources.Pdf.buildType0Pdf(Seq(Seq(
-                s"Clean type0 page $id keeps the words that the gate needs.")),
-                xrefStream = id % 2 == 0))
-            val subsetPdf = rec(s"http://ex.com/sub/$id", "application/pdf",
-              graft.sources.Pdf.buildType0PdfNoToUnicode(Seq(Seq(
-                s"Subset font page $id would pass the other gates easily."))))
-            val b = warcV9Fixture(id) ++ noindexed ++ foreign ++ gibberish ++
-              cleanPdf ++ subsetPdf
-            if (id % 4 == 1) gzipBytes(b) else b
-          }
-        val tmp = java.io.File.createTempFile("w12tmp", ".part", dir)
-        val out = new java.io.FileOutputStream(tmp)
-        try out.write(bytes) finally out.close()
-        if (!tmp.renameTo(f)) tmp.delete()
-      }
-      f.getAbsolutePath
-    }.collect().toSeq.sorted
-  }
-  /** v13 fixture: the v12 fixture VERBATIM plus the canonical-link
-    * consolidation pair — two html records fetched from DIFFERENT
-    * URLs with DIFFERENT texts, both declaring the SAME (deliberately
-    * denormalized) `link rel=canonical`. URL-keyed dedup on the fetch
-    * URL keeps both; only a key that honors the publisher's canonical
-    * collapses them — the syndication/mirror case URL dedup exists
-    * for. */
-  private def warcV13FixturePaths(s: SparkSession, d: String): Seq[String] = {
-    import s.implicits._
-    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_warc_v13_v1_${Integer.toHexString(d.hashCode)}")
-    val ruSample = graft.llm.LangId.CrawlSamples("ru")
-    docIds(s, d).map { id =>
-      val f = new java.io.File(dir, f"w$id%08d.warc")
-      if (!f.exists) {
-        dir.mkdirs()
-        val bytes =
-          if (id % 50 == 0) "warc? no".getBytes("UTF-8")
-          else {
-            def rec(uri: String, ctype: String, body: Array[Byte],
-                    extra: String = ""): Array[Byte] = {
-              val http = (s"HTTP/1.1 200 OK\r\nContent-Type: $ctype\r\n" +
-                extra + "\r\n").getBytes("ISO-8859-1") ++ body
-              (s"WARC/1.0\r\nWARC-Type: response\r\n" +
-                s"WARC-Target-URI: $uri\r\n" +
-                s"Content-Length: ${http.length}\r\n\r\n")
-                .getBytes("ISO-8859-1") ++
-                http ++ "\r\n\r\n".getBytes("ISO-8859-1")
-            }
-            val noindexed = rec(s"http://ex.com/n/$id", "text/html",
-              (s"<p>secret page $id would pass every gate " +
-                "but the publisher opted out.</p>").getBytes("UTF-8"),
-              "X-Robots-Tag: noindex\r\n")
-            val foreign = rec(s"http://ex.com/ru/$id", "text/html",
-              s"<p>$ruSample</p>".getBytes("UTF-8"))
-            val gibberish = rec(s"http://ex.com/g/$id", "text/html",
-              "<p>zzz 0101 #### @@@@ !!!! 0101 zzz qqq 0101 xxxx</p>"
-                .getBytes("UTF-8"))
-            val cleanPdf = rec(s"http://ex.com/t0/$id", "application/pdf",
-              graft.sources.Pdf.buildType0Pdf(Seq(Seq(
-                s"Clean type0 page $id keeps the words that the gate needs.")),
-                xrefStream = id % 2 == 0))
-            val subsetPdf = rec(s"http://ex.com/sub/$id", "application/pdf",
-              graft.sources.Pdf.buildType0PdfNoToUnicode(Seq(Seq(
-                s"Subset font page $id would pass the other gates easily."))))
-            def dupPage(which: String): Array[Byte] =
-              rec(s"http://ex.com/dup-$which/$id", "text/html",
-                (s"""<html><head><link rel="canonical" """ +
-                  s"""href="HTTP://Ex.COM:80/canon/./$id"></head>""" +
-                  s"<body><p>dup page $which for $id with enough " +
-                  "plain english words to keep.</p></body></html>")
-                  .getBytes("UTF-8"))
-            val b = warcV9Fixture(id) ++ noindexed ++ foreign ++ gibberish ++
-              cleanPdf ++ subsetPdf ++ dupPage("one") ++ dupPage("two")
-            if (id % 4 == 1) gzipBytes(b) else b
-          }
-        val tmp = java.io.File.createTempFile("w13tmp", ".part", dir)
-        val out = new java.io.FileOutputStream(tmp)
-        try out.write(bytes) finally out.close()
-        if (!tmp.renameTo(f)) tmp.delete()
-      }
-      f.getAbsolutePath
-    }.collect().toSeq.sorted
-  }
-  /** v14 fixture: v13 VERBATIM plus the two records only the URL
-    * gate can drop — a blocked-domain fetch and a term-flagged URL,
-    * each carrying long unique clean English text. */
-  /** One WARC response record (the v14/v15 fixture's record form). */
-  private def warcRespRec(uri: String, ctype: String, body: Array[Byte],
-                          extra: String = ""): Array[Byte] = {
-    val http = (s"HTTP/1.1 200 OK\r\nContent-Type: $ctype\r\n" +
-      extra + "\r\n").getBytes("ISO-8859-1") ++ body
-    (s"WARC/1.0\r\nWARC-Type: response\r\n" +
-      s"WARC-Target-URI: $uri\r\n" +
-      s"Content-Length: ${http.length}\r\n\r\n")
-      .getBytes("ISO-8859-1") ++
-      http ++ "\r\n\r\n".getBytes("ISO-8859-1")
-  }
 
-  /** The per-id v14 fixture bytes (pre-gzip) — shared by the v14
-    * paths fixture and v15's (which appends the content-farm arm).
-    * Record indexes: v9's 0–5, noindexed 6, foreign 7, gibberish 8,
-    * clean Type0 PDF 9, subset PDF 10, dup-one 11, dup-two 12,
-    * blocked domain 13, term URL 14. */
-  private def warcV14Bytes(id: Long, ruSample: String): Array[Byte] = {
-    val rec = warcRespRec _
-    val noindexed = rec(s"http://ex.com/n/$id", "text/html",
+  // The curation fixtures v10–v15, each the one before it VERBATIM
+  // plus the records its new gate must adjudicate (so survivor parity
+  // with the previous version holds by construction). Record indexes:
+  // v9's 0–5, noindexed 6, foreign 7, gibberish 8, clean Type0 PDF 9,
+  // subset PDF 10, dup-one 11, dup-two 12, blocked domain 13, term
+  // URL 14, farms 15–17.
+
+  /** v10 (q308): one header-noindex'd html record whose long UNIQUE
+    * text would survive every other stage — so the X-Robots-Tag gate
+    * is load-bearing in the oracle. */
+  private def warcV10Bytes(id: Long): Array[Byte] =
+    warcV9Fixture(id) ++ warcRespRec(s"http://ex.com/n/$id", "text/html",
       (s"<p>secret page $id would pass every gate " +
         "but the publisher opted out.</p>").getBytes("UTF-8"),
       "X-Robots-Tag: noindex\r\n")
-    val foreign = rec(s"http://ex.com/ru/$id", "text/html",
-      s"<p>$ruSample</p>".getBytes("UTF-8"), "")
-    val gibberish = rec(s"http://ex.com/g/$id", "text/html",
-      "<p>zzz 0101 #### @@@@ !!!! 0101 zzz qqq 0101 xxxx</p>"
-        .getBytes("UTF-8"), "")
-    val cleanPdf = rec(s"http://ex.com/t0/$id", "application/pdf",
-      graft.sources.Pdf.buildType0Pdf(Seq(Seq(
-        s"Clean type0 page $id keeps the words that the gate needs.")),
-        xrefStream = id % 2 == 0), "")
-    val subsetPdf = rec(s"http://ex.com/sub/$id", "application/pdf",
-      graft.sources.Pdf.buildType0PdfNoToUnicode(Seq(Seq(
-        s"Subset font page $id would pass the other gates easily."))), "")
-    def dupPage(which: String): Array[Byte] =
-      rec(s"http://ex.com/dup-$which/$id", "text/html",
+  /** v11: two records the single-pass signal gates must drop — a
+    * confidently-Russian page (the q288 sample text: high lang_total,
+    * pred_lang 'ru') and a gibberish page (low quality score but too
+    * weak a language signal to trip the confident-foreign gate — only
+    * the quality gate can drop it). */
+  private def warcV11Bytes(id: Long): Array[Byte] =
+    warcV10Bytes(id) ++
+      warcRespRec(s"http://ex.com/ru/$id", "text/html",
+        s"<p>${graft.llm.LangId.CrawlSamples("ru")}</p>".getBytes("UTF-8")) ++
+      warcRespRec(s"http://ex.com/g/$id", "text/html",
+        "<p>zzz 0101 #### @@@@ !!!! 0101 zzz qqq 0101 xxxx</p>"
+          .getBytes("UTF-8"))
+  /** v12: the two records the extraction-confidence gate adjudicates —
+    * a CLEAN Type0 PDF (every CID mapped by its /ToUnicode CMap; must
+    * SURVIVE, proving the gate is a ratio, not a carrier filter) and a
+    * no-ToUnicode SUBSET PDF whose Identity-decoded text reads as
+    * perfectly plausible English (passes length, language, and quality
+    * gates — ONLY the unmapped-code ratio can drop it, which is exactly
+    * the real-web mojibake failure: subset-font CIDs are glyph ids, not
+    * codepoints, and no text-level signal sees it). */
+  private def warcV12Bytes(id: Long): Array[Byte] =
+    warcV11Bytes(id) ++
+      warcRespRec(s"http://ex.com/t0/$id", "application/pdf",
+        graft.sources.Pdf.buildType0Pdf(Seq(Seq(
+          s"Clean type0 page $id keeps the words that the gate needs.")),
+          xrefStream = id % 2 == 0)) ++
+      warcRespRec(s"http://ex.com/sub/$id", "application/pdf",
+        graft.sources.Pdf.buildType0PdfNoToUnicode(Seq(Seq(
+          s"Subset font page $id would pass the other gates easily."))))
+  /** v13: the canonical-link consolidation pair — two html records
+    * fetched from DIFFERENT URLs with DIFFERENT texts, both declaring
+    * the SAME (deliberately denormalized) `link rel=canonical`.
+    * URL-keyed dedup on the fetch URL keeps both; only a key that
+    * honors the publisher's canonical collapses them — the
+    * syndication/mirror case URL dedup exists for. */
+  private def warcV13Bytes(id: Long): Array[Byte] =
+    warcV12Bytes(id) ++ Seq("one", "two").map { which =>
+      warcRespRec(s"http://ex.com/dup-$which/$id", "text/html",
         (s"""<html><head><link rel="canonical" """ +
           s"""href="HTTP://Ex.COM:80/canon/./$id"></head>""" +
           s"<body><p>dup page $which for $id with enough " +
           "plain english words to keep.</p></body></html>")
-          .getBytes("UTF-8"), "")
-    val blockedDomain = rec(s"http://sub.bad.example/p/$id",
-      "text/html",
-      (s"<p>blocked domain page $id reads perfectly clean " +
-        "and would pass every text gate.</p>").getBytes("UTF-8"), "")
-    val termUrl = rec(s"http://ok.site/xxx-casino/$id",
-      "text/html",
-      (s"<p>term flagged page $id also reads clean and " +
-        "would pass every text gate.</p>").getBytes("UTF-8"), "")
-    warcV9Fixture(id) ++ noindexed ++ foreign ++ gibberish ++
-      cleanPdf ++ subsetPdf ++ dupPage("one") ++ dupPage("two") ++
-      blockedDomain ++ termUrl
-  }
+          .getBytes("UTF-8"))
+    }.reduce(_ ++ _)
+  /** v14: the two records only the URL gate can drop — a
+    * blocked-domain fetch and a term-flagged URL, each carrying long
+    * unique clean English text. */
+  private def warcV14Bytes(id: Long): Array[Byte] =
+    warcV13Bytes(id) ++
+      warcRespRec(s"http://sub.bad.example/p/$id", "text/html",
+        (s"<p>blocked domain page $id reads perfectly clean " +
+          "and would pass every text gate.</p>").getBytes("UTF-8")) ++
+      warcRespRec(s"http://ok.site/xxx-casino/$id", "text/html",
+        (s"<p>term flagged page $id also reads clean and " +
+          "would pass every text gate.</p>").getBytes("UTF-8"))
+  /** v15: the CONTENT-FARM arm — three clean unique pages per id
+    * published from sibling subdomains of farm<id%5>.co.uk, so the
+    * per-registered-domain cap has real dominance to cut: each farm's
+    * eTLD+1 aggregates pages from every id sharing id%5 while
+    * raw-host keying would see them all as distinct "domains". */
+  private def warcV15Bytes(id: Long): Array[Byte] =
+    warcV14Bytes(id) ++ (0 until 3).map { j =>
+      warcRespRec(s"http://a$j.farm${id % 5}.co.uk/f/$id", "text/html",
+        (s"<p>farm page $id $j has enough unique english words " +
+          "to keep around.</p>").getBytes("UTF-8"))
+    }.reduce(_ ++ _)
 
-  /** The q353/v16 WARC fixture — extracted from the query body so the
-    * optimization round's stage profiler can time fixture synthesis
-    * apart from the decode walk and the v16 body. Identical bytes to
-    * the inline r19 construction (the query's computed result is
-    * unchanged). */
-  private[graft] def q353Fixture(s: SparkSession, d: String)
-      : org.apache.spark.sql.DataFrame = {
-    import s.implicits._
-    val ruSample = graft.llm.LangId.CrawlSamples("ru")
-    docIds(s, d).map { id =>
-      if (id % 50 == 0) (id, "warc? no".getBytes("UTF-8"))
-      else {
-        val b = id / 5
-        def redir(uri: String, status: Int, loc: String): Array[Byte] = {
-          val http = (s"HTTP/1.1 $status Moved\r\n" +
-            s"Content-Type: text/html\r\nLocation: $loc\r\n\r\n")
-            .getBytes("ISO-8859-1")
-          (s"WARC/1.0\r\nWARC-Type: response\r\n" +
-            s"WARC-Target-URI: $uri\r\n" +
-            s"Content-Length: ${http.length}\r\n\r\n")
-            .getBytes("ISO-8859-1") ++ http ++
-            "\r\n\r\n".getBytes("ISO-8859-1")
-        }
-        val farms = (0 until 3).map { j =>
-          warcRespRec(s"http://a$j.farm${id % 5}.co.uk/f/$id", "text/html",
-            (s"<p>farm page $id $j has enough unique english words " +
-              "to keep around.</p>").getBytes("UTF-8"))
-        }.reduce(_ ++ _)
-        val moved301 = redir(s"http://ex.com/h-old/$id", 301, s"/h/$b")
-        val movedPage = warcRespRec(s"http://ex.com/h-old/$id",
-          "text/html",
+  /** The q353/v16 WARC fixture: v15's records plus a 301
+    * `h-old/$id → /h/$b` edge, a 200 capture AT h-old, and a planted
+    * 2-cycle with its 200 page — extracted from the query body so the
+    * stage profiler can time fixture synthesis apart from the decode
+    * walk and the v16 body. */
+  private[graft] def q353Fixture(s: SparkSession, d: String): DataFrame =
+    warcPayloads(s, d) { id =>
+      gzipEvery4th(id, warcV15Bytes(id) ++
+        warcRedirect(s"http://ex.com/h-old/$id", "301 Moved", s"/h/${id / 5}") ++
+        warcRespRec(s"http://ex.com/h-old/$id", "text/html",
           (s"<p>moved fetch $id stays clean with plenty of good " +
-            "english words.</p>").getBytes("UTF-8"))
-        val cycPage = warcRespRec(s"http://cyc.example/p/$id",
-          "text/html",
+            "english words.</p>").getBytes("UTF-8")) ++
+        warcRespRec(s"http://cyc.example/p/$id", "text/html",
           (s"<p>cycle page $id keeps enough english words " +
-            "alive.</p>").getBytes("UTF-8"))
-        val cyc301 = redir(s"http://cyc.example/p/$id", 301,
-          s"http://cyc2.example/p/$id")
-        val cyc302 = redir(s"http://cyc2.example/p/$id", 302,
-          s"http://cyc.example/p/$id")
-        val bytes = warcV14Bytes(id, ruSample) ++ farms ++
-          moved301 ++ movedPage ++ cycPage ++ cyc301 ++ cyc302
-        (id, if (id % 4 == 1) gzipBytes(bytes) else bytes)
-      }
-    }.toDF("doc_id", "warc")
+            "alive.</p>").getBytes("UTF-8")) ++
+        warcRedirect(s"http://cyc.example/p/$id", "301 Moved",
+          s"http://cyc2.example/p/$id") ++
+        warcRedirect(s"http://cyc2.example/p/$id", "302 Moved",
+          s"http://cyc.example/p/$id"))
+    }
+
+  /** q269's archive members: two formula BMPs per id. */
+  private def bmpMembers(id: Long): Seq[(String, Array[Byte])] =
+    (0 until 2).map(k => (s"img$k.bmp", bmp24Fixture(10, 8, (x, y) => (
+      ((id * 7 + k * 31 + x * 13 + y * 29) % 256).toInt,
+      ((id * 5 + k * 17 + x * 3 + y * 11) % 256).toInt,
+      ((id * 3 + k * 7 + x + y * 7) % 256).toInt))))
+  /** q284's TAR: the BMP pair plus a directory and a text member the
+    * media pass must route around. */
+  private def tarMembers(id: Long): Array[Byte] =
+    tarFixture(bmpMembers(id) ++ Seq("notes/" -> Array.empty[Byte],
+      "note.txt" -> s"doc $id".getBytes("UTF-8")))
+  /** q287's ZIP: q284's member composition written with
+    * java.util.zip.ZipOutputStream (DEFLATED + data descriptors, the
+    * layout streaming extractors must self-terminate through the
+    * Inflater on); every 3rd id leads with a STORED member (the
+    * sizes-in-local-header layout). The JDK stamps each entry with
+    * the write time, so these files differ between cold writes in the
+    * DOS time/date fields only. */
+  private def zipMembers(id: Long): Array[Byte] = {
+    val bos = new java.io.ByteArrayOutputStream()
+    val zo = new java.util.zip.ZipOutputStream(bos)
+    if (id % 3 == 1) { // stored lead member (no descriptor)
+      val body = s"stored $id".getBytes("UTF-8")
+      val e = new java.util.zip.ZipEntry("lead.txt")
+      e.setMethod(java.util.zip.ZipEntry.STORED)
+      e.setSize(body.length)
+      val crc = new java.util.zip.CRC32(); crc.update(body)
+      e.setCrc(crc.getValue)
+      zo.putNextEntry(e); zo.write(body); zo.closeEntry()
+    }
+    bmpMembers(id).foreach { case (name, body) =>
+      zo.putNextEntry(new java.util.zip.ZipEntry(name))
+      zo.write(body)
+      zo.closeEntry()
+    }
+    zo.putNextEntry(new java.util.zip.ZipEntry("notes/"))
+    zo.closeEntry()
+    zo.putNextEntry(new java.util.zip.ZipEntry("note.txt"))
+    zo.write(s"doc $id".getBytes("UTF-8"))
+    zo.closeEntry()
+    zo.close()
+    bos.toByteArray
   }
 
-  /** Executor-side tmp-file fixture writer shared by the v14/v15
-    * paths fixtures (same discipline as the other warc fixtures:
-    * cached by existence, tmp-write + rename). */
-  private def warcFixtureFiles(s: SparkSession, d: String, tag: String)(
+  /** Every on-disk fixture, by dir tag: the file-name pattern (one
+    * file per doc id) and the per-id file bytes. The query each one
+    * serves is noted beside it; FIXTURES.md has the full table.
+    * The files are cached by existence only (see [[fixtureFiles]]),
+    * so changing any byte of a fixture means bumping its `_vN` tag —
+    * FixtureBytesSpec pins the bytes. */
+  private[graft] lazy val diskFixtures
+      : Map[String, (String, Long => Array[Byte])] = Map(
+    "avi_v6_v1" -> ("v%08d.avi", (id: Long) => q266AviBytes(id)), // q266
+    // q275/q276: q270's records
+    "warc_stream_v1" -> ("w%08d.warc",
+      (id: Long) => warcContainer(id)(warcFixture(id))),
+    // q284: q269's BMP pair in a ustar, gzipped every 3rd id
+    "tar_stream_v1" -> ("t%08d.tar", (id: Long) => junkEvery50th(id, "tar") {
+      val t = tarMembers(id)
+      if (id % 3 == 1) gzipBytes(t) else t
+    }),
+    // q298/q301: q276's records behind the zstd / bzip2 door
+    "warc_zst_v1" -> ("w%08d.warc.zst", (id: Long) =>
+      junkEvery50th(id, "warc")(twoFramesEvery4th(id, warcFixture(id))(zstBytes))),
+    "warc_bz2_v1" -> ("w%08d.warc.bz2", (id: Long) =>
+      junkEvery50th(id, "warc")(twoFramesEvery4th(id, warcFixture(id))(bz2Bytes))),
+    // q300/q302: q284's members behind the zstd / xz door
+    "tar_zst_v1" -> ("t%08d.tar.zst",
+      (id: Long) => junkEvery50th(id, "tar")(zstBytes(tarMembers(id)))),
+    "tar_xz_v1" -> ("t%08d.tar.xz",
+      (id: Long) => junkEvery50th(id, "tar")(xzBytes(tarMembers(id)))),
+    "zip_stream_v1" -> ("z%08d.zip", // q287
+      (id: Long) => junkEvery50th(id, "zip")(zipMembers(id))),
+    // q306: q289's mixed-carrier records, for the streaming router
+    "warc_docs_v1" -> ("w%08d.warc",
+      (id: Long) => warcContainer(id)(warcMixedFixture(id))),
+    // q350: brotli Content-Encoding, alone and under gzip
+    "warc_br_v1" -> ("w%08d.warc", (id: Long) => junkEvery50th(id, "warc") {
+      val entity = (s"<h1>Doc $id</h1><p>brotli payload $id " +
+        "restores exactly.</p>").getBytes("UTF-8")
+      val html = "text/html; charset=utf-8"
+      warcRespRec(s"http://ex.com/br/$id", html,
+        graft.sources.Brotli.encodeUncompressed(entity),
+        "Content-Encoding: br\r\n") ++
+        warcRespRec(s"http://ex.com/brgz/$id", html,
+          graft.sources.Brotli.encodeUncompressed(gzipBytes(entity)),
+          "Content-Encoding: gzip, br\r\n") ++
+        warcRespRec(s"http://ex.com/plain/$id", html, entity)
+    }),
+    // the curation chain: v10 (q308), v11 (q315), v12 (q320),
+    // v13 (q326), v14 (q337), v15 (q344)
+    "warc_v10_v1" -> ("w%08d.warc",
+      (id: Long) => warcContainer(id)(warcV10Bytes(id))),
+    "warc_v11_v1" -> ("w%08d.warc",
+      (id: Long) => warcContainer(id)(warcV11Bytes(id))),
+    "warc_v12_v1" -> ("w%08d.warc",
+      (id: Long) => warcContainer(id)(warcV12Bytes(id))),
+    "warc_v13_v1" -> ("w%08d.warc",
+      (id: Long) => warcContainer(id)(warcV13Bytes(id))),
+    "warc_v14_v1" -> ("w%08d.warc",
+      (id: Long) => warcContainer(id)(warcV14Bytes(id))),
+    "warc_v15_v1" -> ("w%08d.warc",
+      (id: Long) => warcContainer(id)(warcV15Bytes(id))))
+
+  /** Executor-side on-disk fixture writer: one file per doc id under
+    * `java.io.tmpdir/graft_<dirTag>_<sf hash>`, named by the
+    * `fileName` pattern. Files are written in EXECUTORS (the fixture
+    * is data, the driver only collects the path strings — O(files)
+    * metadata, the same class as Spark's own file listings), cached by
+    * existence across runs, and tmp-write + rename keeps concurrent
+    * generations safe. ASSUMPTION: executors and the reader tasks
+    * share one filesystem (true for local[N], the only harness these
+    * fixtures serve). On a multi-node cluster point the generation at
+    * a shared directory (HDFS/NFS) instead — the readers themselves
+    * are location-agnostic. */
+  private[graft] def fixtureFiles(s: SparkSession, d: String, dirTag: String,
+                                  fileName: String)(
       mk: Long => Array[Byte]): Seq[String] = {
     import s.implicits._
     val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_warc_${tag}_${Integer.toHexString(d.hashCode)}")
+      s"graft_${dirTag}_${Integer.toHexString(d.hashCode)}")
     docIds(s, d).map { id =>
-      val f = new java.io.File(dir, f"w$id%08d.warc")
+      val f = new java.io.File(dir, fileName.format(id))
       if (!f.exists) {
         dir.mkdirs()
         val bytes = mk(id)
-        val tmp = java.io.File.createTempFile("wtmp", ".part", dir)
+        val tmp = java.io.File.createTempFile("fxtmp", ".part", dir)
         val out = new java.io.FileOutputStream(tmp)
         try out.write(bytes) finally out.close()
         if (!tmp.renameTo(f)) tmp.delete()
@@ -1207,39 +906,13 @@ object SparkEntry {
       f.getAbsolutePath
     }.collect().toSeq.sorted
   }
-
-  private def warcV14FixturePaths(s: SparkSession, d: String): Seq[String] = {
-    val ruSample = graft.llm.LangId.CrawlSamples("ru")
-    warcFixtureFiles(s, d, "v14_v1") { id =>
-      if (id % 50 == 0) "warc? no".getBytes("UTF-8")
-      else {
-        val b = warcV14Bytes(id, ruSample)
-        if (id % 4 == 1) gzipBytes(b) else b
-      }
-    }
+  /** The paths of the [[diskFixtures]] fixture `dirTag`. */
+  private def fixturePaths(s: SparkSession, d: String, dirTag: String)
+      : Seq[String] = {
+    val (fileName, mk) = diskFixtures(dirTag)
+    fixtureFiles(s, d, dirTag, fileName)(mk)
   }
 
-  /** v15 fixture: v14's records + the CONTENT-FARM arm — three clean
-    * unique pages per id published from sibling subdomains of
-    * farm<id%5>.co.uk (record indexes 15–17), so the per-registered-
-    * domain cap has real dominance to cut: each farm's eTLD+1
-    * aggregates pages from every id sharing id%5 while raw-host
-    * keying would see them all as distinct "domains". */
-  private def warcV15FixturePaths(s: SparkSession, d: String): Seq[String] = {
-    val ruSample = graft.llm.LangId.CrawlSamples("ru")
-    warcFixtureFiles(s, d, "v15_v1") { id =>
-      if (id % 50 == 0) "warc? no".getBytes("UTF-8")
-      else {
-        val farms = (0 until 3).map { j =>
-          warcRespRec(s"http://a$j.farm${id % 5}.co.uk/f/$id", "text/html",
-            (s"<p>farm page $id $j has enough unique english words " +
-              "to keep around.</p>").getBytes("UTF-8"))
-        }.reduce(_ ++ _)
-        val b = warcV14Bytes(id, ruSample) ++ farms
-        if (id % 4 == 1) gzipBytes(b) else b
-      }
-    }
-  }
   /** q288's oracle, GENERATED from [[graft.llm.LangId.CrawlProfiles]]
     * and CrawlSamples: the fixture text (per-id sample repeated 1–3×),
     * every language's score (LIST_FILTER function-word hits + weighted
@@ -1286,82 +959,18 @@ object SparkEntry {
       s"FROM p ORDER BY doc_id"
   }
 
-  /** On-disk ZIP fixture for the split-streaming ZIP reader (q287):
-    * one file per document (`z<id>.zip`), q284's member composition —
-    * two formula BMPs, a directory, a text note — written with
-    * java.util.zip.ZipOutputStream (DEFLATED + data descriptors, the
-    * layout streaming extractors must self-terminate through the
-    * Inflater on); every 3rd id leads with a STORED member (the
-    * sizes-in-local-header layout); junk bytes every 50th so the
-    * loud-drop path has work. Same executor-side generation +
-    * tmp-write-rename + same-filesystem assumption as
-    * [[tarStreamFixturePaths]]. */
-  private def zipStreamFixturePaths(s: SparkSession, d: String): Seq[String] = {
-    import s.implicits._
-    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_zip_stream_v1_${Integer.toHexString(d.hashCode)}")
-    docIds(s, d).map { id =>
-      val f = new java.io.File(dir, f"z$id%08d.zip")
-      if (!f.exists) {
-        dir.mkdirs()
-        val bytes =
-          if (id % 50 == 0) "zip? no".getBytes("UTF-8")
-          else {
-            val bos = new java.io.ByteArrayOutputStream()
-            val zo = new java.util.zip.ZipOutputStream(bos)
-            if (id % 3 == 1) { // stored lead member (no descriptor)
-              val body = s"stored $id".getBytes("UTF-8")
-              val e = new java.util.zip.ZipEntry("lead.txt")
-              e.setMethod(java.util.zip.ZipEntry.STORED)
-              e.setSize(body.length)
-              val crc = new java.util.zip.CRC32(); crc.update(body)
-              e.setCrc(crc.getValue)
-              zo.putNextEntry(e); zo.write(body); zo.closeEntry()
-            }
-            (0 until 2).foreach { k =>
-              zo.putNextEntry(new java.util.zip.ZipEntry(s"img$k.bmp"))
-              zo.write(bmp24Fixture(10, 8, (x, y) => (
-                ((id * 7 + k * 31 + x * 13 + y * 29) % 256).toInt,
-                ((id * 5 + k * 17 + x * 3 + y * 11) % 256).toInt,
-                ((id * 3 + k * 7 + x + y * 7) % 256).toInt)))
-              zo.closeEntry()
-            }
-            zo.putNextEntry(new java.util.zip.ZipEntry("notes/"))
-            zo.closeEntry()
-            zo.putNextEntry(new java.util.zip.ZipEntry("note.txt"))
-            zo.write(s"doc $id".getBytes("UTF-8"))
-            zo.closeEntry()
-            zo.close()
-            bos.toByteArray
-          }
-        val tmp = java.io.File.createTempFile("ztmp", ".part", dir)
-        val out = new java.io.FileOutputStream(tmp)
-        try out.write(bytes) finally out.close()
-        if (!tmp.renameTo(f)) tmp.delete()
-      }
-      f.getAbsolutePath
-    }.collect().toSeq.sorted
-  }
   /** Two-page WARC whose pages need NON-UTF-8 decodes (q277): page 0
     * declares ISO-8859-1 in the HTTP header and carries byte
     * 0xE0+id%5 (à..ä); page 1 declares windows-1251 only in a <meta
     * charset> and carries byte 0xC0+id%5 (А..Д). */
   private def charsetFixture(id: Long): Array[Byte] = {
-    def rec(uri: String, payload: Array[Byte]): Array[Byte] = {
-      val hdr = (s"WARC/1.0\r\nWARC-Type: response\r\n" +
-        s"WARC-Target-URI: $uri\r\n" +
-        s"Content-Length: ${payload.length}\r\n\r\n").getBytes("ISO-8859-1")
-      hdr ++ payload ++ "\r\n\r\n".getBytes("ISO-8859-1")
-    }
     val k = (id % 5).toInt
-    val latin = ("HTTP/1.1 200 OK\r\n" +
-      "Content-Type: text/html; charset=ISO-8859-1\r\n\r\n<p>")
-      .getBytes("ISO-8859-1") ++ Array((0xE0 + k).toByte) ++
-      " latin</p>".getBytes("ISO-8859-1")
-    val cyr = ("HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n" +
-      "<meta charset=\"windows-1251\"><p>").getBytes("ISO-8859-1") ++
-      Array((0xC0 + k).toByte) ++ " cyr</p>".getBytes("ISO-8859-1")
-    rec(s"http://ex.com/$id/latin", latin) ++ rec(s"http://ex.com/$id/cyr", cyr)
+    warcRespRec(s"http://ex.com/$id/latin", "text/html; charset=ISO-8859-1",
+      "<p>".getBytes("ISO-8859-1") ++ Array((0xE0 + k).toByte) ++
+        " latin</p>".getBytes("ISO-8859-1")) ++
+      warcRespRec(s"http://ex.com/$id/cyr", "text/html",
+        "<meta charset=\"windows-1251\"><p>".getBytes("ISO-8859-1") ++
+          Array((0xC0 + k).toByte) ++ " cyr</p>".getBytes("ISO-8859-1"))
   }
   /** WARC fixture for curation v7 (q273): quintets (id/5) publish the
     * SAME pages under messy URL aliases, content repeats across
@@ -1369,18 +978,8 @@ object SparkEntry {
     * keep — so every pipeline stage (URL dedup, quality gate, content
     * dedup) has planted work. */
   private def warcV7Fixture(id: Long): Array[Byte] = {
-    def rec(wtype: String, uri: String, payload: Array[Byte]): Array[Byte] = {
-      val hdr = (s"WARC/1.0\r\nWARC-Type: $wtype\r\n" +
-        (if (uri != null) s"WARC-Target-URI: $uri\r\n" else "") +
-        s"Content-Length: ${payload.length}\r\n\r\n").getBytes("ISO-8859-1")
-      hdr ++ payload ++ "\r\n\r\n".getBytes("ISO-8859-1")
-    }
-    def http(body: String): Array[Byte] =
-      ("HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n")
-        .getBytes("ISO-8859-1") ++ body.getBytes("UTF-8")
     val b = id / 5
-    val np = (1 + id % 2).toInt
-    val pages = (0 until np).flatMap { j =>
+    val pages = (0 until (1 + id % 2).toInt).flatMap { j =>
       val canonical = s"/p/$b/$j"
       val uri = (id % 5) match {
         case 0 => s"http://ex.com$canonical"
@@ -1392,11 +991,10 @@ object SparkEntry {
       val body =
         if (j == 1 && id % 3 == 0) "<p>x</p>" // too short: quality-gated
         else s"<h1>S${b % 29} $j</h1><p>body ${b % 29} &amp; $j</p>"
-      rec("request", uri, "GET / HTTP/1.1\r\n\r\n".getBytes("ISO-8859-1")) ++
-        rec("response", uri, http(body))
+      warcRequest(uri) ++
+        warcRespRec(uri, "text/html", body.getBytes("UTF-8"))
     }
-    rec("warcinfo", null, "software: graft\r\n".getBytes("ISO-8859-1")) ++
-      pages.toArray
+    warcInfo ++ pages
   }
   /** WARC fixture for curation v8 (q281): quintets (id/5) publish ONE
     * page under the same messy URL aliases as v7, but the page now has
@@ -1405,12 +1003,6 @@ object SparkEntry {
     * link footer — and body content repeats across buckets sharing
     * b%23, so every stage of the v8 chain has planted work. */
   private def warcV8Fixture(id: Long): Array[Byte] = {
-    def rec(wtype: String, uri: String, payload: Array[Byte]): Array[Byte] = {
-      val hdr = (s"WARC/1.0\r\nWARC-Type: $wtype\r\n" +
-        (if (uri != null) s"WARC-Target-URI: $uri\r\n" else "") +
-        s"Content-Length: ${payload.length}\r\n\r\n").getBytes("ISO-8859-1")
-      hdr ++ payload ++ "\r\n\r\n".getBytes("ISO-8859-1")
-    }
     val b = id / 5
     val uri = (id % 5) match {
       case 0 => s"http://ex.com/p/$b"
@@ -1426,9 +1018,7 @@ object SparkEntry {
         "<p>Please enable JavaScript to continue viewing.</p>" +
         s"<p>Good body sentence two for bucket ${b % 23} closes the page.</p>" +
         """<div>Footer <a href="/t">terms</a> <a href="/p">privacy</a></div>"""
-    val http = ("HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n")
-      .getBytes("ISO-8859-1") ++ html.getBytes("UTF-8")
-    rec("response", uri, http)
+    warcRespRec(uri, "text/html", html.getBytes("UTF-8"))
   }
   /** ZIP via the JDK's own encoder — the third-party-writer fixture
     * (q268/q269): our central-directory walk must read back what
@@ -6163,7 +5753,7 @@ object SparkEntry {
       // q344 pattern): the timed entry measures decode+pipeline, not
       // ~4,900 per-run AVI encodes. One small file per row, read in
       // the map kernel; file name carries the id.
-      val vidPay = s.createDataset(aviV6FixturePaths(s, d))
+      val vidPay = s.createDataset(fixturePaths(s, d, "avi_v6_v1"))
         .repartition(s.sparkContext.defaultParallelism).map { p =>
         val name = new java.io.File(p).getName
         val id = name.substring(1, name.length - 4).toLong
@@ -6300,11 +5890,7 @@ object SparkEntry {
       import s.implicits._
       val pay = docIds(s, d).map { id =>
         if (id % 50 == 0) (id, "archive? no".getBytes("UTF-8"))
-        else (id, zipFixture((0 until 2).map(k =>
-          (s"img$k.bmp", bmp24Fixture(10, 8, (x, y) => (
-            ((id * 7 + k * 31 + x * 13 + y * 29) % 256).toInt,
-            ((id * 5 + k * 17 + x * 3 + y * 11) % 256).toInt,
-            ((id * 3 + k * 7 + x + y * 7) % 256).toInt))))))
+        else (id, zipFixture(bmpMembers(id)))
       }.toDF("doc_id", "arc")
       val members = graft.sources.Archives.extractZipEntries(
         graft.sources.Multimodal.asMedia(pay, "doc_id", "arc", "archive"))
@@ -6324,14 +5910,7 @@ object SparkEntry {
     // listing). The oracle replays record indices, URIs and the
     // integer Content-Length arithmetic. flatMap kernel.
     "q270_warc_records" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "warc? no".getBytes("UTF-8"))
-        else {
-          val b = warcFixture(id)
-          (id, if (id % 4 == 1) gzipBytes(b) else b)
-        }
-      }.toDF("doc_id", "warc")
+      val pay = warcPayloads(s, d)(id => gzipEvery4th(id, warcFixture(id)))
       graft.sources.Warc.describeWarc(
           graft.sources.Multimodal.asMedia(pay, "doc_id", "warc", "warc"))
         .orderBy("media_id", "record_idx")
@@ -6344,14 +5923,7 @@ object SparkEntry {
     // records in every fixture MUST be excluded. The oracle states
     // URL and clean text from the formulas.
     "q271_warc_text" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "warc? no".getBytes("UTF-8"))
-        else {
-          val b = warcFixture(id)
-          (id, if (id % 4 == 1) gzipBytes(b) else b)
-        }
-      }.toDF("doc_id", "warc")
+      val pay = warcPayloads(s, d)(id => gzipEvery4th(id, warcFixture(id)))
       graft.sources.Warc.warcHtmlText(
           graft.sources.Multimodal.asMedia(pay, "doc_id", "warc", "warc"))
         .orderBy("media_id", "record_idx")
@@ -6395,11 +5967,7 @@ object SparkEntry {
     // same two windows. Shuffle classes: two keyed windows (canonical
     // url, content hash) — the web mirror of q266's video chain.
     "q273_curation_v7" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "warc? no".getBytes("UTF-8"))
-        else (id, warcV7Fixture(id))
-      }.toDF("doc_id", "warc")
+      val pay = warcPayloads(s, d)(warcV7Fixture)
       val pages = graft.sources.Warc.warcHtmlText(
         graft.sources.Multimodal.asMedia(pay, "doc_id", "warc", "warc"))
       val canon = pages.withColumn("url_canon",
@@ -6428,7 +5996,7 @@ object SparkEntry {
     // recovered from the file name.
     "q275_warc_stream" -> ((s, d) => {
       import s.implicits._
-      val paths = warcStreamFixturePaths(s, d)
+      val paths = fixturePaths(s, d, "warc_stream_v1")
       graft.sources.Warc.describeWarcPaths(s, paths)
         .withColumn("media_id",
           regexp_extract(col("path"), "w(\\d+)\\.warc$", 1).cast("long"))
@@ -6443,7 +6011,7 @@ object SparkEntry {
     // same page formulas.
     "q276_warc_stream_text" -> ((s, d) => {
       import s.implicits._
-      val paths = warcStreamFixturePaths(s, d)
+      val paths = fixturePaths(s, d, "warc_stream_v1")
       graft.sources.Warc.warcPathsHtmlText(s, paths)
         .withColumn("media_id",
           regexp_extract(col("path"), "w(\\d+)\\.warc$", 1).cast("long"))
@@ -6460,11 +6028,7 @@ object SparkEntry {
     // charset negotiation (header first, bounded meta sniff second,
     // utf-8 fallback).
     "q277_warc_charset" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "warc? no".getBytes("UTF-8"))
-        else (id, charsetFixture(id))
-      }.toDF("doc_id", "warc")
+      val pay = warcPayloads(s, d)(charsetFixture)
       graft.sources.Warc.warcHtmlText(
           graft.sources.Multimodal.asMedia(pay, "doc_id", "warc", "warc"))
         .orderBy("media_id", "record_idx")
@@ -6571,11 +6135,7 @@ object SparkEntry {
     // Shuffle classes: two grouped reassemblies keyed by page + two
     // keyed windows — everything else is map-side.
     "q281_curation_v8" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "warc? no".getBytes("UTF-8"))
-        else (id, warcV8Fixture(id))
-      }.toDF("doc_id", "warc")
+      val pay = warcPayloads(s, d)(warcV8Fixture)
       val pages = graft.sources.Warc.warcHtmlPages(
         graft.sources.Multimodal.asMedia(pay, "doc_id", "warc", "warc"))
       val blocks = pages.select(col("media_id"), col("record_idx"), col("url"),
@@ -6733,54 +6293,45 @@ object SparkEntry {
     // same flatMap kernel on both doors (cell + streaming, shared
     // [[graft.sources.Warc]] walk code) — bodies still never shuffle.
     "q340_warc_http_decode" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "warc? no".getBytes("UTF-8"))
-        else {
-          val entity =
-            (s"<h1>Doc $id</h1><p>payload $id decodes exactly.</p>")
-              .getBytes("UTF-8")
-          def chunked(b: Array[Byte]): Array[Byte] = {
-            val cut = math.max(1, b.length / 3)
-            val o = new java.io.ByteArrayOutputStream()
-            def wr(t: String): Unit = o.write(t.getBytes("ISO-8859-1"))
-            wr(Integer.toHexString(cut) + ";x=1\r\n")
-            o.write(b, 0, cut); wr("\r\n")
-            wr(Integer.toHexString(b.length - cut) + "\r\n")
-            o.write(b, cut, b.length - cut); wr("\r\n")
-            wr("0\r\n\r\ntrailer: ignored\r\n")
-            o.toByteArray
-          }
-          def zlib(b: Array[Byte]): Array[Byte] = {
-            val df = new java.util.zip.Deflater()
-            df.setInput(b); df.finish()
-            val o = new java.io.ByteArrayOutputStream()
-            val buf = new Array[Byte](1024)
-            while (!df.finished()) o.write(buf, 0, df.deflate(buf))
-            df.end(); o.toByteArray
-          }
-          val (wire, body) = (id % 5) match {
-            case 1 => ("Transfer-Encoding: chunked\r\n", chunked(entity))
-            case 2 => ("Content-Encoding: gzip\r\n", gzipBytes(entity))
-            case 3 => ("Content-Encoding: deflate\r\n", zlib(entity))
-            case 4 => ("Content-Encoding: gzip\r\nTransfer-Encoding: chunked\r\n",
-              chunked(gzipBytes(entity)))
-            case _ =>
-              // r18: real brotli (the r17 arm was a lying claim pinned
-              // to br!undecoded — now the pure-JVM decoder reads it)
-              if (id % 3 == 0) ("Content-Encoding: br\r\n",
-                graft.sources.Brotli.encodeUncompressed(entity))
-              else ("", entity)
-          }
-          val http = ("HTTP/1.1 200 OK\r\n" +
-            "Content-Type: text/html; charset=utf-8\r\n" + wire + "\r\n")
-            .getBytes("ISO-8859-1") ++ body
-          val hdr = ("WARC/1.0\r\nWARC-Type: response\r\n" +
-            s"WARC-Target-URI: http://ex.com/p/$id\r\n" +
-            s"Content-Length: ${http.length}\r\n\r\n").getBytes("ISO-8859-1")
-          (id, hdr ++ http ++ "\r\n\r\n".getBytes("ISO-8859-1"))
+      val pay = warcPayloads(s, d) { id =>
+        val entity =
+          (s"<h1>Doc $id</h1><p>payload $id decodes exactly.</p>")
+            .getBytes("UTF-8")
+        def chunked(b: Array[Byte]): Array[Byte] = {
+          val cut = math.max(1, b.length / 3)
+          val o = new java.io.ByteArrayOutputStream()
+          def wr(t: String): Unit = o.write(t.getBytes("ISO-8859-1"))
+          wr(Integer.toHexString(cut) + ";x=1\r\n")
+          o.write(b, 0, cut); wr("\r\n")
+          wr(Integer.toHexString(b.length - cut) + "\r\n")
+          o.write(b, cut, b.length - cut); wr("\r\n")
+          wr("0\r\n\r\ntrailer: ignored\r\n")
+          o.toByteArray
         }
-      }.toDF("doc_id", "warc")
+        def zlib(b: Array[Byte]): Array[Byte] = {
+          val df = new java.util.zip.Deflater()
+          df.setInput(b); df.finish()
+          val o = new java.io.ByteArrayOutputStream()
+          val buf = new Array[Byte](1024)
+          while (!df.finished()) o.write(buf, 0, df.deflate(buf))
+          df.end(); o.toByteArray
+        }
+        val (wire, body) = (id % 5) match {
+          case 1 => ("Transfer-Encoding: chunked\r\n", chunked(entity))
+          case 2 => ("Content-Encoding: gzip\r\n", gzipBytes(entity))
+          case 3 => ("Content-Encoding: deflate\r\n", zlib(entity))
+          case 4 => ("Content-Encoding: gzip\r\nTransfer-Encoding: chunked\r\n",
+            chunked(gzipBytes(entity)))
+          case _ =>
+            // r18: real brotli (the r17 arm was a lying claim pinned
+            // to br!undecoded — now the pure-JVM decoder reads it)
+            if (id % 3 == 0) ("Content-Encoding: br\r\n",
+              graft.sources.Brotli.encodeUncompressed(entity))
+            else ("", entity)
+        }
+        warcRespRec(s"http://ex.com/p/$id", "text/html; charset=utf-8",
+          body, wire)
+      }
       graft.sources.Warc.warcDocText(
           graft.sources.Multimodal.asMedia(pay, "doc_id", "warc", "warc"))
         .select("media_id", "record_idx", "url", "carrier", "encoding",
@@ -6867,26 +6418,17 @@ object SparkEntry {
     // and pure-ASCII arms must stay utf-8. Declared pages are
     // untouched (q277 pins those). Map-only flatMap kernel.
     "q348_charset_fallback" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "warc? no".getBytes("UTF-8"))
-        else {
-          val (cs, body) = (id % 3) match {
-            case 0 => ("windows-1252",
-              s"<p>café page $id with a ’smart’ quote</p>")
-            case 1 => ("UTF-8", s"<p>café page $id in valid utf8</p>")
-            case _ => ("US-ASCII", s"<p>plain ascii page $id</p>")
-          }
-          val bytes = body.getBytes(cs)
-          // NO charset anywhere: bare text/html, no meta
-          val http = ("HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n")
-            .getBytes("ISO-8859-1") ++ bytes
-          val hdr = ("WARC/1.0\r\nWARC-Type: response\r\n" +
-            s"WARC-Target-URI: http://ex.com/cs/$id\r\n" +
-            s"Content-Length: ${http.length}\r\n\r\n").getBytes("ISO-8859-1")
-          (id, hdr ++ http ++ "\r\n\r\n".getBytes("ISO-8859-1"))
+      val pay = warcPayloads(s, d) { id =>
+        val (cs, body) = (id % 3) match {
+          case 0 => ("windows-1252",
+            s"<p>café page $id with a ’smart’ quote</p>")
+          case 1 => ("UTF-8", s"<p>café page $id in valid utf8</p>")
+          case _ => ("US-ASCII", s"<p>plain ascii page $id</p>")
         }
-      }.toDF("doc_id", "warc")
+        val bytes = body.getBytes(cs)
+        // NO charset anywhere: bare text/html, no meta
+        warcRespRec(s"http://ex.com/cs/$id", "text/html", bytes)
+      }
       graft.sources.Warc.warcHtmlText(
           graft.sources.Multimodal.asMedia(pay, "doc_id", "warc", "warc"))
         .orderBy("media_id")
@@ -6914,27 +6456,19 @@ object SparkEntry {
       val zh = "这是一段中文文本没有空格 新闻正文在此继续展开"
       val zhT = "這是一段繁體中文網頁沒有空格 新聞內容在這裡繼續"
       val latin = "l'été café année passée déjà vu née et protégé"
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "warc? no".getBytes("UTF-8"))
-        else {
-          val (cs, sample) = (id % 6) match {
-            case 0 => ("shift_jis", ja)
-            case 1 => ("euc-jp", ja)
-            case 2 => ("euc-kr", ko)
-            case 3 => ("gbk", zh)
-            case 4 => ("big5", zhT)
-            case _ => ("windows-1252", latin)
-          }
-          val bytes = s"<p>$sample page $id</p>".getBytes(cs)
-          // NO charset anywhere: bare text/html, no meta
-          val http = "HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n"
-            .getBytes("ISO-8859-1") ++ bytes
-          val hdr = ("WARC/1.0\r\nWARC-Type: response\r\n" +
-            s"WARC-Target-URI: http://ex.com/cjk/$id\r\n" +
-            s"Content-Length: ${http.length}\r\n\r\n").getBytes("ISO-8859-1")
-          (id, hdr ++ http ++ "\r\n\r\n".getBytes("ISO-8859-1"))
+      val pay = warcPayloads(s, d) { id =>
+        val (cs, sample) = (id % 6) match {
+          case 0 => ("shift_jis", ja)
+          case 1 => ("euc-jp", ja)
+          case 2 => ("euc-kr", ko)
+          case 3 => ("gbk", zh)
+          case 4 => ("big5", zhT)
+          case _ => ("windows-1252", latin)
         }
-      }.toDF("doc_id", "warc")
+        val bytes = s"<p>$sample page $id</p>".getBytes(cs)
+        // NO charset anywhere: bare text/html, no meta
+        warcRespRec(s"http://ex.com/cjk/$id", "text/html", bytes)
+      }
       graft.sources.Warc.warcHtmlText(
           graft.sources.Multimodal.asMedia(pay, "doc_id", "warc", "warc"))
         .orderBy("media_id")
@@ -6989,27 +6523,19 @@ object SparkEntry {
       val ru = "Это русский текст статьи продолжение материала здесь"
       val u16 = "утф text body here"
       val latin = "l'été café année passée déjà vu née et protégé"
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "warc? no".getBytes("UTF-8"))
-        else {
-          val bytes = (id % 6) match {
-            case 0 => s"<p>$ru page $id</p>".getBytes("KOI8-R")
-            case 1 => s"<p>$ru page $id</p>".getBytes("windows-1251")
-            case 2 => s"<p>$u16 page $id</p>".getBytes("UTF-16LE")
-            case 3 => s"<p>$u16 page $id</p>".getBytes("UTF-16BE")
-            case 4 => s"<p>$u16 page $id</p>".getBytes("UTF-16") // BOM'd
-            case _ => s"<p>$latin page $id</p>".getBytes("windows-1252")
-          }
-          // NO charset anywhere: bare text/html, no meta, no BOM
-          // except the one arm that pins BOM handling
-          val http = "HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n"
-            .getBytes("ISO-8859-1") ++ bytes
-          val hdr = ("WARC/1.0\r\nWARC-Type: response\r\n" +
-            s"WARC-Target-URI: http://ex.com/cyr/$id\r\n" +
-            s"Content-Length: ${http.length}\r\n\r\n").getBytes("ISO-8859-1")
-          (id, hdr ++ http ++ "\r\n\r\n".getBytes("ISO-8859-1"))
+      val pay = warcPayloads(s, d) { id =>
+        val bytes = (id % 6) match {
+          case 0 => s"<p>$ru page $id</p>".getBytes("KOI8-R")
+          case 1 => s"<p>$ru page $id</p>".getBytes("windows-1251")
+          case 2 => s"<p>$u16 page $id</p>".getBytes("UTF-16LE")
+          case 3 => s"<p>$u16 page $id</p>".getBytes("UTF-16BE")
+          case 4 => s"<p>$u16 page $id</p>".getBytes("UTF-16") // BOM'd
+          case _ => s"<p>$latin page $id</p>".getBytes("windows-1252")
         }
-      }.toDF("doc_id", "warc")
+        // NO charset anywhere: bare text/html, no meta, no BOM
+        // except the one arm that pins BOM handling
+        warcRespRec(s"http://ex.com/cyr/$id", "text/html", bytes)
+      }
       graft.sources.Warc.warcHtmlText(
           graft.sources.Multimodal.asMedia(pay, "doc_id", "warc", "warc"))
         .orderBy("media_id")
@@ -7028,33 +6554,19 @@ object SparkEntry {
     // keeps its own independent quota. One keyed left join against
     // the resolved edge map; the cap is a keyed WindowGroupLimit.
     "q356_redirect_farm_cap" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "warc? no".getBytes("UTF-8"))
-        else {
-          def redir(uri: String, status: Int, loc: String): Array[Byte] = {
-            val http = (s"HTTP/1.1 $status Moved\r\n" +
-              s"Content-Type: text/html\r\nLocation: $loc\r\n\r\n")
-              .getBytes("ISO-8859-1")
-            (s"WARC/1.0\r\nWARC-Type: response\r\n" +
-              s"WARC-Target-URI: $uri\r\n" +
-              s"Content-Length: ${http.length}\r\n\r\n")
-              .getBytes("ISO-8859-1") ++ http ++
-              "\r\n\r\n".getBytes("ISO-8859-1")
-          }
-          val farm = (0 until 2).map { j =>
-            redir(s"http://t$j.example/p/$id", 301,
-              s"http://land.example/p/$id/$j") ++
-              warcRespRec(s"http://t$j.example/p/$id", "text/html",
-                (s"<p>farm content $id $j keeps plenty of good " +
-                  "english words alive.</p>").getBytes("UTF-8"))
-          }.reduce(_ ++ _)
-          val ctrl = warcRespRec(s"http://ctrl.example/c/$id", "text/html",
-            (s"<p>control page $id keeps plenty of good english " +
-              "words too.</p>").getBytes("UTF-8"))
-          (id, farm ++ ctrl)
-        }
-      }.toDF("doc_id", "warc")
+      val pay = warcPayloads(s, d) { id =>
+        val farm = (0 until 2).map { j =>
+          warcRedirect(s"http://t$j.example/p/$id", "301 Moved",
+            s"http://land.example/p/$id/$j") ++
+            warcRespRec(s"http://t$j.example/p/$id", "text/html",
+              (s"<p>farm content $id $j keeps plenty of good " +
+                "english words alive.</p>").getBytes("UTF-8"))
+        }.reduce(_ ++ _)
+        val ctrl = warcRespRec(s"http://ctrl.example/c/$id", "text/html",
+          (s"<p>control page $id keeps plenty of good english " +
+            "words too.</p>").getBytes("UTF-8"))
+        farm ++ ctrl
+      }
       val media = graft.sources.Multimodal.asMedia(pay, "doc_id", "warc", "warc")
       val rows = graft.sources.Warc.warcDocRows(media)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -7084,39 +6596,25 @@ object SparkEntry {
     // only by their ABSENCE from the resolved output. Body-free
     // listing walk (maxBody=0), map-only.
     "q357_refresh_header" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "warc? no".getBytes("UTF-8"))
-        else {
-          def redir(uri: String, status: Int, loc: String): Array[Byte] = {
-            val http = (s"HTTP/1.1 $status Moved\r\n" +
-              s"Content-Type: text/html\r\nLocation: $loc\r\n\r\n")
-              .getBytes("ISO-8859-1")
-            (s"WARC/1.0\r\nWARC-Type: response\r\n" +
-              s"WARC-Target-URI: $uri\r\n" +
-              s"Content-Length: ${http.length}\r\n\r\n")
-              .getBytes("ISO-8859-1") ++ http ++
-              "\r\n\r\n".getBytes("ISO-8859-1")
-          }
-          val hop = redir(s"http://s.example/a/$id", 302,
-            s"http://go.example/r/$id")
-          val interstitial = warcRespRec(s"http://go.example/r/$id",
-            "text/html",
-            s"<p>hold on, moving you along $id.</p>".getBytes("UTF-8"),
-            if (id % 2 == 0)
-              s"Refresh: 0; url=http://dest.example/d/$id\r\n"
-            else s"Refresh: 0; URL=/d/$id\r\n")
-          val reload = warcRespRec(s"http://plain.example/p/$id",
-            "text/html",
-            s"<p>plain page $id reloads itself.</p>".getBytes("UTF-8"),
-            "Refresh: 30\r\n")
-          val mailto = warcRespRec(s"http://spam.example/m/$id",
-            "text/html",
-            s"<p>mailto page $id goes nowhere.</p>".getBytes("UTF-8"),
-            "Refresh: 0; url=mailto:x@y.example\r\n")
-          (id, hop ++ interstitial ++ reload ++ mailto)
-        }
-      }.toDF("doc_id", "warc")
+      val pay = warcPayloads(s, d) { id =>
+        val hop = warcRedirect(s"http://s.example/a/$id", "302 Moved",
+          s"http://go.example/r/$id")
+        val interstitial = warcRespRec(s"http://go.example/r/$id",
+          "text/html",
+          s"<p>hold on, moving you along $id.</p>".getBytes("UTF-8"),
+          if (id % 2 == 0)
+            s"Refresh: 0; url=http://dest.example/d/$id\r\n"
+          else s"Refresh: 0; URL=/d/$id\r\n")
+        val reload = warcRespRec(s"http://plain.example/p/$id",
+          "text/html",
+          s"<p>plain page $id reloads itself.</p>".getBytes("UTF-8"),
+          "Refresh: 30\r\n")
+        val mailto = warcRespRec(s"http://spam.example/m/$id",
+          "text/html",
+          s"<p>mailto page $id goes nowhere.</p>".getBytes("UTF-8"),
+          "Refresh: 0; url=mailto:x@y.example\r\n")
+        hop ++ interstitial ++ reload ++ mailto
+      }
       val media = graft.sources.Multimodal.asMedia(pay, "doc_id", "warc", "warc")
       val edges = graft.sources.Warc.warcRedirects(media)
         .select(graft.functions.CanonicalUrl(col("url")).as("src"),
@@ -7170,40 +6668,26 @@ object SparkEntry {
     // routing param keeps its own. Same plan shape as v16 — the
     // fold is one more codegen'd map-side expression.
     "q359_curation_v17" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "warc? no".getBytes("UTF-8"))
-        else {
-          def redir(uri: String, status: Int, loc: String): Array[Byte] = {
-            val http = (s"HTTP/1.1 $status Moved\r\n" +
-              s"Content-Type: text/html\r\nLocation: $loc\r\n\r\n")
-              .getBytes("ISO-8859-1")
-            (s"WARC/1.0\r\nWARC-Type: response\r\n" +
-              s"WARC-Target-URI: $uri\r\n" +
-              s"Content-Length: ${http.length}\r\n\r\n")
-              .getBytes("ISO-8859-1") ++ http ++
-              "\r\n\r\n".getBytes("ISO-8859-1")
-          }
-          val tracked = warcRespRec(
-            s"http://m$id.example/a/$id?utm_source=nl", "text/html",
-            (s"<p>article $id version one keeps plenty of good " +
-              "english words.</p>").getBytes("UTF-8"))
-          val bare = warcRespRec(s"http://m$id.example/a/$id", "text/html",
-            (s"<p>article $id version two keeps plenty of different " +
-              "english words.</p>").getBytes("UTF-8"))
-          val paged = warcRespRec(
-            s"http://m$id.example/a/$id?page=2", "text/html",
-            (s"<p>article $id page two keeps plenty of extra " +
-              "english words.</p>").getBytes("UTF-8"))
-          val moved = redir(s"http://old$id.example/o/$id?utm_campaign=x",
-            301, s"http://m$id.example/a/$id?utm_medium=email")
-          val oldPage = warcRespRec(s"http://old$id.example/o/$id",
-            "text/html",
-            (s"<p>article $id old home keeps plenty of good english " +
-              "words too.</p>").getBytes("UTF-8"))
-          (id, tracked ++ bare ++ paged ++ moved ++ oldPage)
-        }
-      }.toDF("doc_id", "warc")
+      val pay = warcPayloads(s, d) { id =>
+        val tracked = warcRespRec(
+          s"http://m$id.example/a/$id?utm_source=nl", "text/html",
+          (s"<p>article $id version one keeps plenty of good " +
+            "english words.</p>").getBytes("UTF-8"))
+        val bare = warcRespRec(s"http://m$id.example/a/$id", "text/html",
+          (s"<p>article $id version two keeps plenty of different " +
+            "english words.</p>").getBytes("UTF-8"))
+        val paged = warcRespRec(
+          s"http://m$id.example/a/$id?page=2", "text/html",
+          (s"<p>article $id page two keeps plenty of extra " +
+            "english words.</p>").getBytes("UTF-8"))
+        val moved = warcRedirect(s"http://old$id.example/o/$id?utm_campaign=x",
+          "301 Moved", s"http://m$id.example/a/$id?utm_medium=email")
+        val oldPage = warcRespRec(s"http://old$id.example/o/$id",
+          "text/html",
+          (s"<p>article $id old home keeps plenty of good english " +
+            "words too.</p>").getBytes("UTF-8"))
+        tracked ++ bare ++ paged ++ moved ++ oldPage
+      }
       val media = graft.sources.Multimodal.asMedia(pay, "doc_id", "warc", "warc")
       val rows = graft.sources.Warc.warcDocRows(media)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -7232,41 +6716,30 @@ object SparkEntry {
     // Pages decode once (persisted warcHtmlPages); the 3xx listing
     // is the body-free walk.
     "q354_meta_refresh" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "warc? no".getBytes("UTF-8"))
-        else {
-          def rec(uri: String, status: Int, extra: String,
-                  body: Array[Byte]): Array[Byte] = {
-            val http = (s"HTTP/1.1 $status X\r\n" +
-              "Content-Type: text/html; charset=utf-8\r\n" + extra + "\r\n")
-              .getBytes("ISO-8859-1") ++ body
-            (s"WARC/1.0\r\nWARC-Type: response\r\n" +
-              s"WARC-Target-URI: $uri\r\n" +
-              s"Content-Length: ${http.length}\r\n\r\n")
-              .getBytes("ISO-8859-1") ++ http ++
-              "\r\n\r\n".getBytes("ISO-8859-1")
-          }
-          val refreshAttr =
-            if (id % 2 == 0) s"""content="0;url=/land/$id""""
-            else s"""content="3; URL='/land/$id'""""
-          val landing = rec(s"http://ex.com/land/$id", 200, "",
-            (s"<p>soft landing page $id holds the real words.</p>")
-              .getBytes("UTF-8"))
-          val interstitial = rec(s"http://ex.com/hop/$id", 200, "",
+      val pay = warcPayloads(s, d) { id =>
+        val html = "text/html; charset=utf-8"
+        val refreshAttr =
+          if (id % 2 == 0) s"""content="0;url=/land/$id""""
+          else s"""content="3; URL='/land/$id'""""
+        val landing = warcRecord("response", s"http://ex.com/land/$id",
+          httpResponse("200 X", html,
+            s"<p>soft landing page $id holds the real words.</p>"
+              .getBytes("UTF-8")))
+        val interstitial = warcRecord("response", s"http://ex.com/hop/$id",
+          httpResponse("200 X", html,
             (s"""<html><head><meta http-equiv="refresh" $refreshAttr>""" +
               s"</head><body><p>interstitial $id moving you along " +
-              "now.</p></body></html>").getBytes("UTF-8"))
-          val start = rec(s"http://ex.com/start/$id", 301,
-            s"Location: /hop/$id\r\n", Array.emptyByteArray)
-          // control: a url-less refresh reloads self — never an edge
-          val selfish = rec(s"http://ex.com/self/$id", 200, "",
+              "now.</p></body></html>").getBytes("UTF-8")))
+        val start = warcRedirect(s"http://ex.com/start/$id", "301 X",
+          s"/hop/$id", html)
+        // control: a url-less refresh reloads self — never an edge
+        val selfish = warcRecord("response", s"http://ex.com/self/$id",
+          httpResponse("200 X", html,
             (s"""<html><head><meta http-equiv=refresh content="30">""" +
               s"</head><body><p>self refreshing page $id keeps its " +
-              "own words.</p></body></html>").getBytes("UTF-8"))
-          (id, landing ++ interstitial ++ start ++ selfish)
-        }
-      }.toDF("doc_id", "warc")
+              "own words.</p></body></html>").getBytes("UTF-8")))
+        landing ++ interstitial ++ start ++ selfish
+      }
       val media = graft.sources.Multimodal.asMedia(pay, "doc_id", "warc", "warc")
       val pages = graft.sources.Warc.warcHtmlPages(media)
         .select(graft.functions.CanonicalUrl(col("url")).as("purl"),
@@ -7322,40 +6795,22 @@ object SparkEntry {
     // text joins on via the resolved identity. No driver iteration;
     // cycle rows land with NULL text and terminal=false.
     "q352_redirect_resolve" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "warc? no".getBytes("UTF-8"))
-        else {
-          def rec(uri: String, status: Int, extra: String,
-                  body: Array[Byte]): Array[Byte] = {
-            val http = (s"HTTP/1.1 $status X\r\n" +
-              "Content-Type: text/html\r\n" + extra + "\r\n")
-              .getBytes("ISO-8859-1") ++ body
-            (s"WARC/1.0\r\nWARC-Type: response\r\n" +
-              s"WARC-Target-URI: $uri\r\n" +
-              s"Content-Length: ${http.length}\r\n\r\n")
-              .getBytes("ISO-8859-1") ++ http ++
-              "\r\n\r\n".getBytes("ISO-8859-1")
-          }
-          val landing = rec(s"http://ex.com/final/$id", 200, "",
-            (s"<p>redirect landing page $id content.</p>")
-              .getBytes("UTF-8"))
-          val hop1 = rec(s"http://ex.com/old/$id", 301,
-            s"Location: /final/$id\r\n", Array.emptyByteArray)
-          val hop2 = rec(s"http://ex.com/older/$id", 302,
-            s"Location: http://ex.com/old/$id\r\n", Array.emptyByteArray)
-          val hop3 = rec(s"http://mirror.site/m/$id", 308,
-            s"Location: HTTP://Ex.COM/older/$id\r\n", Array.emptyByteArray)
-          val loop =
-            if (id % 5 == 0)
-              rec(s"http://loop.a/$id", 301,
-                s"Location: http://loop.b/$id\r\n", Array.emptyByteArray) ++
-                rec(s"http://loop.b/$id", 302,
-                  s"Location: http://loop.a/$id\r\n", Array.emptyByteArray)
-            else Array.emptyByteArray
-          (id, landing ++ hop1 ++ hop2 ++ hop3 ++ loop)
-        }
-      }.toDF("doc_id", "warc")
+      val pay = warcPayloads(s, d) { id =>
+        val landing = warcRecord("response", s"http://ex.com/final/$id",
+          httpResponse("200 X", "text/html",
+            s"<p>redirect landing page $id content.</p>".getBytes("UTF-8")))
+        val hop1 = warcRedirect(s"http://ex.com/old/$id", "301 X", s"/final/$id")
+        val hop2 = warcRedirect(s"http://ex.com/older/$id", "302 X",
+          s"http://ex.com/old/$id")
+        val hop3 = warcRedirect(s"http://mirror.site/m/$id", "308 X",
+          s"HTTP://Ex.COM/older/$id")
+        val loop =
+          if (id % 5 == 0)
+            warcRedirect(s"http://loop.a/$id", "301 X", s"http://loop.b/$id") ++
+              warcRedirect(s"http://loop.b/$id", "302 X", s"http://loop.a/$id")
+          else Array.emptyByteArray
+        landing ++ hop1 ++ hop2 ++ hop3 ++ loop
+      }
       val media = graft.sources.Multimodal.asMedia(pay, "doc_id", "warc", "warc")
       val edges = graft.sources.Warc.warcRedirects(media)
         .select(graft.functions.CanonicalUrl(col("url")).as("src"),
@@ -7384,21 +6839,7 @@ object SparkEntry {
     // encoder across quality 0–11 / window 10–24 in BrotliSpec; q340
     // covers the cell door. Map-only flatMap kernel, fenced, loud.
     "q350_brotli_stream" -> ((s, d) => {
-      val paths = warcFixtureFiles(s, d, "br_v1") { id =>
-        if (id % 50 == 0) "warc? no".getBytes("UTF-8")
-        else {
-          val entity = (s"<h1>Doc $id</h1><p>brotli payload $id " +
-            "restores exactly.</p>").getBytes("UTF-8")
-          def rec(uri: String, wire: String, body: Array[Byte]) =
-            warcRespRec(uri, "text/html; charset=utf-8", body, wire)
-          rec(s"http://ex.com/br/$id", "Content-Encoding: br\r\n",
-              graft.sources.Brotli.encodeUncompressed(entity)) ++
-            rec(s"http://ex.com/brgz/$id",
-              "Content-Encoding: gzip, br\r\n",
-              graft.sources.Brotli.encodeUncompressed(gzipBytes(entity))) ++
-            rec(s"http://ex.com/plain/$id", "", entity)
-        }
-      }
+      val paths = fixturePaths(s, d, "warc_br_v1")
       graft.sources.Warc.warcPathsDocText(s, paths)
         .withColumn("media_id",
           regexp_extract(col("path"), "w(\\d+)\\.warc$", 1).cast("long"))
@@ -7483,39 +6924,30 @@ object SparkEntry {
     // application/xml — all four content-type doors must land on the
     // same text. Map-only flatMap kernel; entries capped.
     "q345_feed_text" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "warc? no".getBytes("UTF-8"))
-        else {
-          val n = (1 + id % 3).toInt
-          val (ctype, xml) =
-            if (id % 2 == 0) {
-              val items = (0 until n).map { j =>
-                s"<item><title>Item $id $j</title><description>" +
-                  s"<![CDATA[<b>story $id</b> part $j &amp; more]]>" +
-                  "</description></item>"
-              }.mkString
-              (if (id % 4 == 0) "application/rss+xml" else "text/xml",
-                "<?xml version=\"1.0\"?><rss version=\"2.0\"><channel>" +
-                  s"<title>Feed $id</title>$items</channel></rss>")
-            } else {
-              val entries = (0 until n).map { j =>
-                s"<entry><title>Entry $id $j</title>" +
-                  s"<summary>plain note $id $j</summary></entry>"
-              }.mkString
-              (if (id % 4 == 1) "application/atom+xml" else "application/xml",
-                "<?xml version=\"1.0\"?>" +
-                  "<feed xmlns=\"http://www.w3.org/2005/Atom\">" +
-                  s"<title>Feed $id</title>$entries</feed>")
-            }
-          val http = (s"HTTP/1.1 200 OK\r\nContent-Type: $ctype\r\n\r\n")
-            .getBytes("ISO-8859-1") ++ xml.getBytes("UTF-8")
-          val hdr = ("WARC/1.0\r\nWARC-Type: response\r\n" +
-            s"WARC-Target-URI: http://ex.com/feed/$id\r\n" +
-            s"Content-Length: ${http.length}\r\n\r\n").getBytes("ISO-8859-1")
-          (id, hdr ++ http ++ "\r\n\r\n".getBytes("ISO-8859-1"))
-        }
-      }.toDF("doc_id", "warc")
+      val pay = warcPayloads(s, d) { id =>
+        val n = (1 + id % 3).toInt
+        val (ctype, xml) =
+          if (id % 2 == 0) {
+            val items = (0 until n).map { j =>
+              s"<item><title>Item $id $j</title><description>" +
+                s"<![CDATA[<b>story $id</b> part $j &amp; more]]>" +
+                "</description></item>"
+            }.mkString
+            (if (id % 4 == 0) "application/rss+xml" else "text/xml",
+              "<?xml version=\"1.0\"?><rss version=\"2.0\"><channel>" +
+                s"<title>Feed $id</title>$items</channel></rss>")
+          } else {
+            val entries = (0 until n).map { j =>
+              s"<entry><title>Entry $id $j</title>" +
+                s"<summary>plain note $id $j</summary></entry>"
+            }.mkString
+            (if (id % 4 == 1) "application/atom+xml" else "application/xml",
+              "<?xml version=\"1.0\"?>" +
+                "<feed xmlns=\"http://www.w3.org/2005/Atom\">" +
+                s"<title>Feed $id</title>$entries</feed>")
+          }
+        warcRespRec(s"http://ex.com/feed/$id", ctype, xml.getBytes("UTF-8"))
+      }
       graft.sources.Warc.warcDocText(
           graft.sources.Multimodal.asMedia(pay, "doc_id", "warc", "warc"))
         .select("media_id", "record_idx", "url", "carrier", "text")
@@ -7623,7 +7055,7 @@ object SparkEntry {
     // container routing is what's under test.
     "q284_tar_stream_media" -> ((s, d) => {
       import s.implicits._
-      val paths = tarStreamFixturePaths(s, d)
+      val paths = fixturePaths(s, d, "tar_stream_v1")
       val members = graft.sources.Archives.tarPathMembers(s, paths)
         .where(col("name").endsWith(".bmp"))
         .withColumn("doc_id",
@@ -7686,7 +7118,7 @@ object SparkEntry {
     // never shuffle before decode.
     "q287_zip_stream_media" -> ((s, d) => {
       import s.implicits._
-      val paths = zipStreamFixturePaths(s, d)
+      val paths = fixturePaths(s, d, "zip_stream_v1")
       val members = graft.sources.Archives.zipPathEntries(s, paths)
         .where(col("name").endsWith(".bmp"))
         .withColumn("doc_id",
@@ -7709,33 +7141,19 @@ object SparkEntry {
     // the oracle states which pages survive. Declarative regex gate —
     // fuses into the extraction scan, no UDF, no shuffle.
     "q294_noindex_gate" -> ((s, d) => {
-      import s.implicits._
-      def rec(wtype: String, uri: String, payload: Array[Byte]): Array[Byte] = {
-        val hdr = (s"WARC/1.0\r\nWARC-Type: $wtype\r\n" +
-          (if (uri != null) s"WARC-Target-URI: $uri\r\n" else "") +
-          s"Content-Length: ${payload.length}\r\n\r\n").getBytes("ISO-8859-1")
-        hdr ++ payload ++ "\r\n\r\n".getBytes("ISO-8859-1")
-      }
-      def page(body: String): Array[Byte] =
-        ("HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n" + body)
-          .getBytes("UTF-8")
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "warc? no".getBytes("UTF-8"))
-        else {
-          val p1 = (id % 3) match {
-            case 0 => "<meta name=\"robots\" content=\"noindex,follow\">" +
-              s"<p>keep page $id one</p>"
-            case 1 => "<META CONTENT='NOINDEX' NAME='ROBOTS'>" +
-              s"<p>keep page $id one</p>"
-            case _ => s"<p>keep page $id one</p>"
-          }
-          (id,
-            rec("warcinfo", null, "software: graft\r\n".getBytes("ISO-8859-1")) ++
-              rec("response", s"http://ex.com/$id/0",
-                page(s"<p>keep page $id zero</p>")) ++
-              rec("response", s"http://ex.com/$id/1", page(p1)))
+      val pay = warcPayloads(s, d) { id =>
+        val p1 = (id % 3) match {
+          case 0 => "<meta name=\"robots\" content=\"noindex,follow\">" +
+            s"<p>keep page $id one</p>"
+          case 1 => "<META CONTENT='NOINDEX' NAME='ROBOTS'>" +
+            s"<p>keep page $id one</p>"
+          case _ => s"<p>keep page $id one</p>"
         }
-      }.toDF("doc_id", "warc")
+        warcInfo ++
+          warcRespRec(s"http://ex.com/$id/0", "text/html",
+            s"<p>keep page $id zero</p>".getBytes("UTF-8")) ++
+          warcRespRec(s"http://ex.com/$id/1", "text/html", p1.getBytes("UTF-8"))
+      }
       graft.sources.Warc.warcHtmlPages(
           graft.sources.Multimodal.asMedia(pay, "doc_id", "warc", "warc"))
         .where(graft.functions.MetaRobots.indexable(col("html")))
@@ -7758,37 +7176,24 @@ object SparkEntry {
     // drop) is one declarative filter over the page scan: no UDF, no
     // shuffle, no second pass over the records.
     "q296_xrobots_gate" -> ((s, d) => {
-      import s.implicits._
-      def rec(wtype: String, uri: String, payload: Array[Byte]): Array[Byte] = {
-        val hdr = (s"WARC/1.0\r\nWARC-Type: $wtype\r\n" +
-          (if (uri != null) s"WARC-Target-URI: $uri\r\n" else "") +
-          s"Content-Length: ${payload.length}\r\n\r\n").getBytes("ISO-8859-1")
-        hdr ++ payload ++ "\r\n\r\n".getBytes("ISO-8859-1")
-      }
-      def page(body: String, xRobots: String): Array[Byte] =
-        ("HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n" +
-          (if (xRobots != null) s"X-Robots-Tag: $xRobots\r\n" else "") +
-          "\r\n" + body).getBytes("UTF-8")
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "warc? no".getBytes("UTF-8"))
-        else {
-          val headerNoindex = (id % 3) match {
-            case 0 => "noindex"
-            case 1 => "googlebot: noindex"
-            case _ => "NONE, nosnippet"
-          }
-          val p2 = (if (id % 2 == 0)
-            "<meta name=\"robots\" content=\"noindex\">" else "") +
-            s"<p>keep page $id two</p>"
-          (id,
-            rec("warcinfo", null, "software: graft\r\n".getBytes("ISO-8859-1")) ++
-              rec("response", s"http://ex.com/$id/0",
-                page(s"<p>keep page $id zero</p>", "nofollow, noarchive")) ++
-              rec("response", s"http://ex.com/$id/1",
-                page(s"<p>keep page $id one</p>", headerNoindex)) ++
-              rec("response", s"http://ex.com/$id/2", page(p2, null)))
+      val pay = warcPayloads(s, d) { id =>
+        val headerNoindex = (id % 3) match {
+          case 0 => "noindex"
+          case 1 => "googlebot: noindex"
+          case _ => "NONE, nosnippet"
         }
-      }.toDF("doc_id", "warc")
+        val p2 = (if (id % 2 == 0)
+          "<meta name=\"robots\" content=\"noindex\">" else "") +
+          s"<p>keep page $id two</p>"
+        warcInfo ++
+          warcRespRec(s"http://ex.com/$id/0", "text/html",
+            s"<p>keep page $id zero</p>".getBytes("UTF-8"),
+            "X-Robots-Tag: nofollow, noarchive\r\n") ++
+          warcRespRec(s"http://ex.com/$id/1", "text/html",
+            s"<p>keep page $id one</p>".getBytes("UTF-8"),
+            s"X-Robots-Tag: $headerNoindex\r\n") ++
+          warcRespRec(s"http://ex.com/$id/2", "text/html", p2.getBytes("UTF-8"))
+      }
       graft.sources.Warc.warcHtmlPages(
           graft.sources.Multimodal.asMedia(pay, "doc_id", "warc", "warc"))
         .where(graft.functions.MetaRobots.indexablePage(
@@ -7887,7 +7292,7 @@ object SparkEntry {
     "q315_curation_v11" -> ((s, d) => {
       import s.implicits._
       val pages = graft.sources.Warc.warcPathsDocText(
-          s, warcV11FixturePaths(s, d))
+          s, fixturePaths(s, d, "warc_v11_v1"))
         .withColumn("media_id",
           regexp_extract(col("path"), "w(\\d+)\\.warc$", 1).cast("long"))
       val gated = pages
@@ -7926,7 +7331,7 @@ object SparkEntry {
     "q320_curation_v12" -> ((s, d) => {
       import s.implicits._
       val pages = graft.sources.Warc.warcPathsDocText(
-          s, warcV12FixturePaths(s, d))
+          s, fixturePaths(s, d, "warc_v12_v1"))
         .withColumn("media_id",
           regexp_extract(col("path"), "w(\\d+)\\.warc$", 1).cast("long"))
       val gated = pages
@@ -7968,7 +7373,7 @@ object SparkEntry {
     "q326_curation_v13" -> ((s, d) => {
       import s.implicits._
       val pages = graft.sources.Warc.warcPathsDocText(
-          s, warcV13FixturePaths(s, d))
+          s, fixturePaths(s, d, "warc_v13_v1"))
         .withColumn("media_id",
           regexp_extract(col("path"), "w(\\d+)\\.warc$", 1).cast("long"))
       val gated = pages
@@ -8014,7 +7419,7 @@ object SparkEntry {
       // Streaming leg (Curation.v14Stream, parity-pinned in
       // CurationStreamSpec)
       val pages = graft.sources.Warc.warcPathsDocText(
-          s, warcV14FixturePaths(s, d))
+          s, fixturePaths(s, d, "warc_v14_v1"))
         .withColumn("media_id",
           regexp_extract(col("path"), "w(\\d+)\\.warc$", 1).cast("long"))
       graft.llm.Curation.v14Batch(pages, Seq("bad.example", "spam.test"))
@@ -8035,7 +7440,7 @@ object SparkEntry {
     // lower-cardinality key — no join, rules baked into codegen.
     "q344_curation_v15" -> ((s, d) => {
       val pages = graft.sources.Warc.warcPathsDocText(
-          s, warcV15FixturePaths(s, d))
+          s, fixturePaths(s, d, "warc_v15_v1"))
         .withColumn("media_id",
           regexp_extract(col("path"), "w(\\d+)\\.warc$", 1).cast("long"))
       graft.llm.Curation.v15Batch(pages, Seq("bad.example", "spam.test"),
@@ -8046,7 +7451,7 @@ object SparkEntry {
     "q308_curation_v10" -> ((s, d) => {
       import s.implicits._
       val pages = graft.sources.Warc.warcPathsDocText(
-          s, warcV10FixturePaths(s, d))
+          s, fixturePaths(s, d, "warc_v10_v1"))
         .withColumn("media_id",
           regexp_extract(col("path"), "w(\\d+)\\.warc$", 1).cast("long"))
       val kept = pages
@@ -8198,30 +7603,20 @@ object SparkEntry {
     // deliberately mismatches: the revisit claims identity the
     // stored capture contradicts). Map-only walk + one keyed join.
     "q334_warc_revisit" -> ((s, d) => {
-      import s.implicits._
-      def rec(uri: String, wtype: String, extra: String,
-              payload: Array[Byte]): Array[Byte] = {
-        val hdr = (s"WARC/1.0\r\nWARC-Type: $wtype\r\n" +
-          s"WARC-Target-URI: $uri\r\n" + extra +
-          s"Content-Length: ${payload.length}\r\n\r\n").getBytes("ISO-8859-1")
-        hdr ++ payload ++ "\r\n\r\n".getBytes("ISO-8859-1")
+      val pay = warcPayloads(s, d) { id =>
+        val resp = warcRecord("response", s"http://ex.com/orig/$id",
+          httpResponse("200 OK", "text/html",
+            s"<p>original page $id stays stored.</p>".getBytes("UTF-8")),
+          s"WARC-Payload-Digest: sha1:D$id\r\n")
+        val revDigest = if (id % 3 == 0) s"sha1:X$id" else s"sha1:D$id"
+        // a revisit's payload is the bare status line: no Content-Type
+        val rev = warcRecord("revisit", s"http://ex.com/again/$id",
+          "HTTP/1.1 200 OK\r\n\r\n".getBytes("ISO-8859-1"),
+          s"WARC-Refers-To-Target-URI: HTTP://EX.COM:80/orig/$id\r\n" +
+            s"WARC-Payload-Digest: $revDigest\r\n" +
+            "WARC-Profile: http://netpreserve.org/warc/1.1/revisit/identical-payload-digest\r\n")
+        resp ++ rev
       }
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "warc? no".getBytes("UTF-8"))
-        else {
-          val body = ("HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n" +
-            s"<p>original page $id stays stored.</p>").getBytes("UTF-8")
-          val resp = rec(s"http://ex.com/orig/$id", "response",
-            s"WARC-Payload-Digest: sha1:D$id\r\n", body)
-          val revDigest = if (id % 3 == 0) s"sha1:X$id" else s"sha1:D$id"
-          val rev = rec(s"http://ex.com/again/$id", "revisit",
-            s"WARC-Refers-To-Target-URI: HTTP://EX.COM:80/orig/$id\r\n" +
-              s"WARC-Payload-Digest: $revDigest\r\n" +
-              "WARC-Profile: http://netpreserve.org/warc/1.1/revisit/identical-payload-digest\r\n",
-            "HTTP/1.1 200 OK\r\n\r\n".getBytes("ISO-8859-1"))
-          (id, resp ++ rev)
-        }
-      }.toDF("doc_id", "warc")
       val caps = graft.sources.Warc.warcCaptures(
         graft.sources.Multimodal.asMedia(pay, "doc_id", "warc", "warc"))
       val responses = caps.where(col("kind") === "response")
@@ -8462,7 +7857,7 @@ object SparkEntry {
     // bounded memory.
     "q306_warc_stream_docs" -> ((s, d) => {
       import s.implicits._
-      val paths = warcDocsFixturePaths(s, d)
+      val paths = fixturePaths(s, d, "warc_docs_v1")
       graft.sources.Warc.warcPathsDocText(s, paths)
         .withColumn("media_id",
           regexp_extract(col("path"), "w(\\d+)\\.warc$", 1).cast("long"))
@@ -8570,28 +7965,16 @@ object SparkEntry {
     // one. Text contract matches xlsxText (cells tab-joined, rows
     // and sheets newline-joined). Per-record bounded walk, map-only.
     "q317_xls_text" -> ((s, d) => {
-      import s.implicits._
-      def rec(uri: String, ctype: String, body: Array[Byte]): Array[Byte] = {
-        val http = (s"HTTP/1.1 200 OK\r\nContent-Type: $ctype\r\n\r\n")
-          .getBytes("ISO-8859-1") ++ body
-        val hdr = ("WARC/1.0\r\nWARC-Type: response\r\n" +
-          s"WARC-Target-URI: $uri\r\n" +
-          s"Content-Length: ${http.length}\r\n\r\n").getBytes("ISO-8859-1")
-        hdr ++ http ++ "\r\n\r\n".getBytes("ISO-8859-1")
+      val pay = warcPayloads(s, d) { id =>
+        val xls = graft.sources.Ole2.buildXls(
+          Seq(
+            Seq(s"Alpha $id", s"café $id", s"Ω tail $id"),
+            Seq(s"$id", "42", "7"),
+            Seq("", s"tail — $id", s"${id * 3}")),
+          continueSplit = id % 2 == 0)
+        warcRespRec(s"http://ex.com/$id/sheet.xls",
+          "application/vnd.ms-excel", xls)
       }
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "warc? no".getBytes("UTF-8"))
-        else {
-          val xls = graft.sources.Ole2.buildXls(
-            Seq(
-              Seq(s"Alpha $id", s"café $id", s"Ω tail $id"),
-              Seq(s"$id", "42", "7"),
-              Seq("", s"tail — $id", s"${id * 3}")),
-            continueSplit = id % 2 == 0)
-          (id, rec(s"http://ex.com/$id/sheet.xls",
-            "application/vnd.ms-excel", xls))
-        }
-      }.toDF("doc_id", "warc")
       graft.sources.Warc.warcDocText(
           graft.sources.Multimodal.asMedia(pay, "doc_id", "warc", "warc"))
         .select("media_id", "record_idx", "carrier", "text")
@@ -8607,25 +7990,13 @@ object SparkEntry {
     // soft break (both must become line breaks), and the docToText
     // whitespace contract. Per-record bounded walk, map-only.
     "q318_ppt_text" -> ((s, d) => {
-      import s.implicits._
-      def rec(uri: String, ctype: String, body: Array[Byte]): Array[Byte] = {
-        val http = (s"HTTP/1.1 200 OK\r\nContent-Type: $ctype\r\n\r\n")
-          .getBytes("ISO-8859-1") ++ body
-        val hdr = ("WARC/1.0\r\nWARC-Type: response\r\n" +
-          s"WARC-Target-URI: $uri\r\n" +
-          s"Content-Length: ${http.length}\r\n\r\n").getBytes("ISO-8859-1")
-        hdr ++ http ++ "\r\n\r\n".getBytes("ISO-8859-1")
+      val pay = warcPayloads(s, d) { id =>
+        val ppt = graft.sources.Ole2.buildPpt(Seq(
+          Seq(s"Title $id", s"Bullet café $id\rMore $id"),
+          Seq(s"Second — slide $id", s"Note $id" + "\u000B" + "wrap")))
+        warcRespRec(s"http://ex.com/$id/deck.ppt",
+          "application/vnd.ms-powerpoint", ppt)
       }
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "warc? no".getBytes("UTF-8"))
-        else {
-          val ppt = graft.sources.Ole2.buildPpt(Seq(
-            Seq(s"Title $id", s"Bullet café $id\rMore $id"),
-            Seq(s"Second — slide $id", s"Note $id" + "\u000B" + "wrap")))
-          (id, rec(s"http://ex.com/$id/deck.ppt",
-            "application/vnd.ms-powerpoint", ppt))
-        }
-      }.toDF("doc_id", "warc")
       graft.sources.Warc.warcDocText(
           graft.sources.Multimodal.asMedia(pay, "doc_id", "warc", "warc"))
         .select("media_id", "record_idx", "carrier", "text")
@@ -8743,25 +8114,13 @@ object SparkEntry {
     // instruction leg must drop, and paragraph marks. Per-record
     // bounded walk, map-only.
     "q312_doc_text" -> ((s, d) => {
-      import s.implicits._
-      def rec(uri: String, ctype: String, body: Array[Byte]): Array[Byte] = {
-        val http = (s"HTTP/1.1 200 OK\r\nContent-Type: $ctype\r\n\r\n")
-          .getBytes("ISO-8859-1") ++ body
-        val hdr = ("WARC/1.0\r\nWARC-Type: response\r\n" +
-          s"WARC-Target-URI: $uri\r\n" +
-          s"Content-Length: ${http.length}\r\n\r\n").getBytes("ISO-8859-1")
-        hdr ++ http ++ "\r\n\r\n".getBytes("ISO-8859-1")
+      val pay = warcPayloads(s, d) { id =>
+        val doc = graft.sources.Ole2.buildDoc(
+          Seq(s"Doc $id legacy café body.", s"Unicode — tail $id."),
+          field = Some((s"HYPERLINK \"http://x/$id\"",
+            s"shown $id")))
+        warcRespRec(s"http://ex.com/$id/old.doc", "application/msword", doc)
       }
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "warc? no".getBytes("UTF-8"))
-        else {
-          val doc = graft.sources.Ole2.buildDoc(
-            Seq(s"Doc $id legacy café body.", s"Unicode — tail $id."),
-            field = Some((s"HYPERLINK \"http://x/$id\"",
-              s"shown $id")))
-          (id, rec(s"http://ex.com/$id/old.doc", "application/msword", doc))
-        }
-      }.toDF("doc_id", "warc")
       graft.sources.Warc.warcDocText(
           graft.sources.Multimodal.asMedia(pay, "doc_id", "warc", "warc"))
         .select("media_id", "record_idx", "carrier", "text")
@@ -8778,30 +8137,18 @@ object SparkEntry {
     // stated line formula. One linear char walk per document,
     // map-only.
     "q305_rtf_text" -> ((s, d) => {
-      import s.implicits._
-      def rec(uri: String, ctype: String, body: Array[Byte]): Array[Byte] = {
-        val http = (s"HTTP/1.1 200 OK\r\nContent-Type: $ctype\r\n\r\n")
-          .getBytes("ISO-8859-1") ++ body
-        val hdr = ("WARC/1.0\r\nWARC-Type: response\r\n" +
-          s"WARC-Target-URI: $uri\r\n" +
-          s"Content-Length: ${http.length}\r\n\r\n").getBytes("ISO-8859-1")
-        hdr ++ http ++ "\r\n\r\n".getBytes("ISO-8859-1")
+      val pay = warcPayloads(s, d) { id =>
+        val rtf = "{\\rtf1\\ansi{\\fonttbl{\\f0 Times New Roman;}}" +
+          "{\\colortbl;\\red0\\green0\\blue0;}" +
+          "{\\info{\\author secret author}}" +
+          "{\\*\\generator Graft;}" +
+          s"\\pard Plain $id text with \\b bold $id\\b0  and caf\\'e9.\\par" +
+          s" Second\\tab line $id \\u8212?dash.\\par" +
+          "{\\field{\\*\\fldinst HYPERLINK \"http://x/" + id + "\"}" +
+          s"{\\fldrslt shown link $id}}\\par}"
+        warcRespRec(s"http://ex.com/$id/doc.rtf", "application/rtf",
+          rtf.getBytes("UTF-8"))
       }
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "warc? no".getBytes("UTF-8"))
-        else {
-          val rtf = "{\\rtf1\\ansi{\\fonttbl{\\f0 Times New Roman;}}" +
-            "{\\colortbl;\\red0\\green0\\blue0;}" +
-            "{\\info{\\author secret author}}" +
-            "{\\*\\generator Graft;}" +
-            s"\\pard Plain $id text with \\b bold $id\\b0  and caf\\'e9.\\par" +
-            s" Second\\tab line $id \\u8212?dash.\\par" +
-            "{\\field{\\*\\fldinst HYPERLINK \"http://x/" + id + "\"}" +
-            s"{\\fldrslt shown link $id}}\\par}"
-          (id, rec(s"http://ex.com/$id/doc.rtf", "application/rtf",
-            rtf.getBytes("UTF-8")))
-        }
-      }.toDF("doc_id", "warc")
       graft.sources.Warc.warcDocText(
           graft.sources.Multimodal.asMedia(pay, "doc_id", "warc", "warc"))
         .select("media_id", "record_idx", "carrier", "text")
@@ -8818,30 +8165,17 @@ object SparkEntry {
     // BENIGN header (nofollow — must not trip). Composes q296's
     // grammar with q289's router; no second record walk.
     "q304_xrobots_carriers" -> ((s, d) => {
-      import s.implicits._
-      def rec(uri: String, ctype: String, xRobots: String,
-              body: Array[Byte]): Array[Byte] = {
-        val http = (s"HTTP/1.1 200 OK\r\nContent-Type: $ctype\r\n" +
-          (if (xRobots != null) s"X-Robots-Tag: $xRobots\r\n" else "") +
-          "\r\n").getBytes("ISO-8859-1") ++ body
-        val hdr = ("WARC/1.0\r\nWARC-Type: response\r\n" +
-          s"WARC-Target-URI: $uri\r\n" +
-          s"Content-Length: ${http.length}\r\n\r\n").getBytes("ISO-8859-1")
-        hdr ++ http ++ "\r\n\r\n".getBytes("ISO-8859-1")
+      val pay = warcPayloads(s, d) { id =>
+        warcRespRec(s"http://ex.com/$id/h", "text/html",
+          s"<p>html keep $id</p>".getBytes("UTF-8")) ++
+          warcRespRec(s"http://ex.com/$id/p.pdf", "application/pdf",
+            graft.sources.Pdf.buildSimplePdf(
+              Seq(Seq(s"pdf body $id")), flate = false),
+            if (id % 2 == 0) "X-Robots-Tag: noindex\r\n" else "") ++
+          warcRespRec(s"http://ex.com/$id/m.md", "text/markdown",
+            s"md **body** $id".getBytes("UTF-8"),
+            "X-Robots-Tag: nofollow, noarchive\r\n")
       }
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "warc? no".getBytes("UTF-8"))
-        else (id,
-          rec(s"http://ex.com/$id/h", "text/html", null,
-            s"<p>html keep $id</p>".getBytes("UTF-8")) ++
-            rec(s"http://ex.com/$id/p.pdf", "application/pdf",
-              if (id % 2 == 0) "noindex" else null,
-              graft.sources.Pdf.buildSimplePdf(
-                Seq(Seq(s"pdf body $id")), flate = false)) ++
-            rec(s"http://ex.com/$id/m.md", "text/markdown",
-              "nofollow, noarchive",
-              s"md **body** $id".getBytes("UTF-8")))
-      }.toDF("doc_id", "warc")
       graft.sources.Warc.warcDocText(
           graft.sources.Multimodal.asMedia(pay, "doc_id", "warc", "warc"))
         .where(!graft.functions.XRobotsTag.noindex(col("x_robots")))
@@ -8878,7 +8212,7 @@ object SparkEntry {
     // the oracle unchanged.
     "q301_warc_bz2" -> ((s, d) => {
       import s.implicits._
-      val paths = warcBz2FixturePaths(s, d)
+      val paths = fixturePaths(s, d, "warc_bz2_v1")
       graft.sources.Warc.warcPathsHtmlText(s, paths)
         .withColumn("media_id",
           regexp_extract(col("path"), "w(\\d+)\\.warc\\.bz2$", 1).cast("long"))
@@ -8891,7 +8225,7 @@ object SparkEntry {
     // replays the pixel-formula channel sums unchanged.
     "q302_tar_xz" -> ((s, d) => {
       import s.implicits._
-      val paths = tarXzFixturePaths(s, d)
+      val paths = fixturePaths(s, d, "tar_xz_v1")
       val members = graft.sources.Archives.tarPathMembers(s, paths)
         .where(col("name").endsWith(".bmp"))
         .withColumn("doc_id",
@@ -8953,7 +8287,7 @@ object SparkEntry {
     // streams, never materializes the inflated container).
     "q298_warc_zst" -> ((s, d) => {
       import s.implicits._
-      val paths = warcZstFixturePaths(s, d)
+      val paths = fixturePaths(s, d, "warc_zst_v1")
       graft.sources.Warc.warcPathsHtmlText(s, paths)
         .withColumn("media_id",
           regexp_extract(col("path"), "w(\\d+)\\.warc\\.zst$", 1).cast("long"))
@@ -8967,7 +8301,7 @@ object SparkEntry {
     // oracle replays the pixel-formula channel sums unchanged.
     "q300_tar_zst" -> ((s, d) => {
       import s.implicits._
-      val paths = tarZstFixturePaths(s, d)
+      val paths = fixturePaths(s, d, "tar_zst_v1")
       val members = graft.sources.Archives.tarPathMembers(s, paths)
         .where(col("name").endsWith(".bmp"))
         .withColumn("doc_id",
@@ -8993,45 +8327,31 @@ object SparkEntry {
     // pins the router: same single record walk, no second pass.
     // Map-only; the cleaner is one linear char walk per document.
     "q297_latex_text" -> ((s, d) => {
-      import s.implicits._
-      def rec(wtype: String, uri: String, ctype: String,
-              body: Array[Byte]): Array[Byte] = {
-        val http = (s"HTTP/1.1 200 OK\r\nContent-Type: $ctype\r\n\r\n")
-          .getBytes("ISO-8859-1") ++ body
-        val hdr = (s"WARC/1.0\r\nWARC-Type: $wtype\r\n" +
-          (if (uri != null) s"WARC-Target-URI: $uri\r\n" else "") +
-          s"Content-Length: ${http.length}\r\n\r\n").getBytes("ISO-8859-1")
-        hdr ++ http ++ "\r\n\r\n".getBytes("ISO-8859-1")
+      val pay = warcPayloads(s, d) { id =>
+        val tex =
+          s"""\\documentclass[11pt]{article}
+             |% preamble comment $id drops
+             |\\usepackage{amsmath}
+             |\\begin{document}
+             |\\section{Head $id}
+             |Body $id with \\emph{emph $id} \\& 100\\% real.
+             |Inline $$x_{$id}^2$$ math drops but tail $id stays.
+             |\\begin{equation}
+             |e = mc^2 + $id
+             |\\end{equation}
+             |\\begin{itemize}
+             |\\item alpha $id
+             |\\item beta $id
+             |\\end{itemize}
+             |See \\cite{ref$id} and \\href{http://x/$id}{link $id} now.
+             |Tilde~joined and a break\\\\here $id.""".stripMargin +
+            (if (id % 2 == 0) s"\nExtra tok${(id * 13) % 89} prose."
+             else "") + "\n\\end{document}\n"
+        warcRespRec(s"http://ex.com/$id/page", "text/html",
+          s"<p>html page $id</p>".getBytes("UTF-8")) ++
+          warcRespRec(s"http://ex.com/$id/paper.tex",
+            "application/x-tex", tex.getBytes("UTF-8"))
       }
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "warc? no".getBytes("UTF-8"))
-        else {
-          val tex =
-            s"""\\documentclass[11pt]{article}
-               |% preamble comment $id drops
-               |\\usepackage{amsmath}
-               |\\begin{document}
-               |\\section{Head $id}
-               |Body $id with \\emph{emph $id} \\& 100\\% real.
-               |Inline $$x_{$id}^2$$ math drops but tail $id stays.
-               |\\begin{equation}
-               |e = mc^2 + $id
-               |\\end{equation}
-               |\\begin{itemize}
-               |\\item alpha $id
-               |\\item beta $id
-               |\\end{itemize}
-               |See \\cite{ref$id} and \\href{http://x/$id}{link $id} now.
-               |Tilde~joined and a break\\\\here $id.""".stripMargin +
-              (if (id % 2 == 0) s"\nExtra tok${(id * 13) % 89} prose."
-               else "") + "\n\\end{document}\n"
-          (id,
-            rec("response", s"http://ex.com/$id/page", "text/html",
-              s"<p>html page $id</p>".getBytes("UTF-8")) ++
-              rec("response", s"http://ex.com/$id/paper.tex",
-                "application/x-tex", tex.getBytes("UTF-8")))
-        }
-      }.toDF("doc_id", "warc")
       graft.sources.Warc.warcDocText(
           graft.sources.Multimodal.asMedia(pay, "doc_id", "warc", "warc"))
         .select("media_id", "record_idx", "url", "carrier", "text")
@@ -9124,11 +8444,7 @@ object SparkEntry {
     // three carriers' texts and both windows. Plan shape: one flatMap
     // kernel + two keyed windows — no join, nothing global.
     "q292_curation_v9" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "warc? no".getBytes("UTF-8"))
-        else (id, warcV9Fixture(id))
-      }.toDF("doc_id", "warc")
+      val pay = warcPayloads(s, d)(warcV9Fixture)
       val pages = graft.sources.Warc.warcDocText(
         graft.sources.Multimodal.asMedia(pay, "doc_id", "warc", "warc"))
       val kept = pages.where(length(col("text")) >= 20)
@@ -9274,14 +8590,7 @@ object SparkEntry {
     // every 50th container is junk (loud fence, zero rows). flatMap
     // kernel; bodies never shuffle.
     "q289_warc_doc_text" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "warc? no".getBytes("UTF-8"))
-        else {
-          val b = warcMixedFixture(id)
-          (id, if (id % 4 == 1) gzipBytes(b) else b)
-        }
-      }.toDF("doc_id", "warc")
+      val pay = warcPayloads(s, d)(id => gzipEvery4th(id, warcMixedFixture(id)))
       graft.sources.Warc.warcDocText(
           graft.sources.Multimodal.asMedia(pay, "doc_id", "warc", "warc"))
         .select("media_id", "record_idx", "url", "carrier", "text")

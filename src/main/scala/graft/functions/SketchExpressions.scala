@@ -80,7 +80,16 @@ case class MinHashSignature(child: Expression, a: Seq[Long], b: Seq[Long])
   * order (the LinkedHashSet contract the packed/stored sketches
   * inherited). `mask` is applied BEFORE dedup (the mask31 tier
   * dedups masked values — two 64-bit hashes colliding in the low 31
-  * bits are ONE element there). Returns null when tokens < n. */
+  * bits are ONE element there). Returns null when tokens < n.
+  *
+  * Input contract: valid UTF-8, which is what stored sketches were
+  * built from. Tokens are hashed as raw bytes; on valid UTF-8 that
+  * equals the String route (decode, `split(" ", -1)`, re-encode with
+  * `getBytes("UTF-8")`). On ill-formed bytes (a UTF8String cast from
+  * arbitrary binary) token boundaries still agree, but the walk hashes
+  * the raw bytes where the String route hashes U+FFFD replacements,
+  * so such sketches do not match String-built ones (PackedSketchSpec
+  * pins the difference). */
 private[functions] object ShingleWalk {
   /** Largest power-of-two JVM array length (2^30). */
   val MaxTableCapacity: Int = 1 << 30
@@ -162,7 +171,8 @@ private[functions] object ShingleWalk {
   * division per (shingle × hash). Replaces: two full tokenize+hash
   * passes over the text, a String[] per row, per-window UTF-8
   * re-encoding, LinkedHashSet boxing, and two GenericArrayData
-  * materializations. */
+  * materializations. Valid-UTF-8 input contract: see [[ShingleWalk]]
+  * (ill-formed bytes are hashed raw, not as U+FFFD). */
 case class MinHashSketch(child: Expression, n: Int, a: Seq[Long], b: Seq[Long])
     extends UnaryExpression with UnaryKernelCodegen {
 
@@ -274,7 +284,10 @@ case class SimHash64(child: Expression) extends UnaryExpression with UnaryKernel
   * itself stands in for the shingle set (exact-Jaccard verification),
   * where 31-bit cross-doc collisions (~1e-4 per pair at 500 shingles)
   * would perturb the intersection count; at 64 bits the collision odds
-  * per pair are ~1e-14. */
+  * per pair are ~1e-14.
+  *
+  * Valid-UTF-8 input contract: see [[ShingleWalk]] (ill-formed bytes
+  * are hashed raw, not as U+FFFD). */
 case class ShingleHashes(child: Expression, n: Int, mask31: Boolean = true)
     extends UnaryExpression with UnaryKernelCodegen {
 

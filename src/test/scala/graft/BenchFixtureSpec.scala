@@ -45,6 +45,19 @@ class BenchFixtureSpec extends SparkSpec {
     assert(bad.count() == 0)
   }
 
+  test("x10 fixtures hold the same rows at 4 and at 32 partitions") {
+    val fixtures = Seq(
+      "docsX10" -> ((p: Int) => Bench.docsX10(spark, sf, p)),
+      "embX10" -> ((p: Int) => Bench.embX10(spark, sf, p)))
+    for ((name, fx) <- fixtures) {
+      val (at4, at32) = (fx(4), fx(32))
+      assert(at4.rdd.getNumPartitions == 4, name)
+      assert(at32.rdd.getNumPartitions == 32, name)
+      assert(at4.count() == at32.count(), name)
+      assert(at4.exceptAll(at32).isEmpty && at32.exceptAll(at4).isEmpty, name)
+    }
+  }
+
   test("TagWords null text yields null") {
     val df = Seq[(Option[String], Long)]((None, 1L)).toDF("text", "rep")
     assert(df.select(TagWords(col("text"), col("rep"))).head.isNullAt(0))

@@ -142,6 +142,66 @@ class PackedSketchSpec extends SparkSpec {
     }
   }
 
+  test("ShingleWalk equals the String.split reference on valid UTF-8; ill-formed bytes hash raw") {
+    // FNV-1a per n-token window, NUL after each token, distinct in
+    // first-occurrence order: the walk's contract over given tokens
+    def windows(tokens: Seq[Array[Byte]], n: Int): Seq[Long] =
+      if (tokens.size < n) null
+      else tokens.sliding(n).map { w =>
+        var h = 0xcbf29ce484222325L
+        w.foreach { t =>
+          t.foreach { b => h ^= (b & 0xffL); h *= 0x100000001b3L }
+          h *= 0x100000001b3L
+        }
+        h
+      }.toSeq.distinct
+    def stringRef(b: Array[Byte], n: Int): Seq[Long] =
+      windows(new String(b, "UTF-8").split(" ", -1).toSeq
+        .map(_.getBytes("UTF-8")), n)
+    def rawRef(b: Array[Byte], n: Int): Seq[Long] = {
+      val cuts = -1 +: b.indices.filter(b(_) == 0x20) :+ b.length
+      windows(cuts.sliding(2).map { case Seq(s, e) => b.slice(s + 1, e) }
+        .toSeq, n)
+    }
+    def walk(b: Array[Byte], n: Int): Seq[Long] =
+      ShingleWalk.distinctWindowHashes(b, n, -1L) match {
+        case null => null
+        case (order, cnt) => order.take(cnt).toSeq
+      }
+    def utf8(s: String) = s.getBytes("UTF-8")
+    val valid = Seq("", " ", "a", "a b c a b c", "  lead and  double ",
+      "unicode é ü 中文 字 😀 mix", "trailing ", "tab\tkept a b")
+    for (s <- valid; n <- Seq(1, 2, 3))
+      assert(walk(utf8(s), n) == stringRef(utf8(s), n), s"'$s' n=$n")
+
+    // ill-formed token → what the JDK decoder turns it into
+    val illFormed = Seq(
+      Array(0x80) -> "\uFFFD", // lone continuation byte
+      Array(0xE2, 0x82) -> "\uFFFD", // truncated 3-byte sequence
+      Array(0xC0, 0xAF) -> "\uFFFD\uFFFD", // overlong '/'
+      Array(0xFF) -> "\uFFFD") // never valid in UTF-8
+    for ((badInts, replaced) <- illFormed) {
+      val bad = badInts.map(_.toByte)
+      val text = utf8("ab ") ++ bad ++ utf8(" cd")
+      assert(new String(bad, "UTF-8") == replaced)
+      val got = walk(text, 1)
+      // the walk hashes the raw bytes ...
+      assert(got == rawRef(text, 1))
+      // ... the String route hashes the replacement characters ...
+      assert(stringRef(text, 1) == windows(Seq(utf8("ab"),
+        utf8(replaced), utf8("cd")), 1))
+      // ... so exactly the window holding the bad token differs
+      val ref = stringRef(text, 1)
+      assert(got.size == 3 && ref.size == 3)
+      assert(got.indices.filter(i => got(i) != ref(i)) == Seq(1),
+        badInts.mkString(","))
+    }
+    // two different ill-formed tokens collapse to ONE U+FFFD token on
+    // the String route but stay two distinct hashes in the walk
+    val two = Array(0x80, 0x20, 0xFF).map(_.toByte)
+    assert(walk(two, 1).size == 2 && stringRef(two, 1).size == 1)
+  }
+
   test("BandKeys: equal band words collide, differing band words (almost surely) do not") {
     val sig1 = (0L until 64L).toArray
     val sig2 = sig1.clone; sig2(10) = 999L // band 5 of 32×2 differs
