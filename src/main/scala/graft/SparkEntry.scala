@@ -87,11 +87,10 @@ object SparkEntry {
   private def emb(s: SparkSession, d: String) = Tables.embeddings(s, d)
 
   /** q266's per-id AVI bytes (junk every 50th id) — a pure function
-    * of the id, shared by the on-disk fixture (`avi_v6_v1` in
-    * [[diskFixtures]]) and the r20 ProfileStages synthesis
-    * probe. Building ~4,900 AVIs per run in-plan was ~half the
-    * entry's cpu_sec (fixture apparatus, not engine work —
-    * optimization r20 item 3, following the q344 on-disk pattern). */
+    * of the id, written once by the on-disk fixture (`avi_v6_v1` in
+    * [[diskFixtures]]). Building ~4,900 AVIs per run in-plan was
+    * ~half the entry's cpu_sec (fixture apparatus, not engine work —
+    * optimization r20 §3, following the q344 on-disk pattern). */
   private[graft] def q266AviBytes(id: Long): Array[Byte] =
     if (id % 50 == 0) "video? hardly".getBytes("UTF-8")
     else {
@@ -109,14 +108,6 @@ object SparkEntry {
       }
       aviFixture(mjpeg = false, 18, 16, frames, audioFirst = false)
     }
-
-  /** The r19 IN-PLAN q266 video payload, kept as a measurement probe
-    * (ProfileStages `q266` — the before/after synthesis evidence). */
-  private[graft] def q266VidPayProbe(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    docIds(s, d).map(id => (id, q266AviBytes(id))).toDF("doc_id", "vid")
-  }
-
 
   // PNG fixture plumbing shared by q242/q244/q249 (executor-side:
   // static object methods serialize as calls, not captured state)
@@ -753,9 +744,7 @@ object SparkEntry {
 
   /** The q353/v16 WARC fixture: v15's records plus a 301
     * `h-old/$id → /h/$b` edge, a 200 capture AT h-old, and a planted
-    * 2-cycle with its 200 page — extracted from the query body so the
-    * stage profiler can time fixture synthesis apart from the decode
-    * walk and the v16 body. */
+    * 2-cycle with its 200 page. FixtureBytesSpec pins its bytes. */
   private[graft] def q353Fixture(s: SparkSession, d: String): DataFrame =
     warcPayloads(s, d) { id =>
       gzipEvery4th(id, warcV15Bytes(id) ++
@@ -787,15 +776,22 @@ object SparkEntry {
     * java.util.zip.ZipOutputStream (DEFLATED + data descriptors, the
     * layout streaming extractors must self-terminate through the
     * Inflater on); every 3rd id leads with a STORED member (the
-    * sizes-in-local-header layout). The JDK stamps each entry with
-    * the write time, so these files differ between cold writes in the
-    * DOS time/date fields only. */
+    * sizes-in-local-header layout). Every entry carries one fixed
+    * local time (the JDK would stamp the write time), so the bytes
+    * are a pure function of the id. */
   private def zipMembers(id: Long): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
     val zo = new java.util.zip.ZipOutputStream(bos)
+    // setTimeLocal, not setTime(long): the latter converts through
+    // the default time zone
+    def entry(name: String) = {
+      val e = new java.util.zip.ZipEntry(name)
+      e.setTimeLocal(java.time.LocalDateTime.of(2020, 1, 1, 0, 0))
+      e
+    }
     if (id % 3 == 1) { // stored lead member (no descriptor)
       val body = s"stored $id".getBytes("UTF-8")
-      val e = new java.util.zip.ZipEntry("lead.txt")
+      val e = entry("lead.txt")
       e.setMethod(java.util.zip.ZipEntry.STORED)
       e.setSize(body.length)
       val crc = new java.util.zip.CRC32(); crc.update(body)
@@ -803,13 +799,13 @@ object SparkEntry {
       zo.putNextEntry(e); zo.write(body); zo.closeEntry()
     }
     bmpMembers(id).foreach { case (name, body) =>
-      zo.putNextEntry(new java.util.zip.ZipEntry(name))
+      zo.putNextEntry(entry(name))
       zo.write(body)
       zo.closeEntry()
     }
-    zo.putNextEntry(new java.util.zip.ZipEntry("notes/"))
+    zo.putNextEntry(entry("notes/"))
     zo.closeEntry()
-    zo.putNextEntry(new java.util.zip.ZipEntry("note.txt"))
+    zo.putNextEntry(entry("note.txt"))
     zo.write(s"doc $id".getBytes("UTF-8"))
     zo.closeEntry()
     zo.close()
@@ -843,7 +839,7 @@ object SparkEntry {
       (id: Long) => junkEvery50th(id, "tar")(zstBytes(tarMembers(id)))),
     "tar_xz_v1" -> ("t%08d.tar.xz",
       (id: Long) => junkEvery50th(id, "tar")(xzBytes(tarMembers(id)))),
-    "zip_stream_v1" -> ("z%08d.zip", // q287
+    "zip_stream_v2" -> ("z%08d.zip", // q287
       (id: Long) => junkEvery50th(id, "zip")(zipMembers(id))),
     // q306: q289's mixed-carrier records, for the streaming router
     "warc_docs_v1" -> ("w%08d.warc",
@@ -4926,19 +4922,18 @@ object SparkEntry {
     // lifecycle, bounded plan depth at any round count), vectors
     // persisted once and released via the handle.
     "q226_kmeans_iter" -> ((s, d) => {
-      // checkpointEvery stays 1 (per-round cut): the r20 uncut-DAG
-      // variant (checkpointEvery = 3) re-embeds each round's plan in
-      // the next round's centroid aggregate AND assignment join, so
-      // round work compounds — bench-style A/B (construction timed,
-      // ProfileStages q226ck) measured ~2× the CPU and ~1.6× the
+      // The per-round cut stays: the r20 uncut-DAG variant (one cut
+      // after 3 rounds) re-embeds each round's plan in the next
+      // round's centroid aggregate AND assignment join, so round work
+      // compounds — a bench-style A/B with construction timed
+      // (optimization r20 §4) measured ~2× the CPU and ~1.6× the
       // wall of the per-round cut, and the r20 final bench caught it
       // (3.21 → 3.69 s, cpu 5.4 → 13.5). The per-round count() jobs
       // are the cheaper evil at this size; the stage-latency floor
       // (~1 s/round at sf0.1) is inherent to the chained contract.
       val r = graft.llm.Clustering.iterateSteps(
         emb(s, d).select(col("vec_id"), col("embedding"), col("label")),
-        "vec_id", "embedding", "label", rounds = 3, dim = 64, scale = 1000,
-        checkpointEvery = 1)
+        "vec_id", "embedding", "label", rounds = 3, dim = 64, scale = 1000)
       r.release() // result is checkpoint-rooted; the vector cache can go
       r.assign.groupBy(col("label").as("cluster"))
         .agg(count(lit(1)).as("n"), sum("vec_id").as("id_sum"))
@@ -7118,7 +7113,7 @@ object SparkEntry {
     // never shuffle before decode.
     "q287_zip_stream_media" -> ((s, d) => {
       import s.implicits._
-      val paths = fixturePaths(s, d, "zip_stream_v1")
+      val paths = fixturePaths(s, d, "zip_stream_v2")
       val members = graft.sources.Archives.zipPathEntries(s, paths)
         .where(col("name").endsWith(".bmp"))
         .withColumn("doc_id",

@@ -52,7 +52,7 @@ object Verify {
     // MinHash sketch + band table) intermittently evaluated the
     // still-running query's cached scan as EMPTY when the finished
     // one dropped the shared entry mid-flight (reproduced 2/6 in
-    // ProfileStages `twinrace`; clear-only and concurrency-only
+    // optimization r20 §5; clear-only and concurrency-only
     // controls were each 100% clean). Caches therefore accumulate
     // only within one wave (bounded — the r8 eviction-churn concern
     // was cross-356-query accumulation).

@@ -141,36 +141,26 @@ object Clustering {
     * ClusteringSpec. */
   def iterateSteps(emb: DataFrame, idCol: String, vecCol: String,
                    labelCol: String, rounds: Int, dim: Int,
-                   scale: Int = 1000, checkpointEvery: Int = 1): ChainedResult = {
+                   scale: Int = 1000): ChainedResult = {
     require(rounds >= 1, s"iterateSteps: rounds must be >= 1, got $rounds")
-    require(checkpointEvery >= 1,
-      s"iterateSteps: checkpointEvery must be >= 1, got $checkpointEvery")
     val spark = emb.sparkSession
     val vecs = emb.select(col(idCol), col(vecCol))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     var cur = emb.select(col(idCol), col(vecCol), col(labelCol))
     var prevRdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = null
     var labels: DataFrame = null
-    for (round <- 1 to rounds) {
+    for (_ <- 1 to rounds) {
       val stepped = lloydStep(cur, idCol, vecCol, labelCol, dim, scale)
         .select(col(idCol), col("assigned").as(labelCol))
-      // Lineage cut every `checkpointEvery` rounds AND always after
-      // the last (the result must stay checkpoint-rooted so
-      // release() is safe). A small fixed round count can run as ONE
-      // uncut DAG — each eager count() is a full job whose scheduler
-      // latency dominates tiny inputs (optimization r20: q226 wall
-      // 3.2 s at 5.4 cpu-s was stage-latency floor, par 1.6) — while
-      // chain-scale counts keep the every-round default of 1.
-      if (round % checkpointEvery == 0 || round == rounds) {
-        val rdd = stepped.rdd.localCheckpoint()
-        rdd.count() // eager: materialize before freeing the previous cut
-        if (prevRdd != null)
-          prevRdd.unpersist() // previous round's checkpoint blocks freed
-        prevRdd = rdd
-        labels = spark.createDataFrame(rdd, stepped.schema)
-      } else {
-        labels = stepped // uncut: the next round's plan compounds
-      }
+      // Cut EVERY round: an uncut 3-round chain measured ~2× the CPU
+      // (optimization r20 §4), and the last cut keeps the result
+      // checkpoint-rooted, so release() is safe.
+      val rdd = stepped.rdd.localCheckpoint()
+      rdd.count() // eager: materialize before freeing the previous cut
+      if (prevRdd != null)
+        prevRdd.unpersist() // previous round's checkpoint blocks freed
+      prevRdd = rdd
+      labels = spark.createDataFrame(rdd, stepped.schema)
       cur = labels.join(vecs, idCol)
     }
     ChainedResult(labels, rounds, () => { vecs.unpersist(); () })

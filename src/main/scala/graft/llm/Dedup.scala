@@ -434,11 +434,6 @@ object Dedup {
     rows.join(broadcast(hotBuckets(rows, keys, maxBucketSize).select(keys.map(col): _*)),
       keys, "left_anti")
 
-  /** Measurement hook for [[graft.ProfileStages]] only: the candidate
-    * stage from an externally cached band table. */
-  private[graft] def bandedPairsForProfile(banded: DataFrame): DataFrame =
-    pairsFromBandRows(banded, DefaultMaxBucketSize)
-
   /** Distinct (id1, id2) pairs sharing ≥1 (band, bkey) bucket. */
   private def pairsFromBandRows(banded: DataFrame, maxBucketSize: Int): DataFrame = {
     val kept = fenceHotBuckets(banded, Seq("band", "bkey"), maxBucketSize)

@@ -127,13 +127,6 @@ object SetSimJoin {
     * shuffled and sorted the full posting table a second time; the
     * aggregate form reuses the rows it already grouped). `toks` must
     * be distinct (id, tok) postings. */
-  /** Measurement hooks for [[graft.ProfileStages]] only. */
-  private[graft] def docsRarityForProfile(toks: DataFrame): DataFrame =
-    docsRarity(toks)
-  private[graft] def candidatesForProfile(docs: DataFrame, num: Int,
-                                          den: Int): DataFrame =
-    candidatesFromDocs(docs, num, den)
-
   private def docsRarity(toks: DataFrame): DataFrame =
     toks.groupBy("tok").agg(collect_list(col("id")).as("ids"))
       .select(size(col("ids")).cast("long").as("dfc"), col("tok"),

@@ -2571,24 +2571,6 @@ object Multimodal {
       .toDF("media_id", "dhash")
   }
 
-  /** Near-dup pairs among 64-bit perceptual hashes by banded chunk
-    * join — the [[graft.llm.Dedup.simHashPairs]] plan for images: any
-    * pair within Hamming distance 3 shares one exact 16-bit chunk
-    * (pigeonhole), so candidates come from a hash join on (chunk
-    * index, chunk value), never an all-pairs scan; `bit_count` of the
-    * XOR then filters exactly. Output (id1, id2, hamming), id1 < id2.
-    * Scale: chunk buckets larger than `maxBucketSize` are excluded
-    * via [[graft.llm.Dedup.fenceHotBuckets]] (broadcast anti-join) —
-    * the same posture as every banded join in this engine — so the
-    * candidate volume is bounded by buckets × cap², never corpus².
-    * Degenerate hashes make this fence load-bearing at crawl scale:
-    * every flat/solid image dHashes to 0, so one bucket would
-    * otherwise hold a large corpus fraction and the join would emit
-    * O(bucket²) candidates before the Hamming filter. Fenced members
-    * lose ALL their chunks when every chunk bucket is hot (identical
-    * hashes hit all 4), so a fenced boilerplate cluster emits no
-    * pairs — inspect [[hammingHotBuckets]] and handle those clusters
-    * with a representative pass instead. */
   /** The 4×16-bit pigeonhole chunk exploder shared by
     * [[hammingPairs64]] and [[videoNearDupPairs]] — ONE definition of
     * the banding, so chunk count/width can never drift between the
@@ -2599,10 +2581,6 @@ object Multimodal {
       "array(" + (0 until 4).map(i =>
         s"struct($i as ci, shiftright($hashCol, ${16 * i}) & 65535 as cv)")
         .mkString(",") + ")"))
-
-  /** Measurement hook for [[graft.ProfileStages]] only. */
-  private[graft] def chunk16ExplodeForProfile(hashCol: String) =
-    chunk16Explode(hashCol)
 
   /** The (hp_id, hp_hash, ci, cv) chunk table behind
     * [[hammingPairs64]] and [[hammingHotBuckets]] — one definition so
@@ -2624,6 +2602,24 @@ object Multimodal {
                         maxBucketSize: Int = graft.llm.Dedup.DefaultMaxBucketSize): DataFrame =
     graft.llm.Dedup.hotBuckets(chunkRows(df, idCol, hashCol), Seq("ci", "cv"), maxBucketSize)
 
+  /** Near-dup pairs among 64-bit perceptual hashes by banded chunk
+    * join — the [[graft.llm.Dedup.simHashPairs]] plan for images: any
+    * pair within Hamming distance 3 shares one exact 16-bit chunk
+    * (pigeonhole), so candidates come from a hash join on (chunk
+    * index, chunk value), never an all-pairs scan; `bit_count` of the
+    * XOR then filters exactly. Output (id1, id2, hamming), id1 < id2.
+    * Scale: chunk buckets larger than `maxBucketSize` are excluded
+    * via [[graft.llm.Dedup.fenceHotBuckets]] (broadcast anti-join) —
+    * the same posture as every banded join in this engine — so the
+    * candidate volume is bounded by buckets × cap², never corpus².
+    * Degenerate hashes make this fence load-bearing at crawl scale:
+    * every flat/solid image dHashes to 0, so one bucket would
+    * otherwise hold a large corpus fraction and the join would emit
+    * O(bucket²) candidates before the Hamming filter. Fenced members
+    * lose ALL their chunks when every chunk bucket is hot (identical
+    * hashes hit all 4), so a fenced boilerplate cluster emits no
+    * pairs — inspect [[hammingHotBuckets]] and handle those clusters
+    * with a representative pass instead. */
   def hammingPairs64(df: DataFrame, idCol: String, hashCol: String,
                      maxHamming: Int = 3,
                      maxBucketSize: Int = graft.llm.Dedup.DefaultMaxBucketSize): DataFrame = {

@@ -1,17 +1,20 @@
 package graft
 
-import java.nio.{ByteBuffer, ByteOrder}
+import java.nio.ByteBuffer
 
-/** Byte pins for the on-disk fixtures ([[SparkEntry.diskFixtures]]).
-  * Their files are cached under java.io.tmpdir by existence only, so
-  * a changed byte would be served stale from a warm tmp and show only
-  * on a cold run; these digests catch it at test time instead.
+/** Byte pins for the on-disk fixtures ([[SparkEntry.diskFixtures]])
+  * and for q353's in-plan fixture. The on-disk files are cached under
+  * java.io.tmpdir by existence only, so a changed byte would be served
+  * stale from a warm tmp and show only on a cold run; these digests
+  * catch it at test time instead.
   *
   * Each digest is SHA-256 over ids 0–299 (every id % 50/5/4/3/2
   * case), per id an 8-byte big-endian length and then the file bytes,
   * taken from the files the fixtures wrote before their writers were
-  * folded onto one record framer. Changing a fixture means bumping its
-  * `_vN` dir tag and re-pinning its digest here. */
+  * folded onto one record framer (`zip_stream_v2`: from its fixed-time
+  * writer; q353: the rows its in-plan fixture built when pinned).
+  * Changing an on-disk fixture means bumping its `_vN` dir tag and
+  * re-pinning its digest here. */
 class FixtureBytesSpec extends SparkSpec {
 
   private val pinned = Map(
@@ -30,31 +33,7 @@ class FixtureBytesSpec extends SparkSpec {
     "warc_v14_v1" -> "9d647d59e6c5c7bc11d2b25949ba9fd961172524664d0f6c6e81295f1164b4d9",
     "warc_v15_v1" -> "51dc359d4392569643d44af36915137f8d9d42b0dde7964cff995b3f7316a04a",
     "warc_zst_v1" -> "add49bacbfaed515314d5a77ab19e6130e440e34e5eee681f2b4b1cbed30c3ea",
-    "zip_stream_v1" -> "d3c33b7a0093502f455f74597ac2e65a0ccd810c2642e05f9c2cbcfc5330e65f")
-
-  /** The JDK stamps every ZIP entry with its write time, so the DOS
-    * time/date fields (local header +10, central directory +12, four
-    * bytes each) are zeroed before hashing; every other byte is
-    * pinned. Non-ZIP bytes (the junk ids) pass through. */
-  private def maskZipTimes(b: Array[Byte]): Array[Byte] =
-    if (b.length < 22 || b(0) != 'P' || b(1) != 'K') b
-    else {
-      val out = b.clone()
-      val bb = ByteBuffer.wrap(out).order(ByteOrder.LITTLE_ENDIAN)
-      val eocd = (out.length - 22 to 0 by -1)
-        .find(i => bb.getInt(i) == 0x06054b50).get
-      var p = bb.getInt(eocd + 16)
-      (0 until (bb.getShort(eocd + 10) & 0xffff)).foreach { _ =>
-        assert(bb.getInt(p) == 0x02014b50, s"no central header at $p")
-        val local = bb.getInt(p + 42)
-        assert(bb.getInt(local) == 0x04034b50, s"no local header at $local")
-        bb.putInt(p + 12, 0)
-        bb.putInt(local + 10, 0)
-        p += 46 + (bb.getShort(p + 28) & 0xffff) +
-          (bb.getShort(p + 30) & 0xffff) + (bb.getShort(p + 32) & 0xffff)
-      }
-      out
-    }
+    "zip_stream_v2" -> "c9f63326aa71ce3c62667d792760a1a98edb71722b4e1d5f6f835559f94fa419")
 
   private def digest(bytes: Long => Array[Byte]): String = {
     val md = java.security.MessageDigest.getInstance("SHA-256")
@@ -66,6 +45,10 @@ class FixtureBytesSpec extends SparkSpec {
     md.digest().map(x => f"${x & 0xff}%02x").mkString
   }
 
+  private def del(f: java.io.File): Unit = {
+    Option(f.listFiles).foreach(_.foreach(del)); f.delete(); ()
+  }
+
   test("every on-disk fixture has a pinned digest") {
     assert(SparkEntry.diskFixtures.keySet == pinned.keySet)
   }
@@ -73,20 +56,22 @@ class FixtureBytesSpec extends SparkSpec {
   SparkEntry.diskFixtures.toSeq.sortBy(_._1).foreach {
     case (tag, (_, mk)) =>
       test(s"$tag: bytes of ids 0-299 match the pinned digest") {
-        val bytes: Long => Array[Byte] =
-          if (tag.startsWith("zip")) id => maskZipTimes(mk(id)) else mk
-        assert(digest(bytes) == pinned(tag))
+        assert(digest(mk) == pinned(tag))
       }
   }
 
-  test("ZIP time mask touches only the entry time fields") {
-    val (_, mk) = SparkEntry.diskFixtures("zip_stream_v1")
-    val a = mk(1L)
-    val b = maskZipTimes(a)
-    val diff = a.indices.filter(i => a(i) != b(i))
-    // id 1: stored lead + 2 BMPs + dir + note = 5 entries, 2 headers
-    // each, 4 bytes per header at most
-    assert(diff.nonEmpty && diff.size <= 5 * 2 * 4)
+  test("q353Fixture: rows of ids 0-299 match the pinned digest") {
+    import spark.implicits._
+    val sfDir = java.nio.file.Files.createTempDirectory("graft-q353-spec")
+    try {
+      (0L until 300L).toDF("doc_id")
+        .write.parquet(sfDir.resolve("documents.parquet").toString)
+      val rows = SparkEntry.q353Fixture(spark, sfDir.toString)
+        .as[(Long, Array[Byte])].collect().sortBy(_._1)
+      assert(rows.map(_._1).toSeq == (0L until 300L))
+      assert(digest(id => rows(id.toInt)._2) ==
+        "8da12d6307ff7a64b1124011e641184c311411d6b9cfbac9461e5544530a4275")
+    } finally del(sfDir.toFile)
   }
 
   test("fixtureFiles caches by existence and regenerates a deleted file") {
@@ -124,9 +109,6 @@ class FixtureBytesSpec extends SparkSpec {
         .forall(p => new java.io.File(p).lastModified == old))
       assert(dir.list().forall(_.endsWith(".warc")), "a .part file leaked")
     } finally {
-      def del(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(del)); f.delete(); ()
-      }
       del(dir); del(sfDir.toFile)
     }
   }

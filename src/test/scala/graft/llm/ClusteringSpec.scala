@@ -223,25 +223,6 @@ class ClusteringSpec extends SparkSpec {
     spark.catalog.clearCache()
   }
 
-  test("iterateSteps checkpointEvery > 1 is label-identical and still checkpoint-rooted") {
-    val d = blobs()
-    val every = Clustering.iterateSteps(d, "vec_id", "embedding", "label",
-      rounds = 3, dim = 4)
-    val exp = every.assign.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    every.release()
-    val uncut = Clustering.iterateSteps(d, "vec_id", "embedding", "label",
-      rounds = 3, dim = 4, checkpointEvery = 3)
-    // the LAST round always checkpoints: release() before the action
-    // must be safe exactly like the default path
-    uncut.release()
-    val got = uncut.assign.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == exp)
-    // and the result plan is the flat checkpoint scan
-    val n = uncut.assign.queryExecution.optimizedPlan.collect { case p => p }.size
-    assert(n <= 3, s"expected a flat checkpoint scan, got $n nodes")
-    spark.catalog.clearCache()
-  }
-
   test("iterateSteps result survives release() (checkpoint-rooted, not cache-rooted)") {
     val r = Clustering.iterateSteps(blobs(), "vec_id", "embedding", "label",
       rounds = 2, dim = 4)
