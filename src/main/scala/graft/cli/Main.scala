@@ -493,8 +493,8 @@ object Main {
 
       case "warc-text" :: in :: idCol :: payloadCol :: out :: Nil =>
         // the Common-Crawl pass: 2xx text/html responses -> clean
-        // text; fence drops print LOUD (an over-fence gzip container
-        // must never vanish silently)
+        // text; fence drops print LOUD (a corrupt or non-WARC
+        // container must never vanish silently)
         val (df, obs) = graft.sources.Warc.warcHtmlTextObserved(
           graft.sources.Multimodal.asMedia(
             spark.read.parquet(in), idCol, payloadCol, "warc"))

@@ -471,32 +471,104 @@ object Archives {
     * passes the bytes through untouched. Every decoder reads
     * concatenated members/frames as one stream, and a truncated
     * member throws IOException into the walks' never-throw catch
-    * (a LOUD io_error outcome). Shared by the TAR and WARC
-    * streaming walks. */
+    * (a LOUD io_error outcome). A bzip2 or xz decoder reads its
+    * header here, so this call can throw too. An in-memory cell
+    * (a ByteArrayInputStream) is sniffed and decoded in place, with
+    * no 64 KiB read-ahead; the walks buffer their own input
+    * ([[WalkInput]]). Shared by the TAR and WARC streaming walks. */
   private[sources] def sniffDecompress(
       raw: java.io.InputStream): java.io.InputStream = {
-    val pb = new java.io.PushbackInputStream(
-      new java.io.BufferedInputStream(raw, 1 << 16), 6)
-    val b = new Array[Int](6)
-    var n = 0
-    while (n < 6 && { b(n) = pb.read(); b(n) >= 0 }) n += 1
-    var i = n - 1
-    while (i >= 0) { pb.unread(b(i)); i -= 1 }
-    def wrap(s: java.io.InputStream): java.io.InputStream =
-      new java.io.BufferedInputStream(s, 1 << 16)
-    if (n >= 2 && b(0) == 0x1f && b(1) == 0x8b)
-      wrap(new java.util.zip.GZIPInputStream(pb, 1 << 16))
-    else if (n >= 4 && b(0) == 0x28 && b(1) == 0xb5 && b(2) == 0x2f &&
-        b(3) == 0xfd)
-      wrap(new com.github.luben.zstd.ZstdInputStream(pb))
-    else if (n >= 3 && b(0) == 'B' && b(1) == 'Z' && b(2) == 'h')
-      wrap(new org.apache.commons.compress.compressors.bzip2
-        .BZip2CompressorInputStream(pb, true))
-    else if (n >= 6 && b(0) == 0xfd && b(1) == '7' && b(2) == 'z' &&
-        b(3) == 'X' && b(4) == 'Z' && b(5) == 0x00)
-      wrap(new org.apache.commons.compress.compressors.xz
-        .XZCompressorInputStream(pb, true))
-    else pb
+    val cell = raw.isInstanceOf[java.io.ByteArrayInputStream]
+    val in = if (cell) raw else new java.io.BufferedInputStream(raw, 1 << 16)
+    val inflateBuf = if (cell) math.max(512, math.min(raw.available(), 1 << 16))
+      else 1 << 16
+    in.mark(6)
+    val b = Array.fill(6)(in.read()) // -1 past the end never matches
+    in.reset()
+    if (b(0) == 0x1f && b(1) == 0x8b)
+      new java.util.zip.GZIPInputStream(in, inflateBuf)
+    else if (b(0) == 0x28 && b(1) == 0xb5 && b(2) == 0x2f && b(3) == 0xfd)
+      new com.github.luben.zstd.ZstdInputStream(in)
+    else if (b(0) == 'B' && b(1) == 'Z' && b(2) == 'h')
+      new org.apache.commons.compress.compressors.bzip2
+        .BZip2CompressorInputStream(in, true)
+    else if (b(0) == 0xfd && b(1) == '7' && b(2) == 'z' && b(3) == 'X' &&
+        b(4) == 'Z' && b(5) == 0x00)
+      new org.apache.commons.compress.compressors.xz
+        .XZCompressorInputStream(in, true)
+    else in
+  }
+
+  /** The read side of the streaming walks (TAR, ZIP, WARC): one
+    * unsynchronized buffer per stream, and `readFully` / `skipFully`
+    * that drain it before touching the stream. A skip reads through
+    * the same buffer, so it allocates nothing; a read at least as
+    * large as the buffer goes straight into its destination. Walks
+    * that parse a header in place scan `buf` between `pos` and `lim`
+    * and call [[fill]] for more. */
+  private[sources] final class WalkInput(in: java.io.InputStream, size: Int) {
+    var buf = new Array[Byte](size)
+    var pos = 0
+    var lim = 0
+
+    /** Keeps the unread bytes, moved to the front, and reads more
+      * behind them, doubling the buffer when it holds nothing else;
+      * false at end of stream. */
+    def fill(): Boolean = {
+      if (pos > 0) {
+        System.arraycopy(buf, pos, buf, 0, lim - pos)
+        lim -= pos; pos = 0
+      }
+      if (lim == buf.length) buf = java.util.Arrays.copyOf(buf, buf.length * 2)
+      val r = in.read(buf, lim, buf.length - lim)
+      if (r > 0) lim += r
+      r > 0
+    }
+
+    /** Fill exactly n bytes unless EOF; returns bytes read. */
+    def readFully(dst: Array[Byte], n: Int): Int = readFully(dst, 0, n)
+
+    /** Fill exactly n bytes of dst from `at` unless EOF; returns bytes
+      * read. */
+    def readFully(dst: Array[Byte], at: Int, n: Int): Int = {
+      var off = 0
+      while (off < n) {
+        if (pos < lim) {
+          val k = math.min(n - off, lim - pos)
+          System.arraycopy(buf, pos, dst, at + off, k)
+          pos += k; off += k
+        } else if (n - off >= buf.length) {
+          val r = in.read(dst, at + off, n - off)
+          if (r <= 0) return off
+          off += r
+        } else if (!fill()) return off
+      }
+      n
+    }
+
+    /** Up to n bytes, fewer only at EOF. The array grows as bytes
+      * arrive, so a length field that lies about what follows never
+      * sizes an allocation. */
+    def readUpTo(n: Int): Array[Byte] = {
+      var out = new Array[Byte](math.min(n, 1 << 16))
+      var got = readFully(out, 0, out.length)
+      while (got == out.length && got < n) {
+        out = java.util.Arrays.copyOf(out, math.min(n.toLong, 2L * got).toInt)
+        got += readFully(out, got, out.length - got)
+      }
+      if (got < out.length) java.util.Arrays.copyOf(out, got) else out
+    }
+
+    /** Skip n bytes unless EOF; returns bytes skipped. */
+    def skipFully(n: Long): Long = {
+      var left = n
+      while (left > 0) {
+        if (pos == lim && !fill()) return n - left
+        val k = math.min(left, (lim - pos).toLong).toInt
+        pos += k; left -= k
+      }
+      n
+    }
   }
 
   /** Bounded streaming member walk over one (possibly gzipped or
@@ -509,26 +581,8 @@ object Archives {
     private var idx = 0
     private var pendingLongName: String = null
     private val hdr = new Array[Byte](512)
-    private val in: java.io.InputStream = sniffDecompress(raw)
-    private def readFully(buf: Array[Byte], n: Int): Int = {
-      var off = 0
-      while (off < n) {
-        val r = in.read(buf, off, n - off)
-        if (r < 0) return off
-        off += r
-      }
-      off
-    }
-    private def skipFully(n: Long): Long = {
-      var left = n
-      val buf = new Array[Byte](1 << 16)
-      while (left > 0) {
-        val r = in.read(buf, 0, math.min(left, buf.length.toLong).toInt)
-        if (r < 0) return n - left
-        left -= r
-      }
-      n
-    }
+    private val in = new WalkInput(sniffDecompress(raw), 1 << 16)
+    import in.{readFully, skipFully}
     private def octal(off: Int, len: Int): Long = {
       var v = 0L; var i = off; val end = off + len
       var seen = false
@@ -722,28 +776,8 @@ object Archives {
                                 maxEntries: Int) {
     var endReason: String = null
     private var idx = 0
-    // pushback must hold an Inflater over-read: one input chunk
-    private val in = new java.io.PushbackInputStream(
-      new java.io.BufferedInputStream(raw, 1 << 16), 1 << 13)
-    private def readFully(buf: Array[Byte], n: Int): Int = {
-      var off = 0
-      while (off < n) {
-        val r = in.read(buf, off, n - off)
-        if (r < 0) return off
-        off += r
-      }
-      off
-    }
-    private def skipFully(n: Long): Long = {
-      var left = n
-      val buf = new Array[Byte](1 << 16)
-      while (left > 0) {
-        val r = in.read(buf, 0, math.min(left, buf.length.toLong).toInt)
-        if (r < 0) return n - left
-        left -= r
-      }
-      n
-    }
+    private val in = new WalkInput(raw, 1 << 16)
+    import in.{readFully, skipFully}
     private def le16(b: Array[Byte], i: Int): Int =
       (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
     private def le32(b: Array[Byte], i: Int): Long =
@@ -873,20 +907,18 @@ object Archives {
       } else if (method == 8) {
         // GP bit 3: sizes live in a trailing data descriptor — stream
         // through the Inflater until the deflate stream self-ends,
-        // counting output; discard (but keep counting) past maxBytes
+        // counting output; discard (but keep counting) past maxBytes.
+        // The Inflater reads the walk buffer in place.
         val inf = new java.util.zip.Inflater(true)
-        val chunk = new Array[Byte](1 << 13)
         val outBuf = new java.io.ByteArrayOutputStream(1 << 12)
         val scratch = new Array[Byte](1 << 13)
         var total = 0L
-        var lastRead = 0 // length of the chunk currently set as input
         try {
           while (!inf.finished()) {
             if (inf.needsInput()) {
-              val r = in.read(chunk, 0, chunk.length)
-              if (r < 0) { endReason = "corrupt"; return null }
-              lastRead = r
-              inf.setInput(chunk, 0, r)
+              if (in.pos == in.lim && !in.fill()) { endReason = "corrupt"; return null }
+              inf.setInput(in.buf, in.pos, in.lim - in.pos)
+              in.pos = in.lim
             }
             val m = inf.inflate(scratch, 0, scratch.length)
             if (m > 0) {
@@ -898,11 +930,9 @@ object Archives {
               endReason = "corrupt"; return null
             }
           }
-          // push the over-read tail back for the next header: the
-          // unconsumed bytes are the LAST `rem` of the current input
-          // window [0, lastRead)
-          val rem = inf.getRemaining
-          if (rem > 0) in.unread(chunk, lastRead - rem, rem)
+          // the bytes the Inflater did not consume start the next
+          // header: they are the last `rem` of its input window
+          in.pos -= inf.getRemaining
         } catch {
           case _: java.util.zip.DataFormatException =>
             endReason = "corrupt"; return null

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.reflect.runtime.universe.TypeTag
 
 /** WARC (ISO 28500) — the web-crawl container an LLM corpus actually
   * starts from (Common Crawl ships WARC): records of
@@ -12,19 +13,23 @@ import org.apache.spark.sql.functions._
   * .HtmlToText]] → text the quality/dedup stages consume.
   *
   * Scope:
-  * - Plain WARC and gzip-compressed WARC (Common Crawl's
-  *   member-per-record form included — multi-member gzip streams
-  *   inflate across member boundaries), total inflated size fenced.
+  * - Plain WARC, and WARC under gzip, zstd, bzip2 or xz (Common
+  *   Crawl's member-per-record gzip included — concatenated members
+  *   and frames decode as one stream). Containers of any size stream
+  *   one record at a time; no container is ever inflated whole.
+  * - ONE record walk, [[WarcStream]], serves both doors: a row cell
+  *   (`media_id`, `payload`) and a file path run the same code, so
+  *   they share every fence, counter and end reason.
   * - Record walk: version line, headers to the blank line,
-  *   `Content-Length` payload, the spec's record-separating CRLF
-  *   pair (tolerated missing at EOF or under truncation — entries
-  *   before the cut are kept).
+  *   `Content-Length` payload, the record-separating CR/LF run
+  *   (tolerated missing at EOF or under truncation — records before
+  *   the cut are kept).
   * - `response` records: the HTTP status line and headers parse out
   *   of the payload (status code, Content-Type), the body follows
   *   the HTTP blank line.
   *
-  * Hostile posture as everywhere: fences on record count and body
-  * bytes, bounds-checked walks, never a throw.
+  * Hostile posture as everywhere: fences on record count, header
+  * block and body bytes, bounds-checked walks, never a throw.
   *
   * Reference anchor: the reference ships no WARC reader; this
   * extends SURVEY §2's source tier (format per ISO 28500 / the IIPC
@@ -50,12 +55,13 @@ object Warc {
     * - `ok`            — clean walk to end of data
     * - `record_cap`    — stopped at `maxRecords` (more data remained)
     * - `truncated`     — a Content-Length ran past the container end
-    * - `corrupt`       — header block never closed / no forward progress
+    * - `corrupt`       — a header block that never closes (or passes
+    *   64 KiB), a bad Content-Length, or non-WARC bytes after a record
     * - `not_warc`      — data present but no WARC/ magic
-    * - `inflate_over_fence` — gzip inflates past the cell fence; the
-    *   container is NOT parseable in cell form and belongs on the
-    *   [[describeWarcPaths]] streaming path
-    * - `empty`         — fewer than 9 bytes of input */
+    * - `io_error`      — the container could not be read or decoded
+    *   before its first record (a truncated compressed header too)
+    * - `io_error_partial` — reading died after records were emitted
+    * - `empty`         — no bytes, or only CR/LF */
   final case class WarcParse(records: Seq[WarcRecord], endReason: String) {
     def truncatedBodies: Int = records.count(_.bodyTruncated)
     /** Bodies whose HTTP wire decode failed (label carries a `!`) —
@@ -65,9 +71,9 @@ object Warc {
       records.count(r => r.encoding != null && r.encoding.indexOf('!') >= 0)
   }
 
-  /** Inflate a (possibly multi-member) gzip stream, fenced. Returns
-    * null when not gzip or on corrupt data, [[OverFence]] when the
-    * stream inflates past maxOut. */
+  /** Inflate a (possibly multi-member) gzip HTTP body, fenced.
+    * Returns null when not gzip or on corrupt data, [[OverFence]]
+    * when the stream inflates past maxOut. */
   private def gunzipAll(bytes: Array[Byte], maxOut: Int): Array[Byte] = {
     if (bytes.length < 2 || (bytes(0) & 0xff) != 0x1f ||
         (bytes(1) & 0xff) != 0x8b) return null
@@ -250,8 +256,8 @@ object Warc {
     (cur, if (parts.isEmpty) "identity" else parts.mkString("+"))
   }
 
-  /** Parse WARC records (auto-gunzips). None = not a WARC at all;
-    * truncation keeps the records before the cut. Thin compatibility
+  /** Parse WARC records (any compression the walk decodes). None = no
+    * record at all; truncation keeps the records before the cut. Thin
     * wrapper over [[parseWarcOutcome]], which additionally names WHY
     * a walk ended — callers that can surface counters should prefer
     * it (this wrapper is where fence drops used to go silent). */
@@ -261,100 +267,19 @@ object Warc {
     if (p.records.nonEmpty) Some(p.records) else None
   }
 
-  /** The cell-form walk with a loud outcome (see [[WarcParse]]). */
+  /** One cell's records and a loud outcome (see [[WarcParse]]): the
+    * [[WarcStream]] walk over the bytes, collected. Null is `empty`. */
   def parseWarcOutcome(bytes: Array[Byte], maxRecords: Int = 1 << 12,
                        maxBody: Int = 1 << 24): WarcParse = {
-    if (bytes == null || bytes.length < 9) return WarcParse(Nil, "empty")
-    val gzipped = bytes.length >= 2 && (bytes(0) & 0xff) == 0x1f &&
-      (bytes(1) & 0xff) == 0x8b
-    val data = {
-      val g = gunzipAll(bytes, 1 << 26)
-      if (g == null || (g eq OverFence)) bytes else g
-    }
-    // a gzip container that would not inflate within the cell fence is
-    // a DISTINCT loud outcome: the data may be a perfectly good WARC
-    // that simply cannot enter in cell form (route it to the
-    // streaming path), not "not a WARC"
-    if (gzipped && (data eq bytes))
-      return WarcParse(Nil, "inflate_over_fence")
-    if (data.length < 9 || !startsWith(data, 0, "WARC/"))
-      return WarcParse(Nil, "not_warc")
-    val out = Seq.newBuilder[WarcRecord]
-    var p = 0
-    var k = 0
-    while (p + 9 <= data.length && startsWith(data, p, "WARC/")) {
-      if (k >= maxRecords) return WarcParse(out.result(), "record_cap")
-      // ---- WARC header block ----------------------------------------
-      val headerEnd = findBlank(data, p)
-      if (headerEnd < 0) return WarcParse(out.result(), "corrupt")
-      val headers = parseHeaders(data, nextLine(data, p), headerEnd)
-      val wType = headers.getOrElse("warc-type", "")
-      val uri = headers.getOrElse("warc-target-uri", null)
-      val clen =
-        try headers.getOrElse("content-length", "-1").trim.toLong
-        catch { case _: NumberFormatException => -1L }
-      if (clen < 0) return WarcParse(out.result(), "corrupt")
-      val bodyStart = headerEnd
-      val bodyEnd = bodyStart + math.min(clen, data.length.toLong - bodyStart)
-      // ---- response records: HTTP status + headers + body -----------
-      var status: Option[Int] = None
-      var ctype: Option[String] = None
-      var xRobots: Option[String] = None
-      var location: Option[String] = None
-      var refreshH: Option[String] = None
-      var body: Array[Byte] = Array.emptyByteArray
-      var bodyCut = false
-      var enc = "identity"
-      if (wType.equalsIgnoreCase("response") &&
-          startsWith(data, bodyStart, "HTTP/")) {
-        val httpHeaderEnd = findBlank(data, bodyStart)
-        if (httpHeaderEnd > 0 && httpHeaderEnd <= bodyEnd) {
-          val statusLine = lineAt(data, bodyStart)
-          val parts = statusLine.split(" ", 3)
-          if (parts.length >= 2 && parts(1).forall(_.isDigit) &&
-              parts(1).nonEmpty && parts(1).length <= 3)
-            status = Some(parts(1).toInt)
-          val hh = parseHeaders(data, nextLine(data, bodyStart), httpHeaderEnd)
-          ctype = hh.get("content-type")
-          xRobots = hh.get("x-robots-tag")
-          location = hh.get("location")
-          refreshH = hh.get("refresh")
-          val bl = (bodyEnd - httpHeaderEnd).toInt
-          if (bl > 0 && bl <= maxBody) {
-            body = java.util.Arrays.copyOfRange(data, httpHeaderEnd, bodyEnd.toInt)
-            // wire form → entity form: de-chunk + Content-Encoding
-            // decode BEFORE any carrier sees the bytes (r16 item 1)
-            val (decoded, label) = decodeHttpPayload(body,
-              hh.get("transfer-encoding"), hh.get("content-encoding"), maxBody)
-            body = decoded
-            enc = label
-          }
-          // maxBody == 0 is the deliberate listing projection, not a
-          // fence: only a POSITIVE cap that cut a body counts as loud
-          else if (bl > 0 && maxBody > 0) bodyCut = true
-        }
-      }
-      out += WarcRecord(k, wType, uri, clen, status, ctype, body, bodyCut,
-        xRobots, headers.get("warc-refers-to-target-uri"),
-        headers.get("warc-payload-digest"), enc, location, refreshH)
-      k += 1
-      // payload + the record-separating CRLFCRLF (tolerant at EOF).
-      // q is Long: a hostile multi-GB Content-Length must clamp here,
-      // not wrap negative through toInt (the never-throw contract).
-      var q = bodyStart.toLong + clen
-      if (q > data.length)
-        return WarcParse(out.result(), "truncated") // truncated/lying length
-      var sep = 0
-      while (sep < 4 && q < data.length &&
-          (data(q.toInt) == '\r' || data(q.toInt) == '\n')) { q += 1; sep += 1 }
-      if (q <= p) return WarcParse(out.result(), "corrupt") // no forward progress
-      p = q.toInt
-    }
-    WarcParse(out.result(), if (p + 9 <= data.length) "corrupt" else "ok")
+    if (bytes == null) return WarcParse(Nil, "empty")
+    val ws = new WarcStream(new java.io.ByteArrayInputStream(bytes), maxBody, maxRecords)
+    val records = ws.records.toList
+    WarcParse(records, ws.endReason)
   }
 
-  private def startsWith(d: Array[Byte], at: Int, s: String): Boolean = {
-    if (at + s.length > d.length) return false
+  /** Whether `s` (ASCII) starts at `at`, within `d` up to `end`. */
+  private def startsWith(d: Array[Byte], at: Int, end: Int, s: String): Boolean = {
+    if (at + s.length > end) return false
     var i = 0
     while (i < s.length) {
       if ((d(at + i) & 0xff) != s.charAt(i)) return false
@@ -363,14 +288,14 @@ object Warc {
     true
   }
 
-  /** Index just past the header block's blank line (\r\n\r\n or \n\n),
-    * or -1. */
-  private def findBlank(d: Array[Byte], from: Int): Int = {
+  /** Index just past the first blank line (\n\n, or \n\r\n — which
+    * covers \r\n\r\n) in `d` from `from` up to `end`, or -1. */
+  private def findBlank(d: Array[Byte], from: Int, end: Int): Int = {
     var i = from
-    while (i < d.length) {
+    while (i < end) {
       if (d(i) == '\n') {
-        if (i + 1 < d.length && d(i + 1) == '\n') return i + 2
-        if (i + 2 < d.length && d(i + 1) == '\r' && d(i + 2) == '\n') return i + 3
+        if (i + 1 < end && d(i + 1) == '\n') return i + 2
+        if (i + 2 < end && d(i + 1) == '\r' && d(i + 2) == '\n') return i + 3
       }
       i += 1
     }
@@ -383,26 +308,70 @@ object Warc {
     math.min(i + 1, d.length)
   }
 
-  private def lineAt(d: Array[Byte], at: Int): String = {
-    var end = at
-    while (end < d.length && d(end) != '\n' && d(end) != '\r') end += 1
-    new String(d, at, end - at, java.nio.charset.StandardCharsets.ISO_8859_1)
+  /** The status code of the HTTP status line at the start of `d`
+    * (before `end`): its second space-separated field, when that is
+    * one to three digits. */
+  private def httpStatus(d: Array[Byte], end: Int): Option[Int] = {
+    def eol(i: Int) = i == end || d(i) == ' ' || d(i) == '\r' || d(i) == '\n'
+    var i = 0
+    while (!eol(i)) i += 1
+    if (i == end || d(i) != ' ') return None
+    var j = i + 1
+    var v = 0
+    while (j < end && d(j) >= '0' && d(j) <= '9') { v = v * 10 + (d(j) - '0'); j += 1 }
+    if (j - i - 1 >= 1 && j - i - 1 <= 3 && eol(j)) Some(v) else None
   }
 
-  /** `Name: value` headers between from and end (exclusive), keys
-    * lower-cased; malformed lines skipped. */
-  private def parseHeaders(d: Array[Byte], from: Int, end: Int): Map[String, String] = {
-    val m = Map.newBuilder[String, String]
+  /** The WARC headers a record row reads, and the HTTP response
+    * headers: indexes into [[headerValues]]' result. */
+  private val WarcHeaders = Array("warc-type", "warc-target-uri", "content-length",
+    "warc-refers-to-target-uri", "warc-payload-digest")
+  private val HttpHeaders = Array("content-type", "x-robots-tag", "location", "refresh",
+    "transfer-encoding", "content-encoding")
+
+  /** The values of the `Name: value` header lines between from and end
+    * (exclusive) whose trimmed name equals one of `names` (lower-case
+    * ASCII) ignoring case: trimmed, the last one for a repeated name,
+    * null when absent. Lines without a name and colon are skipped;
+    * only the wanted values become strings. */
+  private def headerValues(d: Array[Byte], from: Int, end: Int,
+                           names: Array[String]): Array[String] = {
+    val out = new Array[String](names.length)
+    def blank(i: Int) = (d(i) & 0xff) <= ' '
     var i = from
     while (i < end) {
-      val line = lineAt(d, i)
-      val c = line.indexOf(':')
-      if (c > 0)
-        m += (line.substring(0, c).trim.toLowerCase(java.util.Locale.ROOT) ->
-          line.substring(c + 1).trim)
-      i = nextLine(d, i)
+      var eol = i
+      var c = -1 // the first colon
+      while (eol < d.length && d(eol) != '\n' && d(eol) != '\r') {
+        if (c < 0 && d(eol) == ':') c = eol
+        eol += 1
+      }
+      if (c > i) {
+        var ks = i; var ke = c
+        while (ks < ke && blank(ks)) ks += 1
+        while (ke > ks && blank(ke - 1)) ke -= 1
+        var k = 0
+        while (k < names.length) {
+          val name = names(k)
+          if (name.length == ke - ks) {
+            var j = 0
+            while (j < name.length && {
+                val b = d(ks + j)
+                (if (b >= 'A' && b <= 'Z') b + 32 else b) == name.charAt(j)
+              }) j += 1
+            if (j == name.length) {
+              var vs = c + 1; var ve = eol
+              while (vs < ve && blank(vs)) vs += 1
+              while (ve > vs && blank(ve - 1)) ve -= 1
+              out(k) = new String(d, vs, ve - vs, java.nio.charset.StandardCharsets.ISO_8859_1)
+            }
+          }
+          k += 1
+        }
+      }
+      i = nextLine(d, eol)
     }
-    m.result()
+    out
   }
 
   // ==== charset-aware HTML decode ====================================
@@ -743,41 +712,333 @@ object Warc {
     (s, cs)
   }
 
-  // ==== cell-form DataFrame surface ==================================
+  // ==== the record walk (both doors) =================================
+  //
+  // A real Common Crawl WARC is ~1 GB gzipped / several GB inflated;
+  // it cannot be inflated whole, and neither can a row cell of any
+  // size. Every container, cell or file, streams through ONE bounded
+  // walk: per record, at most the header block (64 KiB cap) plus
+  // min(Content-Length, max(maxBody, 8 KiB)) payload bytes are ever
+  // resident; everything else is skipped on the wire. Compressed
+  // containers decode as they stream, so total container size never
+  // matters. This is the split-discipline analog of the reference's
+  // InputFormat/RecordReader pair (hadoop: LIB/input/
+  // LineRecordReader.java:55): the format's record boundaries are
+  // defined once, whatever the input; the two doors differ only in
+  // their key column (`media_id` or `path`) and where the bytes come
+  // from.
+
+  /** Bounded streaming record walk over one WARC stream, plain or
+    * compressed (whatever [[Archives.sniffDecompress]] names).
+    * `next()` returns null at end of walk; `endReason` then says why
+    * (the [[WarcParse]] vocabulary). Never throws: a decoder that
+    * fails on its own header is an `io_error` before the first
+    * record. */
+  private[sources] final class WarcStream(raw: java.io.InputStream,
+                                          maxBody: Int,
+                                          maxRecords: Int = 1 << 20) {
+    var endReason: String = null
+    var truncatedBodies: Int = 0
+    var undecodableBodies: Int = 0
+    private var idx = 0
+    private val maxHeaderBlock = 1 << 16
+    // header blocks are scanned in place in the walk buffer
+    private val in: Archives.WalkInput =
+      try new Archives.WalkInput(Archives.sniffDecompress(raw), 1 << 13)
+      catch { case _: java.io.IOException => endReason = "io_error"; null }
+
+    /** The records still to come, in order. */
+    def records: Iterator[WarcRecord] =
+      Iterator.continually(next()).takeWhile(_ != null)
+
+    def next(): WarcRecord = {
+      if (endReason != null) return null
+      try nextInner()
+      catch {
+        case _: java.io.IOException =>
+          // records may already have been emitted — a mid-stream I/O
+          // death is a TRUNCATED container (ADVICE r13); only a file
+          // that dies before its first record is a zero-row drop
+          endReason = if (idx == 0) "io_error" else "io_error_partial"
+          null
+      }
+    }
+
+    /** Ends the walk on bytes that are no WARC record: `not_warc`
+      * when nothing has been emitted and the magic is missing. */
+    private def notRecord(): WarcRecord = {
+      endReason =
+        if (idx == 0 && !startsWith(in.buf, in.pos, in.lim, "WARC/")) "not_warc"
+        else "corrupt"
+      null
+    }
+
+    private def nextInner(): WarcRecord = {
+      // skip inter-record CR/LF separators
+      while ((in.pos < in.lim || in.fill()) &&
+          (in.buf(in.pos) == '\r' || in.buf(in.pos) == '\n')) in.pos += 1
+      if (in.pos == in.lim) { endReason = if (idx == 0) "empty" else "ok"; return null }
+      if (idx >= maxRecords) { endReason = "record_cap"; return null }
+      // the header block: scanned to its blank line, fenced
+      var end = findBlank(in.buf, in.pos, math.min(in.lim, in.pos + maxHeaderBlock))
+      while (end < 0) {
+        if (in.lim - in.pos >= maxHeaderBlock) return notRecord()
+        // rescan the last two bytes: a blank line may straddle the refill
+        val from = math.max(0, in.lim - in.pos - 2)
+        if (!in.fill()) return notRecord()
+        end = findBlank(in.buf, in.pos + from,
+          math.min(in.lim, in.pos + maxHeaderBlock))
+      }
+      if (!startsWith(in.buf, in.pos, end, "WARC/")) return notRecord()
+      val Array(wType0, uri, clenS, refersTo, digest) =
+        headerValues(in.buf, nextLine(in.buf, in.pos), end, WarcHeaders)
+      in.pos = end
+      val wType = if (wType0 == null) "" else wType0
+      val clen =
+        try if (clenS == null) -1L else clenS.toLong
+        catch { case _: NumberFormatException => -1L }
+      if (clen < 0) { endReason = "corrupt"; return null }
+      // buffer the bounded payload prefix: enough for the HTTP header
+      // parse even in listing mode (maxBody = 0), never more than the
+      // fence; skip the rest on the wire
+      val keepN = math.min(clen, math.max(maxBody, 8192).toLong).toInt
+      val payload = in.readUpTo(keepN)
+      val got = payload.length
+      val shortRead = got < keepN || in.skipFully(clen - keepN) < clen - keepN
+      // ---- response records: HTTP status + headers + body -----------
+      var status: Option[Int] = None
+      var ctype: Option[String] = None
+      var xRobots: Option[String] = None
+      var location: Option[String] = None
+      var refreshH: Option[String] = None
+      var body: Array[Byte] = Array.emptyByteArray
+      var bodyCut = false
+      var enc = "identity"
+      if (wType.equalsIgnoreCase("response") && startsWith(payload, 0, got, "HTTP/")) {
+        val httpHeaderEnd = findBlank(payload, 0, got)
+        if (httpHeaderEnd > 0) {
+          status = httpStatus(payload, got)
+          val Array(ct, xr, loc, refresh, te, ce) =
+            headerValues(payload, nextLine(payload, 0), httpHeaderEnd, HttpHeaders)
+          ctype = Option(ct)
+          xRobots = Option(xr)
+          location = Option(loc)
+          refreshH = Option(refresh)
+          val bl = clen - httpHeaderEnd // true HTTP body length
+          if (bl > 0 && bl <= maxBody && httpHeaderEnd + bl <= got) {
+            body = java.util.Arrays.copyOfRange(payload, httpHeaderEnd,
+              (httpHeaderEnd + bl).toInt)
+            // wire form → entity form: de-chunk + Content-Encoding
+            // decode BEFORE any carrier sees the bytes (r16 item 1)
+            val (decoded, label) = decodeHttpPayload(body,
+              Option(te), Option(ce), maxBody)
+            body = decoded
+            enc = label
+            if (label.indexOf('!') >= 0) undecodableBodies += 1
+          }
+          // maxBody == 0 is the deliberate listing projection, not a
+          // fence: only a POSITIVE cap (or a cut container) that
+          // withholds a body counts as loud
+          else if (bl > 0 && maxBody > 0) {
+            bodyCut = true
+            truncatedBodies += 1
+          }
+        }
+      }
+      val rec = WarcRecord(idx, wType, uri, clen, status, ctype, body,
+        bodyCut, xRobots, Option(refersTo), Option(digest), enc, location, refreshH)
+      idx += 1
+      if (shortRead) endReason = "truncated" // emit this record, then stop
+      rec
+    }
+  }
+
+  /** One container's rows, whichever door it came through: `rows(r)`
+    * for each record under the container's `key`, then ONE sentinel
+    * (record_idx -1, no row) carrying the walk outcome — the loudness
+    * channel for containers that yield zero rows. Lazy: at no point
+    * is more than one record resident, and the stream closes when the
+    * records drain. Never throws: a container that cannot be opened
+    * is an `io_error` sentinel. */
+  private def streamRows[K, P](key: K, open: () => java.io.InputStream,
+                               maxBody: Int, maxRecords: Int,
+                               rows: WarcRecord => IterableOnce[P])
+      : Iterator[(K, Int, P, String, Int, Int)] = {
+    def sentinel(reason: String, truncated: Int, undecodable: Int) =
+      (key, -1, null.asInstanceOf[P], reason, truncated, undecodable)
+    var stream: java.io.InputStream = null
+    def close(): Unit =
+      if (stream != null) { try stream.close() catch { case _: Exception => () } }
+    val ws =
+      try { stream = open(); new WarcStream(stream, maxBody, maxRecords) }
+      catch { case _: Exception => close(); return Iterator.single(sentinel("io_error", 0, 0)) }
+    ws.records.flatMap(r => rows(r).iterator.map(p =>
+      (key, r.recordIdx, p, null.asInstanceOf[String], 0, 0))) ++ {
+      close()
+      Iterator.single(sentinel(ws.endReason, ws.truncatedBodies, ws.undecodableBodies))
+    }
+  }
+
+  private val walkColumns =
+    Seq("record_idx", "row", "__end_reason", "__truncated_n", "__undec_n")
+
+  /** The cell door: each `payload` cell of `media` is one container,
+    * keyed by its `media_id` (a null cell is `empty`). */
+  private def cellRows[P <: Product : TypeTag](media: DataFrame, maxBody: Int,
+                                               maxRecords: Int,
+                                               rows: WarcRecord => IterableOnce[P]): DataFrame = {
+    val spark = media.sparkSession
+    import spark.implicits._
+    media.select(col("media_id"), col("payload"))
+      .as[(Long, Array[Byte])]
+      .flatMap { case (id, p) =>
+        streamRows(id, () => new java.io.ByteArrayInputStream(
+          if (p == null) Array.emptyByteArray else p), maxBody, maxRecords, rows)
+      }
+      .toDF("media_id" +: walkColumns: _*)
+  }
+
+  /** The path door (the 100 TB front door): each file is one
+    * container, keyed by its `path`, one task per path. Files open
+    * through the executor-side Hadoop Configuration (loads
+    * core-site.xml from the classpath, so hdfs://, s3a:// and file://
+    * all resolve the same way they do for Spark's own readers) — ONE
+    * per JVM, never per file: constructing it per path re-parses the
+    * XML resources and dominated many-small-file walks (r19). */
+  private def pathRows[P <: Product : TypeTag](spark: SparkSession, paths: Seq[String],
+                                               maxBody: Int, maxRecords: Int,
+                                               rows: WarcRecord => IterableOnce[P]): DataFrame = {
+    import spark.implicits._
+    val n = math.max(1, math.min(paths.size, spark.sparkContext.defaultParallelism))
+    spark.createDataset(paths).repartition(n)
+      .flatMap { path =>
+        streamRows(path, () => {
+          val p = new org.apache.hadoop.fs.Path(path)
+          p.getFileSystem(graft.core.Engine.executorHadoopConf).open(p)
+        }, maxBody, maxRecords, rows)
+      }
+      .toDF("path" +: walkColumns: _*)
+  }
 
   /** The fence counters every WARC pass exposes, aggregated inside the
     * existing plan via `observe` (retry-safe, no extra pass — the
-    * [[graft.core.Counters]] machinery). Read the Observation after an
-    * action: containers_dropped > 0 means whole files contributed ZERO
-    * rows (over-fence gzip, not-WARC bytes, I/O failure before the
-    * first record); a mid-stream I/O death AFTER records were emitted
-    * counts `io_error_partial` under containers_truncated (ADVICE
-    * r13 — such a container is cut short, not absent); records_capped
-    * / bodies_truncated name per-record fence cuts. */
-  private def withFenceCounters(rows: DataFrame, name: String): (DataFrame, Observation) = {
-    // walks that decode HTTP payloads also carry a per-container
-    // undecodable-body count; the listing/raw walks don't
-    val undec =
-      if (rows.columns.contains("__undec_n"))
-        sum(coalesce(col("__undec_n"), lit(0)).cast("long"))
-      else lit(0L)
-    graft.core.Counters.observed(
-      rows.withColumn("__is_sentinel", col("record_idx") < 0),
-      name,
-      "containers" -> sum(when(col("__is_sentinel"), 1L).otherwise(0L)),
-      "rows_out" -> sum(when(!col("__is_sentinel"), 1L).otherwise(0L)),
-      "containers_dropped" -> sum(when(col("__is_sentinel") &&
-        col("__end_reason").isin("not_warc", "inflate_over_fence", "empty",
-          "io_error"),
-        1L).otherwise(0L)),
-      "containers_truncated" -> sum(when(col("__is_sentinel") &&
-        col("__end_reason").isin("truncated", "corrupt", "io_error_partial"),
-        1L).otherwise(0L)),
-      "records_capped" -> sum(when(col("__is_sentinel") &&
-        (col("__end_reason") === "record_cap"), 1L).otherwise(0L)),
-      "bodies_truncated" -> sum(coalesce(col("__truncated_n"), lit(0)).cast("long")),
-      "bodies_undecodable" -> undec)
+    * [[graft.core.Counters]] machinery): `warc_fences` on the cell
+    * door, `warc_paths_fences` on the path door. Read the Observation
+    * after an action: containers_dropped > 0 means whole containers
+    * contributed ZERO rows (not-WARC bytes, an empty cell, I/O or
+    * decoder failure before the first record); a mid-stream I/O death
+    * AFTER records were emitted counts `io_error_partial` under
+    * containers_truncated (ADVICE r13 — such a container is cut short,
+    * not absent); records_capped / bodies_truncated /
+    * bodies_undecodable name per-record fence cuts. */
+  private def fenced(raw: DataFrame): (DataFrame, Observation) = {
+    val sentinel = col("record_idx") < 0
+    def count(c: org.apache.spark.sql.Column) = sum(when(c, 1L).otherwise(0L))
+    val (observed, obs) = graft.core.Counters.observed(raw,
+      if (raw.columns.head == "path") "warc_paths_fences" else "warc_fences",
+      "containers" -> count(sentinel),
+      "rows_out" -> count(!sentinel),
+      "containers_dropped" -> count(sentinel &&
+        col("__end_reason").isin("not_warc", "empty", "io_error")),
+      "containers_truncated" -> count(sentinel &&
+        col("__end_reason").isin("truncated", "corrupt", "io_error_partial")),
+      "records_capped" -> count(sentinel && (col("__end_reason") === "record_cap")),
+      "bodies_truncated" -> sum(col("__truncated_n").cast("long")),
+      "bodies_undecodable" -> sum(col("__undec_n").cast("long")))
+    (recordRows(observed), obs)
   }
+
+  /** A walk's public frame: the container key, record_idx and the
+    * surface's row columns, sentinels dropped. */
+  private def recordRows(raw: DataFrame): DataFrame =
+    raw.where(col("record_idx") >= 0)
+      .select(col(raw.columns.head), col("record_idx"), col("row.*"))
+
+  // ==== the surfaces: one record → row function each, both doors =====
+  //
+  // Each row type holds the columns one record contributes after the
+  // container key and record_idx (qualified-private, not `private`:
+  // see Archives.TarRow on encoder codegen).
+
+  private[sources] final case class ListingRow(warc_type: String, target_uri: String,
+                                               content_length: Long,
+                                               http_status: Option[Int],
+                                               content_type: Option[String])
+  private[sources] final case class HtmlTextRow(url: String, charset: String, text: String)
+  private[sources] final case class HtmlPageRow(url: String, charset: String,
+                                                x_robots: Option[String], html: String)
+  private[sources] final case class DocTextRow(url: String, carrier: String, text: String,
+                                               x_robots: Option[String],
+                                               type0_codes: Long, type0_unmapped: Long,
+                                               canonical: String, encoding: String)
+  private[sources] final case class CaptureRow(kind: String, url: String,
+                                               refers_to: Option[String],
+                                               digest: Option[String],
+                                               carrier: Option[String],
+                                               text: Option[String])
+  private[sources] final case class RedirectRow(url: String, status: Int,
+                                                location: String, target: String)
+  private[sources] final case class DocRow(kind: String, url: String, carrier: String,
+                                           text: String, x_robots: Option[String],
+                                           type0_codes: Long, type0_unmapped: Long,
+                                           canonical: String, status: Option[Int],
+                                           target: Option[String])
+
+  private def listingRow(r: WarcRecord): Option[ListingRow] =
+    Some(ListingRow(r.warcType, r.targetUri, r.contentLength, r.httpStatus,
+      r.contentType))
+
+  /** A 2xx response record with a body: the only record any text
+    * surface reads. */
+  private def servedBody(r: WarcRecord): Boolean =
+    r.warcType.equalsIgnoreCase("response") &&
+      r.httpStatus.exists(s => s >= 200 && s < 300) && r.body.nonEmpty
+
+  /** A served text/html body, decoded with its charset: (html, charset). */
+  private def htmlPage(r: WarcRecord): Option[(String, String)] =
+    if (servedBody(r) && r.contentType.exists(_.toLowerCase(java.util.Locale.ROOT)
+        .startsWith("text/html"))) Some(decodeHtml(r.body, r.contentType))
+    else None
+
+  private def htmlTextRow(r: WarcRecord): Option[HtmlTextRow] =
+    htmlPage(r).map { case (html, cs) =>
+      HtmlTextRow(r.targetUri, cs, graft.functions.HtmlToText.clean(html))
+    }
+
+  private def htmlPageRow(r: WarcRecord): Option[HtmlPageRow] =
+    htmlPage(r).map { case (html, cs) => HtmlPageRow(r.targetUri, cs, r.xRobotsTag, html) }
+
+  private def docTextRow(r: WarcRecord): Option[DocTextRow] =
+    routeDocRecord(r).map { case (carrier, text, codes, unmapped, canon) =>
+      DocTextRow(r.targetUri, carrier, text, r.xRobotsTag, codes, unmapped, canon,
+        r.encoding)
+    }
+
+  private def captureRow(r: WarcRecord): Option[CaptureRow] =
+    if (r.warcType.equalsIgnoreCase("revisit"))
+      Some(CaptureRow("revisit", r.targetUri, r.refersTo, r.payloadDigest, None, None))
+    else routeDocRecord(r).map { case (carrier, text, _, _, _) =>
+      CaptureRow("response", r.targetUri, None, r.payloadDigest, Some(carrier),
+        Some(text))
+    }
+
+  private def redirectRow(r: WarcRecord): Option[RedirectRow] =
+    redirectEdge(r).map { case (st, raw, tgt) => RedirectRow(r.targetUri, st, raw, tgt) }
+
+  /** A record can contribute BOTH kinds: a 2xx interstitial with a
+    * `Refresh:` header is a page AND a redirect edge (3xx records
+    * never route as pages, so the common case stays one row per
+    * record). */
+  private def docRows(r: WarcRecord): Seq[DocRow] =
+    routeDocRecord(r).map { case (carrier, text, codes, unmapped, canon) =>
+      DocRow("page", r.targetUri, carrier, text, r.xRobotsTag, codes, unmapped,
+        canon, None, None)
+    }.toSeq ++ redirectEdge(r).map { case (st, _, tgt) =>
+      DocRow("redirect", r.targetUri, null, null, None, 0L, 0L, null, Some(st),
+        Some(tgt))
+    }
+
+  // ==== cell-form DataFrame surface ==================================
 
   /** One row per WARC record (no body bytes — the listing). Fence
     * drops are loud: see [[describeWarcObserved]]; this wrapper keeps
@@ -788,29 +1049,8 @@ object Warc {
   /** [[describeWarc]] plus the fence-counter Observation (read it
     * after an action completes). */
   def describeWarcObserved(media: DataFrame,
-                           maxRecords: Int = 1 << 12): (DataFrame, Observation) = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    val raw = media.select(col("media_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .flatMap { case (id, p) =>
-        val parse = parseWarcOutcome(p, maxRecords, maxBody = 0)
-        val recs = parse.records.map(r =>
-          (id, r.recordIdx, r.warcType, Option(r.targetUri), r.contentLength,
-            r.httpStatus, r.contentType, null.asInstanceOf[String], 0))
-        // one sentinel per container carries the walk outcome — the
-        // loudness channel for files that yield zero records
-        recs :+ ((id, -1, null.asInstanceOf[String], None: Option[String], -1L,
-          None: Option[Int], None: Option[String], parse.endReason,
-          parse.truncatedBodies))
-      }
-      .toDF("media_id", "record_idx", "warc_type", "target_uri",
-        "content_length", "http_status", "content_type",
-        "__end_reason", "__truncated_n")
-    val (observed, obs) = withFenceCounters(raw, "warc_fences")
-    (observed.where(col("record_idx") >= 0)
-      .drop("__end_reason", "__truncated_n", "__is_sentinel"), obs)
-  }
+                           maxRecords: Int = 1 << 12): (DataFrame, Observation) =
+    fenced(cellRows(media, maxBody = 0, maxRecords, listingRow))
 
   /** Revisit-resolution input — one row per RESPONSE (with its
     * routed carrier text and payload digest) or REVISIT record (with
@@ -821,27 +1061,8 @@ object Warc {
     * resolves each revisit to the stored capture — crawl-side dedup
     * made queryable. Map-only flatMap; bodies never shuffle. */
   def warcCaptures(media: DataFrame, maxRecords: Int = 1 << 12,
-                   maxBody: Int = 1 << 24): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("media_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .flatMap { case (id, p) =>
-        parseWarcOutcome(p, maxRecords, maxBody).records.flatMap { r =>
-          if (r.warcType.equalsIgnoreCase("revisit"))
-            Seq((id, r.recordIdx, "revisit", Option(r.targetUri),
-              r.refersTo, r.payloadDigest, None: Option[String],
-              None: Option[String]))
-          else routeDocRecord(r).map { case (carrier, text, _, _, _) =>
-            (id, r.recordIdx, "response", Option(r.targetUri),
-              None: Option[String], r.payloadDigest, Some(carrier),
-              Some(text))
-          }
-        }
-      }
-      .toDF("media_id", "record_idx", "kind", "url", "refers_to",
-        "digest", "carrier", "text")
-  }
+                   maxBody: Int = 1 << 24): DataFrame =
+    recordRows(cellRows(media, maxBody, maxRecords, captureRow))
 
   /** Redirect edges — one row per RESPONSE record that moves the
     * page: a 3xx with a `Location` header, or (r18) ANY status with
@@ -855,21 +1076,8 @@ object Warc {
     * URL aliasing that fetch-URL dedup misses (a page fetched via
     * its old URL and its new one is ONE identity). Map-only flatMap;
     * bodies never read. */
-  def warcRedirects(media: DataFrame, maxRecords: Int = 1 << 12): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("media_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .flatMap { case (id, p) =>
-        parseWarcOutcome(p, maxRecords, maxBody = 0).records.flatMap { r =>
-          redirectEdge(r).map { case (st, raw, tgt) =>
-            (id, r.recordIdx, r.targetUri, st, raw, tgt)
-          }
-        }
-      }
-      .toDF("media_id", "record_idx", "url", "status", "location", "target")
-  }
-
+  def warcRedirects(media: DataFrame, maxRecords: Int = 1 << 12): DataFrame =
+    recordRows(cellRows(media, maxBody = 0, maxRecords, redirectRow))
   /** The redirect edge one record contributes, if any: a 3xx
     * `Location` (authoritative when present), else an HTTP `Refresh:`
     * response header with a URL (r18 verdict missing item 3 — the
@@ -962,33 +1170,8 @@ object Warc {
 
   /** [[warcHtmlText]] plus the fence-counter Observation. */
   def warcHtmlTextObserved(media: DataFrame, maxRecords: Int = 1 << 12,
-                           maxBody: Int = 1 << 24): (DataFrame, Observation) = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    val raw = media.select(col("media_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .flatMap { case (id, p) =>
-        val parse = parseWarcOutcome(p, maxRecords, maxBody)
-        val pages = parse.records.collect {
-          case r if r.warcType.equalsIgnoreCase("response") &&
-              r.httpStatus.exists(s => s >= 200 && s < 300) &&
-              r.contentType.exists(_.toLowerCase(java.util.Locale.ROOT)
-                .startsWith("text/html")) && r.body.nonEmpty =>
-            val (html, cs) = decodeHtml(r.body, r.contentType)
-            (id, r.recordIdx, Option(r.targetUri), cs,
-              graft.functions.HtmlToText.clean(html),
-              null.asInstanceOf[String], 0, 0)
-        }
-        pages :+ ((id, -1, None: Option[String], null.asInstanceOf[String],
-          null.asInstanceOf[String], parse.endReason,
-          parse.truncatedBodies, parse.undecodableBodies))
-      }
-      .toDF("media_id", "record_idx", "url", "charset", "text",
-        "__end_reason", "__truncated_n", "__undec_n")
-    val (observed, obs) = withFenceCounters(raw, "warc_fences")
-    (observed.where(col("record_idx") >= 0)
-      .drop("__end_reason", "__truncated_n", "__undec_n", "__is_sentinel"), obs)
-  }
+                           maxBody: Int = 1 << 24): (DataFrame, Observation) =
+    fenced(cellRows(media, maxBody, maxRecords, htmlTextRow))
 
   /** Multi-carrier crawl-to-text: ONE pass that routes each 2xx
     * response body by its content type — text/html through the
@@ -1004,9 +1187,9 @@ object Warc {
                   maxBody: Int = 1 << 24): DataFrame =
     warcDocTextObserved(media, maxRecords, maxBody)._1
 
-  /** The ONE content-type router shared by the cell walk
-    * ([[warcDocTextObserved]]) and the streaming path
-    * ([[warcPathsDocTextObserved]]): a 2xx response record with a
+  /** The ONE content-type router behind every doc-text surface
+    * ([[warcDocText]], [[warcPathsDocText]], [[warcCaptures]],
+    * [[warcDocRows]]): a 2xx response record with a
     * routable content type yields (carrier, text); everything else
     * yields None. New carriers are added HERE and exist on both
     * doors at once.
@@ -1021,10 +1204,8 @@ object Warc {
     * so URL-keyed dedup can consolidate syndicated fetch URLs onto
     * the publisher's one canonical (curation v13). */
   private def routeDocRecord(r: WarcRecord): Option[(String, String, Long, Long, String)] = {
-    val ok = r.warcType.equalsIgnoreCase("response") &&
-      r.httpStatus.exists(s => s >= 200 && s < 300) && r.body.nonEmpty
+    if (!servedBody(r)) return None
     val ct = r.contentType.map(_.toLowerCase(java.util.Locale.ROOT))
-    if (!ok) return None
     if (ct.exists(_.startsWith("application/pdf")))
       return Pdf.extractPdfText(r.body)
         .map(t => ("pdf", t.text, t.type0Codes, t.type0Unmapped,
@@ -1087,32 +1268,8 @@ object Warc {
 
   /** [[warcDocText]] plus the fence-counter Observation. */
   def warcDocTextObserved(media: DataFrame, maxRecords: Int = 1 << 12,
-                          maxBody: Int = 1 << 24): (DataFrame, Observation) = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    val raw = media.select(col("media_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .flatMap { case (id, p) =>
-        val parse = parseWarcOutcome(p, maxRecords, maxBody)
-        val rows = parse.records.flatMap { r =>
-          routeDocRecord(r).map { case (carrier, text, codes, unmapped, canon) =>
-            (id, r.recordIdx, Option(r.targetUri), carrier, text,
-              r.xRobotsTag, codes, unmapped, Option(canon), r.encoding,
-              null.asInstanceOf[String], 0, 0)
-          }
-        }
-        rows :+ ((id, -1, None: Option[String], null.asInstanceOf[String],
-          null.asInstanceOf[String], None: Option[String], 0L, 0L,
-          None: Option[String], null.asInstanceOf[String],
-          parse.endReason, parse.truncatedBodies, parse.undecodableBodies))
-      }
-      .toDF("media_id", "record_idx", "url", "carrier", "text",
-        "x_robots", "type0_codes", "type0_unmapped", "canonical", "encoding",
-        "__end_reason", "__truncated_n", "__undec_n")
-    val (observed, obs) = withFenceCounters(raw, "warc_fences")
-    (observed.where(col("record_idx") >= 0)
-      .drop("__end_reason", "__truncated_n", "__undec_n", "__is_sentinel"), obs)
-  }
+                          maxBody: Int = 1 << 24): (DataFrame, Observation) =
+    fenced(cellRows(media, maxBody, maxRecords, docTextRow))
 
   /** ONE walk emitting page rows AND redirect edges — the decode-once
     * input for redirect-aware curation ([[graft.llm.Curation
@@ -1124,76 +1281,8 @@ object Warc {
     * `target`). Callers persist the frame once and filter twice (the
     * q232 diamond discipline). */
   def warcDocRows(media: DataFrame, maxRecords: Int = 1 << 12,
-                  maxBody: Int = 1 << 24): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("media_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .flatMap { case (id, p) =>
-        parseWarcOutcome(p, maxRecords, maxBody).records.flatMap { r =>
-          // a record can contribute BOTH kinds: a 2xx interstitial
-          // with a `Refresh:` header is a page AND a redirect edge
-          // (3xx records never route as pages, so the common case
-          // stays one row per record)
-          val page = routeDocRecord(r).map {
-            case (carrier, text, codes, unmapped, canon) =>
-              (id, r.recordIdx, "page", Option(r.targetUri), carrier, text,
-                r.xRobotsTag, codes, unmapped, Option(canon),
-                None: Option[Int], None: Option[String])
-          }
-          val edge = redirectEdge(r).map { case (st, _, tgt) =>
-            (id, r.recordIdx, "redirect", Option(r.targetUri),
-              null.asInstanceOf[String], null.asInstanceOf[String],
-              None: Option[String], 0L, 0L, None: Option[String],
-              Some(st), Some(tgt))
-          }
-          page.toSeq ++ edge.toSeq
-        }
-      }
-      .toDF("media_id", "record_idx", "kind", "url", "carrier", "text",
-        "x_robots", "type0_codes", "type0_unmapped", "canonical",
-        "status", "target")
-  }
-
-  /** The streaming-path multi-carrier router — [[warcDocText]] over
-    * FILE PATHS (the 100 TB front door): one task per path, records
-    * stream one at a time through the bounded reader and route
-    * through the SAME [[routeDocRecord]] as the cell walk, so every
-    * carrier exists on both doors by construction. Schema and fence
-    * contract of [[warcPathsHtmlText]] plus carrier and x_robots. */
-  def warcPathsDocText(spark: SparkSession, paths: Seq[String],
-                       maxBody: Int = 1 << 24,
-                       maxRecords: Int = 1 << 20): DataFrame =
-    warcPathsDocTextObserved(spark, paths, maxBody, maxRecords)._1
-
-  /** [[warcPathsDocText]] plus the fence-counter Observation. */
-  def warcPathsDocTextObserved(spark: SparkSession, paths: Seq[String],
-                               maxBody: Int = 1 << 24,
-                               maxRecords: Int = 1 << 20): (DataFrame, Observation) = {
-    import spark.implicits._
-    val n = math.max(1, math.min(paths.size, spark.sparkContext.defaultParallelism))
-    val raw = spark.createDataset(paths).repartition(n)
-      .flatMap { path =>
-        streamRows[(String, Int, Option[String], String, String,
-            Option[String], Long, Long, Option[String], String, String, Int, Int)](
-          path, maxBody, maxRecords,
-          r => routeDocRecord(r).map { case (carrier, text, codes, unmapped, canon) =>
-            (path, r.recordIdx, Option(r.targetUri), carrier, text,
-              r.xRobotsTag, codes, unmapped, Option(canon), r.encoding,
-              null.asInstanceOf[String], 0, 0)
-          },
-          (reason, tb, un) => (path, -1, None: Option[String],
-            null.asInstanceOf[String], null.asInstanceOf[String],
-            None: Option[String], 0L, 0L, None: Option[String],
-            null.asInstanceOf[String], reason, tb, un))
-      }
-      .toDF("path", "record_idx", "url", "carrier", "text", "x_robots",
-        "type0_codes", "type0_unmapped", "canonical", "encoding",
-        "__end_reason", "__truncated_n", "__undec_n")
-    val (observed, obs) = withFenceCounters(raw, "warc_paths_fences")
-    (observed.where(col("record_idx") >= 0)
-      .drop("__end_reason", "__truncated_n", "__undec_n", "__is_sentinel"), obs)
-  }
+                  maxBody: Int = 1 << 24): DataFrame =
+    recordRows(cellRows(media, maxBody, maxRecords, docRows))
 
   /** The RAW decoded page surface: like [[warcHtmlText]] but emitting
     * the charset-decoded HTML string itself instead of extracted
@@ -1208,267 +1297,28 @@ object Warc {
 
   /** [[warcHtmlPages]] plus the fence-counter Observation. */
   def warcHtmlPagesObserved(media: DataFrame, maxRecords: Int = 1 << 12,
-                            maxBody: Int = 1 << 24): (DataFrame, Observation) = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    val raw = media.select(col("media_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .flatMap { case (id, p) =>
-        val parse = parseWarcOutcome(p, maxRecords, maxBody)
-        val pages = parse.records.collect {
-          case r if r.warcType.equalsIgnoreCase("response") &&
-              r.httpStatus.exists(s => s >= 200 && s < 300) &&
-              r.contentType.exists(_.toLowerCase(java.util.Locale.ROOT)
-                .startsWith("text/html")) && r.body.nonEmpty =>
-            val (html, cs) = decodeHtml(r.body, r.contentType)
-            (id, r.recordIdx, Option(r.targetUri), cs, r.xRobotsTag, html,
-              null.asInstanceOf[String], 0)
-        }
-        pages :+ ((id, -1, None: Option[String], null.asInstanceOf[String],
-          None: Option[String],
-          null.asInstanceOf[String], parse.endReason, parse.truncatedBodies))
-      }
-      .toDF("media_id", "record_idx", "url", "charset", "x_robots", "html",
-        "__end_reason", "__truncated_n")
-    val (observed, obs) = withFenceCounters(raw, "warc_fences")
-    (observed.where(col("record_idx") >= 0)
-      .drop("__end_reason", "__truncated_n", "__is_sentinel"), obs)
-  }
+                            maxBody: Int = 1 << 24): (DataFrame, Observation) =
+    fenced(cellRows(media, maxBody, maxRecords, htmlPageRow))
 
-  // ==== split-streaming path reader (the 100 TB front door) ==========
-  //
-  // A real Common Crawl WARC is ~1 GB gzipped / several GB inflated —
-  // it cannot be a row cell (the 64 MB inflate fence above, and the
-  // JVM's 2 GB array bound). These functions take FILE PATHS and
-  // stream records one at a time with bounded memory: per record, at
-  // most the header block (64 KiB cap) plus min(Content-Length,
-  // max(maxBody, 8 KiB)) body bytes are ever resident; everything
-  // else is skipped on the wire. Gzip is decoded member-by-member as
-  // it streams (GZIPInputStream concatenates Common Crawl's
-  // member-per-record form natively), so total container size never
-  // matters. This is the split-discipline analog of the reference's
-  // LineRecordReader (hadoop: LIB/input/LineRecordReader.java:55) —
-  // one task owns one file, records stream through it.
+  // ==== path-form DataFrame surface ==================================
 
-  /** Bounded streaming record walk over one (possibly gzipped or
-    * zstd-compressed) WARC stream. `next()` returns null at end of
-    * walk; `endReason` then
-    * says why (same vocabulary as [[WarcParse]], plus `io_error` for
-    * a stream dead before its first record and `io_error_partial`
-    * for one dying after records were already emitted). */
-  private[sources] final class WarcStream(raw: java.io.InputStream,
-                                          maxBody: Int,
-                                          maxRecords: Int = 1 << 20) {
-    var endReason: String = null
-    var truncatedBodies: Int = 0
-    var undecodableBodies: Int = 0
-    private var idx = 0
-    // gzip / zstd / passthrough by magic — the shared archive-door
-    // sniff (Common Crawl distributes .warc.gz AND .warc.zst)
-    private val in: java.io.InputStream = Archives.sniffDecompress(raw)
-    private val maxHeaderBlock = 1 << 16
-
-    /** Fill exactly n bytes unless EOF; returns bytes read. */
-    private def readFully(buf: Array[Byte], n: Int): Int = {
-      var off = 0
-      while (off < n) {
-        val r = in.read(buf, off, n - off)
-        if (r < 0) return off
-        off += r
-      }
-      off
-    }
-    private def skipFully(n: Long): Long = {
-      var left = n
-      val buf = new Array[Byte](1 << 16)
-      while (left > 0) {
-        val r = in.read(buf, 0, math.min(left, buf.length.toLong).toInt)
-        if (r < 0) return n - left
-        left -= r
-      }
-      n
-    }
-
-    def next(): WarcRecord = {
-      if (endReason != null) return null
-      try nextInner()
-      catch {
-        case _: java.io.IOException =>
-          // records may already have been emitted — a mid-stream I/O
-          // death is a TRUNCATED container (ADVICE r13); only a file
-          // that dies before its first record is a zero-row drop
-          endReason = if (idx == 0) "io_error" else "io_error_partial"
-          null
-      }
-    }
-
-    private def nextInner(): WarcRecord = {
-      if (idx >= maxRecords) { endReason = "record_cap"; return null }
-      // skip inter-record CR/LF separators, find the header block
-      var b = in.read()
-      while (b == '\r' || b == '\n') b = in.read()
-      if (b < 0) { endReason = if (idx == 0) "empty" else "ok"; return null }
-      val hdr = new java.io.ByteArrayOutputStream(512)
-      hdr.write(b)
-      // read to the blank line (\n\n or \r\n\r\n), bounded
-      var tail = b & 0xff // rolling window of the last bytes, packed
-      var done = false
-      while (!done && hdr.size < maxHeaderBlock) {
-        val c = in.read()
-        if (c < 0) { endReason = if (idx == 0) "not_warc" else "corrupt"; return null }
-        hdr.write(c)
-        tail = (tail << 8) | (c & 0xff)
-        // \n\n, \n\r\n (the cell path's findBlank forms) or \r\n\r\n
-        if ((tail & 0xffff) == 0x0a0a || (tail & 0xffffff) == 0x0a0d0a ||
-            tail == 0x0d0a0d0a) done = true
-      }
-      if (!done) { endReason = "corrupt"; return null }
-      val block = hdr.toByteArray
-      if (!startsWith(block, 0, "WARC/")) {
-        endReason = if (idx == 0) "not_warc" else "corrupt"; return null
-      }
-      val headers = parseHeaders(block, nextLine(block, 0), block.length)
-      val wType = headers.getOrElse("warc-type", "")
-      val uri = headers.getOrElse("warc-target-uri", null)
-      val clen =
-        try headers.getOrElse("content-length", "-1").trim.toLong
-        catch { case _: NumberFormatException => -1L }
-      if (clen < 0) { endReason = "corrupt"; return null }
-      // buffer the bounded payload prefix: enough for the HTTP header
-      // parse even in listing mode (maxBody = 0), never more than the
-      // fence; skip the rest on the wire
-      val keepN = math.min(clen, math.max(maxBody, 8192).toLong).toInt
-      val payload = new Array[Byte](keepN)
-      val got = readFully(payload, keepN)
-      val skipped = if (got == keepN) skipFully(clen - keepN) else 0L
-      val shortRead = got < keepN || skipped < clen - keepN
-      // ---- response records: HTTP status + headers + body -----------
-      var status: Option[Int] = None
-      var ctype: Option[String] = None
-      var xRobots: Option[String] = None
-      var location: Option[String] = None
-      var refreshH: Option[String] = None
-      var body: Array[Byte] = Array.emptyByteArray
-      var bodyCut = false
-      var enc = "identity"
-      if (wType.equalsIgnoreCase("response") && startsWith(payload, 0, "HTTP/")) {
-        val httpHeaderEnd = findBlank(payload, 0)
-        if (httpHeaderEnd > 0 && httpHeaderEnd <= got) {
-          val parts = lineAt(payload, 0).split(" ", 3)
-          if (parts.length >= 2 && parts(1).forall(_.isDigit) &&
-              parts(1).nonEmpty && parts(1).length <= 3)
-            status = Some(parts(1).toInt)
-          val hh = parseHeaders(payload, nextLine(payload, 0), httpHeaderEnd)
-          ctype = hh.get("content-type")
-          xRobots = hh.get("x-robots-tag")
-          location = hh.get("location")
-          refreshH = hh.get("refresh")
-          val bl = clen - httpHeaderEnd // true HTTP body length
-          if (bl > 0 && bl <= maxBody && httpHeaderEnd + bl <= got) {
-            body = java.util.Arrays.copyOfRange(payload, httpHeaderEnd,
-              (httpHeaderEnd + bl).toInt)
-            // wire form → entity form, the same decode as the cell
-            // door (r16 item 1: both doors by construction)
-            val (decoded, label) = decodeHttpPayload(body,
-              hh.get("transfer-encoding"), hh.get("content-encoding"), maxBody)
-            body = decoded
-            enc = label
-            if (label.indexOf('!') >= 0) undecodableBodies += 1
-          }
-          else if (bl > 0 && maxBody > 0) {
-            bodyCut = true
-            truncatedBodies += 1
-          }
-        }
-      }
-      val rec = WarcRecord(idx, wType, uri, clen, status, ctype, body,
-        bodyCut, xRobots, encoding = enc, location = location,
-        refresh = refreshH)
-      idx += 1
-      if (shortRead) endReason = "truncated" // emit this record, then stop
-      rec
-    }
-  }
-
-  /** Rows from one path: each record mapped through `mk` (None rows
-    * skipped), then ONE sentinel row carrying the walk outcome; the
-    * stream closes when the iterator drains. Lazy — at no point is
-    * more than one record resident. */
-  private def streamRows[T](path: String, maxBody: Int, maxRecords: Int,
-                            mk: WarcRecord => Option[T],
-                            sentinel: (String, Int, Int) => T): Iterator[T] = {
-    var stream: java.io.InputStream = null
-    val ws =
-      try {
-        val p = new org.apache.hadoop.fs.Path(path)
-        // executor-side Configuration (loads core-site.xml from the
-        // classpath, so hdfs://, s3a:// and file:// all resolve the
-        // same way they do for Spark's own readers) — ONE per JVM,
-        // never per file: constructing it per path re-parses the XML
-        // resources and dominated many-small-file walks (r19)
-        val fs = p.getFileSystem(graft.core.Engine.executorHadoopConf)
-        stream = fs.open(p)
-        new WarcStream(stream, maxBody, maxRecords)
-      } catch {
-        case _: Exception =>
-          if (stream != null) { try stream.close() catch { case _: Exception => () } }
-          return Iterator.single(sentinel("io_error", 0, 0))
-      }
-    new Iterator[T] {
-      private var pending: Option[T] = None
-      private var sentinelSent = false
-      private def advance(): Unit = {
-        while (pending.isEmpty && !sentinelSent) {
-          val r = ws.next()
-          if (r == null) {
-            try stream.close() catch { case _: Exception => () }
-            pending = Some(sentinel(ws.endReason, ws.truncatedBodies,
-              ws.undecodableBodies))
-            sentinelSent = true
-          } else pending = mk(r)
-        }
-      }
-      def hasNext: Boolean = { advance(); pending.nonEmpty }
-      def next(): T = { advance(); val v = pending.get; pending = None; v }
-    }
-  }
-
-  /** The record listing over FILE PATHS — [[describeWarc]]'s streaming
-    * sibling for containers too large to be row cells. One task per
-    * path; memory is bounded per record, never per file. Schema:
-    * (path, record_idx, warc_type, target_uri, content_length,
-    * http_status, content_type). Fence drops are loud via the same
-    * `warc_fences` counters. */
+  /** The record listing over FILE PATHS — [[describeWarc]] for
+    * containers that live as files. One task per path; memory is
+    * bounded per record, never per file. Schema: (path, record_idx,
+    * warc_type, target_uri, content_length, http_status,
+    * content_type). Fence drops are loud via the `warc_paths_fences`
+    * counters. */
   def describeWarcPaths(spark: SparkSession, paths: Seq[String],
                         maxRecords: Int = 1 << 20): DataFrame =
     describeWarcPathsObserved(spark, paths, maxRecords)._1
 
   /** [[describeWarcPaths]] plus the fence-counter Observation. */
   def describeWarcPathsObserved(spark: SparkSession, paths: Seq[String],
-                                maxRecords: Int = 1 << 20): (DataFrame, Observation) = {
-    import spark.implicits._
-    val n = math.max(1, math.min(paths.size, spark.sparkContext.defaultParallelism))
-    val raw = spark.createDataset(paths).repartition(n)
-      .flatMap { path =>
-        streamRows[(String, Int, String, Option[String], Long, Option[Int],
-            Option[String], String, Int)](path, maxBody = 0, maxRecords,
-          r => Some((path, r.recordIdx, r.warcType, Option(r.targetUri),
-            r.contentLength, r.httpStatus, r.contentType,
-            null.asInstanceOf[String], 0)),
-          (reason, tb, _) => (path, -1, null.asInstanceOf[String],
-            None: Option[String], -1L, None: Option[Int],
-            None: Option[String], reason, tb))
-      }
-      .toDF("path", "record_idx", "warc_type", "target_uri",
-        "content_length", "http_status", "content_type",
-        "__end_reason", "__truncated_n")
-    val (observed, obs) = withFenceCounters(raw, "warc_paths_fences")
-    (observed.where(col("record_idx") >= 0)
-      .drop("__end_reason", "__truncated_n", "__is_sentinel"), obs)
-  }
+                                maxRecords: Int = 1 << 20): (DataFrame, Observation) =
+    fenced(pathRows(spark, paths, maxBody = 0, maxRecords, listingRow))
 
-  /** The crawl-to-text pass over FILE PATHS — [[warcHtmlText]]'s
-    * streaming sibling: 2xx text/html bodies, charset-aware decode,
+  /** The crawl-to-text pass over FILE PATHS — [[warcHtmlText]] keyed
+    * by path: 2xx text/html bodies, charset-aware decode,
     * [[graft.functions.HtmlToText]]. Schema: (path, record_idx, url,
     * charset, text). */
   def warcPathsHtmlText(spark: SparkSession, paths: Seq[String],
@@ -1479,29 +1329,21 @@ object Warc {
   /** [[warcPathsHtmlText]] plus the fence-counter Observation. */
   def warcPathsHtmlTextObserved(spark: SparkSession, paths: Seq[String],
                                 maxBody: Int = 1 << 24,
-                                maxRecords: Int = 1 << 20): (DataFrame, Observation) = {
-    import spark.implicits._
-    val n = math.max(1, math.min(paths.size, spark.sparkContext.defaultParallelism))
-    val raw = spark.createDataset(paths).repartition(n)
-      .flatMap { path =>
-        streamRows[(String, Int, Option[String], String, String, String, Int, Int)](
-          path, maxBody, maxRecords,
-          r => if (r.warcType.equalsIgnoreCase("response") &&
-              r.httpStatus.exists(s => s >= 200 && s < 300) &&
-              r.contentType.exists(_.toLowerCase(java.util.Locale.ROOT)
-                .startsWith("text/html")) && r.body.nonEmpty) {
-            val (html, cs) = decodeHtml(r.body, r.contentType)
-            Some((path, r.recordIdx, Option(r.targetUri), cs,
-              graft.functions.HtmlToText.clean(html),
-              null.asInstanceOf[String], 0, 0))
-          } else None,
-          (reason, tb, un) => (path, -1, None: Option[String],
-            null.asInstanceOf[String], null.asInstanceOf[String], reason, tb, un))
-      }
-      .toDF("path", "record_idx", "url", "charset", "text",
-        "__end_reason", "__truncated_n", "__undec_n")
-    val (observed, obs) = withFenceCounters(raw, "warc_paths_fences")
-    (observed.where(col("record_idx") >= 0)
-      .drop("__end_reason", "__truncated_n", "__undec_n", "__is_sentinel"), obs)
-  }
+                                maxRecords: Int = 1 << 20): (DataFrame, Observation) =
+    fenced(pathRows(spark, paths, maxBody, maxRecords, htmlTextRow))
+
+  /** The multi-carrier router over FILE PATHS — [[warcDocText]] keyed
+    * by path, through the same [[routeDocRecord]], so every carrier
+    * exists on both doors at once. Schema and fence contract of
+    * [[warcDocText]] with `path` for `media_id`. */
+  def warcPathsDocText(spark: SparkSession, paths: Seq[String],
+                       maxBody: Int = 1 << 24,
+                       maxRecords: Int = 1 << 20): DataFrame =
+    warcPathsDocTextObserved(spark, paths, maxBody, maxRecords)._1
+
+  /** [[warcPathsDocText]] plus the fence-counter Observation. */
+  def warcPathsDocTextObserved(spark: SparkSession, paths: Seq[String],
+                               maxBody: Int = 1 << 24,
+                               maxRecords: Int = 1 << 20): (DataFrame, Observation) =
+    fenced(pathRows(spark, paths, maxBody, maxRecords, docTextRow))
 }

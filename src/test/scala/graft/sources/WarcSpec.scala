@@ -124,14 +124,14 @@ class WarcSpec extends SparkSpec {
     val cut = parseWarcOutcome(good, maxBody = 4)
     assert(cut.records.head.bodyTruncated && cut.truncatedBodies == 1)
     assert(cut.endReason == "ok")
-    // an over-fence gzip is DISTINGUISHED from not-a-WARC: the r11
-    // silent-drop class. 70 MB of zeros inflates past the 64 MB cell
-    // fence but gzips tiny.
+    // a cell that inflates past 64 MB streams record by record like
+    // any other: no whole-container inflate, so no cell fence. 70 MB
+    // of zeros gzips tiny.
     val big = record("metadata", "http://big/", new Array[Byte](70 << 20))
     val bigGz = gzip(big)
     assert(bigGz.length < (1 << 20))
-    assert(parseWarcOutcome(bigGz).endReason == "inflate_over_fence")
-    assert(parseWarcOutcome(bigGz).records.isEmpty)
+    assert(parseWarcOutcome(bigGz).endReason == "ok")
+    assert(parseWarcOutcome(bigGz).records.map(_.contentLength) == Seq(70L << 20))
   }
 
   test("over-fence gzip WARC increments a named counter instead of vanishing") {
@@ -146,7 +146,7 @@ class WarcSpec extends SparkSpec {
     assert(rows.length == 1) // only the good page
     val m = obs.get
     assert(m("containers") == 3L)
-    assert(m("containers_dropped") == 2L) // the over-fence gzip AND the junk
+    assert(m("containers_dropped") == 1L) // the junk; the big gzip streams
     assert(m("rows_out") == 1L)
     assert(m("bodies_truncated") == 0L)
     // body fence cuts are counted too
@@ -396,8 +396,8 @@ class WarcSpec extends SparkSpec {
     assert(ws.next() == null)
     assert(ws.endReason == "io_error_partial")
     // a stream dead INSIDE its first record stays a zero-row drop
-    // (death before any byte throws in the constructor's gzip sniff,
-    // which the path reader's open-catch already maps to io_error)
+    // (a death during the constructor's compression sniff is the same
+    // io_error: the walk never throws)
     val ws0 = new WarcStream(failingAfter(10), 1 << 20)
     assert(ws0.next() == null)
     assert(ws0.endReason == "io_error")
@@ -749,5 +749,87 @@ class WarcSpec extends SparkSpec {
     // the lying-gzip body's fence counter fired once on each door
     assert(cellObs.get("bodies_undecodable") == 1L)
     assert(pathObs.get("bodies_undecodable") == 1L)
+  }
+
+  // ==== one walk, both doors ===========================================
+
+  test("a gzip cell cut 5 bytes short keeps its records and counts as truncated") {
+    val whole = graft.SparkEntry.diskFixtures("warc_stream_v1")._2(1L)
+    assert(whole.length == 278 && (whole(0) & 0xff) == 0x1f) // id 1: gzipped
+    assert(parseWarcOutcome(whole).records.size == 7)
+    val cut = whole.dropRight(5) // the deflate data whole, the trailer cut
+    val p = parseWarcOutcome(cut)
+    assert(p.records.map(_.recordIdx) == (0 until 7))
+    assert(p.endReason == "io_error_partial")
+    val media = Multimodal.asMedia(Seq((1L, cut)).toDF("id", "bytes"),
+      "id", "bytes", "warc")
+    val (df, obs) = Warc.warcHtmlTextObserved(media)
+    assert(df.collect().length == 2) // the two 200 text/html pages
+    val m = obs.get
+    assert(m("containers_truncated") == 1L && m("containers_dropped") == 0L)
+  }
+
+  test("a revisit record read through a .warc path carries refers-to and digest") {
+    val w = record("revisit", "http://e/b", "HTTP/1.1 200 OK\r\n\r\n".getBytes,
+      "WARC-Refers-To-Target-URI: http://e/a\r\nWARC-Payload-Digest: sha1:AAA\r\n")
+    val f = java.nio.file.Files.createTempFile("revisit", ".warc")
+    try {
+      java.nio.file.Files.write(f, w)
+      val in = java.nio.file.Files.newInputStream(f)
+      val r = try new WarcStream(in, 1 << 20).next() finally in.close()
+      assert(r.warcType == "revisit")
+      assert(r.refersTo == Some("http://e/a") && r.payloadDigest == Some("sha1:AAA"))
+    } finally java.nio.file.Files.delete(f)
+  }
+
+  test("a decoder that fails on its own header is an io_error sentinel on both doors") {
+    val bad = Seq(
+      "BZh9".getBytes("ISO-8859-1") ++ Array[Byte](1, 2, 3), // bzip2, cut
+      Array(0x28, 0xb5, 0x2f, 0xfd).map(_.toByte), // a lone zstd magic
+      Array(0xfd, '7', 'z', 'X', 'Z', 0x00).map(_.toByte)) // a lone xz magic
+    bad.foreach(b => assert(parseWarcOutcome(b) == WarcParse(Nil, "io_error")))
+    // cell door
+    val media = Multimodal.asMedia(
+      bad.zipWithIndex.map { case (b, i) => (i.toLong, b) }.toDF("id", "bytes"),
+      "id", "bytes", "warc")
+    val (df, obs) = Warc.warcHtmlTextObserved(media)
+    assert(df.collect().isEmpty)
+    assert(obs.get("containers") == 3L && obs.get("containers_dropped") == 3L)
+    // path door
+    val dir = java.nio.file.Files.createTempDirectory("warc-badcodec").toFile
+    try {
+      val paths = bad.zip(Seq("a.warc.bz2", "b.warc.zst", "c.warc.xz")).map {
+        case (b, name) =>
+          val f = new java.io.File(dir, name)
+          java.nio.file.Files.write(f.toPath, b)
+          f.getAbsolutePath
+      }
+      val (pdf, pobs) = Warc.describeWarcPathsObserved(spark, paths)
+      assert(pdf.collect().isEmpty)
+      assert(pobs.get("containers") == 3L && pobs.get("containers_dropped") == 3L)
+    } finally {
+      dir.listFiles().foreach(_.delete()); dir.delete()
+    }
+  }
+
+  test("zstd, bzip2 and xz cells decode through the cell door") {
+    def enc(os: java.io.OutputStream => java.io.OutputStream, b: Array[Byte]) = {
+      val bos = new java.io.ByteArrayOutputStream()
+      val z = os(bos); z.write(b); z.close(); bos.toByteArray
+    }
+    val page = record("response", "http://ex.com/z",
+      httpResponse(200, "text/html", "<p>codec page</p>"))
+    val cells = Seq(
+      enc(new com.github.luben.zstd.ZstdOutputStream(_), page),
+      enc(new org.apache.commons.compress.compressors.bzip2
+        .BZip2CompressorOutputStream(_), page),
+      enc(new org.apache.commons.compress.compressors.xz
+        .XZCompressorOutputStream(_), page))
+    val media = Multimodal.asMedia(
+      cells.zipWithIndex.map { case (b, i) => (i.toLong, b) }.toDF("id", "bytes"),
+      "id", "bytes", "warc")
+    val text = Warc.warcHtmlText(media).orderBy("media_id")
+      .select("text").as[String].collect().toSeq
+    assert(text == Seq.fill(3)("codec page"))
   }
 }
