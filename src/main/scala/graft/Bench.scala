@@ -65,87 +65,16 @@ private[graft] object TagWords {
   * TeraSort-equivalent (1M × 100-byte records, self-validated), then
   * prints ONE JSON line for the driver.
   *
-  * Contention discipline (rounds 9–10): a shared box can contaminate
-  * the record — r8's end-of-round run measured q37 at 11.8× its
-  * mid-round time, and r9's shipped a false rc=1 on q147 because
-  * whole-box load inflated even this JVM's CPU-seconds (11.3 → 25.5
-  * with zero code change). Defenses: (a) /proc/loadavg at run
-  * start/end AND per entry so a judge can adjudicate from the
-  * artifact alone; (b) any entry the drift gate flags (>1.5× its
-  * gate reference + 0.3 s absolute grace) is automatically RE-RUN
-  * once, DEFERRED to the very end of the round (round 14 — after the
-  * ANN-recall block, behind a GC pause and a settle wait down to the
-  * width margin, up to 4 min), so the 1-min loadavg EMA has drained
-  * the bench's own work plus the transient that tripped it; (c)
-  * machine speed is witnessed by ONE mechanism (round 14): the
-  * [[ConcProbe]] thread that samples DURING every timed attempt —
-  * SMT / memory-bandwidth contention that inflates entry CPU
-  * inflates the witness equally, and the entry's CPU is deflated by
-  * conc_probe/gate_conc before corroboration (the start-of-run and
-  * retry-adjacent spinProbe runs this superseded are retired); (d)
-  * `regressed` (→ nonzero exit) requires ALL of: wall-slow in both
-  * passes, witness-normalized CPU corroboration, a quiet box (loadavg
-  * below cpus/4 at start and retry time), (round 11) at least
-  * one of the ENTRY's own measurement windows quiet — loadavg is
-  * sampled before/after every entry and before/after every retry, so
-  * a loaded tail the global samples never saw still disqualifies
-  * itself — AND (round 17) a FINAL re-measure in a POSITIVELY quiet
-  * window (load at the width margin before the run, width-aware
-  * after-sample, during-run ConcProbe at the clean reference) that
-  * still trips; r16 proved a busy box can inflate wall and CPU
-  * together past every earlier bar, and the quiet re-run is the one
-  * measurement that can't be — anything less lands in `contended`,
-  * NAMED with its gate ratio and load evidence (plus
-  * `unconfirmed_quiet` when the box never settled), never dropped;
-  * `gate_wall` carries the clean reference forward so contended
-  * entries re-trip every round until a human reads them.
-  *
-  * Round 12 closes the remaining DURING-run blind spot (r11's
-  * q150_x10 false rc=1: the entry started at loadavg 6.22 — under
-  * every between-runs threshold — and the retry-adjacent probe ran in
-  * a quiet GAP, yet the 18-core-wide entry itself then shared SMT
-  * siblings and memory bandwidth with the residual load and inflated
-  * both wall and CPU-seconds; no witness measured between runs can
-  * see that): (e) a [[ConcProbe]] sibling thread now runs
-  * CONCURRENTLY with every timed attempt, sampling a small fixed
-  * ALU+memory kernel; its median sample is the during-run
-  * machine-speed witness, recorded per entry (`conc_probe`) with a
-  * fastest-known clean reference carried forward (`gate_conc`). A
-  * wall regression can only be CONFIRMED when the kept window's
-  * concurrent witness reads quiet vs that reference (ratio ≤ 1.25);
-  * no reference yet (first round of the feature, or a too-short
-  * window) means no trustworthy during-run witness exists and the
-  * entry lands in `contended` — conservative toward contended, never
-  * toward a false rc=1. The conc ratio also deflates the entry's CPU
-  * before corroboration (the probe thread's own CPU is subtracted
-  * from the entry's delta via ThreadMXBean, so the witness never
-  * pollutes the measurement it guards); (f) the per-window load test
-  * is entry-width-aware: a window is also loaded when load1 + the
-  * entry's own baseline width (prevCpu/prevWall) oversubscribes the
-  * box — loadavg 6 is "quiet" for a 2-core entry and saturating for
-  * a 28-core one; (g) `gate_wall` is monotone under suspicion: a
-  * regressed- OR contended-classified entry carries its PRIOR clean
-  * gate forward (r11's recorded run had polluted q150_x10's gate to
-  * its inflated wall, masking real regressions up to ~22 s).
-  *
-  * Round 14 closes the r12 false rc=1 (q266: wall 1.62× / CPU 1.91×
-  * at entry loadavg 12.0→6.2 with a quiet one-thread probe — the
-  * probe found an idle core while the 32-thread entry fought for the
-  * rest): (h) the window-load width is PEAK-aware ([[peakWidth]]:
-  * baseline cpu/wall > 2 counts as full-width — load competes with
-  * the burst, not the average), with a busy MARGIN (max(1, cpus/16))
-  * under which any width reads quiet, so a settled retry can still
-  * confirm a full-width regression (ADVICE r13); (i) the
-  * [[smtCoupled]] signature — CPU-seconds inflating ≥1.3× more than
-  * wall — classifies as contended even under a quiet witness: more
-  * work inflates wall at least proportionally to CPU, only slower
-  * cycles can inflate CPU disproportionately (r10's q217_x10 shape).
-  *
-  * Known blind spot, accepted: a purely I/O-bound regression (e.g. a
-  * broadcast flipping to a spilling sort-merge) adds wall but little
-  * CPU and lands in `contended` — its twin ("CPU-dense entry lands
-  * in regressed under load", r9) is closed by (c)+(d)+(e). The JSON
-  * is printed and written BEFORE any nonzero exit.
+  * The drift gate has one confirming rule. An entry that [[tripped]]
+  * against its `gate_wall` in the first pass runs once more at the end
+  * of the round, behind a settle wait; an entry that still trips is
+  * re-measured in a positively quiet window, and [[remeasureVerdict]]
+  * alone decides whether it is `regressed` (exit 1), `contended`
+  * (unconfirmed) or recovered. Wall, process CPU, loadavg, the
+  * [[ConcProbe]] witness, GC and steal time are recorded per entry as
+  * evidence; none of them votes. The JSON is printed and written
+  * BEFORE any nonzero exit. SCALE.md ("Bench contention discipline")
+  * has the recorded runs that shaped the rule.
   */
 object Bench {
 
@@ -169,147 +98,37 @@ object Bench {
     }
   } catch { case _: Throwable => Map.empty }
 
-  /** Is a wall-clock regression corroborated by the CPU axis?
-    * True when current CPU > previous×1.3 + 0.5 s — the absolute
-    * grace keeps sub-second entries' CPU noise (±0.1 s of JIT/GC
-    * swing is a 1.5× "ratio" on a 0.2 s entry) from masquerading as
-    * regressions; a real plan regression adds CPU SECONDS. With no
-    * usable CPU history the wall axis alone decides (true).
-    *
-    * `speedRatio` (round 10) closes the r9 blind spot: under
-    * whole-box SMT/memory contention CPU-seconds inflate too (q147's
-    * CPU went 11.3 → 25.5 s with zero code change under loadavg 3.8),
-    * violating the r9 assumption that "contention inflates wall but
-    * not this JVM's CPU". Since round 14 the ratio is the during-run
-    * [[ConcProbe]] witness (conc_probe / gate_conc) — the one
-    * machine-speed mechanism — and the current CPU is DEFLATED by it
-    * before comparing, so a slower box can't manufacture a CPU
-    * confirmation. Clamped ≥ 1: a faster box never inflates. */
-  private[graft] def cpuCorroborated(cur: Double, prev: Double,
-                                     speedRatio: Double = 1.0): Boolean = {
-    val norm = if (speedRatio > 1.0 && cur > 0) cur / speedRatio else cur
-    !(prev > 0 && cur > 0 && norm <= prev * 1.3 + 0.5)
-  }
-
   /** Drift-gate trip rule for one entry: past 1.5× its gate reference
     * AND past an absolute +0.3 s grace. The multiplicative rule alone
     * forced noise re-runs on sub-second entries (r9 judge run: q14 at
-    * 0.194 s and q37 4 ms over the line tripped on pure JIT jitter);
-    * the grace mirrors [[cpuCorroborated]]'s +0.5 s CPU grace. */
+    * 0.194 s and q37 4 ms over the line tripped on pure JIT jitter). */
   private[graft] def tripped(v: Double, gate: Double): Boolean =
     v > 0 && gate > 0 && v > gate * 1.5 + 0.3
 
-  /** Split wall-regressed entries into (regressed, contended).
-    * `loadHigh` short-circuits everything to contended: when the
-    * 1-min loadavg at run start or at confirm-retry time exceeds
-    * cpus/4 the box is measurably busy, and NO per-entry evidence
-    * gathered under that load can confirm a regression — the r9
-    * false-rc=1 (q147) happened exactly this way.
-    *
-    * Round 11 closes the PER-ENTRY blind spot (r10's q217_x10 false
-    * rc=1: run start at loadavg 3.44, the entry itself measured at
-    * 25.21 — a loaded TAIL the start/retry-time global samples never
-    * saw): `entryLoadHigh` says whether BOTH of an entry's own
-    * measurement windows (first pass and confirming retry) were
-    * loaded past threshold — such an entry has no trustworthy
-    * measurement at all and can only be `contended`. `speedRatio` is
-    * now per-entry too: a tripped entry's CPU deflates by the probe
-    * re-run next to its RETRY (where the contention actually is),
-    * not the start-of-run probe that predates the load.
-    *
-    * Round 12: `concQuiet` is the DURING-run witness (r11's q150_x10
-    * false rc=1: every between-runs sample read quiet while the run
-    * itself shared the box) — true only when the sibling [[ConcProbe]]
-    * that ran concurrently with the entry's kept window measured the
-    * box at its clean reference speed. An entry with no such positive
-    * witness (no reference yet, window too short) can only be
-    * `contended`: absence of evidence never confirms a regression. */
-  private[graft] def classify(wallRegressed: Seq[String],
-                              cpuNow: Map[String, Double],
-                              cpuPrev: Map[String, Double],
-                              speedRatio: String => Double,
-                              loadHigh: Boolean,
-                              entryLoadHigh: String => Boolean,
-                              concQuiet: String => Boolean,
-                              smtSignature: String => Boolean = _ => false)
-      : (Seq[String], Seq[String]) =
-    if (loadHigh) (Nil, wallRegressed)
-    else wallRegressed.partition { k =>
-      !entryLoadHigh(k) && concQuiet(k) && !smtSignature(k) &&
-        cpuCorroborated(cpuNow.getOrElse(k, -1.0), cpuPrev.getOrElse(k, -1.0),
-          speedRatio(k))
-    }
-
-  /** Is one measurement window loaded? Past the flat threshold
-    * (cpus/4), OR — round 12, width-aware — when the background load
-    * plus the ENTRY's own width (its baseline cpu/wall parallelism)
-    * oversubscribes the box: loadavg 6 is quiet for a 2-core entry
-    * and saturating for a 28-core one on 32 cpus. Width ≤ 0 (no
-    * baseline) falls back to the flat test alone.
-    *
-    * Round 14 (ADVICE r12/r13): the width leg requires load1 past a
-    * BUSY margin (max(1, cpus/16) — 2.0 on 32 cpus). Without it a
-    * full-width entry read "loaded" at ANY load1 > 0, which made a
-    * regression on the widest entries unconfirmable forever; with it
-    * a genuinely settled box (load1 under the margin) counts as
-    * quiet for every width, so the deferred confirm retry can still
-    * confirm a real full-width regression. */
-  private[graft] def windowLoaded(load1: Double, threshold: Double,
-                                  width: Double, cpus: Double): Boolean =
-    load1 > threshold ||
-      (width > 0 && cpus > 0 && load1 > math.max(1.0, cpus / 16.0) &&
-        load1 + width > cpus)
-
-  /** An entry's parallel width for the window-load test, PEAK-aware
-    * (round 14, r12 verdict task): the baseline average cpu/wall
-    * understates bursty plans — a 32-thread scan stage behind a
-    * single-threaded tail averages ~4 but competes for all 32 cpus
-    * during the scan. Any average above 2 therefore counts as
-    * full-width: background load competes with the BURST, not the
-    * average. (r12's q266 false rc=1: avg width 3.94 read the loaded
-    * 6.2–12.0 windows as quiet; full-width reads them loaded →
-    * contended.) No baseline → -1 (flat threshold test alone). */
-  private[graft] def peakWidth(baselineCpu: Double, baselineWall: Double,
-                               cpus: Double): Double =
-    if (baselineCpu <= 0 || baselineWall <= 0) -1.0
-    else { val avg = baselineCpu / baselineWall; if (avg > 2.0) cpus else avg }
-
-  /** Final-quiet-re-measure verdict for one suspect (round 17 — the
-    * r16 false rc=1 closer). Inputs are the ONE re-run taken after
-    * the bounded load-drain wait (the pre-window is at the margin by
-    * construction — the caller only re-runs once load1 settled):
+  /** Final-quiet-re-measure verdict for one suspect: the one rule that
+    * can confirm a regression. Inputs are the min of the two re-runs
+    * taken after a bounded load-drain wait:
     * - `wall <= 0` (runner died) → "regressed": the original verdict
     *   stands, a broken re-run is not exculpatory;
-    * - window not POSITIVELY quiet (after-sample past the flat
-    *   threshold, or no clean during-run ConcProbe witness at the
-    *   reference) → "unconfirmed": absence of a quiet measurement
-    *   never confirms a regression — the entry parks in contended;
-    * - quiet AND still past the trip line → "confirmed";
+    * - window not POSITIVELY quiet (after-sample past `loadThreshold`,
+    *   or no during-run ConcProbe witness within 1.15× + 1 ms of its
+    *   clean reference) → "unconfirmed": absence of a quiet
+    *   measurement never confirms a regression — the entry parks in
+    *   contended;
+    * - quiet and still past the trip line → "confirmed", but only when
+    *   the PRE-run loadavg (pure external load: the entry's own burst
+    *   has not happened yet) is at most `confirmMargin` and the two
+    *   attempts agree within 15% (drain inflation is unstable
+    *   run-to-run, a real regression reproduces tightly); otherwise
+    *   "unconfirmed";
     * - quiet and back under it → "recovered" (the clean wall is the
-    *   honest number to record).
-    * Deliberately the FLAT threshold on the after-sample, not the
-    * width-aware test: a full-width entry's own just-finished burst
-    * raises the 1-min EMA past the margin on an otherwise idle box,
-    * which would park every wide regression in unconfirmed forever;
-    * the during-run probe is the witness that actually saw the
-    * measurement window.
-    *
-    * Round 18 (r17 verdict item 3 — the r17 re-measure CONFIRMED a
-    * regression the judge's quiet box refuted: entry loadavg 4.4
-    * during the re-run passed the flat cpus/4=8.0 bound, and its
-    * ConcProbe squeaked by at 1.21× of the 1.25× bound): the caller
-    * now passes `loadThreshold` = busy margin (~cpus/16) PLUS the
-    * entry's own expected EMA contribution ([[ownBurstLoad]]) — the
-    * after-sample may carry the entry's just-finished burst but no
-    * more than ~a margin of external load — and the witness bar
-    * tightens to 1.15× with a 1 ms slack: the classification path's
-    * 1.25×+5 ms bound let r17's 0.029-vs-0.024 (1.21×) probe pass
-    * because the ABSOLUTE slack dominates at ~25 ms probe medians.
-    * The FINAL exculpatory-or-confirming measurement demands a
-    * genuinely clean witness; a merely-plausible one parks the entry
-    * in `unconfirmed`, which is always safe (named, never rc=1). The
-    * caller also re-runs TWICE and passes the MIN (residual drain
-    * inflates any single re-run). */
+    *   honest number to record), whatever the pre-run load.
+    * The caller bounds the after-sample at the busy margin plus the
+    * entry's own burst EMA ([[ownBurstLoad]]): a wide entry's
+    * just-finished run raises the 1-min EMA past the margin on an idle
+    * box, and a flat margin would park every wide regression in
+    * `unconfirmed` forever. BenchGateSpec replays the r16–r18 false
+    * confirms each bar closed. */
   private[graft] def remeasureVerdict(wall: Double, gate: Double,
                                       postLoad: Double, loadThreshold: Double,
                                       concNow: Double, concGate: Double,
@@ -320,18 +139,6 @@ object Bench {
     else if (!(postLoad <= loadThreshold && concGate > 0 && concNow > 0 &&
         concNow <= concGate * 1.15 + 0.001)) "unconfirmed"
     else if (tripped(wall, gate)) {
-      // Round 19 (r18 verdict item 1 — the r18 re-measure CONFIRMED
-      // q289 at 2.472 s under ~1.7 runnable threads of external load
-      // while the quiet truth was 1.41 s = 1.13× gate): a CONFIRMING
-      // verdict additionally requires (a) the PRE-run loadavg — pure
-      // external load, the entry's own burst hasn't happened yet — at
-      // ≤ ~0.5 runnable threads (the after-sample bound alone admits
-      // ~a busy margin of external load, which on a 32-way 1.4 s
-      // entry is enough for a 75% inflation), and (b) the TWO
-      // re-measure attempts agreeing within 15% (drain inflation is
-      // unstable run-to-run; a real regression reproduces tightly).
-      // Failing either parks the entry in `unconfirmed` — always
-      // safe: named in the artifact, never rc=1, gate carried.
       if (preLoad <= confirmMargin && attemptsAgree) "confirmed"
       else "unconfirmed"
     }
@@ -351,26 +158,9 @@ object Bench {
     if (burstSec <= 0) 0.0 else w * (1.0 - math.exp(-burstSec / 60.0))
   }
 
-  /** SMT-sibling signature (round 14, r12 verdict task): CPU-seconds
-    * inflated ≥1.3× MORE than wall did (+0.1 absolute slack on the
-    * ratio-of-ratios). More work at unchanged machine speed inflates
-    * wall at least proportionally to CPU (the entry's parallelism
-    * doesn't grow because the plan got slower); cycles-getting-slower
-    * (SMT core sharing, memory bandwidth) inflates every worker
-    * thread's CPU-seconds while wall partially hides behind scheduler
-    * slack. The during-run probe can MISS that sharing when its one
-    * thread lands on an idle physical core — r10's q217_x10 false
-    * rc=1 had exactly this shape: CPU 4.3× vs wall 2.3× with quiet
-    * probes. A genuine 2× regression (wall 2×, CPU 2×) stays below
-    * the coupling bound and still trips. */
-  private[graft] def smtCoupled(wallNow: Double, wallRef: Double,
-                                cpuNow: Double, cpuRef: Double): Boolean =
-    wallNow > 0 && wallRef > 0 && cpuNow > 0 && cpuRef > 0 &&
-      (cpuNow / cpuRef) > (wallNow / wallRef) * 1.3 + 0.1
-
   /** Next round's gate reference for one entry: its measurement —
-    * unless THIS round classified the entry regressed or contended,
-    * in which case the prior clean gate carries forward (never the
+    * unless THIS round left the entry regressed or contended, in
+    * which case the prior clean gate carries forward (never the
     * suspect wall). r11's recorded run violated this for regressed
     * entries and polluted q150_x10's gate from 7.11 to 14.58,
     * which would have masked a real regression up to ~22 s.
@@ -392,14 +182,12 @@ object Bench {
     else if (loadedWindow) -1.0
     else v
 
-  /** The DURING-run machine-speed witness (round 12; since round 14
-    * the ONLY machine-speed probe — the start-of-run and
-    * retry-adjacent spinProbe runs it superseded are retired): one
-    * daemon thread sampling a small fixed ALU + 64 MB strided-walk
-    * kernel (~15–30 ms clean) in a loop for as
-    * long as one timed attempt runs. SMT sharing and memory-bandwidth
-    * pressure from ANY source — the entry's own threads plus whatever
-    * else the box is running — slow every sample; comparing the
+  /** The DURING-run machine-speed witness: one daemon thread sampling
+    * a small fixed ALU + 64 MB strided-walk kernel (~15–30 ms clean)
+    * in a loop for as long as one timed attempt runs. SMT sharing and
+    * memory-bandwidth pressure from ANY source — the entry's own
+    * threads plus whatever else the box is running — slow every
+    * sample; comparing the
     * median against the same entry's fastest-known clean-round median
     * (`gate_conc`) isolates the EXTERNAL part, because the entry's
     * own pressure is present in both. The median (not min) is the
@@ -493,6 +281,35 @@ object Bench {
       .repartition(partitions)
   }
 
+  /** One file of the on-disk WARC stream fixture: 20,000 `200 OK`
+    * html pages (~880 B each inflated, ~17.7 MB a file), each its own
+    * gzip member as Common Crawl ships them, framed by SparkEntry's
+    * one record framer. Pure, so BenchFixtureSpec can pin its bytes;
+    * main writes 8 of them once and caches them by existence. */
+  private[graft] def warcStreamBytes(g: Long): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream(1 << 22)
+    val filler = ("lorem ipsum dolor sit amet " * 8).trim
+    var r = 0
+    while (r < 20000) {
+      val body = s"<h1>Doc $g/$r</h1>" + s"<p>$filler &amp; tail $r</p>" * 3
+      out.write(SparkEntry.gzipBytes(SparkEntry.warcRespRec(
+        s"http://bench.example/$g/$r", "text/html", body.getBytes("UTF-8"))))
+      r += 1
+    }
+    out.toByteArray
+  }
+
+  /** One timed attempt: wall seconds (-1 when the runner failed),
+    * process CPU seconds net of the probe's own, the [[ConcProbe]]
+    * median, and the JVM's GC seconds and the host's steal seconds
+    * over the attempt (-1 where unreadable). */
+  private final case class Attempt(wall: Double, cpu: Double, conc: Double,
+                                   gc: Double, steal: Double)
+
+  /** The faster of two attempts; a failed attempt never wins. */
+  private def faster(a: Attempt, b: Attempt): Attempt =
+    if (b.wall >= 0 && (a.wall < 0 || b.wall < a.wall)) b else a
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -516,13 +333,11 @@ object Bench {
     def load1(): Double =
       try loadavg().split(" ").head.toDouble catch { case _: Throwable => -1.0 }
     val loadStart = loadavg()
-    val load1Start = load1()
-    // Busy-box threshold for rc / classification decisions: a 1-min
-    // load past a quarter of the cores means other work is competing
-    // for SMT siblings and memory bandwidth — nothing measured under
-    // it can confirm a regression.
+    // Busy-box threshold: an entry whose pre-window 1-min load is past
+    // a quarter of the cores was measured while other work competed
+    // for SMT siblings and memory bandwidth, so its wall may not
+    // raise or birth a gate ([[gateCarry]]).
     val loadThreshold = cpus.toDouble / 4.0
-
 
     // q37 (LSH-blocked embedding near-dup) and q49 (pair→group
     // connected components) track the LLM-pipeline ops a training
@@ -622,12 +437,10 @@ object Bench {
     val parallelism = spark.sparkContext.defaultParallelism
 
     // On-disk WARC fixture for the split-streaming front door: 8
-    // member-per-record .warc.gz files, ~40 MB inflated each (~320 MB
-    // total — far past the 64 MB cell fence, the scale the streaming
-    // reader exists for). Generated once in executors, cached by
+    // member-per-record .warc.gz files ([[warcStreamBytes]], ~141 MB
+    // inflated in all). Generated once in executors, cached by
     // existence across runs; the timed entry reads ONLY.
     def warcStreamFixture(): Seq[String] = {
-      import org.apache.spark.sql.functions._
       import spark.implicits._
       val dir = new java.io.File(
         System.getProperty("java.io.tmpdir"), "graft_bench_warc_v1")
@@ -636,26 +449,7 @@ object Bench {
         if (!f.exists) {
           dir.mkdirs()
           val tmp = java.io.File.createTempFile("ccpart", ".part", dir)
-          val out = new java.io.BufferedOutputStream(
-            new java.io.FileOutputStream(tmp), 1 << 16)
-          val filler = ("lorem ipsum dolor sit amet " * 8).trim
-          var r = 0
-          while (r < 20000) { // ~2 KB/record -> ~40 MB inflated
-            val body = s"<h1>Doc $g/$r</h1>" +
-              s"<p>${filler} &amp; tail $r</p>" * 3
-            val http = s"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n$body"
-            val rec = s"WARC/1.0\r\nWARC-Type: response\r\n" +
-              s"WARC-Target-URI: http://bench.example/$g/$r\r\n" +
-              s"Content-Length: ${http.getBytes("UTF-8").length}\r\n\r\n" +
-              http + "\r\n\r\n"
-            val bos = new java.io.ByteArrayOutputStream(1024)
-            val gz = new java.util.zip.GZIPOutputStream(bos)
-            gz.write(rec.getBytes("UTF-8"))
-            gz.close() // one gzip member per record (the CC form)
-            out.write(bos.toByteArray)
-            r += 1
-          }
-          out.close()
+          java.nio.file.Files.write(tmp.toPath, warcStreamBytes(g))
           if (!tmp.renameTo(f)) tmp.delete()
         }
         f.getAbsolutePath
@@ -760,9 +554,9 @@ object Bench {
         graft.llm.ExactSubstring.duplicatedExtents(
           docsX10(spark, sfDir, parallelism), "doc_id", "text", 8)
       }),
-      // The split-streaming crawl front door at its design scale:
-      // ~320 MB of member-per-record gzip WARC across 8 on-disk files
-      // (5× past the 64 MB cell fence), streamed record-by-record
+      // The split-streaming crawl front door: 160,000 member-per-record
+      // gzip WARC records across 8 on-disk files (~141 MB inflated; the
+      // entry keeps its historical name), streamed record-by-record
       // through the HTTP gate + charset decode + html_to_text. One
       // task per file; per-record bounded memory by construction.
       "warc_stream_320mb" -> (() => noopRun {
@@ -794,9 +588,8 @@ object Bench {
       catch { case scala.util.control.NonFatal(_) => () }
     }
 
-    // Process CPU seconds — the contention discriminator: a noisy
-    // neighbor inflates wall-clock but cannot add CPU time to THIS
-    // JVM (entries run serially, so each delta is attributable).
+    // Process CPU seconds: recorded per entry as evidence (entries run
+    // serially, so each delta is attributable); no gate rule reads it.
     def cpuNow(): Double = try {
       java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
         case os: com.sun.management.OperatingSystemMXBean =>
@@ -805,39 +598,42 @@ object Bench {
         case _ => -1.0
       }
     } catch { case _: Throwable => -1.0 }
-    // one timed attempt: (wall sec, cpu sec, concurrent-probe median);
-    // wall/cpu are -1 on failure. A ConcProbe sibling thread runs for
-    // the whole attempt — the during-run contention witness (round
-    // 12) — and its own thread-CPU is subtracted from the delta. For
-    // entries whose runner returns an INTERNAL timing (terasort's
-    // sort-only window, mrbench's 50-collect loop) the CPU delta spans
-    // the whole runner call — a superset of the wall metric's work.
-    // Still comparable run-over-run (same superset every time), which
-    // is all the corroboration rule needs.
-    def attempt(run: () => Double): (Double, Double, Double) = {
+    // JVM GC seconds so far, summed over the collectors (-1 when none
+    // reports a time)
+    def gcNow(): Double = {
+      val ts = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
+        .toArray(Array.empty[java.lang.management.GarbageCollectorMXBean])
+        .map(_.getCollectionTime).filter(_ >= 0)
+      if (ts.isEmpty) -1.0 else ts.sum / 1000.0
+    }
+    // host steal seconds since boot: the steal column of /proc/stat's
+    // all-CPU line, in USER_HZ ticks (100 a second on Linux); -1 when
+    // unreadable. Read only.
+    def stealNow(): Double = try {
+      val f = java.nio.file.Files.readAllLines(
+        java.nio.file.Paths.get("/proc/stat")).get(0).trim.split("\\s+")
+      if (f(0) == "cpu" && f.length > 8) f(8).toLong / 100.0 else -1.0
+    } catch { case _: Throwable => -1.0 }
+    def delta(a: Double, b: Double): Double =
+      if (a < 0 || b < 0) -1.0 else math.max(0.0, b - a)
+    // One timed attempt. A ConcProbe sibling thread runs for the whole
+    // attempt — the during-run contention witness — and its own
+    // thread-CPU is subtracted from the CPU delta. For entries whose
+    // runner returns an INTERNAL timing (terasort's sort-only window,
+    // mrbench's 50-collect loop) the CPU, GC and steal deltas span the
+    // whole runner call — a superset of the wall metric's work, the
+    // same superset every run.
+    def attempt(run: () => Double): Attempt = {
       val probe = new ConcProbe().start()
-      val c0 = cpuNow()
+      val c0 = cpuNow(); val g0 = gcNow(); val s0 = stealNow()
       val w = try run() catch { case _: Throwable => -1.0 }
-      val c1 = cpuNow()
+      val c1 = cpuNow(); val g1 = gcNow(); val s1 = stealNow()
       val (concMed, probeCpu) = probe.finish()
-      (w,
+      Attempt(w,
         if (w < 0 || c0 < 0 || c1 < 0) -1.0 else math.max(0.0, c1 - c0 - probeCpu),
-        concMed)
+        concMed, delta(g0, g1), delta(s0, s1))
     }
 
-    // best of 2: one run absorbs residual warmup/GC noise, the min is
-    // the steady-state number. (min-of-2 applies uniformly — terasort
-    // single runs swung ±50% round-over-round with no code change.)
-    // The kept entry's CPU seconds travel with its wall time.
-    // 1-min loadavg sampled BEFORE and after each entry's runs — the
-    // JSON carries per-entry contention evidence, so a future judge
-    // can adjudicate a slow entry from the artifact alone (r9
-    // required a manual re-run to prove q147's 2.54 s was load, not
-    // code). The before-sample exists because the after-sample is
-    // confounded by the entry's own 32-thread work; an entry's
-    // first-pass window counts as LOADED only when both samples
-    // exceed threshold (r10: q217_x10's own samples read 25+ while
-    // the run-start sample read 3.44 — the gate never saw it).
     // UNTIMED fixture pre-generation at the TARGET sfDir (r17 verdict
     // item 5a: q344's first-ever gate was 134.7 s because its
     // 3×~5,000-file WARC fixture generation ran inside the timed
@@ -858,28 +654,25 @@ object Bench {
     }
     spark.catalog.clearCache()
 
+    // best of 2: one run absorbs residual warmup/GC noise, the min is
+    // the steady-state number. (min-of-2 applies uniformly — terasort
+    // single runs swung ±50% round-over-round with no code change.)
+    // The kept attempt's CPU, witness, GC and steal travel with its
+    // wall; a winning retry or re-measure replaces the kept attempt.
+    // 1-min loadavg sampled BEFORE and after each entry's runs — the
+    // JSON carries per-entry contention evidence, so a future judge
+    // can adjudicate a slow entry from the artifact alone (r9
+    // required a manual re-run to prove q147's 2.54 s was load, not
+    // code). The before-sample exists because the after-sample is
+    // confounded by the entry's own 32-thread work.
     var entryLoadPre: Map[String, Double] = Map.empty
     var entryLoad: Map[String, Double] = Map.empty
-    val firstPassFull: Seq[(String, (Double, Double, Double))] =
-      runners.map { case (name, run) =>
-        entryLoadPre += name -> load1()
-        val a = attempt(run); val b = attempt(run)
-        entryLoad += name -> load1()
-        name -> (if (b._1 >= 0 && (a._1 < 0 || b._1 < a._1)) b else a)
-      }
-    val firstPass = firstPassFull.map { case (n, (w, _, _)) => n -> w }
-    var cpuMap: Map[String, Double] =
-      firstPassFull.map { case (n, (_, c, _)) => n -> c }.toMap
-    // during-run witness of the KEPT window (retry overwrites on win)
-    var concMap: Map[String, Double] =
-      firstPassFull.map { case (n, (_, _, cc)) => n -> cc }.toMap
-    // first-pass window samples, snapshotted BEFORE any retry can
-    // overwrite the after-samples; the loaded verdict itself is
-    // computed below once the baseline widths are parsed.
-    val firstPassLoadSamples: Map[String, (Double, Double)] =
-      firstPassFull.map { case (n, _) =>
-        n -> ((entryLoadPre.getOrElse(n, -1.0), entryLoad.getOrElse(n, -1.0)))
-      }.toMap
+    var kept: Map[String, Attempt] = runners.map { case (name, run) =>
+      entryLoadPre += name -> load1()
+      val a = attempt(run); val b = attempt(run)
+      entryLoad += name -> load1()
+      name -> faster(a, b)
+    }.toMap
 
     // Drift gate: compare against the PREVIOUS round's JSON (the same
     // file this run overwrites below) and flag any entry past 1.5× its
@@ -890,7 +683,6 @@ object Bench {
       java.nio.file.Paths.get(outPath)), "UTF-8")
       catch { case _: Throwable => "" }
     val prev: Map[String, Double] = parseSection(prevTxt, "queries", sfDir)
-    val prevCpu: Map[String, Double] = parseSection(prevTxt, "cpu_sec", sfDir)
     // The gate compares against the best-known-CLEAN reference, not
     // the raw previous measurement: a contended entry records its
     // inflated wall in `queries` (the honest measurement) but carries
@@ -899,26 +691,12 @@ object Bench {
     // inflated baseline. Per-entry: gate_wall overrides queries.
     val prevGate: Map[String, Double] =
       prev ++ parseSection(prevTxt, "gate_wall", sfDir)
-    // fastest-known clean during-run probe median per entry (round 12)
+    // fastest-known clean during-run probe median per entry
     val prevConcGate: Map[String, Double] = parseSection(prevTxt, "gate_conc", sfDir)
-    // The entry's own baseline parallelism (cpu/wall) — how many cores
-    // the entry itself occupies when healthy; feeds the width-aware
-    // window-load test.
-    def entryWidth(k: String): Double =
-      peakWidth(prevCpu.getOrElse(k, -1.0), prevGate.getOrElse(k, -1.0),
-        cpus.toDouble)
-    // A first-pass window counts as LOADED only when BOTH its samples
-    // (before/after) fail the width-aware test — the after-sample is
-    // confounded by the entry's own 32-thread work, so one loaded
-    // sample alone is not evidence.
-    val firstPassLoaded: Map[String, Boolean] = firstPassLoadSamples.map {
-      case (n, (pre, post)) =>
-        n -> (windowLoaded(pre, loadThreshold, entryWidth(n), cpus.toDouble) &&
-          windowLoaded(post, loadThreshold, entryWidth(n), cpus.toDouble))
-    }
     def r3(x: Double) = math.round(x * 1000) / 1000.0
-    def trippedOf(res: Seq[(String, Double)]): Seq[String] = res.collect {
-      case (k, v) if tripped(v, prevGate.getOrElse(k, -1.0)) => k
+    // entries whose kept wall trips the gate, in runner order
+    def trippedNow(): Seq[String] = runners.map(_._1).filter { k =>
+      tripped(kept(k).wall, prevGate.getOrElse(k, -1.0))
     }
     // Contention recovery (r8 lesson: the recorded run shipped q37 at
     // 11.8× with zero plan change — machine contention, flagged by the
@@ -930,24 +708,20 @@ object Bench {
     // retry ran at loadavg 6.9 and just re-measured the contention).
     // Running the retries after the ANN-recall block behind a
     // margin-gated settle wait gives the EMA minutes to drain; keep
-    // the min. An entry still >1.5× after that is a double-confirmed
-    // regression → nonzero exit below.
-    val trippedFirst = trippedOf(firstPass)
+    // the min. An entry still past the line goes to the final quiet
+    // re-measure below.
+    val trippedFirst = trippedNow()
     var loadAtRetry = -1.0
-    var retryLoaded: Map[String, Boolean] = Map.empty
-    def confirmRetries(): Seq[(String, Double)] =
-      if (trippedFirst.isEmpty) firstPass
-      else {
+    def confirmRetries(): Unit =
+      if (trippedFirst.nonEmpty) {
         System.err.println(
           s"[bench] drift gate tripped (${trippedFirst.mkString(", ")}); " +
             "re-running after settle, keeping min")
         System.gc()
         Thread.sleep(3000)
-        // settle to the WIDTH margin (max(1, cpus/16)), not just the
-        // flat cpus/4 threshold: the retry's loaded verdict for a
-        // full-width entry uses the margin, so waiting only to cpus/4
-        // would hand every wide entry a pre-loaded retry window and
-        // park it in contended forever.
+        // settle to the busy margin (max(1, cpus/16)), not just the
+        // flat cpus/4 threshold: a wide entry retried under cpus/4 of
+        // residual load just re-measures the contention
         val settleTarget = math.max(1.0, cpus.toDouble / 16.0)
         var waited = 0
         while (load1() > settleTarget && waited < 240) {
@@ -956,25 +730,12 @@ object Bench {
           Thread.sleep(15000); waited += 15
         }
         loadAtRetry = load1()
-        val retried = trippedFirst.flatMap { name =>
-          runnerMap.get(name).map { run =>
-            val preLoad = load1()
-            val r = attempt(run)
-            val postLoad = load1()
-            retryLoaded += name ->
-              (windowLoaded(preLoad, loadThreshold, entryWidth(name), cpus.toDouble) &&
-                windowLoaded(postLoad, loadThreshold, entryWidth(name), cpus.toDouble))
-            name -> ((r, postLoad))
-          }
-        }.toMap
-        firstPass.map { case (name, v) =>
-          retried.get(name) match {
-            case Some(((rw, rc, rcc), postLoad)) if rw > 0 && v > 0 && rw < v =>
-              cpuMap += name -> rc // the retry won: its CPU rides along
-              concMap += name -> rcc // …and its during-run witness
-              entryLoad += name -> postLoad
-              name -> rw
-            case _ => name -> v
+        trippedFirst.foreach { name =>
+          val r = attempt(runnerMap(name))
+          val postLoad = load1()
+          if (r.wall > 0 && r.wall < kept(name).wall) {
+            kept += name -> r // the retry won: its evidence rides along
+            entryLoad += name -> postLoad
           }
         }
       }
@@ -1146,202 +907,122 @@ object Bench {
 
     // deferred confirm retries run HERE — after the recall block, as
     // far from the first pass's loadavg drain as the round gets
-    val results: Seq[(String, Double)] = confirmRetries()
+    confirmRetries()
 
-    val cur = results.toMap
-    // An entry that survived the recovery re-run is only a REGRESSION
-    // if the speed-normalized CPU axis corroborates it AND the box
-    // was demonstrably quiet at both measurement opportunities
-    // ([[classify]]); wall-slow under load or with flat normalized
-    // CPU is external contention — named, not a failure.
-    val wallRegressed = trippedOf(results) // survived the recovery re-run
-    val loadHigh = load1Start > loadThreshold ||
-      (loadAtRetry > 0 && loadAtRetry > loadThreshold)
-    // During-run witness ratio: the kept window's concurrent-probe
-    // median vs this entry's fastest-known clean reference. > 1 means
-    // the box was measurably slower WHILE this entry ran than during
-    // its clean baseline window — the external share, since the
-    // entry's own pressure is present in both.
-    val concRatio: String => Double = { k =>
-      val now = concMap.getOrElse(k, -1.0); val g = prevConcGate.getOrElse(k, -1.0)
-      if (now > 0 && g > 0) math.max(1.0, now / g) else 1.0
-    }
-    // Positive quiet witness: a usable during-run sample exists AND
-    // reads at the clean reference (≤1.25× + 5 ms sampling grace).
-    // No reference yet / too-short window → false → contended.
-    val concQuiet: String => Boolean = { k =>
-      val now = concMap.getOrElse(k, -1.0); val g = prevConcGate.getOrElse(k, -1.0)
-      now > 0 && g > 0 && now <= g * 1.25 + 0.005
-    }
-    // Per-entry CPU deflator (round 14: ONE mechanism): the during-run
-    // concurrent ratio — the only witness that can see contention
-    // INSIDE the measurement window. The start-of-run/retry-adjacent
-    // spinProbe runs it used to max with are retired: every case they
-    // caught (r9 whole-box slowness, r10 loaded tail) is covered by
-    // concRatio when a gate_conc reference exists, and by concQuiet's
-    // no-positive-witness → contended rule when it doesn't.
-    val entrySpeedRatio: String => Double = concRatio
-    // Entry-level load verdict: both of the entry's own windows
-    // (first pass, retry) measured loaded → nothing trustworthy was
-    // recorded for it. Missing retry evidence counts as loaded —
-    // conservative toward contended, never toward a false rc=1.
-    val entryLoadHigh: String => Boolean = { k =>
-      firstPassLoaded.getOrElse(k, false) && retryLoaded.getOrElse(k, true)
-    }
-    // SMT-sibling signature (round 14): CPU-seconds inflating ≥1.3×
-    // MORE than wall is cycles-getting-slower, not more work — the
-    // shape of r10's q217_x10 (CPU 4.3× vs wall 2.3×), which a
-    // one-thread probe on an idle physical core cannot see.
-    val smtSignature: String => Boolean = { k =>
-      smtCoupled(cur.getOrElse(k, -1.0), prevGate.getOrElse(k, -1.0),
-        cpuMap.getOrElse(k, -1.0), prevCpu.getOrElse(k, -1.0))
-    }
-    val (regressed, contended) =
-      classify(wallRegressed, cpuMap, prevCpu, entrySpeedRatio, loadHigh,
-        entryLoadHigh, concQuiet, smtSignature)
-    // ADVICE r14: the smt veto is unconditional by design (the
-    // one-thread witness cannot see SMT core sharing, so its quiet
-    // reading is not exculpatory for this shape) — but a PERSISTENT
-    // CPU-dominant regression would hide behind it forever. Surface
-    // the entries that would have confirmed but for the veto in a
-    // dedicated artifact field, so the same name recurring across
-    // rounds is visible to the round-over-round reader.
-    val smtVetoed = wallRegressed.filter { k =>
-      !loadHigh && !entryLoadHigh(k) && concQuiet(k) && smtSignature(k) &&
-        cpuCorroborated(cpuMap.getOrElse(k, -1.0), prevCpu.getOrElse(k, -1.0),
-          entrySpeedRatio(k))
-    }
-    if (smtVetoed.nonEmpty)
-      System.err.println(
-        s"[bench] wall+CPU slow but CPU inflated >=1.3x MORE than wall " +
-          s"(SMT-coupled shape, classified contended; recurring across " +
-          s"rounds would mean a real CPU-dominant regression): " +
-          smtVetoed.mkString(", "))
-
-    // ---- FINAL quiet re-measure (r16 verdict item 1/2: the fourth
-    // loaded-box round finally fooled the corroboration bar — a busy
-    // box inflates wall AND CPU together, the exact signature the
-    // gate reads as code regression, and BENCH_r16 shipped rc=1 on
-    // healthy code). A `regressed` verdict now additionally requires
-    // a measurement taken in a POSITIVELY quiet window: the suspect
-    // re-runs once after a bounded load-drain wait, and the verdict
-    // stands only when (a) load1 was at the width margin before the
-    // run, (b) the after-sample passes the width-aware load test,
-    // (c) the during-run ConcProbe read at the clean reference, AND
-    // (d) the quiet wall still trips the gate. A quiet wall back
-    // under the line RECOVERS the entry (the clean number is
-    // recorded); a box that never yields a quiet window leaves the
-    // entry `contended` under `unconfirmed_quiet` — absence of a
-    // quiet measurement never confirms a regression.
+    // ---- FINAL quiet re-measure, the one rule that confirms a
+    // regression (r16: a busy box inflates wall AND CPU together, the
+    // exact signature of a code regression, and BENCH_r16 shipped
+    // rc=1 on healthy code). Every entry still past the line after
+    // the retry re-runs twice after a bounded load-drain wait, and
+    // [[remeasureVerdict]] on that window decides: confirmed →
+    // `regressed`; unconfirmed (window not positively quiet, or
+    // attempts that disagree) → `contended`, also named in
+    // `unconfirmed_quiet`; back under the line → recovered, with the
+    // clean wall recorded. The wait is bounded per round, not per
+    // entry: once one suspect's wait runs out, later suspects
+    // re-measure at once and their own pre-window decides.
+    val suspects = trippedNow()
     var remeasured = Map.empty[String, Double]
-    var unconfirmedQuiet = List.empty[String]
-    var regressedF = List.empty[String]
-    var contendedF = contended.toList
-    if (regressed.nonEmpty) {
+    var regressedR = List.empty[String]
+    var contendedR = List.empty[String]
+    if (suspects.nonEmpty) {
       System.err.println(
-        s"[bench] regression classified for ${regressed.mkString(", ")}; " +
+        s"[bench] still past the gate after the retry (${suspects.mkString(", ")}); " +
           "final quiet re-measure before the verdict ships")
       System.gc()
       Thread.sleep(3000)
       val margin = math.max(1.0, cpus.toDouble / 16.0)
-      regressed.foreach { name =>
-        runnerMap.get(name) match {
-          case None => contendedF ::= name // no runner to re-measure
-          case Some(run) =>
-            // settle target is the CONFIRM margin (~0.5 external
-            // runnable threads — r18 verdict item 1), not just the
-            // busy margin: a confirming verdict needs a genuinely
-            // quiet pre-window. If the box drains below the busy
-            // margin but not to 0.5 within the bounded wait, the
-            // attempts still run (a RECOVERY is still exculpatory)
-            // but the verdict caps at `unconfirmed`.
-            val confirmMargin = 0.5
-            var waited = 0
-            while (load1() > confirmMargin && waited < 300) {
-              System.err.println(s"[bench] re-measure of $name waiting " +
-                s"for settle (loadavg ${load1()} > $confirmMargin)")
-              Thread.sleep(15000); waited += 15
-            }
-            val preLoad = load1()
-            if (preLoad > margin) {
-              contendedF ::= name; unconfirmedQuiet ::= name
-              System.err.println(s"[bench] $name: box never settled " +
-                s"(loadavg $preLoad) - contended, regression UNCONFIRMED")
-            } else {
-              // MIN of two re-measure attempts (r17 verdict item 3:
-              // one attempt under residual drain re-confirmed the
-              // contention it was supposed to rule out); the min
-              // attempt's CPU and during-run witness ride along
-              val a1 = attempt(run)
-              val a2 = attempt(run)
-              val (w, c, cc) =
-                if (a2._1 >= 0 && (a1._1 < 0 || a2._1 < a1._1)) a2 else a1
-              val postLoad = load1()
-              if (w > 0) {
-                remeasured += name -> w
-                cpuMap += name -> c
-                concMap += name -> cc
-                entryLoad += name -> postLoad
-                entryLoadPre += name -> preLoad
-              }
-              val g = prevConcGate.getOrElse(name, -1.0)
-              // the re-measure after-sample allows the entry's OWN
-              // burst EMA plus at most ~a busy margin of external
-              // load — far tighter than the flat cpus/4 the r17
-              // false-confirm slid under
-              val burst = a1._1.max(0) + a2._1.max(0)
-              val bound = margin + ownBurstLoad(entryWidth(name),
-                cpus.toDouble, burst)
-              // two agreeing attempts (within 15%) are required for a
-              // CONFIRMED verdict — drain inflation is unstable
-              // run-to-run, a real regression reproduces tightly
-              val agree = a1._1 > 0 && a2._1 > 0 &&
-                math.abs(a1._1 - a2._1) <= 0.15 * math.min(a1._1, a2._1)
-              remeasureVerdict(w, prevGate.getOrElse(name, -1.0),
-                postLoad, bound, cc, g, preLoad, confirmMargin,
-                agree) match {
-                case "regressed" => regressedF ::= name // re-run died
-                case "unconfirmed" =>
-                  contendedF ::= name; unconfirmedQuiet ::= name
-                  System.err.println(s"[bench] $name: re-measure window not " +
-                    s"positively quiet (load $postLoad, conc ${r3(cc)} vs " +
-                    s"gate ${r3(g)}) - contended, regression UNCONFIRMED")
-                case "confirmed" =>
-                  regressedF ::= name
-                  System.err.println(s"[bench] $name: CONFIRMED regressed on " +
-                    s"a quiet box - ${r3(w)}s vs gate " +
-                    s"${r3(prevGate.getOrElse(name, -1.0))}s")
-                case _ =>
-                  System.err.println(s"[bench] $name: RECOVERED on the quiet " +
-                    s"re-measure (${r3(w)}s) - the loaded first pass was " +
-                    "contention; clean wall recorded")
-              }
-            }
+      // settle target is the CONFIRM margin (~0.5 external runnable
+      // threads — r18 verdict item 1): a confirming verdict needs a
+      // genuinely quiet pre-window. Between it and the busy margin the
+      // attempts still run (a RECOVERY is still exculpatory), but the
+      // verdict caps at `unconfirmed`.
+      val confirmMargin = 0.5
+      var settleRanOut = false
+      suspects.foreach { name =>
+        val gate = prevGate.getOrElse(name, -1.0)
+        var waited = 0
+        while (!settleRanOut && load1() > confirmMargin) {
+          if (waited >= 300) {
+            settleRanOut = true
+            System.err.println("[bench] settle wait ran out; later suspects " +
+              "re-measure without waiting")
+          } else {
+            System.err.println(s"[bench] re-measure of $name waiting " +
+              s"for settle (loadavg ${load1()} > $confirmMargin)")
+            Thread.sleep(15000); waited += 15
+          }
+        }
+        val preLoad = load1()
+        if (preLoad > margin) {
+          contendedR ::= name
+          System.err.println(s"[bench] $name: box never settled " +
+            s"(loadavg $preLoad) - contended, regression UNCONFIRMED")
+        } else {
+          // MIN of two attempts (r17 verdict item 3: one attempt under
+          // residual drain re-confirmed the contention it was supposed
+          // to rule out)
+          val run = runnerMap(name)
+          val a1 = attempt(run); val a2 = attempt(run)
+          val a = faster(a1, a2)
+          val postLoad = load1()
+          if (a.wall > 0) {
+            remeasured += name -> a.wall
+            kept += name -> a
+            entryLoad += name -> postLoad
+            entryLoadPre += name -> preLoad
+          }
+          val concGate = prevConcGate.getOrElse(name, -1.0)
+          // the after-sample may carry the entry's OWN burst, taken at
+          // full width, plus at most ~a busy margin of external load
+          val bound = margin + ownBurstLoad(cpus.toDouble, cpus.toDouble,
+            a1.wall.max(0) + a2.wall.max(0))
+          val agree = a1.wall > 0 && a2.wall > 0 &&
+            math.abs(a1.wall - a2.wall) <= 0.15 * math.min(a1.wall, a2.wall)
+          remeasureVerdict(a.wall, gate, postLoad, bound, a.conc, concGate,
+            preLoad, confirmMargin, agree) match {
+            case "regressed" => regressedR ::= name // re-run died
+            case "unconfirmed" =>
+              contendedR ::= name
+              System.err.println(s"[bench] $name: re-measure window not " +
+                s"positively quiet or not reproducible (load $preLoad->$postLoad, " +
+                s"bound ${r3(bound)}, conc ${r3(a.conc)} vs gate ${r3(concGate)}, " +
+                s"attempts ${r3(a1.wall)}/${r3(a2.wall)}s) - contended, " +
+                "regression UNCONFIRMED")
+            case "confirmed" =>
+              regressedR ::= name
+              System.err.println(s"[bench] $name: CONFIRMED regressed on " +
+                s"a quiet box - ${r3(a.wall)}s vs gate ${r3(gate)}s")
+            case _ =>
+              System.err.println(s"[bench] $name: RECOVERED on the quiet " +
+                s"re-measure (${r3(a.wall)}s) - the loaded first pass was " +
+                "contention; clean wall recorded")
+          }
         }
       }
     }
-    val regressedFinal: Seq[String] = regressedF.reverse
-    val contendedFinal: Seq[String] = contendedF.reverse.distinct
-    // re-measured (quiet) walls replace the loaded first-pass numbers
-    val resultsF: Seq[(String, Double)] =
-      results.map { case (k, v) => k -> remeasured.getOrElse(k, v) }
-    val curF = resultsF.toMap
-    val qs = resultsF.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val total = resultsF.map(_._2).filter(_ >= 0).sum
-    val ratios = resultsF.collect {
-      case (k, v) if v > 0 && prev.getOrElse(k, -1.0) > 0 =>
-        k -> r3(v / prev(k))
+    val regressed = regressedR.reverse
+    val contended = contendedR.reverse
+
+    val names = runners.map(_._1)
+    def wall(k: String): Double = kept(k).wall
+    def obj(kv: Seq[(String, Any)]): String =
+      kv.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    // one section over every entry, in runner order
+    def perEntry(f: String => Any): String = obj(names.map(k => k -> f(k)))
+    def list(xs: Seq[String]): String = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val total = names.map(wall).filter(_ >= 0).sum
+    val ratios = names.collect {
+      case k if wall(k) > 0 && prev.getOrElse(k, -1.0) > 0 => k -> r3(wall(k) / prev(k))
     }
 
     // x10 scale-trend entries, per-row-normalized: x10/base time ratio
     // (ideal ≤ 10 at full parallelism; >10 means superlinear = bad).
     val scaleup = Seq("q02", "q27", "q37", "q49", "q64", "q150", "q217").flatMap { p =>
-      val base = curF.collectFirst { case (k, v) if k.startsWith(p + "_") && !k.endsWith("_x10") && v > 0 => v }
-      val x10 = curF.getOrElse(p + "_x10", -1.0)
-      base.filter(_ => x10 > 0).map(b => p -> r3(x10 / b))
+      val base = names.find(k => k.startsWith(p + "_") && !k.endsWith("_x10") && wall(k) > 0)
+      val x10 = kept.get(p + "_x10").map(_.wall).getOrElse(-1.0)
+      base.filter(_ => x10 > 0).map(b => p -> r3(x10 / wall(b)))
     }
-    val cpuJson = resultsF.map { case (k, _) =>
-      "\"" + k + "\":" + r3(cpuMap.getOrElse(k, -1.0)) }.mkString("{", ",", "}")
     // regressed AND contended entries carry the clean reference
     // forward (monotone under suspicion — round 12; the r11 run let a
     // regressed verdict write its inflated wall as the gate);
@@ -1352,93 +1033,74 @@ object Bench {
     // — non-suspect entries under load ratcheted gates upward — and
     // a FIRST-TIME entry measured under load gets no gate at all
     // (gates are only born in quiet windows; re-measured entries use
-    // their re-measure window's pre-sample).
-    // flat threshold on the pre-sample, deliberately NOT the
-    // width-aware test: between back-to-back entries the 1-min EMA
-    // carries the bench's OWN just-finished burst, so the width test
-    // would read nearly every window loaded even on a quiet box and
-    // freeze every gate forever
-    val gateJson = resultsF.map { case (k, v) =>
-      val loadedPre = entryLoadPre.getOrElse(k, -1.0) > loadThreshold
-      val g = gateCarry(v, prevGate.getOrElse(k, -1.0),
-        contendedFinal.contains(k) || regressedFinal.contains(k),
-        loadedWindow = loadedPre)
-      "\"" + k + "\":" + r3(g)
-    }.mkString("{", ",", "}")
+    // their re-measure window's pre-sample). The flat threshold on
+    // the pre-sample is deliberate: between back-to-back entries the
+    // 1-min EMA carries the bench's OWN just-finished burst, so a
+    // tighter test would read nearly every window loaded even on a
+    // quiet box and freeze every gate forever.
+    val gateJson = perEntry { k =>
+      r3(gateCarry(wall(k), prevGate.getOrElse(k, -1.0),
+        contended.contains(k) || regressed.contains(k),
+        loadedWindow = entryLoadPre.getOrElse(k, -1.0) > loadThreshold))
+    }
     // during-run witness sections: the kept window's probe median and
     // the fastest-known clean reference. gate_conc keeps the MIN of
     // history and a usable current sample — the machine's best
     // witnessed speed for this entry's window; a loaded round can
     // therefore never weaken next round's contention detection.
-    val concJson = resultsF.map { case (k, _) =>
-      "\"" + k + "\":" + r3(concMap.getOrElse(k, -1.0)) }.mkString("{", ",", "}")
-    val gateConcJson = resultsF.map { case (k, _) =>
-      val now = concMap.getOrElse(k, -1.0)
+    val gateConcJson = perEntry { k =>
+      val now = kept(k).conc
       val g = prevConcGate.getOrElse(k, -1.0)
-      val kept = if (now > 0 && g > 0) math.min(now, g) else math.max(now, g)
-      "\"" + k + "\":" + r3(kept)
-    }.mkString("{", ",", "}")
-    val ratioJson = ratios.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+      r3(if (now > 0 && g > 0) math.min(now, g) else math.max(now, g))
+    }
     // Ratio against the gate reference that actually fires (prevGate,
     // i.e. the carried-forward clean baseline) — for an entry
     // contended two rounds running, prev_ratio vs the raw previous
     // wall reads ~1.0 while the gate trips vs the clean number; this
     // section is the evidence that matches the gate (ADVICE r9).
-    val gateRatios = resultsF.collect {
-      case (k, v) if v > 0 && prevGate.getOrElse(k, -1.0) > 0 =>
-        k -> r3(v / prevGate(k))
+    val gateRatios = names.collect {
+      case k if wall(k) > 0 && prevGate.getOrElse(k, -1.0) > 0 =>
+        k -> r3(wall(k) / prevGate(k))
     }
-    val gateRatioJson = gateRatios.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val regJson = regressedFinal.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val contJson = contendedFinal.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val remeasuredJson = remeasured.map { case (k, v) =>
-      "\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
-    val unconfirmedJson = unconfirmedQuiet.reverse
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
-    val scaleJson = scaleup.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val loadJson = resultsF.map { case (k, _) =>
-      "\"" + k + "\":" + r3(entryLoad.getOrElse(k, -1.0)) }.mkString("{", ",", "}")
-    val loadPreJson = resultsF.map { case (k, _) =>
-      "\"" + k + "\":" + r3(entryLoadPre.getOrElse(k, -1.0)) }.mkString("{", ",", "}")
-    // round 14: the retry_probe / calib (probe_sec, speed_ratio)
-    // sections are retired with the spinProbe machinery they recorded
-    // — the during-run ConcProbe witness (conc_probe/gate_conc) is
-    // the one speed mechanism. The settle evidence stays:
+    // the settle evidence of the deferred retry
     val retryJson = s"""{"load_threshold":$loadThreshold,""" +
       s""""load_at_retry":${r3(loadAtRetry)}}"""
-    if (contendedFinal.nonEmpty) {
-      val ev = contendedFinal.map { k =>
-        val v = curF.getOrElse(k, -1.0)
+    if (contended.nonEmpty) {
+      val ev = contended.map { k =>
+        val v = wall(k)
         val vsPrev = prev.get(k).filter(_ > 0).map(p => r3(v / p)).getOrElse(-1.0)
         val vsGate = prevGate.get(k).filter(_ > 0).map(p => r3(v / p)).getOrElse(-1.0)
         s"$k(vs_prev=$vsPrev, vs_gate=$vsGate, " +
           s"load=${r3(entryLoadPre.getOrElse(k, -1.0))}->${r3(entryLoad.getOrElse(k, -1.0))}, " +
-          s"entry_loaded=${entryLoadHigh(k)}, conc_ratio=${r3(concRatio(k))}, " +
-          s"conc_witness=${concQuiet(k)})"
+          s"gc_s=${r3(kept(k).gc)}, steal_s=${r3(kept(k).steal)})"
       }
       System.err.println(
-        s"[bench] wall-slow but not CPU/load-confirmed (likely external contention; " +
-          s"could be an I/O-bound plan change - gate ratio named per entry): ${ev.mkString(", ")}")
+        s"[bench] wall-slow but the quiet re-measure did not confirm it (likely " +
+          s"external contention - gate ratio and host noise named per entry): " +
+          ev.mkString(", "))
     }
-    if (regressedFinal.nonEmpty)
+    if (regressed.nonEmpty)
       System.err.println(
-        s"[bench] REGRESSED >1.5x wall AND >1.3x witness-normalized CPU, " +
-          s"re-confirmed on a POSITIVELY quiet final re-measure: " +
-          regressedFinal.mkString(", "))
-    val recallJson = Seq("lsh_top10", "ivfpq_top10", "denom")
-      .map(m => "\"" + m + "\":" + recall.getOrElse(m, -1L)).mkString("{", ",", "}")
-    val recallDriftJson = recallDrift.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-      s""""cpu_sec":$cpuJson,"gate_wall":$gateJson,""" +
-      s""""conc_probe":$concJson,"gate_conc":$gateConcJson,"prev_ratio":$ratioJson,""" +
-      s""""gate_ratio":$gateRatioJson,"entry_loadavg":$loadJson,""" +
-      s""""entry_loadavg_pre":$loadPreJson,"retry":$retryJson,""" +
-      s""""recall":$recallJson,"recall_drift":$recallDriftJson,""" +
+        s"[bench] REGRESSED >1.5x wall, confirmed on a POSITIVELY quiet " +
+          s"final re-measure: " + regressed.mkString(", "))
+    val recallJson = obj(Seq("lsh_top10", "ivfpq_top10", "denom")
+      .map(m => m -> recall.getOrElse(m, -1L)))
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":${perEntry(wall)},""" +
+      s""""cpu_sec":${perEntry(k => r3(kept(k).cpu))},"gate_wall":$gateJson,""" +
+      s""""gc_s":${perEntry(k => r3(kept(k).gc))},""" +
+      s""""steal_s":${perEntry(k => r3(kept(k).steal))},""" +
+      s""""conc_probe":${perEntry(k => r3(kept(k).conc))},""" +
+      s""""gate_conc":$gateConcJson,"prev_ratio":${obj(ratios)},""" +
+      s""""gate_ratio":${obj(gateRatios)},""" +
+      s""""entry_loadavg":${perEntry(k => r3(entryLoad.getOrElse(k, -1.0)))},""" +
+      s""""entry_loadavg_pre":${perEntry(k => r3(entryLoadPre.getOrElse(k, -1.0)))},""" +
+      s""""retry":$retryJson,""" +
+      s""""recall":$recallJson,"recall_drift":${list(recallDrift)},""" +
       s""""ann_cache":"$annCacheStatus",""" +
-      s""""regressed":$regJson,"contended":$contJson,""" +
-      s""""remeasured":$remeasuredJson,"unconfirmed_quiet":$unconfirmedJson,""" +
-      s""""smt_vetoed":${smtVetoed.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
-      s""""x10_scaleup":$scaleJson,""" +
+      s""""regressed":${list(regressed)},"contended":${list(contended)},""" +
+      s""""remeasured":${obj(remeasured.toSeq.map { case (k, v) => k -> r3(v) })},""" +
+      s""""unconfirmed_quiet":${list(contended)},""" +
+      s""""x10_scaleup":${obj(scaleup)},""" +
       s""""loadavg_start":"$loadStart","loadavg_end":"${loadavg()}","sf":"$sfDir"}"""
     // The driver parses captured stdout, but sbt prefixes every line
     // with [info]/[error] noise (BENCH_r01.json came back parsed:null).
@@ -1447,9 +1109,10 @@ object Bench {
     java.nio.file.Files.write(
       java.nio.file.Paths.get(outPath), (json + "\n").getBytes("UTF-8"))
     spark.stop()
-    // Triple-confirmed regression (two loaded-tolerant passes PLUS
-    // the positively-quiet final re-measure): loud exit AFTER the
-    // record is written, so the number ships with its evidence.
-    if (regressedFinal.nonEmpty) sys.exit(1)
+    // Confirmed regression (the first pass and the deferred retry both
+    // tripped, and the positively-quiet re-measure confirmed): loud
+    // exit AFTER the record is written, so the number ships with its
+    // evidence.
+    if (regressed.nonEmpty) sys.exit(1)
   }
 }

@@ -531,8 +531,8 @@ object SparkEntry {
     s"HTTP/1.1 $status\r\nContent-Type: $ctype\r\n$headers\r\n"
       .getBytes("ISO-8859-1") ++ body
   /** A `200 OK` response record — the page form most fixtures use. */
-  private def warcRespRec(uri: String, ctype: String, body: Array[Byte],
-                          extra: String = ""): Array[Byte] =
+  private[graft] def warcRespRec(uri: String, ctype: String, body: Array[Byte],
+                                 extra: String = ""): Array[Byte] =
     warcRecord("response", uri, httpResponse("200 OK", ctype, body, extra))
   /** A bodiless 3xx response record moving `uri` to `loc`; `status`
     * carries the reason phrase, as in [[httpResponse]]. */
@@ -633,7 +633,7 @@ object SparkEntry {
       warcRespRec(s"http://ex.com/s/$id", "text/html",
         "<p>tiny</p>".getBytes("UTF-8"))
   }
-  private def gzipBytes(b: Array[Byte]): Array[Byte] = {
+  private[graft] def gzipBytes(b: Array[Byte]): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
     val g = new java.util.zip.GZIPOutputStream(bos)
     g.write(b); g.close()

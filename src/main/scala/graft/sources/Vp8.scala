@@ -390,23 +390,6 @@ private[sources] object Vp8 {
       my += 1
     }
 
-    if (System.getenv("GRAFT_VP8_DEBUG") != null) {
-      val hist = new Array[Int](5)
-      ymodes.foreach(m => hist(m) += 1)
-      val uvh = new Array[Int](4)
-      uvmodes.foreach(m => uvh(m) += 1)
-      val bh = new Array[Int](10)
-      var bi = 0
-      while (bi < nMb) {
-        if (ymodes(bi) == BPred) (0 until 16).foreach(k => bh(bmodes(bi * 16 + k)) += 1)
-        bi += 1
-      }
-      println(s"[vp8dbg] ${w}x$h mb=$mbW x $mbH ymodes=${hist.mkString(",")} " +
-        s"uv=${uvh.mkString(",")} bmodes=${bh.mkString(",")} " +
-        s"skips=${skips.count(identity)} segs=${segIds.toSet.size} " +
-        s"parts=$nParts yacQi=$yacQi useSkip=$useSkip")
-    }
-
     // ---- residual decode + reconstruction, raster (§13, §12, §14) --
     val ps = mbW * 16 // padded luma stride
     val cs = mbW * 8 // padded chroma stride

@@ -62,4 +62,17 @@ class BenchFixtureSpec extends SparkSpec {
     val df = Seq[(Option[String], Long)]((None, 1L)).toDF("text", "rep")
     assert(df.select(TagWords(col("text"), col("rep"))).head.isNullAt(0))
   }
+
+  test("warc stream fixture: file 0 matches the bytes of its hand-framed writer") {
+    // SHA-256 over an 8-byte big-endian length and the bytes (the
+    // FixtureBytesSpec convention), taken from the writer that framed
+    // each record by hand before it moved onto SparkEntry's framer
+    val b = Bench.warcStreamBytes(0L)
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    md.update(java.nio.ByteBuffer.allocate(8).putLong(b.length.toLong).array())
+    md.update(b)
+    assert(b.length == 4068864)
+    assert(md.digest().map(x => f"${x & 0xff}%02x").mkString ==
+      "4cd0f04f959e8c95cd292acfd5ceb33ce015affe670bc6d5cc44e60c82dea68e")
+  }
 }

@@ -4,8 +4,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The bench drift gate's pure logic, pinned without running Spark:
   * the baseline parser's whitespace tolerance (a json.dump'd baseline
-  * once silently disabled the whole gate) and the CPU-corroboration
-  * rule that separates external contention from real regressions. */
+  * once silently disabled the whole gate), the trip rule, the gate
+  * carry, and the one confirming rule — the quiet re-measure's
+  * verdict — replayed on the numbers of the recorded runs whose false
+  * rc=1 each shaped the gate. */
 class BenchGateSpec extends AnyFunSuite {
 
   private val sf = "/root/testdata/sf0.1"
@@ -37,33 +39,6 @@ class BenchGateSpec extends AnyFunSuite {
     assert(Bench.parseSection("", "queries", sf).isEmpty)
   }
 
-  test("cpuCorroborated: flat CPU is contention, added CPU seconds are a regression") {
-    // flat: same CPU -> not corroborated (classified contended)
-    assert(!Bench.cpuCorroborated(cur = 2.0, prev = 2.0))
-    // sub-second noise: 0.39 vs 0.29 is a 1.34x "ratio" but within the
-    // 0.5s grace -> contention, not regression
-    assert(!Bench.cpuCorroborated(cur = 0.39, prev = 0.29))
-    // genuine: CPU seconds added well past ratio+grace -> regression
-    assert(Bench.cpuCorroborated(cur = 10.0, prev = 3.0))
-    // no usable history -> wall axis alone decides (corroborated)
-    assert(Bench.cpuCorroborated(cur = 2.0, prev = -1.0))
-    assert(Bench.cpuCorroborated(cur = -1.0, prev = 2.0))
-  }
-
-  test("cpuCorroborated: speed-normalized CPU cancels whole-box contention (r9 q147)") {
-    // The r9 false positive verbatim: CPU 11.3 -> 25.5 s under load.
-    // Unnormalized, that reads as a confirmed regression…
-    assert(Bench.cpuCorroborated(cur = 25.5, prev = 11.3))
-    // …but the spin probe measured the box ~2.3x slower, and the
-    // deflated CPU (25.5/2.3 = 11.1) is flat -> contention.
-    assert(!Bench.cpuCorroborated(cur = 25.5, prev = 11.3, speedRatio = 2.3))
-    // A REAL regression survives normalization: CPU 11.3 -> 60 on a
-    // 1.5x-slower box still deflates to 40 s >> 11.3*1.3+0.5.
-    assert(Bench.cpuCorroborated(cur = 60.0, prev = 11.3, speedRatio = 1.5))
-    // speedRatio < 1 (faster box now) never inflates: clamped to 1.
-    assert(!Bench.cpuCorroborated(cur = 2.0, prev = 2.0, speedRatio = 0.5))
-  }
-
   test("tripped: absolute +0.3s grace shields sub-second entries (r9 noise re-runs)") {
     // 0.2 s -> 0.31 s is a 1.55x ratio but only 110 ms: no trip
     assert(!Bench.tripped(v = 0.31, gate = 0.2))
@@ -79,115 +54,104 @@ class BenchGateSpec extends AnyFunSuite {
     assert(!Bench.tripped(v = -1.0, gate = 2.0))
   }
 
-  private val quiet: String => Boolean = _ => false
-  // positive during-run witness present and clean, for tests whose
-  // scenarios exercise the OTHER axes
-  private val witnessed: String => Boolean = _ => true
-  private def ratio(r: Double): String => Double = _ => r
+  // The re-measure stage as `Bench.main` runs it on a 32-core box:
+  // busy margin max(1, 32/16) = 2.0, confirm margin 0.5, and the
+  // after-sample bounded at the margin plus the entry's own burst over
+  // its two attempts, taken at full width. CPU seconds are recorded
+  // but are not an input: they no longer vote.
+  private val cpus = 32.0
+  private def afterBound(wall: Double): Double =
+    2.0 + Bench.ownBurstLoad(cpus, cpus, 2 * wall)
+  // an after-sample on an otherwise idle box: a quiet 0.3 plus the
+  // entry's own burst
+  private def quietPost(wall: Double): Double =
+    0.3 + Bench.ownBurstLoad(cpus, cpus, 2 * wall)
+  private def verdict(wall: Double, gate: Double, preLoad: Double,
+                      postLoad: Double, conc: Double,
+                      concGate: Double): String =
+    Bench.remeasureVerdict(wall, gate, postLoad, afterBound(wall), conc,
+      concGate, preLoad)
 
   test("classify: a loaded box can never confirm a regression (r9 rc=1 fix)") {
-    val wallBad = Seq("q147", "q10")
-    val cpuNow = Map("q147" -> 25.5, "q10" -> 15.0)
-    val cpuPrev = Map("q147" -> 11.3, "q10" -> 3.0)
-    // quiet box, no speed skew: both CPU-corroborated -> regressed
-    assert(Bench.classify(wallBad, cpuNow, cpuPrev, ratio(1.0),
-      loadHigh = false, quiet, witnessed) == ((Seq("q147", "q10"), Seq())))
-    // loaded box: EVERYTHING lands contended regardless of CPU
-    assert(Bench.classify(wallBad, cpuNow, cpuPrev, ratio(1.0),
-      loadHigh = true, quiet, witnessed) == ((Seq(), Seq("q147", "q10"))))
-    // quiet box but the probe saw a 2.3x-slower machine: q147's CPU
-    // normalizes flat (contended), q10's 3x CPU still confirms
-    val (reg, cont) = Bench.classify(wallBad, cpuNow, cpuPrev, ratio(2.3),
-      loadHigh = false, quiet, witnessed)
-    assert(reg == Seq("q10") && cont == Seq("q147"))
+    // r9's false rc=1: q147 measured 2.545 s vs gate 1.251 (2.03x; CPU
+    // 11.3 -> 25.5 s with zero code change) at loadavg 3.8. It trips,
+    // and its re-measure window starts on the same loaded box: even a
+    // clean witness and an after-sample inside its bound cannot
+    // confirm it, because the pre-window is past the confirm margin.
+    assert(Bench.tripped(2.545, 1.251))
+    assert(3.79 < afterBound(2.545))
+    assert(verdict(wall = 2.545, gate = 1.251, preLoad = 3.79, postLoad = 3.79,
+      conc = 0.024, concGate = 0.024) == "unconfirmed")
+    // quiet box but the witness saw a 2.3x-slower machine: unconfirmed
+    assert(verdict(2.545, 1.251, 0.3, quietPost(2.545), 0.024 * 2.3, 0.024)
+      == "unconfirmed")
+    // q10 at 5x CPU (15 vs 3 cpu-s), wall 5x its 0.22 s gate, on a
+    // quiet box with a clean witness: confirmed
+    assert(verdict(1.1, 0.22, 0.3, quietPost(1.1), 0.024, 0.024) == "confirmed")
   }
 
   test("classify: a loaded TAIL entry can never be regressed (r10 q217_x10 fix)") {
-    // Quiet run start (global loadHigh=false), but the entry's OWN
-    // windows — first pass and retry — measured loaded: no
-    // trustworthy measurement exists for it, so even a 4x CPU blow-up
-    // recorded under that load cannot confirm a regression.
-    val cpuNow = Map("q217_x10" -> 173.7, "q03" -> 15.0)
-    val cpuPrev = Map("q217_x10" -> 40.3, "q03" -> 3.0)
-    val loadedTail: String => Boolean = _ == "q217_x10"
-    val (reg, cont) = Bench.classify(Seq("q217_x10", "q03"), cpuNow, cpuPrev,
-      ratio(1.0), loadHigh = false, loadedTail, witnessed)
-    // q217_x10 -> contended despite corroborating CPU; the genuinely
-    // quiet q03 regression is still caught
-    assert(reg == Seq("q03") && cont == Seq("q217_x10"))
+    // Quiet run start, but the entry's OWN windows measured loaded
+    // (25.21): a re-measure window as loaded as its first pass parks
+    // it, whatever its 4x CPU blow-up (173.7 vs 40.3 cpu-s) says.
+    assert(verdict(9.80, 4.22, preLoad = 25.21, postLoad = 25.21, 0.024, 0.024)
+      == "unconfirmed")
+    // the genuinely quiet q03 regression (CPU 15 vs 3, wall 0.865 vs
+    // its 0.173 s gate) is still caught
+    assert(verdict(0.865, 0.173, 0.3, quietPost(0.865), 0.024, 0.024)
+      == "confirmed")
   }
 
   test("classify replaying BENCH_r10's recorded numbers lands q217_x10 contended") {
     // The artifact's own fields, verbatim: wall 9.80 s vs gate 4.22
-    // (tripped), CPU 173.7 vs 40.3, start loadavg 3.44 (global gate
-    // quiet), entry_loadavg 25.21 on a 32-core box (threshold 8).
-    val entryLoadavg = Map("q217_x10" -> 25.21)
-    val entryLoadHigh: String => Boolean =
-      k => entryLoadavg.getOrElse(k, 0.0) > 32.0 / 4.0
-    val (reg, cont) = Bench.classify(Seq("q217_x10"),
-      Map("q217_x10" -> 173.7), Map("q217_x10" -> 40.3),
-      ratio(1.281), loadHigh = false, entryLoadHigh, witnessed)
-    assert(reg.isEmpty && cont == Seq("q217_x10"))
+    // (tripped), CPU 173.7 vs 40.3, start loadavg 3.44, entry_loadavg
+    // 25.21 on a 32-core box. An after-sample at 25.21 is far past the
+    // entry's own-burst bound (~10.9), even after a quiet pre-window…
+    assert(Bench.tripped(9.80, 4.22))
+    assert(afterBound(9.80) > 10.5 && afterBound(9.80) < 11.5)
+    assert(verdict(9.80, 4.22, preLoad = 0.3, postLoad = 25.21, 0.024, 0.024)
+      == "unconfirmed")
+    // …a pre-window at the run-start load parks it too…
+    assert(verdict(9.80, 4.22, 3.44, quietPost(9.80), 0.024, 0.024)
+      == "unconfirmed")
+    // …and so does r10's witness ratio of 1.281 (past the 1.15x bar)
+    assert(verdict(9.80, 4.22, 0.3, quietPost(9.80), 0.024 * 1.281, 0.024)
+      == "unconfirmed")
   }
 
   test("classify: retry-time probe deflates a tail-contention CPU blow-up") {
-    // Same r10 shape but suppose only the FIRST pass was loaded (the
-    // retry ran quiet, so entryLoadHigh=false): the probe re-run next
-    // to the retry measured the box ~5x slower, and 173.7/5.3 = 32.8
-    // deflates BELOW the 40.3 baseline — not corroborated, contended.
-    // The start-time ratio (1.281) alone would have called it
-    // regressed; this is exactly the r10 false rc=1.
-    val cpu = Map("q217_x10" -> 173.7); val prev = Map("q217_x10" -> 40.3)
-    assert(Bench.classify(Seq("q217_x10"), cpu, prev, ratio(1.281),
-      loadHigh = false, quiet, witnessed) == ((Seq("q217_x10"), Seq())))
-    assert(Bench.classify(Seq("q217_x10"), cpu, prev, ratio(5.3),
-      loadHigh = false, quiet, witnessed) == ((Seq(), Seq("q217_x10"))))
+    // Same r10 shape, but only the FIRST pass was loaded: the
+    // re-measure window reads quiet on loadavg, yet its during-run
+    // witness measured the box ~5.3x slower — unconfirmed.
+    assert(verdict(9.80, 4.22, 0.3, quietPost(9.80), 0.024 * 5.3, 0.024)
+      == "unconfirmed")
+    // the same quiet window with a clean witness confirms: rc=1 stays
+    // reachable for a real regression of this size
+    assert(verdict(9.80, 4.22, 0.3, quietPost(9.80), 0.024, 0.024)
+      == "confirmed")
   }
 
   test("classify replaying BENCH_r11's recorded numbers lands q150_x10 contended") {
     // The fourth consecutive false rc=1, replayed from the artifact:
     // wall 14.58 vs gate 7.11 (2.05x, tripped twice), CPU 293.51 vs
-    // baseline 127.2 (corroborates even at ratio 1.3), entry started
-    // at loadavg 6.22 (< 8 threshold -> entryLoadHigh false), retry
-    // probe 0.306 vs baseline 0.379 (a quiet GAP -> ratio clamps to
-    // 1.0). Every between-runs witness read quiet; only a DURING-run
-    // witness can see the SMT/bandwidth sharing that inflated both
-    // axes. r11's artifact has no conc_probe history -> no positive
-    // quiet witness -> contended, rc=0.
-    val noWitness: String => Boolean = _ => false
-    val (reg, cont) = Bench.classify(Seq("q150_x10"),
-      Map("q150_x10" -> 293.51), Map("q150_x10" -> 127.2),
-      ratio(1.0), loadHigh = false, quiet, noWitness)
-    assert(reg.isEmpty && cont == Seq("q150_x10"))
+    // baseline 127.2, entry started at loadavg 6.22, retry probe 0.306
+    // vs baseline 0.379 (a between-runs witness). r11's artifact has
+    // no conc_probe history -> no during-run reference -> unconfirmed,
+    // rc=0, even in a quiet re-measure window.
+    assert(Bench.tripped(14.58, 7.11))
+    assert(verdict(14.58, 7.11, 0.3, quietPost(14.58), 0.024, concGate = -1.0)
+      == "unconfirmed")
+    // a pre-window at the entry's own start load (6.22) parks it too
+    assert(verdict(14.58, 7.11, 6.22, quietPost(14.58), 0.024, 0.024)
+      == "unconfirmed")
     // With history, the same numbers under a VERIFIED-quiet during-run
-    // witness are a double-confirmed real regression: rc=1 is still
+    // witness in a quiet window are a real regression: rc=1 is still
     // reachable once the witness exists.
-    val (reg2, cont2) = Bench.classify(Seq("q150_x10"),
-      Map("q150_x10" -> 293.51), Map("q150_x10" -> 127.2),
-      ratio(1.0), loadHigh = false, quiet, witnessed)
-    assert(reg2 == Seq("q150_x10") && cont2.isEmpty)
-    // And a during-run witness reading 2.3x-slow deflates the CPU
-    // blow-up flat (293.51/2.3 = 127.6 ~ baseline) even if the quiet
-    // gate were (mis)judged true: belt and braces.
-    val (reg3, cont3) = Bench.classify(Seq("q150_x10"),
-      Map("q150_x10" -> 293.51), Map("q150_x10" -> 127.2),
-      ratio(2.3), loadHigh = false, quiet, witnessed)
-    assert(reg3.isEmpty && cont3 == Seq("q150_x10"))
-  }
-
-  test("windowLoaded: flat threshold plus entry-width oversubscription") {
-    val cpus = 32.0; val thr = cpus / 4
-    // flat test unchanged: load 9 > 8 is loaded even for a 1-wide entry
-    assert(Bench.windowLoaded(9.0, thr, 1.0, cpus))
-    assert(!Bench.windowLoaded(6.0, thr, 1.0, cpus))
-    // width-aware: loadavg 6 saturates a 28-core-wide entry (6+28>32)
-    assert(Bench.windowLoaded(6.0, thr, 28.0, cpus))
-    // …but not an 18-core one (6+18<32)
-    assert(!Bench.windowLoaded(6.0, thr, 18.0, cpus))
-    // no baseline width (-1): flat test alone
-    assert(!Bench.windowLoaded(6.0, thr, -1.0, cpus))
-    // unknown load (-1): not loaded (evidence absent, handled upstream)
-    assert(!Bench.windowLoaded(-1.0, thr, 28.0, cpus))
+    assert(verdict(14.58, 7.11, 0.3, quietPost(14.58), 0.024, 0.024)
+      == "confirmed")
+    // A during-run witness reading 2.3x slow parks it again.
+    assert(verdict(14.58, 7.11, 0.3, quietPost(14.58), 0.024 * 2.3, 0.024)
+      == "unconfirmed")
   }
 
   test("gateCarry: a regressed/contended verdict never raises the gate") {
@@ -203,87 +167,34 @@ class BenchGateSpec extends AnyFunSuite {
     assert(Bench.gateCarry(14.58, -1.0, suspect = true) == 14.58)
   }
 
-  test("windowLoaded: busy margin — a settled box is quiet at EVERY width (ADVICE r13)") {
-    val cpus = 32.0; val thr = cpus / 4
-    // pre-r14 hole: a full-width (32) entry read "loaded" at ANY
-    // load1 > 0, so its regressions were unconfirmable forever. With
-    // the max(1, cpus/16)=2.0 margin a settled box reads quiet…
-    assert(!Bench.windowLoaded(0.4, thr, 32.0, cpus))
-    assert(!Bench.windowLoaded(1.9, thr, 32.0, cpus))
-    // …while real residual load still reads loaded for a wide entry
-    assert(Bench.windowLoaded(2.5, thr, 32.0, cpus))
-    assert(Bench.windowLoaded(6.22, thr, 32.0, cpus))
-  }
-
-  test("peakWidth: bursty plans count as full-width, narrow ones as themselves") {
-    // r12 q266 baseline: cpu 14.81 / wall 3.758 = 3.94 average — but
-    // the plan bursts all 32 threads during its scan stages, so load
-    // competes with 32, not 4
-    assert(Bench.peakWidth(14.81, 3.758, 32.0) == 32.0)
-    // genuinely narrow entry (cpu/wall 1.5): its own width
-    assert(Bench.peakWidth(3.0, 2.0, 32.0) == 1.5)
-    // no baseline: -1 (flat threshold test alone)
-    assert(Bench.peakWidth(-1.0, 2.0, 32.0) == -1.0)
-    assert(Bench.peakWidth(3.0, -1.0, 32.0) == -1.0)
-  }
-
-  test("smtCoupled: CPU inflating disproportionately more than wall is contention") {
-    // r10 q217_x10 verbatim: wall 9.80 vs 4.22 (2.32x), CPU 173.7 vs
-    // 40.3 (4.31x) — CPU inflated 1.86x MORE than wall: only slower
-    // cycles do that; more work inflates both together
-    assert(Bench.smtCoupled(9.80, 4.22, 173.7, 40.3))
-    // a genuine 2x regression: both axes together -> NOT the signature
-    assert(!Bench.smtCoupled(4.0, 2.0, 20.0, 10.0))
-    // r12 q266 (wall 1.62x, cpu 1.91x): coupled within the bound ->
-    // not this signature (that case is caught by peak-width loading)
-    assert(!Bench.smtCoupled(6.09, 3.758, 28.255, 14.81))
-    // missing evidence on any axis -> false (other rules decide)
-    assert(!Bench.smtCoupled(-1.0, 4.22, 173.7, 40.3))
-    assert(!Bench.smtCoupled(9.8, 4.22, 173.7, -1.0))
-  }
-
   test("classify replaying BENCH_r12's recorded numbers lands q266 contended") {
     // The fifth false rc=1, replayed from the artifact verbatim: wall
-    // 6.09 vs gate 3.758 (1.62x, tripped), CPU 28.255 vs 14.81
-    // (corroborates), entry_loadavg_pre 12.03 / post 6.22, retry at
-    // loadavg ~6.89, conc witness 0.021 vs gate 0.02 (read quiet —
-    // the one-thread probe found an idle core). Peak width: baseline
-    // cpu/wall 3.94 > 2 -> full-width 32 -> every window (12.03,
-    // 6.22, 6.89) is past the 2.0 margin and oversubscribes -> the
-    // entry has no trustworthy measurement -> contended, rc=0.
-    val w = Bench.peakWidth(14.81, 3.758, 32.0)
-    val thr = 8.0
-    val firstPassLoaded = Bench.windowLoaded(12.03, thr, w, 32.0) &&
-      Bench.windowLoaded(6.22, thr, w, 32.0)
-    val retryLoaded = Bench.windowLoaded(6.89, thr, w, 32.0) &&
-      Bench.windowLoaded(6.89, thr, w, 32.0)
-    assert(firstPassLoaded && retryLoaded)
-    val entryLoadHigh: String => Boolean = _ => firstPassLoaded && retryLoaded
-    val (reg, cont) = Bench.classify(Seq("q266_curation_v6"),
-      Map("q266_curation_v6" -> 28.255), Map("q266_curation_v6" -> 14.81),
-      ratio(1.05), loadHigh = false, entryLoadHigh, witnessed,
-      smtSignature = k => Bench.smtCoupled(6.09, 3.758, 28.255, 14.81))
-    assert(reg.isEmpty && cont == Seq("q266_curation_v6"))
+    // 6.09 vs gate 3.758 (1.62x, tripped), CPU 28.255 vs 14.81,
+    // entry_loadavg_pre 12.03 / post 6.22, retry at loadavg ~6.89,
+    // conc witness 0.021 vs gate 0.02 (read quiet — the one-thread
+    // probe found an idle core). The after-sample 6.22 is inside the
+    // entry's own-burst bound and the witness is clean, so the
+    // pre-window alone decides: at 12.03, or at the retry's 6.89, the
+    // entry is unconfirmed -> contended, rc=0.
+    assert(Bench.tripped(6.09, 3.758))
+    assert(6.22 < afterBound(6.09))
+    assert(verdict(6.09, 3.758, preLoad = 12.03, postLoad = 6.22, 0.021, 0.02)
+      == "unconfirmed")
+    assert(verdict(6.09, 3.758, preLoad = 6.89, postLoad = 6.22, 0.021, 0.02)
+      == "unconfirmed")
   }
 
   test("a genuine 2x regression on a settled box still trips rc=1 after round 14") {
     // Synthetic full-width entry, genuinely regressed: wall 3.0 vs
-    // gate 1.5 (2x), CPU 40 vs 20 (2x — coupled, NOT the SMT shape),
-    // first pass under the bench's own drain (load 5) but the
-    // DEFERRED retry on a settled box (load 0.6 < margin 2.0): the
-    // retry window is quiet at full width, the during-run witness is
-    // quiet, no signature fires -> regressed.
-    val w = Bench.peakWidth(40.0, 2.0, 32.0) // full-width plan
-    assert(w == 32.0)
-    val firstPassLoaded = Bench.windowLoaded(5.0, 8.0, w, 32.0)
-    val retryLoaded = Bench.windowLoaded(0.6, 8.0, w, 32.0)
-    assert(firstPassLoaded && !retryLoaded)
-    val entryLoadHigh: String => Boolean = _ => firstPassLoaded && retryLoaded
-    val (reg, cont) = Bench.classify(Seq("qX"),
-      Map("qX" -> 40.0), Map("qX" -> 20.0),
-      ratio(1.0), loadHigh = false, entryLoadHigh, witnessed,
-      smtSignature = _ => Bench.smtCoupled(3.0, 1.5, 40.0, 20.0))
-    assert(reg == Seq("qX") && cont.isEmpty)
+    // gate 1.5 (2x), CPU 40 vs 20. The first pass ran under the
+    // bench's own drain (load 5) and the deferred retry still trips;
+    // the re-measure runs on a settled box (pre-load 0.3), its two
+    // attempts agree, the witness is clean and the after-sample holds
+    // only the entry's own burst -> confirmed, rc=1.
+    assert(Bench.tripped(3.0, 1.5))
+    assert(quietPost(3.0) < afterBound(3.0))
+    assert(verdict(3.0, 1.5, preLoad = 0.3, postLoad = quietPost(3.0),
+      0.024, 0.024) == "confirmed")
   }
 
   test("ConcProbe samples concurrently, reports a median, and meters its own CPU") {

@@ -38,10 +38,9 @@ def main() -> None:
                 if r.get("conc_probe", {}).get(k, -1) > 0]
         if vals:
             gate_conc[k] = round(min(vals), 3)
-    # cpu_sec is the gate's CPU-corroboration reference (prevCpu):
-    # median it too — a single low-CPU draw as the reference makes
-    # CPU-noisy entries (JIT/GC-dependent shuffles like terasort)
-    # "CPU-confirm" pure wall noise
+    # cpu_sec is evidence only (no gate rule reads it since the quiet
+    # re-measure became the one confirming rule): median it too, so
+    # the seeded file records a typical run's CPU, not one draw
     cpu_sec = {}
     for k in last.get("cpu_sec", {}):
         vals = [r["cpu_sec"][k] for r in runs
