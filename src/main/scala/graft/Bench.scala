@@ -438,22 +438,14 @@ object Bench {
 
     // On-disk WARC fixture for the split-streaming front door: 8
     // member-per-record .warc.gz files ([[warcStreamBytes]], ~141 MB
-    // inflated in all). Generated once in executors, cached by
-    // existence across runs; the timed entry reads ONLY.
+    // inflated in all), written by the one fixture writer. Generated
+    // once in executors, cached by existence across runs; the timed
+    // entry reads ONLY.
     def warcStreamFixture(): Seq[String] = {
       import spark.implicits._
-      val dir = new java.io.File(
-        System.getProperty("java.io.tmpdir"), "graft_bench_warc_v1")
-      spark.range(8).as[Long].map { g =>
-        val f = new java.io.File(dir, f"cc$g%02d.warc.gz")
-        if (!f.exists) {
-          dir.mkdirs()
-          val tmp = java.io.File.createTempFile("ccpart", ".part", dir)
-          java.nio.file.Files.write(tmp.toPath, warcStreamBytes(g))
-          if (!tmp.renameTo(f)) tmp.delete()
-        }
-        f.getAbsolutePath
-      }.collect().toSeq.sorted
+      SparkEntry.fixtureFiles(spark.range(8).as[Long], new java.io.File(
+        System.getProperty("java.io.tmpdir"), "graft_bench_warc_v1"),
+        "cc%02d.warc.gz")(warcStreamBytes)
     }
     val warcStreamPaths = try warcStreamFixture() catch {
       case e: Throwable =>

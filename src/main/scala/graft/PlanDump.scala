@@ -1,35 +1,20 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.FormattedMode
 
 /** Per-query formatted-plan dumps for the optimization-round
   * evidence files (`plans/rNN/<query>_{before,after}.txt`):
   * `runMain graft.PlanDump <outDir> <suffix> <q1,q2,…>` writes one
-  * `<outDir>/<query>_<suffix>.txt` per named query at sf0.001 —
-  * same session posture as [[Plans]]. Measurement tooling only. */
+  * `<outDir>/<query>_<suffix>.txt` per named query at sf0.001, in
+  * [[Plans]]' session. Measurement tooling only. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(outDir, suffix, qlist) = args.take(3)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        Files.createTempDirectory("graft-plandump-wh").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Plans.planSession()
     Files.createDirectories(Paths.get(outDir))
     qlist.split(',').foreach { q =>
-      val txt =
-        try SparkEntry.queries(q)(spark, "/root/testdata/sf0.001")
-          .queryExecution.explainString(FormattedMode).trim
-        catch { case e: Throwable =>
-          s"(plan unavailable: ${e.getClass.getSimpleName}: ${e.getMessage})"
-        }
-        finally spark.catalog.clearCache()
-      Files.writeString(Paths.get(s"$outDir/${q}_$suffix.txt"), txt + "\n")
+      Files.writeString(Paths.get(s"$outDir/${q}_$suffix.txt"),
+        Plans.planText(spark, q) + "\n")
       System.err.println(s"[plandump] wrote $outDir/${q}_$suffix.txt")
     }
     spark.stop()

@@ -9,8 +9,8 @@ import org.apache.spark.sql.execution.FormattedMode
   * assertions (pushdown, pruning, broadcast, partial agg, top-k).
   */
 object Plans {
-  def main(args: Array[String]): Unit = {
-    val out = args.headOption.getOrElse("PLANS.md")
+  /** The session both plan tools ([[Plans]], [[PlanDump]]) run in. */
+  private[graft] def planSession(): SparkSession = {
     val spark = SparkSession.builder().master("local[8]")
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.sql.session.timeZone", "UTC")
@@ -21,6 +21,23 @@ object Plans {
         Files.createTempDirectory("graft-plans-warehouse").toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    spark
+  }
+
+  /** Query `q`'s formatted physical plan at sf0.001. A query whose
+    * CONSTRUCTION needs an unavailable side effect still gets a text,
+    * so gaps are visible, never silent. */
+  private[graft] def planText(spark: SparkSession, q: String): String =
+    try SparkEntry.queries(q)(spark, "/root/testdata/sf0.001")
+      .queryExecution.explainString(FormattedMode).trim
+    catch { case e: Throwable =>
+      s"(plan unavailable: ${e.getClass.getSimpleName}: ${e.getMessage})"
+    }
+    finally spark.catalog.clearCache() // fork-point persists per query
+
+  def main(args: Array[String]): Unit = {
+    val out = args.headOption.getOrElse("PLANS.md")
+    val spark = planSession()
     // the ENTIRE declared surface, in query order (r10 VERDICT: the
     // curated subset had gone stale against the newest queries)
     val queries = SparkEntry.queries.keys.toSeq
@@ -36,15 +53,7 @@ object Plans {
     sb.append("operator specs.\n")
     queries.foreach { q =>
       sb.append(s"\n## $q\n\n```\n")
-      try
-        sb.append(SparkEntry.queries(q)(spark, "/root/testdata/sf0.001")
-          .queryExecution.explainString(FormattedMode).trim)
-      catch { case e: Throwable =>
-        // a query whose CONSTRUCTION needs an unavailable side effect
-        // still gets a section, so gaps are visible, never silent
-        sb.append(s"(plan unavailable: ${e.getClass.getSimpleName}: ${e.getMessage})")
-      }
-      finally spark.catalog.clearCache() // fork-point persists per query
+      sb.append(planText(spark, q))
       sb.append("\n```\n")
     }
     Files.writeString(Paths.get(out), sb.toString)

@@ -1,12 +1,13 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.agg.ValueAggregators
 import graft.core.Tables
 import graft.functions.TextFunctions
+import graft.sources.OfficeText.zipEntry
 import graft.llm.{Dedup, Similarity}
 import graft.ops.{ComposeJoin, FieldSelection, Pipe, Sampling}
 
@@ -85,29 +86,6 @@ object SparkEntry {
       .as[Long]
   }
   private def emb(s: SparkSession, d: String) = Tables.embeddings(s, d)
-
-  /** q266's per-id AVI bytes (junk every 50th id) — a pure function
-    * of the id, written once by the on-disk fixture (`avi_v6_v1` in
-    * [[diskFixtures]]). Building ~4,900 AVIs per run in-plan was
-    * ~half the entry's cpu_sec (fixture apparatus, not engine work —
-    * optimization r20 §3, following the q344 on-disk pattern). */
-  private[graft] def q266AviBytes(id: Long): Array[Byte] =
-    if (id % 50 == 0) "video? hardly".getBytes("UTF-8")
-    else {
-      val g = id / 6; val m = (id % 6).toInt
-      val nf = (6 + (g % 2) * 3).toInt
-      val frames = (0 until nf).map { f =>
-        val sc = f / 3
-        dibFrameFixture(18, 16, (x, r) => {
-          val y = 15 - r
-          val bump = if (x == m * 2 && y == 3) 40 else 0
-          (math.min(255, ((g * 11 + sc * 97 + x * 17 + y * 23) % 200) + bump).toInt,
-            ((g * 13 + sc * 89 + x * 5 + y * 19) % 256).toInt,
-            ((g * 17 + sc * 83 + x * 7 + y * 3) % 256).toInt)
-        })
-      }
-      aviFixture(mjpeg = false, 18, 16, frames, audioFirst = false)
-    }
 
   // PNG fixture plumbing shared by q242/q244/q249 (executor-side:
   // static object methods serialize as calls, not captured state)
@@ -551,16 +529,16 @@ object SparkEntry {
       warcRespRec(s"http://ex.com/$id/img", "image/png",
         s"PNGDATA$id".getBytes("UTF-8"))
 
-  /** Junk bytes (`<kind>? no`) every 50th id, so the loud-drop path
-    * has work; `mk` otherwise. */
-  private def junkEvery50th(id: Long, kind: String)(
-      mk: => Array[Byte]): Array[Byte] =
-    if (id % 50 == 0) s"$kind? no".getBytes("UTF-8") else mk
+  /** The junk rule every fixture entry follows: `junk`'s bytes every
+    * 50th id, so the loud-drop path has work; `mk` otherwise. */
+  private def junkEvery50th(junk: String)(
+      mk: Long => Array[Byte]): Long => Array[Byte] =
+    id => if (id % 50 == 0) junk.getBytes("UTF-8") else mk(id)
   private def gzipEvery4th(id: Long, b: Array[Byte]): Array[Byte] =
     if (id % 4 == 1) gzipBytes(b) else b
   /** The crawl container rule: junk every 50th id, gzip every 4th. */
-  private def warcContainer(id: Long)(records: => Array[Byte]): Array[Byte] =
-    junkEvery50th(id, "warc")(gzipEvery4th(id, records))
+  private def warcContainer(records: Long => Array[Byte]): Long => Array[Byte] =
+    junkEvery50th("warc? no")(id => gzipEvery4th(id, records(id)))
   /** `z`-compressed, as TWO concatenated frames every 4th id (the split
     * is deliberately mid-record — frames are a transport layer, not a
     * record layer). */
@@ -568,14 +546,6 @@ object SparkEntry {
       z: Array[Byte] => Array[Byte]): Array[Byte] =
     if (id % 4 == 1) z(b.take(b.length / 2)) ++ z(b.drop(b.length / 2))
     else z(b)
-  /** In-plan `(doc_id, warc)` payload frame: `mk(id)` per document,
-    * junk every 50th id. */
-  private def warcPayloads(s: SparkSession, d: String)(
-      mk: Long => Array[Byte]): DataFrame = {
-    import s.implicits._
-    docIds(s, d).map(id => (id, junkEvery50th(id, "warc")(mk(id))))
-      .toDF("doc_id", "warc")
-  }
 
   /** WARC fixture (q270/q271): warcinfo, then per page a request +
     * response pair (text/html 200), then a 404 and an image/png
@@ -742,25 +712,6 @@ object SparkEntry {
           "to keep around.</p>").getBytes("UTF-8"))
     }.reduce(_ ++ _)
 
-  /** The q353/v16 WARC fixture: v15's records plus a 301
-    * `h-old/$id → /h/$b` edge, a 200 capture AT h-old, and a planted
-    * 2-cycle with its 200 page. FixtureBytesSpec pins its bytes. */
-  private[graft] def q353Fixture(s: SparkSession, d: String): DataFrame =
-    warcPayloads(s, d) { id =>
-      gzipEvery4th(id, warcV15Bytes(id) ++
-        warcRedirect(s"http://ex.com/h-old/$id", "301 Moved", s"/h/${id / 5}") ++
-        warcRespRec(s"http://ex.com/h-old/$id", "text/html",
-          (s"<p>moved fetch $id stays clean with plenty of good " +
-            "english words.</p>").getBytes("UTF-8")) ++
-        warcRespRec(s"http://cyc.example/p/$id", "text/html",
-          (s"<p>cycle page $id keeps enough english words " +
-            "alive.</p>").getBytes("UTF-8")) ++
-        warcRedirect(s"http://cyc.example/p/$id", "301 Moved",
-          s"http://cyc2.example/p/$id") ++
-        warcRedirect(s"http://cyc2.example/p/$id", "302 Moved",
-          s"http://cyc.example/p/$id"))
-    }
-
   /** q269's archive members: two formula BMPs per id. */
   private def bmpMembers(id: Long): Seq[(String, Array[Byte])] =
     (0 until 2).map(k => (s"img$k.bmp", bmp24Fixture(10, 8, (x, y) => (
@@ -782,16 +733,9 @@ object SparkEntry {
   private def zipMembers(id: Long): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
     val zo = new java.util.zip.ZipOutputStream(bos)
-    // setTimeLocal, not setTime(long): the latter converts through
-    // the default time zone
-    def entry(name: String) = {
-      val e = new java.util.zip.ZipEntry(name)
-      e.setTimeLocal(java.time.LocalDateTime.of(2020, 1, 1, 0, 0))
-      e
-    }
     if (id % 3 == 1) { // stored lead member (no descriptor)
       val body = s"stored $id".getBytes("UTF-8")
-      val e = entry("lead.txt")
+      val e = zipEntry("lead.txt")
       e.setMethod(java.util.zip.ZipEntry.STORED)
       e.setSize(body.length)
       val crc = new java.util.zip.CRC32(); crc.update(body)
@@ -799,53 +743,65 @@ object SparkEntry {
       zo.putNextEntry(e); zo.write(body); zo.closeEntry()
     }
     bmpMembers(id).foreach { case (name, body) =>
-      zo.putNextEntry(entry(name))
+      zo.putNextEntry(zipEntry(name))
       zo.write(body)
       zo.closeEntry()
     }
-    zo.putNextEntry(entry("notes/"))
+    zo.putNextEntry(zipEntry("notes/"))
     zo.closeEntry()
-    zo.putNextEntry(entry("note.txt"))
+    zo.putNextEntry(zipEntry("note.txt"))
     zo.write(s"doc $id".getBytes("UTF-8"))
     zo.closeEntry()
     zo.close()
     bos.toByteArray
   }
 
-  /** Every on-disk fixture, by dir tag: the file-name pattern (one
-    * file per doc id) and the per-id file bytes. The query each one
-    * serves is noted beside it; FIXTURES.md has the full table.
-    * The files are cached by existence only (see [[fixtureFiles]]),
-    * so changing any byte of a fixture means bumping its `_vN` tag —
-    * FixtureBytesSpec pins the bytes. */
-  private[graft] lazy val diskFixtures
-      : Map[String, (String, Long => Array[Byte])] = Map(
-    "avi_v6_v1" -> ("v%08d.avi", (id: Long) => q266AviBytes(id)), // q266
+  /** Every synthetic payload that is a pure function of `doc_id`, by
+    * tag: the per-id bytes, junk every 50th id included. Two doors
+    * read it: [[fixtureMedia]] builds the payloads in-plan,
+    * [[fixturePaths]] writes them once as files. The first block is
+    * the on-disk fixtures (dir tag `<kind>_<name>_vN`; the files are
+    * cached by existence only, so changing any byte means bumping the
+    * tag); the rest are in-plan, tagged `<payload>_<query>`.
+    * FIXTURES.md lists them all; FixtureBytesSpec pins the bytes of
+    * ids 0-299 of every entry. */
+  private[graft] lazy val fixtures: Map[String, Long => Array[Byte]] = Map(
+    // q266: formula AVIs
+    "avi_v6_v1" -> junkEvery50th("video? hardly") { id =>
+      val g = id / 6; val m = (id % 6).toInt
+      val nf = (6 + (g % 2) * 3).toInt
+      val frames = (0 until nf).map { f =>
+        val sc = f / 3
+        dibFrameFixture(18, 16, (x, r) => {
+          val y = 15 - r
+          val bump = if (x == m * 2 && y == 3) 40 else 0
+          (math.min(255, ((g * 11 + sc * 97 + x * 17 + y * 23) % 200) + bump).toInt,
+            ((g * 13 + sc * 89 + x * 5 + y * 19) % 256).toInt,
+            ((g * 17 + sc * 83 + x * 7 + y * 3) % 256).toInt)
+        })
+      }
+      aviFixture(mjpeg = false, 18, 16, frames, audioFirst = false)
+    },
     // q275/q276: q270's records
-    "warc_stream_v1" -> ("w%08d.warc",
-      (id: Long) => warcContainer(id)(warcFixture(id))),
+    "warc_stream_v1" -> warcContainer(warcFixture),
     // q284: q269's BMP pair in a ustar, gzipped every 3rd id
-    "tar_stream_v1" -> ("t%08d.tar", (id: Long) => junkEvery50th(id, "tar") {
+    "tar_stream_v1" -> junkEvery50th("tar? no") { id =>
       val t = tarMembers(id)
       if (id % 3 == 1) gzipBytes(t) else t
-    }),
+    },
     // q298/q301: q276's records behind the zstd / bzip2 door
-    "warc_zst_v1" -> ("w%08d.warc.zst", (id: Long) =>
-      junkEvery50th(id, "warc")(twoFramesEvery4th(id, warcFixture(id))(zstBytes))),
-    "warc_bz2_v1" -> ("w%08d.warc.bz2", (id: Long) =>
-      junkEvery50th(id, "warc")(twoFramesEvery4th(id, warcFixture(id))(bz2Bytes))),
+    "warc_zst_v1" -> junkEvery50th("warc? no")(id =>
+      twoFramesEvery4th(id, warcFixture(id))(zstBytes)),
+    "warc_bz2_v1" -> junkEvery50th("warc? no")(id =>
+      twoFramesEvery4th(id, warcFixture(id))(bz2Bytes)),
     // q300/q302: q284's members behind the zstd / xz door
-    "tar_zst_v1" -> ("t%08d.tar.zst",
-      (id: Long) => junkEvery50th(id, "tar")(zstBytes(tarMembers(id)))),
-    "tar_xz_v1" -> ("t%08d.tar.xz",
-      (id: Long) => junkEvery50th(id, "tar")(xzBytes(tarMembers(id)))),
-    "zip_stream_v2" -> ("z%08d.zip", // q287
-      (id: Long) => junkEvery50th(id, "zip")(zipMembers(id))),
+    "tar_zst_v1" -> junkEvery50th("tar? no")(id => zstBytes(tarMembers(id))),
+    "tar_xz_v1" -> junkEvery50th("tar? no")(id => xzBytes(tarMembers(id))),
+    "zip_stream_v2" -> junkEvery50th("zip? no")(zipMembers), // q287
     // q306: q289's mixed-carrier records, for the streaming router
-    "warc_docs_v1" -> ("w%08d.warc",
-      (id: Long) => warcContainer(id)(warcMixedFixture(id))),
+    "warc_docs_v1" -> warcContainer(warcMixedFixture),
     // q350: brotli Content-Encoding, alone and under gzip
-    "warc_br_v1" -> ("w%08d.warc", (id: Long) => junkEvery50th(id, "warc") {
+    "warc_br_v1" -> junkEvery50th("warc? no") { id =>
       val entity = (s"<h1>Doc $id</h1><p>brotli payload $id " +
         "restores exactly.</p>").getBytes("UTF-8")
       val html = "text/html; charset=utf-8"
@@ -856,40 +812,1059 @@ object SparkEntry {
           graft.sources.Brotli.encodeUncompressed(gzipBytes(entity)),
           "Content-Encoding: gzip, br\r\n") ++
         warcRespRec(s"http://ex.com/plain/$id", html, entity)
-    }),
+    },
     // the curation chain: v10 (q308), v11 (q315), v12 (q320),
     // v13 (q326), v14 (q337), v15 (q344)
-    "warc_v10_v1" -> ("w%08d.warc",
-      (id: Long) => warcContainer(id)(warcV10Bytes(id))),
-    "warc_v11_v1" -> ("w%08d.warc",
-      (id: Long) => warcContainer(id)(warcV11Bytes(id))),
-    "warc_v12_v1" -> ("w%08d.warc",
-      (id: Long) => warcContainer(id)(warcV12Bytes(id))),
-    "warc_v13_v1" -> ("w%08d.warc",
-      (id: Long) => warcContainer(id)(warcV13Bytes(id))),
-    "warc_v14_v1" -> ("w%08d.warc",
-      (id: Long) => warcContainer(id)(warcV14Bytes(id))),
-    "warc_v15_v1" -> ("w%08d.warc",
-      (id: Long) => warcContainer(id)(warcV15Bytes(id))))
+    "warc_v10_v1" -> warcContainer(warcV10Bytes),
+    "warc_v11_v1" -> warcContainer(warcV11Bytes),
+    "warc_v12_v1" -> warcContainer(warcV12Bytes),
+    "warc_v13_v1" -> warcContainer(warcV13Bytes),
+    "warc_v14_v1" -> warcContainer(warcV14Bytes),
+    "warc_v15_v1" -> warcContainer(warcV15Bytes),
+    // in-plan; q270/q271 read warc_stream_v1 and q289 warc_docs_v1
+    "wav_q233" -> junkEvery50th("not audio at all") { id =>
+      val n = (8 + id % 32).toInt
+      val b = java.nio.ByteBuffer.allocate(44 + n * 2)
+        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      b.put("RIFF".getBytes("US-ASCII")).putInt(36 + n * 2)
+        .put("WAVE".getBytes("US-ASCII"))
+        .put("fmt ".getBytes("US-ASCII")).putInt(16)
+        .putShort(1).putShort(1).putInt(8000).putInt(16000)
+        .putShort(2).putShort(16)
+        .put("data".getBytes("US-ASCII")).putInt(n * 2)
+      (0 until n).foreach { i =>
+        b.putShort(((((id * 7 + i * 5) % 16) - 8) * 4096).toShort)
+      }
+      b.array()
+    },
+    "bmp_q234" -> junkEvery50th("not an image") { id =>
+      val w = (2 + id % 6).toInt; val h = (1 + id % 4).toInt
+      val rowBytes = ((w * 3 + 3) / 4) * 4
+      val size = 54 + rowBytes * h
+      val b = java.nio.ByteBuffer.allocate(size)
+        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      b.put('B'.toByte).put('M'.toByte).putInt(size)
+        .putShort(0).putShort(0).putInt(54)
+      b.putInt(40).putInt(w).putInt(h).putShort(1).putShort(24)
+        .putInt(0).putInt(rowBytes * h)
+        .putInt(2835).putInt(2835).putInt(0).putInt(0)
+      (0 until h).foreach { row =>
+        val y = h - 1 - row // bottom-up row order
+        (0 until w).foreach { x =>
+          b.put(((id * 11 + x + y * 17) % 256).toByte)      // B
+          b.put(((id * 7 + x * 13 + y * 3) % 256).toByte)   // G
+          b.put(((id * 3 + x * 5 + y * 11) % 256).toByte)   // R
+        }
+        (w * 3 until rowBytes).foreach(_ => b.put(0.toByte))
+      }
+      b.array()
+    },
+    "gif_q235" -> junkEvery50th("definitely not a gif") { id =>
+      val w = (2 + id % 7).toInt; val h = (1 + id % 3).toInt
+      val nf = (1 + id % 5).toInt
+      val bb = new java.io.ByteArrayOutputStream()
+      def b(x: Int): Unit = bb.write(x & 0xff)
+      "GIF89a".getBytes("US-ASCII").foreach(x => bb.write(x))
+      b(w); b(w >> 8); b(h); b(h >> 8) // logical screen w, h (LE)
+      b(0); b(0); b(0)                 // no GCT, bg, aspect
+      (0 until nf).foreach { f =>
+        val delay = (10 + (id + f) % 20).toInt // hundredths of a second
+        b(0x21); b(0xf9); b(4); b(0)          // GCE: ext, label, size, flags
+        b(delay); b(delay >> 8); b(0); b(0)   // delay LE, transparent, term
+        b(0x2c); b(0); b(0); b(0); b(0)       // image descriptor at (0,0)
+        b(w); b(w >> 8); b(h); b(h >> 8); b(0) // frame w/h, no LCT
+        b(2)                                   // LZW min code size
+        b(3); b((id + f).toInt & 0xff); b(0x55); b(0xaa) // garbage data block
+        b(0)                                   // sub-block terminator
+      }
+      b(0x3b) // trailer
+      bb.toByteArray
+    },
+    "png_q242" -> junkEvery50th("png? hardly") { id =>
+      val w = (2 + id % 5).toInt; val h = (1 + id % 3).toInt
+      pngRgbFixture(w, h, (x, y) => (
+        ((id * 5 + x * 7 + y * 13) % 256).toInt,
+        ((id * 3 + x * 11 + y) % 256).toInt,
+        ((id + x + y * 19) % 256).toInt))
+    },
+    "jpg_q243" -> junkEvery50th("jpeg? hardly") { id =>
+      jpegFlatTileFixture((1 + id % 3).toInt, (1 + id % 2).toInt,
+        (tx, ty) => ((id * 7 + tx * 13 + ty * 29) % 256).toInt,
+        progressive = false)
+    },
+    "png_q244" -> junkEvery50th("png? still not") { id =>
+      val depth = Seq(1, 2, 4, 8)((id % 4).toInt)
+      val n = 1 << depth
+      val w = (3 + id % 6).toInt; val h = (1 + id % 4).toInt
+      val stride = (w * depth + 7) / 8
+      val raw = new Array[Byte](h * (1 + stride))
+      val perByte = 8 / depth
+      (0 until h).foreach { y =>
+        val base = y * (1 + stride)
+        raw(base) = 0 // filter None
+        (0 until w).foreach { x =>
+          val idx = ((id + x * 3 + y * 5) % n).toInt
+          val shift = 8 - depth - (x % perByte) * depth
+          raw(base + 1 + x / perByte) =
+            (raw(base + 1 + x / perByte) | (idx << shift)).toByte
+        }
+      }
+      val plte = Array.tabulate(n * 3) { k =>
+        val i = k / 3
+        (k % 3 match {
+          case 0 => (i * 37) % 256
+          case 1 => (i * 59) % 256
+          case _ => (i * 83) % 256
+        }).toByte
+      }
+      pngSig ++ pngChunk("IHDR", pngIhdr(w, h, depth, 3)) ++
+        pngChunk("PLTE", plte) ++ pngChunk("IDAT", deflateFully(raw)) ++
+        pngChunk("IEND", Array.emptyByteArray)
+    },
+    "gif_q245" -> junkEvery50th("gif? afraid not") { id =>
+      val k = (1 + id % 3).toInt // palette 2^k entries: 2, 4, 8
+      gifFixture(k, (2 + id % 6).toInt, (1 + id % 4).toInt,
+        (x, y) => ((id * 3 + x * 7 + y * 11) % (1 << k)).toInt)
+    },
+    "jpg_q246" -> junkEvery50th("jpeg? progressively not") { id =>
+      jpegFlatTileFixture((1 + id % 4).toInt, (1 + (id / 2) % 2).toInt,
+        (tx, ty) => ((id * 11 + tx * 23 + ty * 31) % 256).toInt,
+        progressive = true)
+    },
+    "tif_q247" -> junkEvery50th("tiff? nope") { id =>
+      tiffRgbFixture((2 + id % 7).toInt, (1 + id % 5).toInt,
+        packBits = id % 2 == 1,
+        (x, y) => (((id * 3 + x * 5 + y * 7) % 256).toInt,
+          ((id * 7 + x * 11 + y) % 256).toInt,
+          ((id + x + y * 13) % 256).toInt))
+    },
+    "snd_q248" -> junkEvery50th("audio? silence") { id =>
+      val n = (40 + id % 30).toInt
+      def pcm16(i: Int) = (((id * 11 + i * 17) % 65536) - 32768).toInt
+      def g711(i: Int) = ((id * 7 + i * 13) % 256).toInt
+      (id % 4).toInt match {
+        case 0 => auFixture(1, n, g711)
+        case 1 => auFixture(27, n, g711)
+        case 2 => auFixture(3, n, pcm16)
+        case _ => aiffFixture(n, 22050, pcm16)
+      }
+    },
+    "ico_q249" -> junkEvery50th("ico? no") { id =>
+      val w = (3 + id % 5).toInt; val h = (2 + id % 3).toInt
+      def r(x: Int, y: Int) = ((id * 5 + x * 7 + y * 13) % 256).toInt
+      def g(x: Int, y: Int) = ((id * 3 + x * 11 + y) % 256).toInt
+      def b(x: Int, y: Int) = ((id + x + y * 19) % 256).toInt
+      if (id % 2 == 0) // classic 32bpp DIB
+        icoDib32Fixture(w, h, (x, y) =>
+          (((x + y) % 256) << 24) | (r(x, y) << 16) | (g(x, y) << 8) | b(x, y))
+      else { // PNG-embedded (modern favicon)
+        val png = pngRgbFixture(w, h, (x, y) => (r(x, y), g(x, y), b(x, y)))
+        val bb = java.nio.ByteBuffer.allocate(6 + 16 + png.length)
+          .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+        bb.putShort(0).putShort(1).putShort(1)
+        bb.put(w.toByte).put(h.toByte).put(0.toByte).put(0.toByte)
+          .putShort(1).putShort(32).putInt(png.length).putInt(6 + 16)
+        bb.put(png)
+        bb.array()
+      }
+    },
+    "mixed_q250" -> junkEvery50th("multimodal? not today") { id =>
+      (id % 8).toInt match {
+        case 0 => // PNG (q242 formulas, same builder)
+          pngRgbFixture((2 + id % 5).toInt, (1 + id % 3).toInt, (x, y) => (
+            ((id * 5 + x * 7 + y * 13) % 256).toInt,
+            ((id * 3 + x * 11 + y) % 256).toInt,
+            ((id + x + y * 19) % 256).toInt))
+        case 1 => // baseline JPEG (q243 formulas, same builder)
+          jpegFlatTileFixture((1 + id % 3).toInt, (1 + id % 2).toInt,
+            (tx, ty) => ((id * 7 + tx * 13 + ty * 29) % 256).toInt,
+            progressive = false)
+        case 2 => // GIF (q245 formulas, same builder)
+          val k = (1 + id % 3).toInt
+          gifFixture(k, (2 + id % 6).toInt, (1 + id % 4).toInt,
+            (x, y) => ((id * 3 + x * 7 + y * 11) % (1 << k)).toInt)
+        case 3 => // BMP 24bpp (same builder as q251/q252)
+          bmp24Fixture((2 + id % 5).toInt, (1 + id % 4).toInt,
+            (x, y) => (((id + x * 3 + y * 5) % 256).toInt,
+              ((id * 5 + x * 7 + y) % 256).toInt,
+              ((id * 9 + x + y * 11) % 256).toInt))
+        case 4 => // TIFF uncompressed (q247 formulas, same builder)
+          tiffRgbFixture((2 + id % 7).toInt, (1 + id % 5).toInt,
+            packBits = false,
+            (x, y) => (((id * 3 + x * 5 + y * 7) % 256).toInt,
+              ((id * 7 + x * 11 + y) % 256).toInt,
+              ((id + x + y * 13) % 256).toInt))
+        case 5 => // ICO 32bpp DIB (q249 formulas, same builder)
+          icoDib32Fixture((3 + id % 5).toInt, (2 + id % 3).toInt,
+            (x, y) => (((id * 5 + x * 7 + y * 13) % 256).toInt << 16) |
+              (((id * 3 + x * 11 + y) % 256).toInt << 8) |
+              ((id + x + y * 19) % 256).toInt)
+        case 6 => // AU mu-law (q248 formulas, same builder)
+          auFixture(1, (40 + id % 30).toInt,
+            i => ((id * 7 + i * 13) % 256).toInt)
+        case _ => // AIFF PCM16 (q248 formulas, same builder)
+          aiffFixture((40 + id % 30).toInt, 22050,
+            i => (((id * 11 + i * 17) % 65536) - 32768).toInt)
+      }
+    },
+    "img_q251" -> junkEvery50th("image? unlikely") { id =>
+      bmp24Fixture(18, 16, (x, y) => (
+        ((id * 7 + x * 13 + y * 29) % 256).toInt,
+        ((id * 5 + x * 3 + y * 11) % 256).toInt,
+        ((id * 3 + x + y * 7) % 256).toInt))
+    },
+    "img_q252" -> junkEvery50th("image? unlikely") { id =>
+      val g = id / 7 // septet base
+      bmp24Fixture(18, 16, (x, y) => {
+        val bump = if (x == (id % 7) * 2 && y == 3) 40 else 0
+        (math.min(255, ((g * 11 + x * 17 + y * 23) % 200) + bump).toInt,
+          ((g * 13 + x * 5 + y * 19) % 256).toInt,
+          ((g * 17 + x * 7 + y * 3) % 256).toInt)
+      })
+    },
+    "snd_q253" -> junkEvery50th("audio? inaudible") { id =>
+      auFixture(1, 65 * (2 + id % 3).toInt,
+        i => ((id * 7 + i * 13) % 256).toInt)
+    },
+    "vid_q254" -> junkEvery50th("video? nope") { id =>
+      if (id % 7 == 3)
+        aviFixture((320 + (id % 5) * 16).toInt,
+          (240 + (id % 4) * 16).toInt, (24 + id % 100).toInt,
+          (33000 + (id % 3) * 1000).toInt, (1 + id % 2).toInt)
+      else {
+        val ns = (24 + id % 96).toInt
+        val codec = (id % 3) match {
+          case 0 => "avc1"; case 1 => "hvc1"; case _ => "vp09" }
+        mp4Fixture(Seq(
+          (1, "vide", codec, (16 * (2 + id % 20)).toInt,
+            (9 * (2 + id % 20)).toInt, ns, 12800, 512 * ns),
+          (2, "soun", "mp4a", 0, 0, 2 * ns, 48000, 1024 * ns)))
+      }
+    },
+    "vid_q255" -> junkEvery50th("ebml? hardly") { id =>
+      val codec = (id % 3) match {
+        case 0 => "V_VP9"; case 1 => "V_AV1"; case _ => "V_MPEG4/ISO/AVC" }
+      mkvFixture(if (id % 2 == 0) "webm" else "matroska",
+        (1000 + id % 900).toInt, Seq(
+          (1, 1, codec, (16 * (2 + id % 30)).toInt, (9 * (2 + id % 30)).toInt),
+          (2, 2, "A_OPUS", 0, 0)))
+    },
+    "img_q256" -> junkEvery50th("exif? never") { id =>
+      val tiff = exifTiff((1 + id % 8).toInt, s"Camera${id % 5}",
+        s"Model${id % 4}", f"2020:01:01 00:00:${id % 60}%02d",
+        (16 * (1 + id % 10)).toInt, (9 * (1 + id % 10)).toInt)
+      if (id % 5 == 1) tiff else jpegWithExif(tiff)
+    },
+    "snd_q257" -> junkEvery50th("mp3? silence") { id =>
+      val kbps = (id % 3) match { case 0 => 64; case 1 => 128; case _ => 160 }
+      mp3Fixture(kbps, id % 2 == 0, (5 + id % 20).toInt,
+        if (id % 3 == 0) (17 + id % 40).toInt else 0)
+    },
+    "vid_q258" -> junkEvery50th("avi? no") { id =>
+      if (id % 5 == 2) {
+        val w = (4 + id % 7).toInt; val h = (2 + id % 3).toInt
+        val n = (2 + id % 4).toInt
+        val frames = (0 until n).map(f => dibFrameFixture(w, h, (x, r) => (
+          ((id + f * 17 + x * 3 + r * 7) % 256).toInt,
+          ((id * 2 + f * 5 + x * 11 + r) % 256).toInt,
+          ((id * 3 + f + x + r * 13) % 256).toInt)))
+        aviFixture(mjpeg = false, w, h, frames, audioFirst = false)
+      } else {
+        val tw = (1 + id % 2).toInt
+        val n = (2 + id % 3).toInt
+        val frames = (0 until n).map(f => jpegFlatTileFixture(tw, 1,
+          (tx, _) => ((id * 7 + f * 11 + tx * 13) % 256).toInt,
+          progressive = false))
+        aviFixture(mjpeg = true, 16 * tw, 16, frames,
+          audioFirst = id % 4 == 1)
+      }
+    },
+    "vid_q259" -> junkEvery50th("video? hardly") { id =>
+      if (id % 5 == 2) {
+        val tw = (1 + id % 2).toInt
+        val n = (2 + id % 3).toInt
+        val frames = (0 until n).map(f => jpegFlatTileFixture(tw, 1,
+          (tx, _) => ((id * 7 + f * 11 + tx * 13) % 256).toInt,
+          progressive = false))
+        aviFixture(mjpeg = true, 16 * tw, 16, frames,
+          audioFirst = id % 4 == 1)
+      } else {
+        val n = (2 + id % 4).toInt
+        val frames = (0 until n).map(f => dibFrameFixture(18, 16, (x, r) => {
+          val y = 15 - r
+          (((id * 5 + f * 7 + x * 13 + y * 29) % 256).toInt,
+            ((id * 3 + f * 11 + x * 3 + y * 17) % 256).toInt,
+            ((id * 7 + f * 13 + x + y * 7) % 256).toInt)
+        }))
+        aviFixture(mjpeg = false, 18, 16, frames, audioFirst = false)
+      }
+    },
+    "vid_q260" -> junkEvery50th("video? hardly") { id =>
+      val g = id / 6
+      val n = (3 + g % 2).toInt
+      val frames = (0 until n).map(f => dibFrameFixture(18, 16, (x, r) => {
+        val y = 15 - r
+        val bump = if (x == (id % 6) * 2 && y == 3) 40 else 0
+        (math.min(255, ((g * 11 + f * 19 + x * 17 + y * 23) % 200) + bump).toInt,
+          ((g * 13 + f * 7 + x * 5 + y * 19) % 256).toInt,
+          ((g * 17 + f * 3 + x * 7 + y * 3) % 256).toInt)
+      }))
+      aviFixture(mjpeg = false, 18, 16, frames, audioFirst = false)
+    },
+    "sub_q261" -> junkEvery50th("subtitle? nope") { id =>
+      val n = (1 + id % 4).toInt
+      def startMs(k: Int) = (id % 900) * 1000 + k * 1500
+      val body = if (id % 3 == 0) {
+        val blocks = (0 until n).map { k =>
+          s"cue-$id-$k\n${subStamp(startMs(k), '.', short = true)} --> " +
+            s"${subStamp(startMs(k) + 1200, '.', short = true)} align:start\n" +
+            s"cue $id $k"
+        }
+        s"WEBVTT - fixture $id\nKind: captions\n\nNOTE generated fixture\n\n" +
+          blocks.mkString("\n\n") + "\n"
+      } else {
+        val blocks = (0 until n).map { k =>
+          val extra = if (k % 2 == 0) s"\nmore $k" else ""
+          s"${k + 1}\n${subStamp(startMs(k), ',', short = false)} --> " +
+            s"${subStamp(startMs(k) + 1200, ',', short = false)}\n" +
+            s"cue $id $k$extra"
+        }
+        blocks.mkString("\n\n") + "\n"
+      }
+      body.getBytes("UTF-8")
+    },
+    "vid_q262" -> junkEvery50th("video? hardly") { id =>
+      val n = (5 + id % 4).toInt
+      val frames = (0 until n).map { f =>
+        val sc = f / 3
+        dibFrameFixture(18, 16, (x, r) => {
+          val y = 15 - r
+          (((id * 5 + sc * 97 + x * 13 + y * 29) % 256).toInt,
+            ((id * 3 + sc * 89 + x * 3 + y * 17) % 256).toInt,
+            ((id * 7 + sc * 83 + x + y * 7) % 256).toInt)
+        })
+      }
+      aviFixture(mjpeg = false, 18, 16, frames, audioFirst = false)
+    },
+    "sub_q263" -> junkEvery50th("subtitle? nope") { id =>
+      val n = (1 + id % 3).toInt
+      val blocks = (0 until n).map { k =>
+        val st = k * 90L + (id % 7) * 10
+        s"${k + 1}\n${subStamp(st, ',', short = false)} --> " +
+          s"${subStamp(st + 100, ',', short = false)}\ncue $id $k"
+      }
+      (blocks.mkString("\n\n") + "\n").getBytes("UTF-8")
+    },
+    "vid_q263" -> junkEvery50th("video? hardly") { id =>
+      val n = (5 + id % 4).toInt
+      val frames = (0 until n).map(f => dibFrameFixture(18, 16, (x, r) => (
+        ((id + f * 17 + x * 3 + r * 7) % 256).toInt,
+        ((id * 2 + f * 5 + x * 11 + r) % 256).toInt,
+        ((id * 3 + f + x + r * 13) % 256).toInt)))
+      aviFixture(mjpeg = false, 18, 16, frames, audioFirst = false)
+    },
+    "sub_q264" -> junkEvery50th("subtitle? nope") { id =>
+      val n = (1 + id % 3).toInt
+      val blocks = (0 until n).map { k =>
+        val st = k * 2000L + id % 100
+        s"${subStamp(st, '.', short = true)} --> ${subStamp(st + 1500, '.', short = true)}\n" +
+          s"<v Speaker${id % 3}>cue <i>$id</i> <00:00:01.000>$k &amp; more</v>"
+      }
+      (s"WEBVTT\n\n" + blocks.mkString("\n\n") + "\n").getBytes("UTF-8")
+    },
+    "sub_q265" -> junkEvery50th("subtitle? nope") { id =>
+      val n = (2 + id % 2).toInt
+      val blocks = (0 until n).map { k =>
+        val st = k * 3000L
+        val text =
+          if (k == 0) { if (id % 2 == 0) "Thanks For Watching" else "thanks for watching" }
+          else s"unique cue $id $k"
+        s"${k + 1}\n${subStamp(st, ',', short = false)} --> " +
+          s"${subStamp(st + 2500, ',', short = false)}\n$text"
+      }
+      (blocks.mkString("\n\n") + "\n").getBytes("UTF-8")
+    },
+    "sub_q266" -> junkEvery50th("subtitle? nope") { id =>
+      val n = (2 + id % 2).toInt
+      val blocks = (0 until n).map { k =>
+        s"${k + 1}\n${subStamp(k * 110L, ',', short = false)} --> " +
+          s"${subStamp(k * 110L + 100, ',', short = false)}\ncue $id $k"
+      }
+      (blocks.mkString("\n\n") + "\n").getBytes("UTF-8")
+    },
+    "arc_q268" -> junkEvery50th("archive? no") { id =>
+      if (id % 3 == 0) {
+        val n = (1 + (id / 3) % 3).toInt
+        zipFixture((0 until n).map(k =>
+          (s"f$k.txt", s"content $id $k".getBytes("UTF-8"))))
+      } else if (id % 3 == 1) {
+        val n = (1 + id % 2).toInt
+        tarFixture(Seq(("d/", Array.emptyByteArray)) ++
+          (0 until n).map(k => (s"d/file$k", s"tar data $id $k".getBytes("UTF-8"))))
+      } else {
+        val bos = new java.io.ByteArrayOutputStream()
+        val g = new java.util.zip.GZIPOutputStream(bos)
+        g.write(s"gz payload $id".getBytes("UTF-8")); g.close()
+        bos.toByteArray
+      }
+    },
+    "arc_q269" -> junkEvery50th("archive? no")(id =>
+      zipFixture(bmpMembers(id))),
+    "warc_q273" -> junkEvery50th("warc? no")(warcV7Fixture),
+    "vid_q274" -> junkEvery50th("mp4? no") { id =>
+      val tw = (1 + id % 2).toInt
+      val n = (2 + id % 3).toInt
+      val frames = (0 until n).map(f => jpegFlatTileFixture(tw, 1,
+        (tx, _) => ((id * 7 + f * 11 + tx * 13) % 256).toInt,
+        progressive = false))
+      mp4MjpegFixture(16 * tw, 16, frames, multiChunk = id % 2 == 1)
+    },
+    "warc_q277" -> junkEvery50th("warc? no")(charsetFixture),
+    "warc_q281" -> junkEvery50th("warc? no")(warcV8Fixture),
+    "pdf_q285" -> junkEvery50th("portable document? no") { id =>
+      val pages = (0 until (1 + (id % 3)).toInt).map { p =>
+        (0 until (1 + ((id + p) % 3)).toInt).map { l =>
+          s"doc $id pg $p ln $l tok${(id * 7 + p * 3 + l) % 97}" +
+            (if (l % 2 == 0) " café" else "")
+        }
+      }
+      val bytes = (id % 3) match {
+        case 0 => graft.sources.Pdf.buildSimplePdf(pages, flate = false)
+        case 1 => graft.sources.Pdf.buildSimplePdf(pages, flate = true)
+        case _ => graft.sources.Pdf.buildXrefStreamPdf(pages)
+      }
+      bytes
+    },
+    "office_q286" -> junkEvery50th("office doc? no") { id =>
+      if (id % 2 == 0) {
+        val paras = (0 until (1 + (id % 4)).toInt).map { p =>
+          s"docx $id para $p word${(id * 3 + p) % 31} & more"
+        }
+        graft.sources.OfficeText.buildDocx(paras)
+      } else {
+        val chapters = (0 until (1 + (id % 3)).toInt).map { c =>
+          (s"Chapter $c of $id",
+            (0 until (1 + ((id + c) % 2)).toInt).map { p =>
+              s"epub $id ch $c para $p"
+            })
+        }
+        graft.sources.OfficeText.buildEpub(chapters)
+      }
+    },
+    "nb_q291" -> junkEvery50th("not a notebook at all") { id =>
+      val extra =
+        if (id % 2 == 0)
+          s""",{"cell_type":"code","source":["y = ${id % 5}"]}"""
+        else ""
+      (s"""{"cells":[""" +
+        s"""{"cell_type":"markdown","source":["# Note $id\\n","cell ${id % 7} **bold**\\n"]},""" +
+        s"""{"cell_type":"code","source":["x = $id\\n","print(x)"]},""" +
+        s"""{"cell_type":"raw","source":["ignored $id"]}""" +
+        extra + "]}").getBytes("UTF-8")
+    },
+    "warc_q292" -> junkEvery50th("warc? no")(warcV9Fixture),
+    "img_q293" -> junkEvery50th("photo? no") { id =>
+      val tiff = exifTiff((1 + id % 8).toInt, s"Camera${id % 5}",
+        s"Model${id % 4}", f"2020:01:01 00:00:${id % 60}%02d", 16, 9)
+      val base = jpegFlatTileFixture((1 + id % 3).toInt, (1 + id % 2).toInt,
+        (tx, ty) => ((id * 7 + tx * 13 + ty * 29) % 256).toInt,
+        progressive = false)
+      val app1 = java.nio.ByteBuffer.allocate(4 + 6 + tiff.length)
+      app1.putShort(0xffe1.toShort).putShort((2 + 6 + tiff.length).toShort)
+        .put("Exif".getBytes("US-ASCII")).put(0.toByte).put(0.toByte)
+        .put(tiff)
+      val comBody = s"secret note $id".getBytes("US-ASCII")
+      val com = java.nio.ByteBuffer.allocate(4 + comBody.length)
+      com.putShort(0xfffe.toShort)
+        .putShort((2 + comBody.length).toShort).put(comBody)
+      base.take(2) ++ app1.array() ++ com.array() ++ base.drop(2)
+    },
+    "warc_q294" -> junkEvery50th("warc? no") { id =>
+      val p1 = (id % 3) match {
+        case 0 => "<meta name=\"robots\" content=\"noindex,follow\">" +
+          s"<p>keep page $id one</p>"
+        case 1 => "<META CONTENT='NOINDEX' NAME='ROBOTS'>" +
+          s"<p>keep page $id one</p>"
+        case _ => s"<p>keep page $id one</p>"
+      }
+      warcInfo ++
+        warcRespRec(s"http://ex.com/$id/0", "text/html",
+          s"<p>keep page $id zero</p>".getBytes("UTF-8")) ++
+        warcRespRec(s"http://ex.com/$id/1", "text/html", p1.getBytes("UTF-8"))
+    },
+    "pdf_q295" -> junkEvery50th("composite font? no") { id =>
+      val pages = (0 until (1 + (id % 3)).toInt).map { p =>
+        (0 until (1 + ((id + p) % 3)).toInt).map { l =>
+          s"doc $id pg $p ln $l tok${(id * 7 + p * 3 + l) % 97}" +
+            (if (l % 2 == 0) " café" else "")
+        }
+      }
+      graft.sources.Pdf.buildType0Pdf(pages, xrefStream = id % 2 == 1)
+    },
+    "warc_q296" -> junkEvery50th("warc? no") { id =>
+      val headerNoindex = (id % 3) match {
+        case 0 => "noindex"
+        case 1 => "googlebot: noindex"
+        case _ => "NONE, nosnippet"
+      }
+      val p2 = (if (id % 2 == 0)
+        "<meta name=\"robots\" content=\"noindex\">" else "") +
+        s"<p>keep page $id two</p>"
+      warcInfo ++
+        warcRespRec(s"http://ex.com/$id/0", "text/html",
+          s"<p>keep page $id zero</p>".getBytes("UTF-8"),
+          "X-Robots-Tag: nofollow, noarchive\r\n") ++
+        warcRespRec(s"http://ex.com/$id/1", "text/html",
+          s"<p>keep page $id one</p>".getBytes("UTF-8"),
+          s"X-Robots-Tag: $headerNoindex\r\n") ++
+        warcRespRec(s"http://ex.com/$id/2", "text/html", p2.getBytes("UTF-8"))
+    },
+    "warc_q297" -> junkEvery50th("warc? no") { id =>
+      val tex =
+        s"""\\documentclass[11pt]{article}
+           |% preamble comment $id drops
+           |\\usepackage{amsmath}
+           |\\begin{document}
+           |\\section{Head $id}
+           |Body $id with \\emph{emph $id} \\& 100\\% real.
+           |Inline $$x_{$id}^2$$ math drops but tail $id stays.
+           |\\begin{equation}
+           |e = mc^2 + $id
+           |\\end{equation}
+           |\\begin{itemize}
+           |\\item alpha $id
+           |\\item beta $id
+           |\\end{itemize}
+           |See \\cite{ref$id} and \\href{http://x/$id}{link $id} now.
+           |Tilde~joined and a break\\\\here $id.""".stripMargin +
+          (if (id % 2 == 0) s"\nExtra tok${(id * 13) % 89} prose."
+           else "") + "\n\\end{document}\n"
+      warcRespRec(s"http://ex.com/$id/page", "text/html",
+        s"<p>html page $id</p>".getBytes("UTF-8")) ++
+        warcRespRec(s"http://ex.com/$id/paper.tex",
+          "application/x-tex", tex.getBytes("UTF-8"))
+    },
+    "office_q299" -> junkEvery50th("office deck? no") { id =>
+      if (id % 2 == 0) {
+        val slides = (0 until (1 + (id % 3)).toInt).map { sl =>
+          (0 until (1 + ((id + sl) % 2)).toInt).map { p =>
+            s"pptx $id sl $sl p $p tok${(id * 5 + sl * 3 + p) % 43} & co"
+          }
+        }
+        graft.sources.OfficeText.buildPptx(slides)
+      } else {
+        val rows = (0 until (1 + (id % 3)).toInt).map { r =>
+          Seq(s"${(id * 7 + r) % 1000}") ++
+            (1 until (1 + ((id + r) % 3)).toInt).map { cc =>
+              s"cell $id r$r c$cc"
+            }
+        }
+        graft.sources.OfficeText.buildXlsx(rows)
+      }
+    },
+    "office_q303" -> junkEvery50th("odt? no") { id =>
+      val paras = (0 until (1 + (id % 4)).toInt).map { p =>
+        s"odt $id para $p tok${(id * 11 + p) % 37} & täst"
+      }
+      graft.sources.OfficeText.buildOdt(paras)
+    },
+    "warc_q304" -> junkEvery50th("warc? no") { id =>
+      warcRespRec(s"http://ex.com/$id/h", "text/html",
+        s"<p>html keep $id</p>".getBytes("UTF-8")) ++
+        warcRespRec(s"http://ex.com/$id/p.pdf", "application/pdf",
+          graft.sources.Pdf.buildSimplePdf(
+            Seq(Seq(s"pdf body $id")), flate = false),
+          if (id % 2 == 0) "X-Robots-Tag: noindex\r\n" else "") ++
+        warcRespRec(s"http://ex.com/$id/m.md", "text/markdown",
+          s"md **body** $id".getBytes("UTF-8"),
+          "X-Robots-Tag: nofollow, noarchive\r\n")
+    },
+    "warc_q305" -> junkEvery50th("warc? no") { id =>
+      val rtf = "{\\rtf1\\ansi{\\fonttbl{\\f0 Times New Roman;}}" +
+        "{\\colortbl;\\red0\\green0\\blue0;}" +
+        "{\\info{\\author secret author}}" +
+        "{\\*\\generator Graft;}" +
+        s"\\pard Plain $id text with \\b bold $id\\b0  and caf\\'e9.\\par" +
+        s" Second\\tab line $id \\u8212?dash.\\par" +
+        "{\\field{\\*\\fldinst HYPERLINK \"http://x/" + id + "\"}" +
+        s"{\\fldrslt shown link $id}}\\par}"
+      warcRespRec(s"http://ex.com/$id/doc.rtf", "application/rtf",
+        rtf.getBytes("UTF-8"))
+    },
+    "webp_q307" -> junkEvery50th("webp? no") { id =>
+      val w = (19 + id % 4).toInt
+      val h = (9 + id % 5).toInt
+      val variant = (id % 4) match {
+        case 0 => "plain"
+        case 1 => "subgreen"
+        case 2 => "predictor"
+        case _ => "palette"
+      }
+      val px: (Int, Int) => (Int, Int, Int) =
+        if (id % 4 == 3) { (x, y) =>
+          val idx = if (y == 0) x % 19 else ((x * 7 + y * 3 + id) % 19).toInt
+          (((id * 3 + idx) % 256).toInt, ((id * 5 + idx * 29) % 256).toInt,
+            ((id * 7 + idx * 41) % 256).toInt)
+        } else { (x, y) =>
+          (((id * 7 + x * 13 + y * 29) % 256).toInt,
+            ((id * 5 + x * 3 + y * 11) % 256).toInt,
+            ((id * 3 + x + y * 7) % 256).toInt)
+        }
+      graft.sources.Webp.buildLosslessWebp(w, h, px, variant)
+    },
+    "webp_q309" -> junkEvery50th("anim? no") { id =>
+      val nFrames = (1 + id % 3).toInt
+      val frames = (0 until nFrames).map { k =>
+        val fw = (7 + (id + k) % 4).toInt
+        val fh = (5 + (id + 2 * k) % 3).toInt
+        (fw, fh, k,
+          (x: Int, y: Int) =>
+            (((id * 7 + k * 31 + x * 13 + y * 29) % 256).toInt,
+              ((id * 5 + k * 17 + x * 3 + y * 11) % 256).toInt,
+              ((id * 3 + k * 7 + x + y * 7) % 256).toInt))
+      }
+      graft.sources.Webp.buildAnimatedWebp(30, 20, frames, 40)
+    },
+    "arc_q310" -> junkEvery50th("archive? no") { id =>
+      zipFixture((0 until 2).map { k =>
+        (s"img$k.webp", graft.sources.Webp.buildLosslessWebp(10, 8,
+          (x, y) => (
+            ((id * 7 + k * 31 + x * 13 + y * 29) % 256).toInt,
+            ((id * 5 + k * 17 + x * 3 + y * 11) % 256).toInt,
+            ((id * 3 + k * 7 + x + y * 7) % 256).toInt),
+          if (k == 0) "plain" else "subgreen"))
+      })
+    },
+    "webp_q311" -> junkEvery50th("webp? no") { id =>
+      val mw = (2 + id % 3).toInt
+      val mh = (1 + id % 2).toInt
+      val variant = (id % 5) match {
+        case 0 => "dc"
+        case 1 => "v"
+        case 2 => "h"
+        case 3 => "tm"
+        case _ => "bpred"
+      }
+      def yuv(mx: Int, my: Int) = (
+        ((id * 7 + mx * 31 + my * 17) % 256).toInt,
+        ((id * 5 + mx * 11 + my * 23) % 256).toInt,
+        ((id * 3 + mx * 13 + my * 29) % 256).toInt)
+      graft.sources.Webp.buildLossyWebp(mw, mh, yuv, variant)
+    },
+    "warc_q312" -> junkEvery50th("warc? no") { id =>
+      val doc = graft.sources.Ole2.buildDoc(
+        Seq(s"Doc $id legacy café body.", s"Unicode — tail $id."),
+        field = Some((s"HYPERLINK \"http://x/$id\"",
+          s"shown $id")))
+      warcRespRec(s"http://ex.com/$id/old.doc", "application/msword", doc)
+    },
+    "mbox_q313" -> junkEvery50th("mbox? no") { id =>
+      val n = (1 + id % 3).toInt
+      val sb = new StringBuilder
+      (0 until n).foreach { m =>
+        val subj = "=?UTF-8?B?" + java.util.Base64.getEncoder
+          .encodeToString(s"Msg $id-$m résumé".getBytes("UTF-8")) + "?="
+        val alt =
+          s"Content-Type: multipart/alternative; boundary=alt$m\r\n" +
+          "\r\n" +
+          s"--alt$m\r\n" +
+          "Content-Type: text/plain; charset=utf-8\r\n" +
+          "Content-Transfer-Encoding: quoted-printable\r\n\r\n" +
+          s"Plain caf=C3=A9 body $id msg $m =\r\ncontinued.\r\n" +
+          s"--alt$m\r\n" +
+          "Content-Type: text/html; charset=utf-8\r\n\r\n" +
+          s"<p>html leg $id must not appear</p>\r\n" +
+          s"--alt$m--\r\n"
+        val body =
+          if (m % 2 == 1)
+            s"Content-Type: multipart/mixed; boundary=mix$m\r\n" +
+            s"\r\n--mix$m\r\n" + alt +
+            s"--mix$m\r\n" +
+            "Content-Type: application/pdf\r\n" +
+            "Content-Disposition: attachment; filename=\"a.pdf\"\r\n" +
+            "Content-Transfer-Encoding: base64\r\n\r\nJVBERi0=\r\n" +
+            s"--mix$m--\r\n"
+          else alt
+        sb.append(s"From sender$m@ex.com Thu Jan  1 00:00:0$m 2026\n")
+        sb.append(s"Subject: $subj\r\n")
+        sb.append(s"From: Sender $m <sender$m@ex.com>\r\n")
+        sb.append("MIME-Version: 1.0\r\n")
+        sb.append(body)
+        sb.append("\n")
+      }
+      sb.toString.getBytes("UTF-8")
+    },
+    "pdf_q314" -> junkEvery50th("pdf? no") { id =>
+      (id % 3) match {
+        case 0 => graft.sources.Pdf.buildSimplePdf(
+          Seq(Seq(s"Simple $id page.")), flate = false)
+        case 1 => graft.sources.Pdf.buildType0Pdf(
+          Seq(Seq(s"Type0 $id clean line.")), xrefStream = false)
+        case _ => graft.sources.Pdf.buildType0PdfNoToUnicode(
+          Seq(Seq(s"Subset $id mojibake line.")))
+      }
+    },
+    "sz_q316" -> junkEvery50th("7z? no") { id =>
+      val n = (1 + id % 3).toInt
+      val members = Seq(("d/", Array.emptyByteArray)) ++
+        (0 until n).map(k =>
+          (s"m$k.txt", s"7z member $id $k".getBytes("UTF-8")))
+      // LZMA2 on 1-in-4 ids pins the codec path; COPY elsewhere
+      // keeps the per-row encode off Verify's critical path
+      val bytes = graft.sources.Archives.sevenZFixture(members,
+        lzma2 = id % 4 == 0)
+      if (id % 7 == 3) bytes.dropRight(40) else bytes
+    },
+    "warc_q317" -> junkEvery50th("warc? no") { id =>
+      val xls = graft.sources.Ole2.buildXls(
+        Seq(
+          Seq(s"Alpha $id", s"café $id", s"Ω tail $id"),
+          Seq(s"$id", "42", "7"),
+          Seq("", s"tail — $id", s"${id * 3}")),
+        continueSplit = id % 2 == 0)
+      warcRespRec(s"http://ex.com/$id/sheet.xls",
+        "application/vnd.ms-excel", xls)
+    },
+    "warc_q318" -> junkEvery50th("warc? no") { id =>
+      val ppt = graft.sources.Ole2.buildPpt(Seq(
+        Seq(s"Title $id", s"Bullet café $id\rMore $id"),
+        Seq(s"Second — slide $id", s"Note $id" + "\u000B" + "wrap")))
+      warcRespRec(s"http://ex.com/$id/deck.ppt",
+        "application/vnd.ms-powerpoint", ppt)
+    },
+    "flac_q321" -> junkEvery50th("flac? no") { id =>
+      val n = (48 + (id % 3) * 16).toInt
+      def mono(f: Int => Int) = Seq(Array.tabulate(n)(f))
+      val (chans, variant) = (id % 5) match {
+        case 0 => (mono(i => ((id * 7 + i * 13) % 401 - 200).toInt), "verbatim")
+        case 1 => (mono(_ => ((id * 11) % 300 - 150).toInt), "constant")
+        case 2 => (mono(i => ((id * 7 + i * 13) % 401 - 200).toInt), "fixed2")
+        case 3 => (mono(i => ((id * 7 + i * 13) % 401 - 200).toInt), "lpc2")
+        case _ => (Seq(
+          Array.tabulate(n)(i => ((id * 5 + i * 11) % 401 - 200).toInt),
+          Array.tabulate(n)(i => ((id * 3 + i * 17) % 401 - 200).toInt)),
+          "midside")
+      }
+      graft.sources.Flac.buildFlac(chans, 44100, 16, 16, variant)
+    },
+    "ogg_q322" -> junkEvery50th("ogg? no") { id =>
+      val vorbis = id % 2 == 0
+      val rate = if (vorbis) (8000 * (1 + id % 4)).toInt else 16000
+      val granule =
+        if (vorbis) rate.toLong * (3 + id % 5)
+        else 48000L * (2 + id % 4) + 312
+      graft.sources.Ogg.buildOgg(
+        serial = id, codec = if (vorbis) "vorbis" else "opus",
+        channels = (1 + id % 3).toInt, rate = rate,
+        nDataPages = (1 + id % 3).toInt,
+        packetsPerPage = (2 + id % 2).toInt,
+        lastGranule = granule, spanPacket = id % 7 == 0)
+    },
+    "mp3_q324" -> junkEvery50th("id3? no") { id =>
+      val major = (2 + id % 3).toInt
+      val album = if (id % 4 == 0) None else Some(s"Album $id")
+      graft.sources.Id3.buildId3(major,
+        title = s"Song $id café",
+        artist = s"Artist — $id",
+        album = album,
+        year = s"${1960 + id % 60}",
+        genre = if (major == 4) s"Жанр $id" else s"Genre ${id % 7}",
+        v1Album = if (id % 4 == 0) Some(s"V1 $id") else None)
+    },
+    "arc_q328" -> junkEvery50th("archive? no") { id =>
+      zipFixture(Seq(
+        ("a0.flac", graft.sources.Flac.buildFlac(
+          Seq(Array.tabulate(32)(i => ((id * 7 + i * 13) % 401 - 200).toInt)),
+          8000, 16, 16, "verbatim")),
+        ("a1.flac", graft.sources.Flac.buildFlac(Seq(
+          Array.tabulate(24)(i => ((id * 5 + i * 11) % 401 - 200).toInt),
+          Array.tabulate(24)(i => ((id * 3 + i * 17) % 401 - 200).toInt)),
+          16000, 16, 12, "midside"))))
+    },
+    "heif_q333" -> junkEvery50th("heif? no") { id =>
+      val w = 320L + (id % 10) * 16
+      val h = 240L + (id % 7) * 16
+      graft.sources.Heif.buildHeif(
+        if (id % 2 == 0) "avif" else "heic",
+        Seq((w, h), (32L + id % 16, 32L)),
+        nItems = (1 + id % 4).toInt,
+        largesize = id % 4 == 0)
+    },
+    "warc_q334" -> junkEvery50th("warc? no") { id =>
+      val resp = warcRecord("response", s"http://ex.com/orig/$id",
+        httpResponse("200 OK", "text/html",
+          s"<p>original page $id stays stored.</p>".getBytes("UTF-8")),
+        s"WARC-Payload-Digest: sha1:D$id\r\n")
+      val revDigest = if (id % 3 == 0) s"sha1:X$id" else s"sha1:D$id"
+      // a revisit's payload is the bare status line: no Content-Type
+      val rev = warcRecord("revisit", s"http://ex.com/again/$id",
+        "HTTP/1.1 200 OK\r\n\r\n".getBytes("ISO-8859-1"),
+        s"WARC-Refers-To-Target-URI: HTTP://EX.COM:80/orig/$id\r\n" +
+          s"WARC-Payload-Digest: $revDigest\r\n" +
+          "WARC-Profile: http://netpreserve.org/warc/1.1/revisit/identical-payload-digest\r\n")
+      resp ++ rev
+    },
+    "webp_q335" -> junkEvery50th("webp? no") { id =>
+      val mw = (1 + id % 2).toInt
+      graft.sources.Webp.buildLossyWebpAlpha(mw, 1,
+        (_, _) => (90, 120, 130), "dc",
+        (x, y) => ((id * 3 + x * 5 + y * 11) % 256).toInt,
+        compression = (id % 2).toInt, filter = (id % 4).toInt)
+    },
+    "webp_q338" -> junkEvery50th("anim? no") { id =>
+      val nFrames = (1 + id % 3).toInt
+      val frames = (0 until nFrames).map { k =>
+        (1 + (id.toInt + k) % 2, 1,
+          (_: Int, _: Int) => (90, 120, 130),
+          (x: Int, y: Int) =>
+            ((id * 3 + k * 17 + x * 5 + y * 11) % 256).toInt,
+          ((id + k) % 2).toInt, ((id + k) % 4).toInt)
+      }
+      graft.sources.Webp.buildAnimatedWebpAlpha(48, 16, frames, 25)
+    },
+    "warc_q340" -> junkEvery50th("warc? no") { id =>
+      val entity =
+        (s"<h1>Doc $id</h1><p>payload $id decodes exactly.</p>")
+          .getBytes("UTF-8")
+      def chunked(b: Array[Byte]): Array[Byte] = {
+        val cut = math.max(1, b.length / 3)
+        val o = new java.io.ByteArrayOutputStream()
+        def wr(t: String): Unit = o.write(t.getBytes("ISO-8859-1"))
+        wr(Integer.toHexString(cut) + ";x=1\r\n")
+        o.write(b, 0, cut); wr("\r\n")
+        wr(Integer.toHexString(b.length - cut) + "\r\n")
+        o.write(b, cut, b.length - cut); wr("\r\n")
+        wr("0\r\n\r\ntrailer: ignored\r\n")
+        o.toByteArray
+      }
+      def zlib(b: Array[Byte]): Array[Byte] = {
+        val df = new java.util.zip.Deflater()
+        df.setInput(b); df.finish()
+        val o = new java.io.ByteArrayOutputStream()
+        val buf = new Array[Byte](1024)
+        while (!df.finished()) o.write(buf, 0, df.deflate(buf))
+        df.end(); o.toByteArray
+      }
+      val (wire, body) = (id % 5) match {
+        case 1 => ("Transfer-Encoding: chunked\r\n", chunked(entity))
+        case 2 => ("Content-Encoding: gzip\r\n", gzipBytes(entity))
+        case 3 => ("Content-Encoding: deflate\r\n", zlib(entity))
+        case 4 => ("Content-Encoding: gzip\r\nTransfer-Encoding: chunked\r\n",
+          chunked(gzipBytes(entity)))
+        case _ =>
+          // r18: real brotli (the r17 arm was a lying claim pinned
+          // to br!undecoded — now the pure-JVM decoder reads it)
+          if (id % 3 == 0) ("Content-Encoding: br\r\n",
+            graft.sources.Brotli.encodeUncompressed(entity))
+          else ("", entity)
+      }
+      warcRespRec(s"http://ex.com/p/$id", "text/html; charset=utf-8",
+        body, wire)
+    },
+    "warc_q345" -> junkEvery50th("warc? no") { id =>
+      val n = (1 + id % 3).toInt
+      val (ctype, xml) =
+        if (id % 2 == 0) {
+          val items = (0 until n).map { j =>
+            s"<item><title>Item $id $j</title><description>" +
+              s"<![CDATA[<b>story $id</b> part $j &amp; more]]>" +
+              "</description></item>"
+          }.mkString
+          (if (id % 4 == 0) "application/rss+xml" else "text/xml",
+            "<?xml version=\"1.0\"?><rss version=\"2.0\"><channel>" +
+              s"<title>Feed $id</title>$items</channel></rss>")
+        } else {
+          val entries = (0 until n).map { j =>
+            s"<entry><title>Entry $id $j</title>" +
+              s"<summary>plain note $id $j</summary></entry>"
+          }.mkString
+          (if (id % 4 == 1) "application/atom+xml" else "application/xml",
+            "<?xml version=\"1.0\"?>" +
+              "<feed xmlns=\"http://www.w3.org/2005/Atom\">" +
+              s"<title>Feed $id</title>$entries</feed>")
+        }
+      warcRespRec(s"http://ex.com/feed/$id", ctype, xml.getBytes("UTF-8"))
+    },
+    "warc_q348" -> junkEvery50th("warc? no") { id =>
+      val (cs, body) = (id % 3) match {
+        case 0 => ("windows-1252",
+          s"<p>café page $id with a ’smart’ quote</p>")
+        case 1 => ("UTF-8", s"<p>café page $id in valid utf8</p>")
+        case _ => ("US-ASCII", s"<p>plain ascii page $id</p>")
+      }
+      val bytes = body.getBytes(cs)
+      // NO charset anywhere: bare text/html, no meta
+      warcRespRec(s"http://ex.com/cs/$id", "text/html", bytes)
+    },
+    "warc_q349" -> junkEvery50th("warc? no") { id =>
+      val ja = "これは日本語のテキストです。記事の本文が続きます。"
+      val ko = "한국어는 한글로 표기한다 기사 본문이 이어진다"
+      val zh = "这是一段中文文本没有空格 新闻正文在此继续展开"
+      val zhT = "這是一段繁體中文網頁沒有空格 新聞內容在這裡繼續"
+      val latin = "l'été café année passée déjà vu née et protégé"
+      val (cs, sample) = (id % 6) match {
+        case 0 => ("shift_jis", ja)
+        case 1 => ("euc-jp", ja)
+        case 2 => ("euc-kr", ko)
+        case 3 => ("gbk", zh)
+        case 4 => ("big5", zhT)
+        case _ => ("windows-1252", latin)
+      }
+      val bytes = s"<p>$sample page $id</p>".getBytes(cs)
+      // NO charset anywhere: bare text/html, no meta
+      warcRespRec(s"http://ex.com/cjk/$id", "text/html", bytes)
+    },
+    "warc_q352" -> junkEvery50th("warc? no") { id =>
+      val landing = warcRecord("response", s"http://ex.com/final/$id",
+        httpResponse("200 X", "text/html",
+          s"<p>redirect landing page $id content.</p>".getBytes("UTF-8")))
+      val hop1 = warcRedirect(s"http://ex.com/old/$id", "301 X", s"/final/$id")
+      val hop2 = warcRedirect(s"http://ex.com/older/$id", "302 X",
+        s"http://ex.com/old/$id")
+      val hop3 = warcRedirect(s"http://mirror.site/m/$id", "308 X",
+        s"HTTP://Ex.COM/older/$id")
+      val loop =
+        if (id % 5 == 0)
+          warcRedirect(s"http://loop.a/$id", "301 X", s"http://loop.b/$id") ++
+            warcRedirect(s"http://loop.b/$id", "302 X", s"http://loop.a/$id")
+        else Array.emptyByteArray
+      landing ++ hop1 ++ hop2 ++ hop3 ++ loop
+    },
+    "warc_q353" -> warcContainer { id =>
+      warcV15Bytes(id) ++
+        warcRedirect(s"http://ex.com/h-old/$id", "301 Moved", s"/h/${id / 5}") ++
+        warcRespRec(s"http://ex.com/h-old/$id", "text/html",
+          (s"<p>moved fetch $id stays clean with plenty of good " +
+            "english words.</p>").getBytes("UTF-8")) ++
+        warcRespRec(s"http://cyc.example/p/$id", "text/html",
+          (s"<p>cycle page $id keeps enough english words " +
+            "alive.</p>").getBytes("UTF-8")) ++
+        warcRedirect(s"http://cyc.example/p/$id", "301 Moved",
+          s"http://cyc2.example/p/$id") ++
+        warcRedirect(s"http://cyc2.example/p/$id", "302 Moved",
+          s"http://cyc.example/p/$id")
+    },
+    "warc_q354" -> junkEvery50th("warc? no") { id =>
+      val html = "text/html; charset=utf-8"
+      val refreshAttr =
+        if (id % 2 == 0) s"""content="0;url=/land/$id""""
+        else s"""content="3; URL='/land/$id'""""
+      val landing = warcRecord("response", s"http://ex.com/land/$id",
+        httpResponse("200 X", html,
+          s"<p>soft landing page $id holds the real words.</p>"
+            .getBytes("UTF-8")))
+      val interstitial = warcRecord("response", s"http://ex.com/hop/$id",
+        httpResponse("200 X", html,
+          (s"""<html><head><meta http-equiv="refresh" $refreshAttr>""" +
+            s"</head><body><p>interstitial $id moving you along " +
+            "now.</p></body></html>").getBytes("UTF-8")))
+      val start = warcRedirect(s"http://ex.com/start/$id", "301 X",
+        s"/hop/$id", html)
+      // control: a url-less refresh reloads self — never an edge
+      val selfish = warcRecord("response", s"http://ex.com/self/$id",
+        httpResponse("200 X", html,
+          (s"""<html><head><meta http-equiv=refresh content="30">""" +
+            s"</head><body><p>self refreshing page $id keeps its " +
+            "own words.</p></body></html>").getBytes("UTF-8")))
+      landing ++ interstitial ++ start ++ selfish
+    },
+    "warc_q355" -> junkEvery50th("warc? no") { id =>
+      val ru = "Это русский текст статьи продолжение материала здесь"
+      val u16 = "утф text body here"
+      val latin = "l'été café année passée déjà vu née et protégé"
+      val bytes = (id % 6) match {
+        case 0 => s"<p>$ru page $id</p>".getBytes("KOI8-R")
+        case 1 => s"<p>$ru page $id</p>".getBytes("windows-1251")
+        case 2 => s"<p>$u16 page $id</p>".getBytes("UTF-16LE")
+        case 3 => s"<p>$u16 page $id</p>".getBytes("UTF-16BE")
+        case 4 => s"<p>$u16 page $id</p>".getBytes("UTF-16") // BOM'd
+        case _ => s"<p>$latin page $id</p>".getBytes("windows-1252")
+      }
+      // NO charset anywhere: bare text/html, no meta, no BOM
+      // except the one arm that pins BOM handling
+      warcRespRec(s"http://ex.com/cyr/$id", "text/html", bytes)
+    },
+    "warc_q356" -> junkEvery50th("warc? no") { id =>
+      val farm = (0 until 2).map { j =>
+        warcRedirect(s"http://t$j.example/p/$id", "301 Moved",
+          s"http://land.example/p/$id/$j") ++
+          warcRespRec(s"http://t$j.example/p/$id", "text/html",
+            (s"<p>farm content $id $j keeps plenty of good " +
+              "english words alive.</p>").getBytes("UTF-8"))
+      }.reduce(_ ++ _)
+      val ctrl = warcRespRec(s"http://ctrl.example/c/$id", "text/html",
+        (s"<p>control page $id keeps plenty of good english " +
+          "words too.</p>").getBytes("UTF-8"))
+      farm ++ ctrl
+    },
+    "warc_q357" -> junkEvery50th("warc? no") { id =>
+      val hop = warcRedirect(s"http://s.example/a/$id", "302 Moved",
+        s"http://go.example/r/$id")
+      val interstitial = warcRespRec(s"http://go.example/r/$id",
+        "text/html",
+        s"<p>hold on, moving you along $id.</p>".getBytes("UTF-8"),
+        if (id % 2 == 0)
+          s"Refresh: 0; url=http://dest.example/d/$id\r\n"
+        else s"Refresh: 0; URL=/d/$id\r\n")
+      val reload = warcRespRec(s"http://plain.example/p/$id",
+        "text/html",
+        s"<p>plain page $id reloads itself.</p>".getBytes("UTF-8"),
+        "Refresh: 30\r\n")
+      val mailto = warcRespRec(s"http://spam.example/m/$id",
+        "text/html",
+        s"<p>mailto page $id goes nowhere.</p>".getBytes("UTF-8"),
+        "Refresh: 0; url=mailto:x@y.example\r\n")
+      hop ++ interstitial ++ reload ++ mailto
+    },
+    "warc_q359" -> junkEvery50th("warc? no") { id =>
+      val tracked = warcRespRec(
+        s"http://m$id.example/a/$id?utm_source=nl", "text/html",
+        (s"<p>article $id version one keeps plenty of good " +
+          "english words.</p>").getBytes("UTF-8"))
+      val bare = warcRespRec(s"http://m$id.example/a/$id", "text/html",
+        (s"<p>article $id version two keeps plenty of different " +
+          "english words.</p>").getBytes("UTF-8"))
+      val paged = warcRespRec(
+        s"http://m$id.example/a/$id?page=2", "text/html",
+        (s"<p>article $id page two keeps plenty of extra " +
+          "english words.</p>").getBytes("UTF-8"))
+      val moved = warcRedirect(s"http://old$id.example/o/$id?utm_campaign=x",
+        "301 Moved", s"http://m$id.example/a/$id?utm_medium=email")
+      val oldPage = warcRespRec(s"http://old$id.example/o/$id",
+        "text/html",
+        (s"<p>article $id old home keeps plenty of good english " +
+          "words too.</p>").getBytes("UTF-8"))
+      tracked ++ bare ++ paged ++ moved ++ oldPage
+    })
 
-  /** Executor-side on-disk fixture writer: one file per doc id under
-    * `java.io.tmpdir/graft_<dirTag>_<sf hash>`, named by the
-    * `fileName` pattern. Files are written in EXECUTORS (the fixture
-    * is data, the driver only collects the path strings — O(files)
-    * metadata, the same class as Spark's own file listings), cached by
-    * existence across runs, and tmp-write + rename keeps concurrent
-    * generations safe. ASSUMPTION: executors and the reader tasks
-    * share one filesystem (true for local[N], the only harness these
-    * fixtures serve). On a multi-node cluster point the generation at
-    * a shared directory (HDFS/NFS) instead — the readers themselves
-    * are location-agnostic. */
-  private[graft] def fixtureFiles(s: SparkSession, d: String, dirTag: String,
+  /** In-plan door: the fixture `tag` as a [[graft.sources.Multimodal
+    * .asMedia]] frame, one payload per doc id, built in executors over
+    * [[docIds]]. */
+  private def fixtureMedia(s: SparkSession, d: String, tag: String,
+                           mediaType: String): DataFrame = {
+    import s.implicits._
+    val mk = fixtures(tag)
+    graft.sources.Multimodal.asMedia(
+      docIds(s, d).map(id => (id, mk(id))).toDF("doc_id", "payload"),
+      "doc_id", "payload", mediaType)
+  }
+
+  /** Executor-side fixture file writer: one file per id of `ids` under
+    * `dir`, named by the `fileName` pattern. Files are written in
+    * EXECUTORS (the fixture is data, the driver only collects the path
+    * strings — O(files) metadata, the same class as Spark's own file
+    * listings), cached by existence across runs, and tmp-write +
+    * rename keeps concurrent generations safe. ASSUMPTION: executors
+    * and the reader tasks share one filesystem (true for local[N], the
+    * only harness these fixtures serve). On a multi-node cluster point
+    * the generation at a shared directory (HDFS/NFS) instead — the
+    * readers themselves are location-agnostic. */
+  private[graft] def fixtureFiles(ids: Dataset[Long], dir: java.io.File,
                                   fileName: String)(
       mk: Long => Array[Byte]): Seq[String] = {
-    import s.implicits._
-    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_${dirTag}_${Integer.toHexString(d.hashCode)}")
-    docIds(s, d).map { id =>
+    val spark = ids.sparkSession
+    import spark.implicits._
+    ids.map { id =>
       val f = new java.io.File(dir, fileName.format(id))
       if (!f.exists) {
         dir.mkdirs()
@@ -902,12 +1877,18 @@ object SparkEntry {
       f.getAbsolutePath
     }.collect().toSeq.sorted
   }
-  /** The paths of the [[diskFixtures]] fixture `dirTag`. */
-  private def fixturePaths(s: SparkSession, d: String, dirTag: String)
-      : Seq[String] = {
-    val (fileName, mk) = diskFixtures(dirTag)
-    fixtureFiles(s, d, dirTag, fileName)(mk)
-  }
+  /** On-disk door: the paths of the fixture `tag`, one `fileName` file
+    * per doc id under `java.io.tmpdir/graft_<tag>_<sf hash>`. */
+  private def fixturePaths(s: SparkSession, d: String, tag: String,
+                           fileName: String): Seq[String] =
+    fixtureFiles(docIds(s, d), new java.io.File(
+      System.getProperty("java.io.tmpdir"),
+      s"graft_${tag}_${Integer.toHexString(d.hashCode)}"), fileName)(
+      fixtures(tag))
+  /** The doc id a fixture file's name carries (`w00000012.warc.zst`
+    * → 12). */
+  private def fixtureId(path: Column): Column =
+    regexp_extract(path, "(\\d+)\\.[^/]*$", 1).cast("long")
 
   /** q288's oracle, GENERATED from [[graft.llm.LangId.CrawlProfiles]]
     * and CrawlSamples: the fixture text (per-id sample repeated 1–3×),
@@ -1023,7 +2004,7 @@ object SparkEntry {
     val bos = new java.io.ByteArrayOutputStream()
     val z = new java.util.zip.ZipOutputStream(bos)
     entries.foreach { case (name, body) =>
-      z.putNextEntry(new java.util.zip.ZipEntry(name))
+      z.putNextEntry(zipEntry(name))
       if (!name.endsWith("/")) z.write(body)
       z.closeEntry()
     }
@@ -5047,27 +6028,8 @@ object SparkEntry {
     // surface as nulls, not errors. Map-only; payload bytes never
     // shuffle (the Multimodal plumbing contract).
     "q233_pcm_decode" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "not audio at all".getBytes("UTF-8"))
-        else {
-          val n = (8 + id % 32).toInt
-          val b = java.nio.ByteBuffer.allocate(44 + n * 2)
-            .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-          b.put("RIFF".getBytes("US-ASCII")).putInt(36 + n * 2)
-            .put("WAVE".getBytes("US-ASCII"))
-            .put("fmt ".getBytes("US-ASCII")).putInt(16)
-            .putShort(1).putShort(1).putInt(8000).putInt(16000)
-            .putShort(2).putShort(16)
-            .put("data".getBytes("US-ASCII")).putInt(n * 2)
-          (0 until n).foreach { i =>
-            b.putShort(((((id * 7 + i * 5) % 16) - 8) * 4096).toShort)
-          }
-          (id, b.array())
-        }
-      }.toDF("doc_id", "wav")
       graft.sources.Multimodal.describePcm(
-        graft.sources.Multimodal.asMedia(pay, "doc_id", "wav", "audio"))
+        fixtureMedia(s, d, "wav_q233", "audio"))
         .orderBy("media_id")
     }),
 
@@ -5083,34 +6045,8 @@ object SparkEntry {
     // offset) is decoded exactly. Every 50th payload is non-image →
     // nulls. Map-only; payloads never shuffle.
     "q234_bmp_decode" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "not an image".getBytes("UTF-8"))
-        else {
-          val w = (2 + id % 6).toInt; val h = (1 + id % 4).toInt
-          val rowBytes = ((w * 3 + 3) / 4) * 4
-          val size = 54 + rowBytes * h
-          val b = java.nio.ByteBuffer.allocate(size)
-            .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-          b.put('B'.toByte).put('M'.toByte).putInt(size)
-            .putShort(0).putShort(0).putInt(54)
-          b.putInt(40).putInt(w).putInt(h).putShort(1).putShort(24)
-            .putInt(0).putInt(rowBytes * h)
-            .putInt(2835).putInt(2835).putInt(0).putInt(0)
-          (0 until h).foreach { row =>
-            val y = h - 1 - row // bottom-up row order
-            (0 until w).foreach { x =>
-              b.put(((id * 11 + x + y * 17) % 256).toByte)      // B
-              b.put(((id * 7 + x * 13 + y * 3) % 256).toByte)   // G
-              b.put(((id * 3 + x * 5 + y * 11) % 256).toByte)   // R
-            }
-            (w * 3 until rowBytes).foreach(_ => b.put(0.toByte))
-          }
-          (id, b.array())
-        }
-      }.toDF("doc_id", "bmp")
       graft.sources.Multimodal.describeBmp(
-        graft.sources.Multimodal.asMedia(pay, "doc_id", "bmp", "image"))
+        fixtureMedia(s, d, "bmp_q234", "image"))
         .orderBy("media_id")
     }),
 
@@ -5126,33 +6062,8 @@ object SparkEntry {
     // the walker must SKIP via sub-block lengths — decoding them is
     // exactly what this tier doesn't need. Map-only, no shuffle.
     "q235_gif_frames" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "definitely not a gif".getBytes("UTF-8"))
-        else {
-          val w = (2 + id % 7).toInt; val h = (1 + id % 3).toInt
-          val nf = (1 + id % 5).toInt
-          val bb = new java.io.ByteArrayOutputStream()
-          def b(x: Int): Unit = bb.write(x & 0xff)
-          "GIF89a".getBytes("US-ASCII").foreach(x => bb.write(x))
-          b(w); b(w >> 8); b(h); b(h >> 8) // logical screen w, h (LE)
-          b(0); b(0); b(0)                 // no GCT, bg, aspect
-          (0 until nf).foreach { f =>
-            val delay = (10 + (id + f) % 20).toInt // hundredths of a second
-            b(0x21); b(0xf9); b(4); b(0)          // GCE: ext, label, size, flags
-            b(delay); b(delay >> 8); b(0); b(0)   // delay LE, transparent, term
-            b(0x2c); b(0); b(0); b(0); b(0)       // image descriptor at (0,0)
-            b(w); b(w >> 8); b(h); b(h >> 8); b(0) // frame w/h, no LCT
-            b(2)                                   // LZW min code size
-            b(3); b((id + f).toInt & 0xff); b(0x55); b(0xaa) // garbage data block
-            b(0)                                   // sub-block terminator
-          }
-          b(0x3b) // trailer
-          (id, bb.toByteArray)
-        }
-      }.toDF("doc_id", "gif")
       graft.sources.Multimodal.describeGif(
-        graft.sources.Multimodal.asMedia(pay, "doc_id", "gif", "video"))
+        fixtureMedia(s, d, "gif_q235", "video"))
         .orderBy("media_id")
     }),
 
@@ -5220,19 +6131,8 @@ object SparkEntry {
     // THIRD party chose; this fixture uses filter 0 so the formula
     // stays SQL-replayable.
     "q242_png_decode" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "png? hardly".getBytes("UTF-8"))
-        else {
-          val w = (2 + id % 5).toInt; val h = (1 + id % 3).toInt
-          (id, pngRgbFixture(w, h, (x, y) => (
-            ((id * 5 + x * 7 + y * 13) % 256).toInt,
-            ((id * 3 + x * 11 + y) % 256).toInt,
-            ((id + x + y * 19) % 256).toInt)))
-        }
-      }.toDF("doc_id", "png")
       graft.sources.Multimodal.describePng(
-        graft.sources.Multimodal.asMedia(pay, "doc_id", "png", "image"))
+        fixtureMedia(s, d, "png_q242", "image"))
         .orderBy("media_id")
     }),
 
@@ -5247,41 +6147,8 @@ object SparkEntry {
     // 50th payload is non-PNG → nulls. Map-only; payloads never
     // shuffle.
     "q244_png_palette" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "png? still not".getBytes("UTF-8"))
-        else {
-          val depth = Seq(1, 2, 4, 8)((id % 4).toInt)
-          val n = 1 << depth
-          val w = (3 + id % 6).toInt; val h = (1 + id % 4).toInt
-          val stride = (w * depth + 7) / 8
-          val raw = new Array[Byte](h * (1 + stride))
-          val perByte = 8 / depth
-          (0 until h).foreach { y =>
-            val base = y * (1 + stride)
-            raw(base) = 0 // filter None
-            (0 until w).foreach { x =>
-              val idx = ((id + x * 3 + y * 5) % n).toInt
-              val shift = 8 - depth - (x % perByte) * depth
-              raw(base + 1 + x / perByte) =
-                (raw(base + 1 + x / perByte) | (idx << shift)).toByte
-            }
-          }
-          val plte = Array.tabulate(n * 3) { k =>
-            val i = k / 3
-            (k % 3 match {
-              case 0 => (i * 37) % 256
-              case 1 => (i * 59) % 256
-              case _ => (i * 83) % 256
-            }).toByte
-          }
-          (id, pngSig ++ pngChunk("IHDR", pngIhdr(w, h, depth, 3)) ++
-            pngChunk("PLTE", plte) ++ pngChunk("IDAT", deflateFully(raw)) ++
-            pngChunk("IEND", Array.emptyByteArray))
-        }
-      }.toDF("doc_id", "png")
       graft.sources.Multimodal.describePng(
-        graft.sources.Multimodal.asMedia(pay, "doc_id", "png", "image"))
+        fixtureMedia(s, d, "png_q244", "image"))
         .orderBy("media_id")
     }),
 
@@ -5295,14 +6162,8 @@ object SparkEntry {
     // pairs share [[graft.sources.Multimodal.hammingPairs64]]
     // (q252-pinned). Map-only.
     "q253_audio_fingerprint" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "audio? inaudible".getBytes("UTF-8"))
-        else (id, auFixture(1, 65 * (2 + id % 3).toInt,
-          i => ((id * 7 + i * 13) % 256).toInt))
-      }.toDF("doc_id", "snd")
       graft.sources.Multimodal.describeAudioHash(
-          graft.sources.Multimodal.asMedia(pay, "doc_id", "snd", "audio"))
+          fixtureMedia(s, d, "snd_q253", "audio"))
         .select(col("media_id"),
           shiftrightunsigned(col("ahash"), 32).as("ahash_hi"),
           (col("ahash").bitwiseAND(lit(0xffffffffL))).as("ahash_lo"))
@@ -5320,25 +6181,8 @@ object SparkEntry {
     // sides (mp4: 512·ns·1000/12800 = 40·ns; avi: frames·µsf//1000).
     // Map-only — payload bytes never cross a shuffle.
     "q254_video_metadata" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "video? nope".getBytes("UTF-8"))
-        else if (id % 7 == 3)
-          (id, aviFixture((320 + (id % 5) * 16).toInt,
-            (240 + (id % 4) * 16).toInt, (24 + id % 100).toInt,
-            (33000 + (id % 3) * 1000).toInt, (1 + id % 2).toInt))
-        else {
-          val ns = (24 + id % 96).toInt
-          val codec = (id % 3) match {
-            case 0 => "avc1"; case 1 => "hvc1"; case _ => "vp09" }
-          (id, mp4Fixture(Seq(
-            (1, "vide", codec, (16 * (2 + id % 20)).toInt,
-              (9 * (2 + id % 20)).toInt, ns, 12800, 512 * ns),
-            (2, "soun", "mp4a", 0, 0, 2 * ns, 48000, 1024 * ns))))
-        }
-      }.toDF("doc_id", "vid")
       graft.sources.Multimodal.describeVideo(
-          graft.sources.Multimodal.asMedia(pay, "doc_id", "vid", "video"))
+          fixtureMedia(s, d, "vid_q254", "video"))
         .orderBy("media_id")
     }),
 
@@ -5350,20 +6194,8 @@ object SparkEntry {
     // SQL; EBML headers carry no per-track sample count, so
     // n_samples is null BY CONTRACT on this leg. Map-only.
     "q255_mkv_metadata" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "ebml? hardly".getBytes("UTF-8"))
-        else {
-          val codec = (id % 3) match {
-            case 0 => "V_VP9"; case 1 => "V_AV1"; case _ => "V_MPEG4/ISO/AVC" }
-          (id, mkvFixture(if (id % 2 == 0) "webm" else "matroska",
-            (1000 + id % 900).toInt, Seq(
-              (1, 1, codec, (16 * (2 + id % 30)).toInt, (9 * (2 + id % 30)).toInt),
-              (2, 2, "A_OPUS", 0, 0))))
-        }
-      }.toDF("doc_id", "vid")
       graft.sources.Multimodal.describeVideo(
-          graft.sources.Multimodal.asMedia(pay, "doc_id", "vid", "video"))
+          fixtureMedia(s, d, "vid_q255", "video"))
         .orderBy("media_id")
     }),
 
@@ -5375,18 +6207,8 @@ object SparkEntry {
     // bare-TIFF entry instead). Synthesize-and-replay oracle: string
     // and integer formulas replay directly. Map-only.
     "q256_exif" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "exif? never".getBytes("UTF-8"))
-        else {
-          val tiff = exifTiff((1 + id % 8).toInt, s"Camera${id % 5}",
-            s"Model${id % 4}", f"2020:01:01 00:00:${id % 60}%02d",
-            (16 * (1 + id % 10)).toInt, (9 * (1 + id % 10)).toInt)
-          if (id % 5 == 1) (id, tiff) else (id, jpegWithExif(tiff))
-        }
-      }.toDF("doc_id", "img")
       graft.sources.Multimodal.describeExif(
-          graft.sources.Multimodal.asMedia(pay, "doc_id", "img", "image"))
+          fixtureMedia(s, d, "img_q256", "image"))
         .orderBy("media_id")
     }),
 
@@ -5397,17 +6219,8 @@ object SparkEntry {
     // fixture makes frame length 4.5·kbps and duration 36 ms/frame
     // on both engines). Map-only.
     "q257_mp3_metadata" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "mp3? silence".getBytes("UTF-8"))
-        else {
-          val kbps = (id % 3) match { case 0 => 64; case 1 => 128; case _ => 160 }
-          (id, mp3Fixture(kbps, id % 2 == 0, (5 + id % 20).toInt,
-            if (id % 3 == 0) (17 + id % 40).toInt else 0))
-        }
-      }.toDF("doc_id", "snd")
       graft.sources.Multimodal.describeMp3(
-          graft.sources.Multimodal.asMedia(pay, "doc_id", "snd", "audio"))
+          fixtureMedia(s, d, "snd_q257", "audio"))
         .orderBy("media_id")
     }),
 
@@ -5421,29 +6234,8 @@ object SparkEntry {
     // lossy codec SQL-replayable per frame. flatMap kernel — payload
     // bytes never cross a shuffle at any corpus size.
     "q258_video_frames" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "avi? no".getBytes("UTF-8"))
-        else if (id % 5 == 2) {
-          val w = (4 + id % 7).toInt; val h = (2 + id % 3).toInt
-          val n = (2 + id % 4).toInt
-          val frames = (0 until n).map(f => dibFrameFixture(w, h, (x, r) => (
-            ((id + f * 17 + x * 3 + r * 7) % 256).toInt,
-            ((id * 2 + f * 5 + x * 11 + r) % 256).toInt,
-            ((id * 3 + f + x + r * 13) % 256).toInt)))
-          (id, aviFixture(mjpeg = false, w, h, frames, audioFirst = false))
-        } else {
-          val tw = (1 + id % 2).toInt
-          val n = (2 + id % 3).toInt
-          val frames = (0 until n).map(f => jpegFlatTileFixture(tw, 1,
-            (tx, _) => ((id * 7 + f * 11 + tx * 13) % 256).toInt,
-            progressive = false))
-          (id, aviFixture(mjpeg = true, 16 * tw, 16, frames,
-            audioFirst = id % 4 == 1))
-        }
-      }.toDF("doc_id", "vid")
       graft.sources.Multimodal.describeVideoFrames(
-          graft.sources.Multimodal.asMedia(pay, "doc_id", "vid", "video"))
+          fixtureMedia(s, d, "vid_q258", "video"))
         .orderBy("media_id", "frame_idx")
     }),
 
@@ -5456,20 +6248,8 @@ object SparkEntry {
     // q258's mjpeg leg, so the oracle replays them; the container
     // routing is what's under test. flatMap kernel.
     "q274_mp4_frames" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "mp4? no".getBytes("UTF-8"))
-        else {
-          val tw = (1 + id % 2).toInt
-          val n = (2 + id % 3).toInt
-          val frames = (0 until n).map(f => jpegFlatTileFixture(tw, 1,
-            (tx, _) => ((id * 7 + f * 11 + tx * 13) % 256).toInt,
-            progressive = false))
-          (id, mp4MjpegFixture(16 * tw, 16, frames, multiChunk = id % 2 == 1))
-        }
-      }.toDF("doc_id", "vid")
       graft.sources.Multimodal.describeVideoFrames(
-          graft.sources.Multimodal.asMedia(pay, "doc_id", "vid", "video"))
+          fixtureMedia(s, d, "vid_q274", "video"))
         .orderBy("media_id", "frame_idx")
     }),
 
@@ -5483,30 +6263,8 @@ object SparkEntry {
     // (quality-1.0 tiles decode bit-exactly, r=g=b=v ⇒ luma=1000·v).
     // Hash ships as 32-bit halves (q251 contract). Map-only.
     "q259_video_framehash" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "video? hardly".getBytes("UTF-8"))
-        else if (id % 5 == 2) {
-          val tw = (1 + id % 2).toInt
-          val n = (2 + id % 3).toInt
-          val frames = (0 until n).map(f => jpegFlatTileFixture(tw, 1,
-            (tx, _) => ((id * 7 + f * 11 + tx * 13) % 256).toInt,
-            progressive = false))
-          (id, aviFixture(mjpeg = true, 16 * tw, 16, frames,
-            audioFirst = id % 4 == 1))
-        } else {
-          val n = (2 + id % 4).toInt
-          val frames = (0 until n).map(f => dibFrameFixture(18, 16, (x, r) => {
-            val y = 15 - r
-            (((id * 5 + f * 7 + x * 13 + y * 29) % 256).toInt,
-              ((id * 3 + f * 11 + x * 3 + y * 17) % 256).toInt,
-              ((id * 7 + f * 13 + x + y * 7) % 256).toInt)
-          }))
-          (id, aviFixture(mjpeg = false, 18, 16, frames, audioFirst = false))
-        }
-      }.toDF("doc_id", "vid")
       graft.sources.Multimodal.describeVideoHashes(
-          graft.sources.Multimodal.asMedia(pay, "doc_id", "vid", "video"))
+          fixtureMedia(s, d, "vid_q259", "video"))
         .select(col("media_id"), col("frame_idx"),
           shiftrightunsigned(col("dhash"), 32).as("dhash_hi"),
           (col("dhash").bitwiseAND(lit(0xffffffffL))).as("dhash_lo"))
@@ -5525,24 +6283,8 @@ object SparkEntry {
     // all-pairs aligned XOR bit counts — pinning the hash, the
     // pigeonhole completeness AND the threshold arithmetic.
     "q260_video_neardup" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "video? hardly".getBytes("UTF-8"))
-        else {
-          val g = id / 6
-          val n = (3 + g % 2).toInt
-          val frames = (0 until n).map(f => dibFrameFixture(18, 16, (x, r) => {
-            val y = 15 - r
-            val bump = if (x == (id % 6) * 2 && y == 3) 40 else 0
-            (math.min(255, ((g * 11 + f * 19 + x * 17 + y * 23) % 200) + bump).toInt,
-              ((g * 13 + f * 7 + x * 5 + y * 19) % 256).toInt,
-              ((g * 17 + f * 3 + x * 7 + y * 3) % 256).toInt)
-          }))
-          (id, aviFixture(mjpeg = false, 18, 16, frames, audioFirst = false))
-        }
-      }.toDF("doc_id", "vid")
       val hashes = graft.sources.Multimodal.describeVideoHashes(
-        graft.sources.Multimodal.asMedia(pay, "doc_id", "vid", "video"))
+        fixtureMedia(s, d, "vid_q260", "video"))
       graft.sources.Multimodal.videoNearDupPairs(hashes, 3)
         .select(col("id1"), col("id2"),
           col("matched_frames").cast("long").as("matched_frames"),
@@ -5560,34 +6302,8 @@ object SparkEntry {
     // formulas and the exact text (chr(10) for the SRT two-liners).
     // flatMap kernel, payloads never shuffle.
     "q261_subtitles" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "subtitle? nope".getBytes("UTF-8"))
-        else {
-          val n = (1 + id % 4).toInt
-          def startMs(k: Int) = (id % 900) * 1000 + k * 1500
-          val body = if (id % 3 == 0) {
-            val blocks = (0 until n).map { k =>
-              s"cue-$id-$k\n${subStamp(startMs(k), '.', short = true)} --> " +
-                s"${subStamp(startMs(k) + 1200, '.', short = true)} align:start\n" +
-                s"cue $id $k"
-            }
-            s"WEBVTT - fixture $id\nKind: captions\n\nNOTE generated fixture\n\n" +
-              blocks.mkString("\n\n") + "\n"
-          } else {
-            val blocks = (0 until n).map { k =>
-              val extra = if (k % 2 == 0) s"\nmore $k" else ""
-              s"${k + 1}\n${subStamp(startMs(k), ',', short = false)} --> " +
-                s"${subStamp(startMs(k) + 1200, ',', short = false)}\n" +
-                s"cue $id $k$extra"
-            }
-            blocks.mkString("\n\n") + "\n"
-          }
-          (id, body.getBytes("UTF-8"))
-        }
-      }.toDF("doc_id", "sub")
       graft.sources.Subtitles.describeSubtitles(
-          graft.sources.Multimodal.asMedia(pay, "doc_id", "sub", "subtitle"))
+          fixtureMedia(s, d, "sub_q261", "subtitle"))
         .orderBy("media_id", "cue_idx")
     }),
 
@@ -5601,25 +6317,8 @@ object SparkEntry {
     // chain whatever each boundary's actual distance is. One window
     // shuffle keyed by video, then a partial-agg rollup.
     "q262_scene_cuts" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "video? hardly".getBytes("UTF-8"))
-        else {
-          val n = (5 + id % 4).toInt
-          val frames = (0 until n).map { f =>
-            val sc = f / 3
-            dibFrameFixture(18, 16, (x, r) => {
-              val y = 15 - r
-              (((id * 5 + sc * 97 + x * 13 + y * 29) % 256).toInt,
-                ((id * 3 + sc * 89 + x * 3 + y * 17) % 256).toInt,
-                ((id * 7 + sc * 83 + x + y * 7) % 256).toInt)
-            })
-          }
-          (id, aviFixture(mjpeg = false, 18, 16, frames, audioFirst = false))
-        }
-      }.toDF("doc_id", "vid")
       val hashes = graft.sources.Multimodal.describeVideoHashes(
-        graft.sources.Multimodal.asMedia(pay, "doc_id", "vid", "video"))
+        fixtureMedia(s, d, "vid_q262", "video"))
       graft.sources.Multimodal.sceneCuts(hashes, 10)
         .select(col("media_id"),
           col("scene_idx").cast("long").as("scene_idx"),
@@ -5637,35 +6336,10 @@ object SparkEntry {
     // cross product). The oracle replays cue timings, frame grid
     // (25 fps ⇒ 40 ms) and the argmin pick.
     "q263_cue_frame_align" -> ((s, d) => {
-      import s.implicits._
-      val base = docIds(s, d)
-      val subPay = base.map { id =>
-        if (id % 50 == 0) (id, "subtitle? nope".getBytes("UTF-8"))
-        else {
-          val n = (1 + id % 3).toInt
-          val blocks = (0 until n).map { k =>
-            val st = k * 90L + (id % 7) * 10
-            s"${k + 1}\n${subStamp(st, ',', short = false)} --> " +
-              s"${subStamp(st + 100, ',', short = false)}\ncue $id $k"
-          }
-          (id, (blocks.mkString("\n\n") + "\n").getBytes("UTF-8"))
-        }
-      }.toDF("doc_id", "sub")
-      val vidPay = base.map { id =>
-        if (id % 50 == 0) (id, "video? hardly".getBytes("UTF-8"))
-        else {
-          val n = (5 + id % 4).toInt
-          val frames = (0 until n).map(f => dibFrameFixture(18, 16, (x, r) => (
-            ((id + f * 17 + x * 3 + r * 7) % 256).toInt,
-            ((id * 2 + f * 5 + x * 11 + r) % 256).toInt,
-            ((id * 3 + f + x + r * 13) % 256).toInt)))
-          (id, aviFixture(mjpeg = false, 18, 16, frames, audioFirst = false))
-        }
-      }.toDF("doc_id", "vid")
       val cues = graft.sources.Subtitles.describeSubtitles(
-        graft.sources.Multimodal.asMedia(subPay, "doc_id", "sub", "subtitle"))
+        fixtureMedia(s, d, "sub_q263", "subtitle"))
       val frames = graft.sources.Multimodal.describeVideoFrames(
-        graft.sources.Multimodal.asMedia(vidPay, "doc_id", "vid", "video"))
+        fixtureMedia(s, d, "vid_q263", "video"))
       graft.sources.Subtitles.alignCuesToFrames(cues, frames, 40)
         .orderBy("media_id", "cue_idx")
     }),
@@ -5678,21 +6352,8 @@ object SparkEntry {
     // <v Speaker>…</v> with nested <i>, an inline timestamp and
     // &amp;; the oracle states the clean text directly. Map-only.
     "q264_cue_markup" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "subtitle? nope".getBytes("UTF-8"))
-        else {
-          val n = (1 + id % 3).toInt
-          val blocks = (0 until n).map { k =>
-            val st = k * 2000L + id % 100
-            s"${subStamp(st, '.', short = true)} --> ${subStamp(st + 1500, '.', short = true)}\n" +
-              s"<v Speaker${id % 3}>cue <i>$id</i> <00:00:01.000>$k &amp; more</v>"
-          }
-          (id, (s"WEBVTT\n\n" + blocks.mkString("\n\n") + "\n").getBytes("UTF-8"))
-        }
-      }.toDF("doc_id", "sub")
       graft.sources.Subtitles.describeSubtitles(
-          graft.sources.Multimodal.asMedia(pay, "doc_id", "sub", "subtitle"),
+          fixtureMedia(s, d, "sub_q264", "subtitle"),
           1 << 16, stripMarkup = true)
         .orderBy("media_id", "cue_idx")
     }),
@@ -5706,24 +6367,8 @@ object SparkEntry {
     // video counts over the same folded key. One text-keyed
     // partial-agg shuffle + a text-keyed join back.
     "q265_cue_boilerplate" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "subtitle? nope".getBytes("UTF-8"))
-        else {
-          val n = (2 + id % 2).toInt
-          val blocks = (0 until n).map { k =>
-            val st = k * 3000L
-            val text =
-              if (k == 0) { if (id % 2 == 0) "Thanks For Watching" else "thanks for watching" }
-              else s"unique cue $id $k"
-            s"${k + 1}\n${subStamp(st, ',', short = false)} --> " +
-              s"${subStamp(st + 2500, ',', short = false)}\n$text"
-          }
-          (id, (blocks.mkString("\n\n") + "\n").getBytes("UTF-8"))
-        }
-      }.toDF("doc_id", "sub")
       val cues = graft.sources.Subtitles.describeSubtitles(
-        graft.sources.Multimodal.asMedia(pay, "doc_id", "sub", "subtitle"))
+        fixtureMedia(s, d, "sub_q265", "subtitle"))
       graft.sources.Subtitles.boilerplateCues(cues, 5)
         .select(col("media_id"), col("cue_idx"), col("text"),
           col("n_videos").cast("long").as("n_videos"), col("is_boilerplate"))
@@ -5742,29 +6387,17 @@ object SparkEntry {
     // keyed joins — nothing new at 100 TB.
     "q266_curation_v6" -> ((s, d) => {
       import s.implicits._
-      val base = docIds(s, d)
       // AVI payloads come from the on-disk fixture (bytes identical
       // to the r19 in-plan synthesis — optimization r20 item 3, the
       // q344 pattern): the timed entry measures decode+pipeline, not
       // ~4,900 per-run AVI encodes. One small file per row, read in
       // the map kernel; file name carries the id.
-      val vidPay = s.createDataset(fixturePaths(s, d, "avi_v6_v1"))
+      val vidPay = s.createDataset(fixturePaths(s, d, "avi_v6_v1", "v%08d.avi"))
         .repartition(s.sparkContext.defaultParallelism).map { p =>
         val name = new java.io.File(p).getName
         val id = name.substring(1, name.length - 4).toLong
         (id, java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)))
       }.toDF("doc_id", "vid")
-      val subPay = base.map { id =>
-        if (id % 50 == 0) (id, "subtitle? nope".getBytes("UTF-8"))
-        else {
-          val n = (2 + id % 2).toInt
-          val blocks = (0 until n).map { k =>
-            s"${k + 1}\n${subStamp(k * 110L, ',', short = false)} --> " +
-              s"${subStamp(k * 110L + 100, ',', short = false)}\ncue $id $k"
-          }
-          (id, (blocks.mkString("\n\n") + "\n").getBytes("UTF-8"))
-        }
-      }.toDF("doc_id", "sub")
       val hashes = graft.sources.Multimodal.describeVideoHashes(
           graft.sources.Multimodal.asMedia(vidPay, "doc_id", "vid", "video"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -5775,7 +6408,7 @@ object SparkEntry {
         .select(col("media_id").as("s_vid"), col("scene_idx"),
           col("start_frame"), col("n_frames"))
       val cues = graft.sources.Subtitles.describeSubtitles(
-        graft.sources.Multimodal.asMedia(subPay, "doc_id", "sub", "subtitle"))
+        fixtureMedia(s, d, "sub_q266", "subtitle"))
       val aligned = graft.sources.Subtitles.alignCuesToFrames(
         cues, kept.select(col("media_id"), col("frame_idx")), 40)
       aligned.join(scenes,
@@ -5822,23 +6455,8 @@ object SparkEntry {
     // the walk is LOUDLY corrupt with zero members, never silently
     // empty. flatMap kernel; members never shuffle.
     "q316_sevenz_members" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "7z? no".getBytes("UTF-8"))
-        else {
-          val n = (1 + id % 3).toInt
-          val members = Seq(("d/", Array.emptyByteArray)) ++
-            (0 until n).map(k =>
-              (s"m$k.txt", s"7z member $id $k".getBytes("UTF-8")))
-          // LZMA2 on 1-in-4 ids pins the codec path; COPY elsewhere
-          // keeps the per-row encode off Verify's critical path
-          val bytes = graft.sources.Archives.sevenZFixture(members,
-            lzma2 = id % 4 == 0)
-          (id, if (id % 7 == 3) bytes.dropRight(40) else bytes)
-        }
-      }.toDF("doc_id", "sz")
       graft.sources.Archives.extractSevenZEntries(
-          graft.sources.Multimodal.asMedia(pay, "doc_id", "sz", "archive"))
+          fixtureMedia(s, d, "sz_q316", "archive"))
         .select(col("media_id"), col("entry_idx"), col("name"),
           col("outcome"), col("payload").cast("string").as("text"))
         .orderBy("media_id", "entry_idx")
@@ -5851,26 +6469,8 @@ object SparkEntry {
     // The oracle replays names and LENGTH() of the content formulas.
     // flatMap kernel, payloads never shuffle.
     "q268_archive_entries" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "archive? no".getBytes("UTF-8"))
-        else if (id % 3 == 0) {
-          val n = (1 + (id / 3) % 3).toInt
-          (id, zipFixture((0 until n).map(k =>
-            (s"f$k.txt", s"content $id $k".getBytes("UTF-8")))))
-        } else if (id % 3 == 1) {
-          val n = (1 + id % 2).toInt
-          (id, tarFixture(Seq(("d/", Array.emptyByteArray)) ++
-            (0 until n).map(k => (s"d/file$k", s"tar data $id $k".getBytes("UTF-8")))))
-        } else {
-          val bos = new java.io.ByteArrayOutputStream()
-          val g = new java.util.zip.GZIPOutputStream(bos)
-          g.write(s"gz payload $id".getBytes("UTF-8")); g.close()
-          (id, bos.toByteArray)
-        }
-      }.toDF("doc_id", "arc")
       graft.sources.Archives.describeArchives(
-          graft.sources.Multimodal.asMedia(pay, "doc_id", "arc", "archive"))
+          fixtureMedia(s, d, "arc_q268", "archive"))
         .orderBy("media_id", "entry_idx")
     }),
 
@@ -5882,13 +6482,8 @@ object SparkEntry {
     // channel sums the oracle replays. Two flatMap kernels, payloads
     // never shuffle.
     "q269_archive_media" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "archive? no".getBytes("UTF-8"))
-        else (id, zipFixture(bmpMembers(id)))
-      }.toDF("doc_id", "arc")
       val members = graft.sources.Archives.extractZipEntries(
-        graft.sources.Multimodal.asMedia(pay, "doc_id", "arc", "archive"))
+        fixtureMedia(s, d, "arc_q269", "archive"))
       val inner = members.select(
         (col("media_id") * 10 + col("entry_idx")).as("mid"), col("payload"))
       graft.sources.Multimodal.inspectMedia(
@@ -5905,9 +6500,8 @@ object SparkEntry {
     // listing). The oracle replays record indices, URIs and the
     // integer Content-Length arithmetic. flatMap kernel.
     "q270_warc_records" -> ((s, d) => {
-      val pay = warcPayloads(s, d)(id => gzipEvery4th(id, warcFixture(id)))
       graft.sources.Warc.describeWarc(
-          graft.sources.Multimodal.asMedia(pay, "doc_id", "warc", "warc"))
+          fixtureMedia(s, d, "warc_stream_v1", "warc"))
         .orderBy("media_id", "record_idx")
     }),
 
@@ -5918,9 +6512,8 @@ object SparkEntry {
     // records in every fixture MUST be excluded. The oracle states
     // URL and clean text from the formulas.
     "q271_warc_text" -> ((s, d) => {
-      val pay = warcPayloads(s, d)(id => gzipEvery4th(id, warcFixture(id)))
       graft.sources.Warc.warcHtmlText(
-          graft.sources.Multimodal.asMedia(pay, "doc_id", "warc", "warc"))
+          fixtureMedia(s, d, "warc_stream_v1", "warc"))
         .orderBy("media_id", "record_idx")
     }),
 
@@ -5962,9 +6555,8 @@ object SparkEntry {
     // same two windows. Shuffle classes: two keyed windows (canonical
     // url, content hash) — the web mirror of q266's video chain.
     "q273_curation_v7" -> ((s, d) => {
-      val pay = warcPayloads(s, d)(warcV7Fixture)
       val pages = graft.sources.Warc.warcHtmlText(
-        graft.sources.Multimodal.asMedia(pay, "doc_id", "warc", "warc"))
+        fixtureMedia(s, d, "warc_q273", "warc"))
       val canon = pages.withColumn("url_canon",
         graft.functions.CanonicalUrl(col("url")))
       val urlW = org.apache.spark.sql.expressions.Window
@@ -5990,11 +6582,9 @@ object SparkEntry {
     // formulas as q270, so the oracle is q270's with media_id
     // recovered from the file name.
     "q275_warc_stream" -> ((s, d) => {
-      import s.implicits._
-      val paths = fixturePaths(s, d, "warc_stream_v1")
+      val paths = fixturePaths(s, d, "warc_stream_v1", "w%08d.warc")
       graft.sources.Warc.describeWarcPaths(s, paths)
-        .withColumn("media_id",
-          regexp_extract(col("path"), "w(\\d+)\\.warc$", 1).cast("long"))
+        .withColumn("media_id", fixtureId(col("path")))
         .select("media_id", "record_idx", "warc_type", "target_uri",
           "content_length", "http_status", "content_type")
         .orderBy("media_id", "record_idx")
@@ -6005,11 +6595,9 @@ object SparkEntry {
     // text/html gate, charset-aware decode, html_to_text — with the
     // same page formulas.
     "q276_warc_stream_text" -> ((s, d) => {
-      import s.implicits._
-      val paths = fixturePaths(s, d, "warc_stream_v1")
+      val paths = fixturePaths(s, d, "warc_stream_v1", "w%08d.warc")
       graft.sources.Warc.warcPathsHtmlText(s, paths)
-        .withColumn("media_id",
-          regexp_extract(col("path"), "w(\\d+)\\.warc$", 1).cast("long"))
+        .withColumn("media_id", fixtureId(col("path")))
         .select("media_id", "record_idx", "url", "charset", "text")
         .orderBy("media_id", "record_idx")
     }),
@@ -6023,9 +6611,8 @@ object SparkEntry {
     // charset negotiation (header first, bounded meta sniff second,
     // utf-8 fallback).
     "q277_warc_charset" -> ((s, d) => {
-      val pay = warcPayloads(s, d)(charsetFixture)
       graft.sources.Warc.warcHtmlText(
-          graft.sources.Multimodal.asMedia(pay, "doc_id", "warc", "warc"))
+          fixtureMedia(s, d, "warc_q277", "warc"))
         .orderBy("media_id", "record_idx")
     }),
 
@@ -6130,9 +6717,8 @@ object SparkEntry {
     // Shuffle classes: two grouped reassemblies keyed by page + two
     // keyed windows — everything else is map-side.
     "q281_curation_v8" -> ((s, d) => {
-      val pay = warcPayloads(s, d)(warcV8Fixture)
       val pages = graft.sources.Warc.warcHtmlPages(
-        graft.sources.Multimodal.asMedia(pay, "doc_id", "warc", "warc"))
+        fixtureMedia(s, d, "warc_q281", "warc"))
       val blocks = pages.select(col("media_id"), col("record_idx"), col("url"),
           posexplode(graft.functions.HtmlBlocks(col("html"))))
         .select(col("media_id"), col("record_idx"), col("url"),
@@ -6288,47 +6874,8 @@ object SparkEntry {
     // same flatMap kernel on both doors (cell + streaming, shared
     // [[graft.sources.Warc]] walk code) — bodies still never shuffle.
     "q340_warc_http_decode" -> ((s, d) => {
-      val pay = warcPayloads(s, d) { id =>
-        val entity =
-          (s"<h1>Doc $id</h1><p>payload $id decodes exactly.</p>")
-            .getBytes("UTF-8")
-        def chunked(b: Array[Byte]): Array[Byte] = {
-          val cut = math.max(1, b.length / 3)
-          val o = new java.io.ByteArrayOutputStream()
-          def wr(t: String): Unit = o.write(t.getBytes("ISO-8859-1"))
-          wr(Integer.toHexString(cut) + ";x=1\r\n")
-          o.write(b, 0, cut); wr("\r\n")
-          wr(Integer.toHexString(b.length - cut) + "\r\n")
-          o.write(b, cut, b.length - cut); wr("\r\n")
-          wr("0\r\n\r\ntrailer: ignored\r\n")
-          o.toByteArray
-        }
-        def zlib(b: Array[Byte]): Array[Byte] = {
-          val df = new java.util.zip.Deflater()
-          df.setInput(b); df.finish()
-          val o = new java.io.ByteArrayOutputStream()
-          val buf = new Array[Byte](1024)
-          while (!df.finished()) o.write(buf, 0, df.deflate(buf))
-          df.end(); o.toByteArray
-        }
-        val (wire, body) = (id % 5) match {
-          case 1 => ("Transfer-Encoding: chunked\r\n", chunked(entity))
-          case 2 => ("Content-Encoding: gzip\r\n", gzipBytes(entity))
-          case 3 => ("Content-Encoding: deflate\r\n", zlib(entity))
-          case 4 => ("Content-Encoding: gzip\r\nTransfer-Encoding: chunked\r\n",
-            chunked(gzipBytes(entity)))
-          case _ =>
-            // r18: real brotli (the r17 arm was a lying claim pinned
-            // to br!undecoded — now the pure-JVM decoder reads it)
-            if (id % 3 == 0) ("Content-Encoding: br\r\n",
-              graft.sources.Brotli.encodeUncompressed(entity))
-            else ("", entity)
-        }
-        warcRespRec(s"http://ex.com/p/$id", "text/html; charset=utf-8",
-          body, wire)
-      }
       graft.sources.Warc.warcDocText(
-          graft.sources.Multimodal.asMedia(pay, "doc_id", "warc", "warc"))
+          fixtureMedia(s, d, "warc_q340", "warc"))
         .select("media_id", "record_idx", "url", "carrier", "encoding",
           "text")
         .orderBy("media_id")
@@ -6413,19 +6960,8 @@ object SparkEntry {
     // and pure-ASCII arms must stay utf-8. Declared pages are
     // untouched (q277 pins those). Map-only flatMap kernel.
     "q348_charset_fallback" -> ((s, d) => {
-      val pay = warcPayloads(s, d) { id =>
-        val (cs, body) = (id % 3) match {
-          case 0 => ("windows-1252",
-            s"<p>café page $id with a ’smart’ quote</p>")
-          case 1 => ("UTF-8", s"<p>café page $id in valid utf8</p>")
-          case _ => ("US-ASCII", s"<p>plain ascii page $id</p>")
-        }
-        val bytes = body.getBytes(cs)
-        // NO charset anywhere: bare text/html, no meta
-        warcRespRec(s"http://ex.com/cs/$id", "text/html", bytes)
-      }
       graft.sources.Warc.warcHtmlText(
-          graft.sources.Multimodal.asMedia(pay, "doc_id", "warc", "warc"))
+          fixtureMedia(s, d, "warc_q348", "warc"))
         .orderBy("media_id")
     }),
 
@@ -6445,27 +6981,8 @@ object SparkEntry {
     // Map-only flatMap kernel; q277/q348 pin declared and
     // Latin-undeclared behavior unchanged.
     "q349_cjk_sniff" -> ((s, d) => {
-      import s.implicits._
-      val ja = "これは日本語のテキストです。記事の本文が続きます。"
-      val ko = "한국어는 한글로 표기한다 기사 본문이 이어진다"
-      val zh = "这是一段中文文本没有空格 新闻正文在此继续展开"
-      val zhT = "這是一段繁體中文網頁沒有空格 新聞內容在這裡繼續"
-      val latin = "l'été café année passée déjà vu née et protégé"
-      val pay = warcPayloads(s, d) { id =>
-        val (cs, sample) = (id % 6) match {
-          case 0 => ("shift_jis", ja)
-          case 1 => ("euc-jp", ja)
-          case 2 => ("euc-kr", ko)
-          case 3 => ("gbk", zh)
-          case 4 => ("big5", zhT)
-          case _ => ("windows-1252", latin)
-        }
-        val bytes = s"<p>$sample page $id</p>".getBytes(cs)
-        // NO charset anywhere: bare text/html, no meta
-        warcRespRec(s"http://ex.com/cjk/$id", "text/html", bytes)
-      }
       graft.sources.Warc.warcHtmlText(
-          graft.sources.Multimodal.asMedia(pay, "doc_id", "warc", "warc"))
+          fixtureMedia(s, d, "warc_q349", "warc"))
         .orderBy("media_id")
     }),
 
@@ -6485,8 +7002,7 @@ object SparkEntry {
     // keyed left join of gated pages against the resolved edge map;
     // edges are the crawl's 3xx fraction.
     "q353_curation_v16" -> ((s, d) => {
-      val pay = q353Fixture(s, d)
-      val media = graft.sources.Multimodal.asMedia(pay, "doc_id", "warc", "warc")
+      val media = fixtureMedia(s, d, "warc_q353", "warc")
       // ONE decode walk for BOTH row kinds (the q232 diamond: persist
       // the fork, filter twice) — separate page/redirect readers
       // would gunzip and walk every container twice (the r17 lesson)
@@ -6514,25 +7030,8 @@ object SparkEntry {
     // (isolated accents never reach the ≥5-runs-of-3 floor). Same
     // map-only bounded-scan posture as q349.
     "q355_charset_cyrillic" -> ((s, d) => {
-      import s.implicits._
-      val ru = "Это русский текст статьи продолжение материала здесь"
-      val u16 = "утф text body here"
-      val latin = "l'été café année passée déjà vu née et protégé"
-      val pay = warcPayloads(s, d) { id =>
-        val bytes = (id % 6) match {
-          case 0 => s"<p>$ru page $id</p>".getBytes("KOI8-R")
-          case 1 => s"<p>$ru page $id</p>".getBytes("windows-1251")
-          case 2 => s"<p>$u16 page $id</p>".getBytes("UTF-16LE")
-          case 3 => s"<p>$u16 page $id</p>".getBytes("UTF-16BE")
-          case 4 => s"<p>$u16 page $id</p>".getBytes("UTF-16") // BOM'd
-          case _ => s"<p>$latin page $id</p>".getBytes("windows-1252")
-        }
-        // NO charset anywhere: bare text/html, no meta, no BOM
-        // except the one arm that pins BOM handling
-        warcRespRec(s"http://ex.com/cyr/$id", "text/html", bytes)
-      }
       graft.sources.Warc.warcHtmlText(
-          graft.sources.Multimodal.asMedia(pay, "doc_id", "warc", "warc"))
+          fixtureMedia(s, d, "warc_q355", "warc"))
         .orderBy("media_id")
     }),
 
@@ -6549,20 +7048,7 @@ object SparkEntry {
     // keeps its own independent quota. One keyed left join against
     // the resolved edge map; the cap is a keyed WindowGroupLimit.
     "q356_redirect_farm_cap" -> ((s, d) => {
-      val pay = warcPayloads(s, d) { id =>
-        val farm = (0 until 2).map { j =>
-          warcRedirect(s"http://t$j.example/p/$id", "301 Moved",
-            s"http://land.example/p/$id/$j") ++
-            warcRespRec(s"http://t$j.example/p/$id", "text/html",
-              (s"<p>farm content $id $j keeps plenty of good " +
-                "english words alive.</p>").getBytes("UTF-8"))
-        }.reduce(_ ++ _)
-        val ctrl = warcRespRec(s"http://ctrl.example/c/$id", "text/html",
-          (s"<p>control page $id keeps plenty of good english " +
-            "words too.</p>").getBytes("UTF-8"))
-        farm ++ ctrl
-      }
-      val media = graft.sources.Multimodal.asMedia(pay, "doc_id", "warc", "warc")
+      val media = fixtureMedia(s, d, "warc_q356", "warc")
       val rows = graft.sources.Warc.warcDocRows(media)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val pages = rows.where(col("kind") === "page")
@@ -6591,26 +7077,7 @@ object SparkEntry {
     // only by their ABSENCE from the resolved output. Body-free
     // listing walk (maxBody=0), map-only.
     "q357_refresh_header" -> ((s, d) => {
-      val pay = warcPayloads(s, d) { id =>
-        val hop = warcRedirect(s"http://s.example/a/$id", "302 Moved",
-          s"http://go.example/r/$id")
-        val interstitial = warcRespRec(s"http://go.example/r/$id",
-          "text/html",
-          s"<p>hold on, moving you along $id.</p>".getBytes("UTF-8"),
-          if (id % 2 == 0)
-            s"Refresh: 0; url=http://dest.example/d/$id\r\n"
-          else s"Refresh: 0; URL=/d/$id\r\n")
-        val reload = warcRespRec(s"http://plain.example/p/$id",
-          "text/html",
-          s"<p>plain page $id reloads itself.</p>".getBytes("UTF-8"),
-          "Refresh: 30\r\n")
-        val mailto = warcRespRec(s"http://spam.example/m/$id",
-          "text/html",
-          s"<p>mailto page $id goes nowhere.</p>".getBytes("UTF-8"),
-          "Refresh: 0; url=mailto:x@y.example\r\n")
-        hop ++ interstitial ++ reload ++ mailto
-      }
-      val media = graft.sources.Multimodal.asMedia(pay, "doc_id", "warc", "warc")
+      val media = fixtureMedia(s, d, "warc_q357", "warc")
       val edges = graft.sources.Warc.warcRedirects(media)
         .select(graft.functions.CanonicalUrl(col("url")).as("src"),
           col("target").as("dst"))
@@ -6663,27 +7130,7 @@ object SparkEntry {
     // routing param keeps its own. Same plan shape as v16 — the
     // fold is one more codegen'd map-side expression.
     "q359_curation_v17" -> ((s, d) => {
-      val pay = warcPayloads(s, d) { id =>
-        val tracked = warcRespRec(
-          s"http://m$id.example/a/$id?utm_source=nl", "text/html",
-          (s"<p>article $id version one keeps plenty of good " +
-            "english words.</p>").getBytes("UTF-8"))
-        val bare = warcRespRec(s"http://m$id.example/a/$id", "text/html",
-          (s"<p>article $id version two keeps plenty of different " +
-            "english words.</p>").getBytes("UTF-8"))
-        val paged = warcRespRec(
-          s"http://m$id.example/a/$id?page=2", "text/html",
-          (s"<p>article $id page two keeps plenty of extra " +
-            "english words.</p>").getBytes("UTF-8"))
-        val moved = warcRedirect(s"http://old$id.example/o/$id?utm_campaign=x",
-          "301 Moved", s"http://m$id.example/a/$id?utm_medium=email")
-        val oldPage = warcRespRec(s"http://old$id.example/o/$id",
-          "text/html",
-          (s"<p>article $id old home keeps plenty of good english " +
-            "words too.</p>").getBytes("UTF-8"))
-        tracked ++ bare ++ paged ++ moved ++ oldPage
-      }
-      val media = graft.sources.Multimodal.asMedia(pay, "doc_id", "warc", "warc")
+      val media = fixtureMedia(s, d, "warc_q359", "warc")
       val rows = graft.sources.Warc.warcDocRows(media)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val pages = rows.where(col("kind") === "page")
@@ -6711,31 +7158,7 @@ object SparkEntry {
     // Pages decode once (persisted warcHtmlPages); the 3xx listing
     // is the body-free walk.
     "q354_meta_refresh" -> ((s, d) => {
-      val pay = warcPayloads(s, d) { id =>
-        val html = "text/html; charset=utf-8"
-        val refreshAttr =
-          if (id % 2 == 0) s"""content="0;url=/land/$id""""
-          else s"""content="3; URL='/land/$id'""""
-        val landing = warcRecord("response", s"http://ex.com/land/$id",
-          httpResponse("200 X", html,
-            s"<p>soft landing page $id holds the real words.</p>"
-              .getBytes("UTF-8")))
-        val interstitial = warcRecord("response", s"http://ex.com/hop/$id",
-          httpResponse("200 X", html,
-            (s"""<html><head><meta http-equiv="refresh" $refreshAttr>""" +
-              s"</head><body><p>interstitial $id moving you along " +
-              "now.</p></body></html>").getBytes("UTF-8")))
-        val start = warcRedirect(s"http://ex.com/start/$id", "301 X",
-          s"/hop/$id", html)
-        // control: a url-less refresh reloads self — never an edge
-        val selfish = warcRecord("response", s"http://ex.com/self/$id",
-          httpResponse("200 X", html,
-            (s"""<html><head><meta http-equiv=refresh content="30">""" +
-              s"</head><body><p>self refreshing page $id keeps its " +
-              "own words.</p></body></html>").getBytes("UTF-8")))
-        landing ++ interstitial ++ start ++ selfish
-      }
-      val media = graft.sources.Multimodal.asMedia(pay, "doc_id", "warc", "warc")
+      val media = fixtureMedia(s, d, "warc_q354", "warc")
       val pages = graft.sources.Warc.warcHtmlPages(media)
         .select(graft.functions.CanonicalUrl(col("url")).as("purl"),
           col("html"))
@@ -6790,23 +7213,7 @@ object SparkEntry {
     // text joins on via the resolved identity. No driver iteration;
     // cycle rows land with NULL text and terminal=false.
     "q352_redirect_resolve" -> ((s, d) => {
-      val pay = warcPayloads(s, d) { id =>
-        val landing = warcRecord("response", s"http://ex.com/final/$id",
-          httpResponse("200 X", "text/html",
-            s"<p>redirect landing page $id content.</p>".getBytes("UTF-8")))
-        val hop1 = warcRedirect(s"http://ex.com/old/$id", "301 X", s"/final/$id")
-        val hop2 = warcRedirect(s"http://ex.com/older/$id", "302 X",
-          s"http://ex.com/old/$id")
-        val hop3 = warcRedirect(s"http://mirror.site/m/$id", "308 X",
-          s"HTTP://Ex.COM/older/$id")
-        val loop =
-          if (id % 5 == 0)
-            warcRedirect(s"http://loop.a/$id", "301 X", s"http://loop.b/$id") ++
-              warcRedirect(s"http://loop.b/$id", "302 X", s"http://loop.a/$id")
-          else Array.emptyByteArray
-        landing ++ hop1 ++ hop2 ++ hop3 ++ loop
-      }
-      val media = graft.sources.Multimodal.asMedia(pay, "doc_id", "warc", "warc")
+      val media = fixtureMedia(s, d, "warc_q352", "warc")
       val edges = graft.sources.Warc.warcRedirects(media)
         .select(graft.functions.CanonicalUrl(col("url")).as("src"),
           col("target").as("dst"))
@@ -6834,10 +7241,9 @@ object SparkEntry {
     // encoder across quality 0–11 / window 10–24 in BrotliSpec; q340
     // covers the cell door. Map-only flatMap kernel, fenced, loud.
     "q350_brotli_stream" -> ((s, d) => {
-      val paths = fixturePaths(s, d, "warc_br_v1")
+      val paths = fixturePaths(s, d, "warc_br_v1", "w%08d.warc")
       graft.sources.Warc.warcPathsDocText(s, paths)
-        .withColumn("media_id",
-          regexp_extract(col("path"), "w(\\d+)\\.warc$", 1).cast("long"))
+        .withColumn("media_id", fixtureId(col("path")))
         .select(col("media_id"), col("record_idx"), col("url"),
           col("encoding"), col("text"))
         .orderBy("media_id", "record_idx")
@@ -6919,32 +7325,8 @@ object SparkEntry {
     // application/xml — all four content-type doors must land on the
     // same text. Map-only flatMap kernel; entries capped.
     "q345_feed_text" -> ((s, d) => {
-      val pay = warcPayloads(s, d) { id =>
-        val n = (1 + id % 3).toInt
-        val (ctype, xml) =
-          if (id % 2 == 0) {
-            val items = (0 until n).map { j =>
-              s"<item><title>Item $id $j</title><description>" +
-                s"<![CDATA[<b>story $id</b> part $j &amp; more]]>" +
-                "</description></item>"
-            }.mkString
-            (if (id % 4 == 0) "application/rss+xml" else "text/xml",
-              "<?xml version=\"1.0\"?><rss version=\"2.0\"><channel>" +
-                s"<title>Feed $id</title>$items</channel></rss>")
-          } else {
-            val entries = (0 until n).map { j =>
-              s"<entry><title>Entry $id $j</title>" +
-                s"<summary>plain note $id $j</summary></entry>"
-            }.mkString
-            (if (id % 4 == 1) "application/atom+xml" else "application/xml",
-              "<?xml version=\"1.0\"?>" +
-                "<feed xmlns=\"http://www.w3.org/2005/Atom\">" +
-                s"<title>Feed $id</title>$entries</feed>")
-          }
-        warcRespRec(s"http://ex.com/feed/$id", ctype, xml.getBytes("UTF-8"))
-      }
       graft.sources.Warc.warcDocText(
-          graft.sources.Multimodal.asMedia(pay, "doc_id", "warc", "warc"))
+          fixtureMedia(s, d, "warc_q345", "warc"))
         .select("media_id", "record_idx", "url", "carrier", "text")
         .orderBy("media_id")
     }),
@@ -7049,12 +7431,10 @@ object SparkEntry {
     // pixel formulas as q269, so the oracle is identical; the
     // container routing is what's under test.
     "q284_tar_stream_media" -> ((s, d) => {
-      import s.implicits._
-      val paths = fixturePaths(s, d, "tar_stream_v1")
+      val paths = fixturePaths(s, d, "tar_stream_v1", "t%08d.tar")
       val members = graft.sources.Archives.tarPathMembers(s, paths)
         .where(col("name").endsWith(".bmp"))
-        .withColumn("doc_id",
-          regexp_extract(col("path"), "t(\\d+)\\.tar$", 1).cast("long"))
+        .withColumn("doc_id", fixtureId(col("path")))
         .select((col("doc_id") * 10 + col("entry_idx")).as("mid"),
           col("payload"))
       graft.sources.Multimodal.inspectMedia(
@@ -7078,26 +7458,8 @@ object SparkEntry {
     // independent hand fixture. Every 50th payload is junk → nulls.
     // Map-only: payload bytes never shuffle at any corpus size.
     "q285_pdf_text" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "portable document? no".getBytes("UTF-8"))
-        else {
-          val pages = (0 until (1 + (id % 3)).toInt).map { p =>
-            (0 until (1 + ((id + p) % 3)).toInt).map { l =>
-              s"doc $id pg $p ln $l tok${(id * 7 + p * 3 + l) % 97}" +
-                (if (l % 2 == 0) " café" else "")
-            }
-          }
-          val bytes = (id % 3) match {
-            case 0 => graft.sources.Pdf.buildSimplePdf(pages, flate = false)
-            case 1 => graft.sources.Pdf.buildSimplePdf(pages, flate = true)
-            case _ => graft.sources.Pdf.buildXrefStreamPdf(pages)
-          }
-          (id, bytes)
-        }
-      }.toDF("doc_id", "pdf")
       graft.sources.Pdf.describePdf(
-          graft.sources.Multimodal.asMedia(pay, "doc_id", "pdf", "doc"))
+          fixtureMedia(s, d, "pdf_q285", "doc"))
         .select(col("media_id"), col("pdf_version"), col("n_pages"),
           col("n_chars"), col("text"))
         .orderBy("media_id")
@@ -7112,12 +7474,10 @@ object SparkEntry {
     // sums from the pixel formulas. One task per path; member bytes
     // never shuffle before decode.
     "q287_zip_stream_media" -> ((s, d) => {
-      import s.implicits._
-      val paths = fixturePaths(s, d, "zip_stream_v2")
+      val paths = fixturePaths(s, d, "zip_stream_v2", "z%08d.zip")
       val members = graft.sources.Archives.zipPathEntries(s, paths)
         .where(col("name").endsWith(".bmp"))
-        .withColumn("doc_id",
-          regexp_extract(col("path"), "z(\\d+)\\.zip$", 1).cast("long"))
+        .withColumn("doc_id", fixtureId(col("path")))
         .select((col("doc_id") * 10 +
           when(col("name") === "img0.bmp", 0).otherwise(1)).as("mid"),
           col("payload"))
@@ -7136,21 +7496,8 @@ object SparkEntry {
     // the oracle states which pages survive. Declarative regex gate —
     // fuses into the extraction scan, no UDF, no shuffle.
     "q294_noindex_gate" -> ((s, d) => {
-      val pay = warcPayloads(s, d) { id =>
-        val p1 = (id % 3) match {
-          case 0 => "<meta name=\"robots\" content=\"noindex,follow\">" +
-            s"<p>keep page $id one</p>"
-          case 1 => "<META CONTENT='NOINDEX' NAME='ROBOTS'>" +
-            s"<p>keep page $id one</p>"
-          case _ => s"<p>keep page $id one</p>"
-        }
-        warcInfo ++
-          warcRespRec(s"http://ex.com/$id/0", "text/html",
-            s"<p>keep page $id zero</p>".getBytes("UTF-8")) ++
-          warcRespRec(s"http://ex.com/$id/1", "text/html", p1.getBytes("UTF-8"))
-      }
       graft.sources.Warc.warcHtmlPages(
-          graft.sources.Multimodal.asMedia(pay, "doc_id", "warc", "warc"))
+          fixtureMedia(s, d, "warc_q294", "warc"))
         .where(graft.functions.MetaRobots.indexable(col("html")))
         .select(col("media_id"), col("record_idx"), col("url"),
           graft.functions.HtmlToText(col("html")).as("text"))
@@ -7171,26 +7518,8 @@ object SparkEntry {
     // drop) is one declarative filter over the page scan: no UDF, no
     // shuffle, no second pass over the records.
     "q296_xrobots_gate" -> ((s, d) => {
-      val pay = warcPayloads(s, d) { id =>
-        val headerNoindex = (id % 3) match {
-          case 0 => "noindex"
-          case 1 => "googlebot: noindex"
-          case _ => "NONE, nosnippet"
-        }
-        val p2 = (if (id % 2 == 0)
-          "<meta name=\"robots\" content=\"noindex\">" else "") +
-          s"<p>keep page $id two</p>"
-        warcInfo ++
-          warcRespRec(s"http://ex.com/$id/0", "text/html",
-            s"<p>keep page $id zero</p>".getBytes("UTF-8"),
-            "X-Robots-Tag: nofollow, noarchive\r\n") ++
-          warcRespRec(s"http://ex.com/$id/1", "text/html",
-            s"<p>keep page $id one</p>".getBytes("UTF-8"),
-            s"X-Robots-Tag: $headerNoindex\r\n") ++
-          warcRespRec(s"http://ex.com/$id/2", "text/html", p2.getBytes("UTF-8"))
-      }
       graft.sources.Warc.warcHtmlPages(
-          graft.sources.Multimodal.asMedia(pay, "doc_id", "warc", "warc"))
+          fixtureMedia(s, d, "warc_q296", "warc"))
         .where(graft.functions.MetaRobots.indexablePage(
           col("html"), col("x_robots")))
         .select(col("media_id"), col("record_idx"), col("url"),
@@ -7206,20 +7535,8 @@ object SparkEntry {
     // compose without a dedicated path. The oracle replays the pixel
     // formulas; nothing about the container routing may move.
     "q310_archive_webp" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "archive? no".getBytes("UTF-8"))
-        else (id, zipFixture((0 until 2).map { k =>
-          (s"img$k.webp", graft.sources.Webp.buildLosslessWebp(10, 8,
-            (x, y) => (
-              ((id * 7 + k * 31 + x * 13 + y * 29) % 256).toInt,
-              ((id * 5 + k * 17 + x * 3 + y * 11) % 256).toInt,
-              ((id * 3 + k * 7 + x + y * 7) % 256).toInt),
-            if (k == 0) "plain" else "subgreen"))
-        }))
-      }.toDF("doc_id", "arc")
       val members = graft.sources.Archives.extractZipEntries(
-        graft.sources.Multimodal.asMedia(pay, "doc_id", "arc", "archive"))
+        fixtureMedia(s, d, "arc_q310", "archive"))
       val inner = members.select(
         (col("media_id") * 10 + col("entry_idx")).as("mid"), col("payload"))
       graft.sources.Multimodal.inspectMedia(
@@ -7236,25 +7553,8 @@ object SparkEntry {
     // count, geometry, duration, and per-frame pixel-formula channel
     // sums all replay in the oracle. Map-only flatMap kernel.
     "q309_webp_frames" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "anim? no".getBytes("UTF-8"))
-        else {
-          val nFrames = (1 + id % 3).toInt
-          val frames = (0 until nFrames).map { k =>
-            val fw = (7 + (id + k) % 4).toInt
-            val fh = (5 + (id + 2 * k) % 3).toInt
-            (fw, fh, k,
-              (x: Int, y: Int) =>
-                (((id * 7 + k * 31 + x * 13 + y * 29) % 256).toInt,
-                  ((id * 5 + k * 17 + x * 3 + y * 11) % 256).toInt,
-                  ((id * 3 + k * 7 + x + y * 7) % 256).toInt))
-          }
-          (id, graft.sources.Webp.buildAnimatedWebp(30, 20, frames, 40))
-        }
-      }.toDF("doc_id", "webp")
       graft.sources.Webp.describeWebpFrames(
-          graft.sources.Multimodal.asMedia(pay, "doc_id", "webp", "image"))
+          fixtureMedia(s, d, "webp_q309", "image"))
         .select("media_id", "frame_idx", "canvas_w", "canvas_h", "width",
           "height", "duration_ms", "n_pixels", "sum_r", "sum_g", "sum_b")
         .orderBy("media_id", "frame_idx")
@@ -7285,11 +7585,9 @@ object SparkEntry {
     // partial top-1; the signal columns are map-only expressions
     // fused into the scan.
     "q315_curation_v11" -> ((s, d) => {
-      import s.implicits._
       val pages = graft.sources.Warc.warcPathsDocText(
-          s, fixturePaths(s, d, "warc_v11_v1"))
-        .withColumn("media_id",
-          regexp_extract(col("path"), "w(\\d+)\\.warc$", 1).cast("long"))
+          s, fixturePaths(s, d, "warc_v11_v1", "w%08d.warc"))
+        .withColumn("media_id", fixtureId(col("path")))
       val gated = pages
         .where(!graft.functions.XRobotsTag.noindex(col("x_robots")))
         .where(length(col("text")) >= 20)
@@ -7324,11 +7622,9 @@ object SparkEntry {
     // ratio, not a carrier filter). Still join-free: one streaming
     // pass, declarative gates, two WindowGroupLimit keep-firsts.
     "q320_curation_v12" -> ((s, d) => {
-      import s.implicits._
       val pages = graft.sources.Warc.warcPathsDocText(
-          s, fixturePaths(s, d, "warc_v12_v1"))
-        .withColumn("media_id",
-          regexp_extract(col("path"), "w(\\d+)\\.warc$", 1).cast("long"))
+          s, fixturePaths(s, d, "warc_v12_v1", "w%08d.warc"))
+        .withColumn("media_id", fixtureId(col("path")))
       val gated = pages
         .where(!graft.functions.XRobotsTag.noindex(col("x_robots")))
         .where(length(col("text")) >= 20)
@@ -7366,11 +7662,9 @@ object SparkEntry {
     // leaves no trace. Everything else is v12's chain verbatim; the
     // plan stays join-free.
     "q326_curation_v13" -> ((s, d) => {
-      import s.implicits._
       val pages = graft.sources.Warc.warcPathsDocText(
-          s, fixturePaths(s, d, "warc_v13_v1"))
-        .withColumn("media_id",
-          regexp_extract(col("path"), "w(\\d+)\\.warc$", 1).cast("long"))
+          s, fixturePaths(s, d, "warc_v13_v1", "w%08d.warc"))
+        .withColumn("media_id", fixtureId(col("path")))
       val gated = pages
         .where(!graft.functions.XRobotsTag.noindex(col("x_robots")))
         .where(length(col("text")) >= 20)
@@ -7414,9 +7708,8 @@ object SparkEntry {
       // Streaming leg (Curation.v14Stream, parity-pinned in
       // CurationStreamSpec)
       val pages = graft.sources.Warc.warcPathsDocText(
-          s, fixturePaths(s, d, "warc_v14_v1"))
-        .withColumn("media_id",
-          regexp_extract(col("path"), "w(\\d+)\\.warc$", 1).cast("long"))
+          s, fixturePaths(s, d, "warc_v14_v1", "w%08d.warc"))
+        .withColumn("media_id", fixtureId(col("path")))
       graft.llm.Curation.v14Batch(pages, Seq("bad.example", "spam.test"))
         .orderBy("media_id", "record_idx")
     }),
@@ -7435,20 +7728,17 @@ object SparkEntry {
     // lower-cardinality key — no join, rules baked into codegen.
     "q344_curation_v15" -> ((s, d) => {
       val pages = graft.sources.Warc.warcPathsDocText(
-          s, fixturePaths(s, d, "warc_v15_v1"))
-        .withColumn("media_id",
-          regexp_extract(col("path"), "w(\\d+)\\.warc$", 1).cast("long"))
+          s, fixturePaths(s, d, "warc_v15_v1", "w%08d.warc"))
+        .withColumn("media_id", fixtureId(col("path")))
       graft.llm.Curation.v15Batch(pages, Seq("bad.example", "spam.test"),
           domainCap = 7)
         .orderBy("media_id", "record_idx")
     }),
 
     "q308_curation_v10" -> ((s, d) => {
-      import s.implicits._
       val pages = graft.sources.Warc.warcPathsDocText(
-          s, fixturePaths(s, d, "warc_v10_v1"))
-        .withColumn("media_id",
-          regexp_extract(col("path"), "w(\\d+)\\.warc$", 1).cast("long"))
+          s, fixturePaths(s, d, "warc_v10_v1", "w%08d.warc"))
+        .withColumn("media_id", fixtureId(col("path")))
       val kept = pages
         .where(!graft.functions.XRobotsTag.noindex(col("x_robots")))
         .where(length(col("text")) >= 20)
@@ -7491,28 +7781,8 @@ object SparkEntry {
     // the bitstream's own YUV space (no conversion in the contract).
     // flatMap byte kernel; pixels never shuffle.
     "q311_webp_lossy" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "webp? no".getBytes("UTF-8"))
-        else {
-          val mw = (2 + id % 3).toInt
-          val mh = (1 + id % 2).toInt
-          val variant = (id % 5) match {
-            case 0 => "dc"
-            case 1 => "v"
-            case 2 => "h"
-            case 3 => "tm"
-            case _ => "bpred"
-          }
-          def yuv(mx: Int, my: Int) = (
-            ((id * 7 + mx * 31 + my * 17) % 256).toInt,
-            ((id * 5 + mx * 11 + my * 23) % 256).toInt,
-            ((id * 3 + mx * 13 + my * 29) % 256).toInt)
-          (id, graft.sources.Webp.buildLossyWebp(mw, mh, yuv, variant))
-        }
-      }.toDF("doc_id", "webp")
       graft.sources.Webp.describeWebpLossy(
-          graft.sources.Multimodal.asMedia(pay, "doc_id", "webp", "image"))
+          fixtureMedia(s, d, "webp_q311", "image"))
         .orderBy("media_id")
     }),
 
@@ -7528,27 +7798,8 @@ object SparkEntry {
     // FlacSpec's independent hand-assembled bitstreams. Map-only
     // flatMap byte kernel; samples never shuffle.
     "q321_flac_decode" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "flac? no".getBytes("UTF-8"))
-        else {
-          val n = (48 + (id % 3) * 16).toInt
-          def mono(f: Int => Int) = Seq(Array.tabulate(n)(f))
-          val (chans, variant) = (id % 5) match {
-            case 0 => (mono(i => ((id * 7 + i * 13) % 401 - 200).toInt), "verbatim")
-            case 1 => (mono(_ => ((id * 11) % 300 - 150).toInt), "constant")
-            case 2 => (mono(i => ((id * 7 + i * 13) % 401 - 200).toInt), "fixed2")
-            case 3 => (mono(i => ((id * 7 + i * 13) % 401 - 200).toInt), "lpc2")
-            case _ => (Seq(
-              Array.tabulate(n)(i => ((id * 5 + i * 11) % 401 - 200).toInt),
-              Array.tabulate(n)(i => ((id * 3 + i * 17) % 401 - 200).toInt)),
-              "midside")
-          }
-          (id, graft.sources.Flac.buildFlac(chans, 44100, 16, 16, variant))
-        }
-      }.toDF("doc_id", "flac")
       graft.sources.Flac.describeFlac(
-          graft.sources.Multimodal.asMedia(pay, "doc_id", "flac", "audio"))
+          fixtureMedia(s, d, "flac_q321", "audio"))
         .orderBy("media_id")
     }),
 
@@ -7562,20 +7813,8 @@ object SparkEntry {
     // sample formulas (n, peak, sum of squares over ALL channels);
     // nothing about the container routing may move.
     "q328_archive_flac" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "archive? no".getBytes("UTF-8"))
-        else (id, zipFixture(Seq(
-          ("a0.flac", graft.sources.Flac.buildFlac(
-            Seq(Array.tabulate(32)(i => ((id * 7 + i * 13) % 401 - 200).toInt)),
-            8000, 16, 16, "verbatim")),
-          ("a1.flac", graft.sources.Flac.buildFlac(Seq(
-            Array.tabulate(24)(i => ((id * 5 + i * 11) % 401 - 200).toInt),
-            Array.tabulate(24)(i => ((id * 3 + i * 17) % 401 - 200).toInt)),
-            16000, 16, 12, "midside")))))
-      }.toDF("doc_id", "arc")
       val members = graft.sources.Archives.extractZipEntries(
-        graft.sources.Multimodal.asMedia(pay, "doc_id", "arc", "archive"))
+        fixtureMedia(s, d, "arc_q328", "archive"))
       val inner = members.select(
         (col("media_id") * 10 + col("entry_idx")).as("mid"), col("payload"))
       graft.sources.Multimodal.inspectMedia(
@@ -7598,22 +7837,8 @@ object SparkEntry {
     // deliberately mismatches: the revisit claims identity the
     // stored capture contradicts). Map-only walk + one keyed join.
     "q334_warc_revisit" -> ((s, d) => {
-      val pay = warcPayloads(s, d) { id =>
-        val resp = warcRecord("response", s"http://ex.com/orig/$id",
-          httpResponse("200 OK", "text/html",
-            s"<p>original page $id stays stored.</p>".getBytes("UTF-8")),
-          s"WARC-Payload-Digest: sha1:D$id\r\n")
-        val revDigest = if (id % 3 == 0) s"sha1:X$id" else s"sha1:D$id"
-        // a revisit's payload is the bare status line: no Content-Type
-        val rev = warcRecord("revisit", s"http://ex.com/again/$id",
-          "HTTP/1.1 200 OK\r\n\r\n".getBytes("ISO-8859-1"),
-          s"WARC-Refers-To-Target-URI: HTTP://EX.COM:80/orig/$id\r\n" +
-            s"WARC-Payload-Digest: $revDigest\r\n" +
-            "WARC-Profile: http://netpreserve.org/warc/1.1/revisit/identical-payload-digest\r\n")
-        resp ++ rev
-      }
       val caps = graft.sources.Warc.warcCaptures(
-        graft.sources.Multimodal.asMedia(pay, "doc_id", "warc", "warc"))
+        fixtureMedia(s, d, "warc_q334", "warc"))
       val responses = caps.where(col("kind") === "response")
         .select(graft.functions.CanonicalUrl(col("url")).as("k"),
           col("digest").as("stored_digest"), col("text").as("stored_text"))
@@ -7639,21 +7864,8 @@ object SparkEntry {
     // lossy had before q311); geometry is what curation filters on.
     // Map-only flatMap kernel.
     "q333_heif_dims" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "heif? no".getBytes("UTF-8"))
-        else {
-          val w = 320L + (id % 10) * 16
-          val h = 240L + (id % 7) * 16
-          (id, graft.sources.Heif.buildHeif(
-            if (id % 2 == 0) "avif" else "heic",
-            Seq((w, h), (32L + id % 16, 32L)),
-            nItems = (1 + id % 4).toInt,
-            largesize = id % 4 == 0))
-        }
-      }.toDF("doc_id", "heif")
       graft.sources.Heif.describeHeif(
-          graft.sources.Multimodal.asMedia(pay, "doc_id", "heif", "image"))
+          fixtureMedia(s, d, "heif_q333", "image"))
         .orderBy("media_id")
     }),
 
@@ -7665,25 +7877,8 @@ object SparkEntry {
     // 48 kHz). Codec-payload decode is the MP3-class non-goal; these
     // are the container facts curation filters on. Map-only flatMap.
     "q322_ogg_info" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "ogg? no".getBytes("UTF-8"))
-        else {
-          val vorbis = id % 2 == 0
-          val rate = if (vorbis) (8000 * (1 + id % 4)).toInt else 16000
-          val granule =
-            if (vorbis) rate.toLong * (3 + id % 5)
-            else 48000L * (2 + id % 4) + 312
-          (id, graft.sources.Ogg.buildOgg(
-            serial = id, codec = if (vorbis) "vorbis" else "opus",
-            channels = (1 + id % 3).toInt, rate = rate,
-            nDataPages = (1 + id % 3).toInt,
-            packetsPerPage = (2 + id % 2).toInt,
-            lastGranule = granule, spanPacket = id % 7 == 0))
-        }
-      }.toDF("doc_id", "ogg")
       graft.sources.Ogg.describeOgg(
-          graft.sources.Multimodal.asMedia(pay, "doc_id", "ogg", "audio"))
+          fixtureMedia(s, d, "ogg_q322", "audio"))
         .orderBy("media_id", "stream_idx")
     }),
 
@@ -7695,23 +7890,8 @@ object SparkEntry {
     // genre on v2.4), and every 4th id drops the v2 album so the
     // ID3v1 trailer fallback is load-bearing. Map-only flatMap.
     "q324_id3_tags" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "id3? no".getBytes("UTF-8"))
-        else {
-          val major = (2 + id % 3).toInt
-          val album = if (id % 4 == 0) None else Some(s"Album $id")
-          (id, graft.sources.Id3.buildId3(major,
-            title = s"Song $id café",
-            artist = s"Artist — $id",
-            album = album,
-            year = s"${1960 + id % 60}",
-            genre = if (major == 4) s"Жанр $id" else s"Genre ${id % 7}",
-            v1Album = if (id % 4 == 0) Some(s"V1 $id") else None))
-        }
-      }.toDF("doc_id", "mp3")
       graft.sources.Id3.describeId3(
-          graft.sources.Multimodal.asMedia(pay, "doc_id", "mp3", "audio"))
+          fixtureMedia(s, d, "mp3_q324", "audio"))
         .orderBy("media_id")
     }),
 
@@ -7759,23 +7939,8 @@ object SparkEntry {
     // out of the contract (the YUV surface is q311's); geometry,
     // duration and the alpha formula replay exactly. Map-only.
     "q338_webp_anim_alpha" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "anim? no".getBytes("UTF-8"))
-        else {
-          val nFrames = (1 + id % 3).toInt
-          val frames = (0 until nFrames).map { k =>
-            (1 + (id.toInt + k) % 2, 1,
-              (_: Int, _: Int) => (90, 120, 130),
-              (x: Int, y: Int) =>
-                ((id * 3 + k * 17 + x * 5 + y * 11) % 256).toInt,
-              ((id + k) % 2).toInt, ((id + k) % 4).toInt)
-          }
-          (id, graft.sources.Webp.buildAnimatedWebpAlpha(48, 16, frames, 25))
-        }
-      }.toDF("doc_id", "webp")
       graft.sources.Webp.describeWebpFrames(
-          graft.sources.Multimodal.asMedia(pay, "doc_id", "webp", "image"))
+          fixtureMedia(s, d, "webp_q338", "image"))
         .select("media_id", "frame_idx", "canvas_w", "canvas_h", "width",
           "height", "duration_ms", "n_pixels", "sum_a")
         .orderBy("media_id", "frame_idx")
@@ -7792,52 +7957,16 @@ object SparkEntry {
     // is a loud zero, never silently opaque. Map-only flatMap;
     // planes never shuffle.
     "q335_webp_alpha" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "webp? no".getBytes("UTF-8"))
-        else {
-          val mw = (1 + id % 2).toInt
-          (id, graft.sources.Webp.buildLossyWebpAlpha(mw, 1,
-            (_, _) => (90, 120, 130), "dc",
-            (x, y) => ((id * 3 + x * 5 + y * 11) % 256).toInt,
-            compression = (id % 2).toInt, filter = (id % 4).toInt))
-        }
-      }.toDF("doc_id", "webp")
       graft.sources.Webp.describeWebp(
-          graft.sources.Multimodal.asMedia(pay, "doc_id", "webp", "image"))
+          fixtureMedia(s, d, "webp_q335", "image"))
         .select("media_id", "variant", "width", "height", "n_pixels",
           "sum_a")
         .orderBy("media_id")
     }),
 
     "q307_webp_decode" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "webp? no".getBytes("UTF-8"))
-        else {
-          val w = (19 + id % 4).toInt
-          val h = (9 + id % 5).toInt
-          val variant = (id % 4) match {
-            case 0 => "plain"
-            case 1 => "subgreen"
-            case 2 => "predictor"
-            case _ => "palette"
-          }
-          val px: (Int, Int) => (Int, Int, Int) =
-            if (id % 4 == 3) { (x, y) =>
-              val idx = if (y == 0) x % 19 else ((x * 7 + y * 3 + id) % 19).toInt
-              (((id * 3 + idx) % 256).toInt, ((id * 5 + idx * 29) % 256).toInt,
-                ((id * 7 + idx * 41) % 256).toInt)
-            } else { (x, y) =>
-              (((id * 7 + x * 13 + y * 29) % 256).toInt,
-                ((id * 5 + x * 3 + y * 11) % 256).toInt,
-                ((id * 3 + x + y * 7) % 256).toInt)
-            }
-          (id, graft.sources.Webp.buildLosslessWebp(w, h, px, variant))
-        }
-      }.toDF("doc_id", "webp")
       graft.sources.Webp.describeWebp(
-          graft.sources.Multimodal.asMedia(pay, "doc_id", "webp", "image"))
+          fixtureMedia(s, d, "webp_q307", "image"))
         .orderBy("media_id")
     }),
 
@@ -7851,11 +7980,9 @@ object SparkEntry {
     // routing semantics must not move. One task per path; per-record
     // bounded memory.
     "q306_warc_stream_docs" -> ((s, d) => {
-      import s.implicits._
-      val paths = fixturePaths(s, d, "warc_docs_v1")
+      val paths = fixturePaths(s, d, "warc_docs_v1", "w%08d.warc")
       graft.sources.Warc.warcPathsDocText(s, paths)
-        .withColumn("media_id",
-          regexp_extract(col("path"), "w(\\d+)\\.warc$", 1).cast("long"))
+        .withColumn("media_id", fixtureId(col("path")))
         .select("media_id", "record_idx", "url", "carrier", "text")
         .orderBy("media_id", "record_idx")
     }),
@@ -7871,20 +7998,8 @@ object SparkEntry {
     // code), and a no-ToUnicode subset doc (every code unmapped);
     // the integer gate unmapped*5 <= codes keeps the first two.
     "q314_pdf_confidence" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "pdf? no".getBytes("UTF-8"))
-        else (id % 3) match {
-          case 0 => (id, graft.sources.Pdf.buildSimplePdf(
-            Seq(Seq(s"Simple $id page.")), flate = false))
-          case 1 => (id, graft.sources.Pdf.buildType0Pdf(
-            Seq(Seq(s"Type0 $id clean line.")), xrefStream = false))
-          case _ => (id, graft.sources.Pdf.buildType0PdfNoToUnicode(
-            Seq(Seq(s"Subset $id mojibake line."))))
-        }
-      }.toDF("doc_id", "pdf")
       graft.sources.Pdf.describePdf(
-          graft.sources.Multimodal.asMedia(pay, "doc_id", "pdf", "doc"))
+          fixtureMedia(s, d, "pdf_q314", "doc"))
         .withColumn("kept",
           col("type0_unmapped") * lit(5) <= col("type0_codes"))
         .select("media_id", "n_pages", "type0_codes", "type0_unmapped",
@@ -7901,48 +8016,8 @@ object SparkEntry {
     // attachment that is COUNTED, never decoded. Map-only flatMap
     // per mailbox; one linear pass per message.
     "q313_mbox_text" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "mbox? no".getBytes("UTF-8"))
-        else {
-          val n = (1 + id % 3).toInt
-          val sb = new StringBuilder
-          (0 until n).foreach { m =>
-            val subj = "=?UTF-8?B?" + java.util.Base64.getEncoder
-              .encodeToString(s"Msg $id-$m résumé".getBytes("UTF-8")) + "?="
-            val alt =
-              s"Content-Type: multipart/alternative; boundary=alt$m\r\n" +
-              "\r\n" +
-              s"--alt$m\r\n" +
-              "Content-Type: text/plain; charset=utf-8\r\n" +
-              "Content-Transfer-Encoding: quoted-printable\r\n\r\n" +
-              s"Plain caf=C3=A9 body $id msg $m =\r\ncontinued.\r\n" +
-              s"--alt$m\r\n" +
-              "Content-Type: text/html; charset=utf-8\r\n\r\n" +
-              s"<p>html leg $id must not appear</p>\r\n" +
-              s"--alt$m--\r\n"
-            val body =
-              if (m % 2 == 1)
-                s"Content-Type: multipart/mixed; boundary=mix$m\r\n" +
-                s"\r\n--mix$m\r\n" + alt +
-                s"--mix$m\r\n" +
-                "Content-Type: application/pdf\r\n" +
-                "Content-Disposition: attachment; filename=\"a.pdf\"\r\n" +
-                "Content-Transfer-Encoding: base64\r\n\r\nJVBERi0=\r\n" +
-                s"--mix$m--\r\n"
-              else alt
-            sb.append(s"From sender$m@ex.com Thu Jan  1 00:00:0$m 2026\n")
-            sb.append(s"Subject: $subj\r\n")
-            sb.append(s"From: Sender $m <sender$m@ex.com>\r\n")
-            sb.append("MIME-Version: 1.0\r\n")
-            sb.append(body)
-            sb.append("\n")
-          }
-          (id, sb.toString.getBytes("UTF-8"))
-        }
-      }.toDF("doc_id", "mbox")
       graft.sources.Mime.mboxDocText(
-          graft.sources.Multimodal.asMedia(pay, "doc_id", "mbox", "mbox"))
+          fixtureMedia(s, d, "mbox_q313", "mbox"))
         .select("media_id", "msg_idx", "subject", "n_parts",
           "n_attachments", "text")
         .orderBy("media_id", "msg_idx")
@@ -7960,18 +8035,8 @@ object SparkEntry {
     // one. Text contract matches xlsxText (cells tab-joined, rows
     // and sheets newline-joined). Per-record bounded walk, map-only.
     "q317_xls_text" -> ((s, d) => {
-      val pay = warcPayloads(s, d) { id =>
-        val xls = graft.sources.Ole2.buildXls(
-          Seq(
-            Seq(s"Alpha $id", s"café $id", s"Ω tail $id"),
-            Seq(s"$id", "42", "7"),
-            Seq("", s"tail — $id", s"${id * 3}")),
-          continueSplit = id % 2 == 0)
-        warcRespRec(s"http://ex.com/$id/sheet.xls",
-          "application/vnd.ms-excel", xls)
-      }
       graft.sources.Warc.warcDocText(
-          graft.sources.Multimodal.asMedia(pay, "doc_id", "warc", "warc"))
+          fixtureMedia(s, d, "warc_q317", "warc"))
         .select("media_id", "record_idx", "carrier", "text")
         .orderBy("media_id")
     }),
@@ -7985,15 +8050,8 @@ object SparkEntry {
     // soft break (both must become line breaks), and the docToText
     // whitespace contract. Per-record bounded walk, map-only.
     "q318_ppt_text" -> ((s, d) => {
-      val pay = warcPayloads(s, d) { id =>
-        val ppt = graft.sources.Ole2.buildPpt(Seq(
-          Seq(s"Title $id", s"Bullet café $id\rMore $id"),
-          Seq(s"Second — slide $id", s"Note $id" + "\u000B" + "wrap")))
-        warcRespRec(s"http://ex.com/$id/deck.ppt",
-          "application/vnd.ms-powerpoint", ppt)
-      }
       graft.sources.Warc.warcDocText(
-          graft.sources.Multimodal.asMedia(pay, "doc_id", "warc", "warc"))
+          fixtureMedia(s, d, "warc_q318", "warc"))
         .select("media_id", "record_idx", "carrier", "text")
         .orderBy("media_id")
     }),
@@ -8109,15 +8167,8 @@ object SparkEntry {
     // instruction leg must drop, and paragraph marks. Per-record
     // bounded walk, map-only.
     "q312_doc_text" -> ((s, d) => {
-      val pay = warcPayloads(s, d) { id =>
-        val doc = graft.sources.Ole2.buildDoc(
-          Seq(s"Doc $id legacy café body.", s"Unicode — tail $id."),
-          field = Some((s"HYPERLINK \"http://x/$id\"",
-            s"shown $id")))
-        warcRespRec(s"http://ex.com/$id/old.doc", "application/msword", doc)
-      }
       graft.sources.Warc.warcDocText(
-          graft.sources.Multimodal.asMedia(pay, "doc_id", "warc", "warc"))
+          fixtureMedia(s, d, "warc_q312", "warc"))
         .select("media_id", "record_idx", "carrier", "text")
         .orderBy("media_id")
     }),
@@ -8132,20 +8183,8 @@ object SparkEntry {
     // stated line formula. One linear char walk per document,
     // map-only.
     "q305_rtf_text" -> ((s, d) => {
-      val pay = warcPayloads(s, d) { id =>
-        val rtf = "{\\rtf1\\ansi{\\fonttbl{\\f0 Times New Roman;}}" +
-          "{\\colortbl;\\red0\\green0\\blue0;}" +
-          "{\\info{\\author secret author}}" +
-          "{\\*\\generator Graft;}" +
-          s"\\pard Plain $id text with \\b bold $id\\b0  and caf\\'e9.\\par" +
-          s" Second\\tab line $id \\u8212?dash.\\par" +
-          "{\\field{\\*\\fldinst HYPERLINK \"http://x/" + id + "\"}" +
-          s"{\\fldrslt shown link $id}}\\par}"
-        warcRespRec(s"http://ex.com/$id/doc.rtf", "application/rtf",
-          rtf.getBytes("UTF-8"))
-      }
       graft.sources.Warc.warcDocText(
-          graft.sources.Multimodal.asMedia(pay, "doc_id", "warc", "warc"))
+          fixtureMedia(s, d, "warc_q305", "warc"))
         .select("media_id", "record_idx", "carrier", "text")
         .orderBy("media_id")
     }),
@@ -8160,19 +8199,8 @@ object SparkEntry {
     // BENIGN header (nofollow — must not trip). Composes q296's
     // grammar with q289's router; no second record walk.
     "q304_xrobots_carriers" -> ((s, d) => {
-      val pay = warcPayloads(s, d) { id =>
-        warcRespRec(s"http://ex.com/$id/h", "text/html",
-          s"<p>html keep $id</p>".getBytes("UTF-8")) ++
-          warcRespRec(s"http://ex.com/$id/p.pdf", "application/pdf",
-            graft.sources.Pdf.buildSimplePdf(
-              Seq(Seq(s"pdf body $id")), flate = false),
-            if (id % 2 == 0) "X-Robots-Tag: noindex\r\n" else "") ++
-          warcRespRec(s"http://ex.com/$id/m.md", "text/markdown",
-            s"md **body** $id".getBytes("UTF-8"),
-            "X-Robots-Tag: nofollow, noarchive\r\n")
-      }
       graft.sources.Warc.warcDocText(
-          graft.sources.Multimodal.asMedia(pay, "doc_id", "warc", "warc"))
+          fixtureMedia(s, d, "warc_q304", "warc"))
         .where(!graft.functions.XRobotsTag.noindex(col("x_robots")))
         .select(col("media_id"), col("record_idx"), col("carrier"),
           col("text"))
@@ -8185,18 +8213,8 @@ object SparkEntry {
     // lines, inline spans contribute their text, entities decode.
     // Same synthesize-and-replay contract as q286/q299. Map-only.
     "q303_odt_text" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "odt? no".getBytes("UTF-8"))
-        else {
-          val paras = (0 until (1 + (id % 4)).toInt).map { p =>
-            s"odt $id para $p tok${(id * 11 + p) % 37} & täst"
-          }
-          (id, graft.sources.OfficeText.buildOdt(paras))
-        }
-      }.toDF("doc_id", "office")
       graft.sources.OfficeText.describeOfficeText(
-          graft.sources.Multimodal.asMedia(pay, "doc_id", "office", "doc"))
+          fixtureMedia(s, d, "office_q303", "doc"))
         .orderBy("media_id")
     }),
 
@@ -8206,11 +8224,9 @@ object SparkEntry {
     // two concatenated bz2 members (decompressConcatenated) — with
     // the oracle unchanged.
     "q301_warc_bz2" -> ((s, d) => {
-      import s.implicits._
-      val paths = fixturePaths(s, d, "warc_bz2_v1")
+      val paths = fixturePaths(s, d, "warc_bz2_v1", "w%08d.warc.bz2")
       graft.sources.Warc.warcPathsHtmlText(s, paths)
-        .withColumn("media_id",
-          regexp_extract(col("path"), "w(\\d+)\\.warc\\.bz2$", 1).cast("long"))
+        .withColumn("media_id", fixtureId(col("path")))
         .select("media_id", "record_idx", "url", "charset", "text")
         .orderBy("media_id", "record_idx")
     }),
@@ -8219,12 +8235,10 @@ object SparkEntry {
     // same sniff (the xz library Spark ships for Avro); the oracle
     // replays the pixel-formula channel sums unchanged.
     "q302_tar_xz" -> ((s, d) => {
-      import s.implicits._
-      val paths = fixturePaths(s, d, "tar_xz_v1")
+      val paths = fixturePaths(s, d, "tar_xz_v1", "t%08d.tar.xz")
       val members = graft.sources.Archives.tarPathMembers(s, paths)
         .where(col("name").endsWith(".bmp"))
-        .withColumn("doc_id",
-          regexp_extract(col("path"), "t(\\d+)\\.tar\\.xz$", 1).cast("long"))
+        .withColumn("doc_id", fixtureId(col("path")))
         .select((col("doc_id") * 10 + col("entry_idx")).as("mid"),
           col("payload"))
       graft.sources.Multimodal.inspectMedia(
@@ -8244,28 +8258,8 @@ object SparkEntry {
     // always exercised). Same synthesize-and-replay contract as
     // q286: the extracted text is a stated formula. Map-only.
     "q299_pptx_xlsx_text" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "office deck? no".getBytes("UTF-8"))
-        else if (id % 2 == 0) {
-          val slides = (0 until (1 + (id % 3)).toInt).map { sl =>
-            (0 until (1 + ((id + sl) % 2)).toInt).map { p =>
-              s"pptx $id sl $sl p $p tok${(id * 5 + sl * 3 + p) % 43} & co"
-            }
-          }
-          (id, graft.sources.OfficeText.buildPptx(slides))
-        } else {
-          val rows = (0 until (1 + (id % 3)).toInt).map { r =>
-            Seq(s"${(id * 7 + r) % 1000}") ++
-              (1 until (1 + ((id + r) % 3)).toInt).map { cc =>
-                s"cell $id r$r c$cc"
-              }
-          }
-          (id, graft.sources.OfficeText.buildXlsx(rows))
-        }
-      }.toDF("doc_id", "office")
       graft.sources.OfficeText.describeOfficeText(
-          graft.sources.Multimodal.asMedia(pay, "doc_id", "office", "doc"))
+          fixtureMedia(s, d, "office_q299", "doc"))
         .orderBy("media_id")
     }),
 
@@ -8281,11 +8275,9 @@ object SparkEntry {
     // move. One task per path; per-record bounded memory (zstd-jni
     // streams, never materializes the inflated container).
     "q298_warc_zst" -> ((s, d) => {
-      import s.implicits._
-      val paths = fixturePaths(s, d, "warc_zst_v1")
+      val paths = fixturePaths(s, d, "warc_zst_v1", "w%08d.warc.zst")
       graft.sources.Warc.warcPathsHtmlText(s, paths)
-        .withColumn("media_id",
-          regexp_extract(col("path"), "w(\\d+)\\.warc\\.zst$", 1).cast("long"))
+        .withColumn("media_id", fixtureId(col("path")))
         .select("media_id", "record_idx", "url", "charset", "text")
         .orderBy("media_id", "record_idx")
     }),
@@ -8295,12 +8287,10 @@ object SparkEntry {
     // the extracted BMPs decode through the same media pipeline; the
     // oracle replays the pixel-formula channel sums unchanged.
     "q300_tar_zst" -> ((s, d) => {
-      import s.implicits._
-      val paths = fixturePaths(s, d, "tar_zst_v1")
+      val paths = fixturePaths(s, d, "tar_zst_v1", "t%08d.tar.zst")
       val members = graft.sources.Archives.tarPathMembers(s, paths)
         .where(col("name").endsWith(".bmp"))
-        .withColumn("doc_id",
-          regexp_extract(col("path"), "t(\\d+)\\.tar\\.zst$", 1).cast("long"))
+        .withColumn("doc_id", fixtureId(col("path")))
         .select((col("doc_id") * 10 + col("entry_idx")).as("mid"),
           col("payload"))
       graft.sources.Multimodal.inspectMedia(
@@ -8322,33 +8312,8 @@ object SparkEntry {
     // pins the router: same single record walk, no second pass.
     // Map-only; the cleaner is one linear char walk per document.
     "q297_latex_text" -> ((s, d) => {
-      val pay = warcPayloads(s, d) { id =>
-        val tex =
-          s"""\\documentclass[11pt]{article}
-             |% preamble comment $id drops
-             |\\usepackage{amsmath}
-             |\\begin{document}
-             |\\section{Head $id}
-             |Body $id with \\emph{emph $id} \\& 100\\% real.
-             |Inline $$x_{$id}^2$$ math drops but tail $id stays.
-             |\\begin{equation}
-             |e = mc^2 + $id
-             |\\end{equation}
-             |\\begin{itemize}
-             |\\item alpha $id
-             |\\item beta $id
-             |\\end{itemize}
-             |See \\cite{ref$id} and \\href{http://x/$id}{link $id} now.
-             |Tilde~joined and a break\\\\here $id.""".stripMargin +
-            (if (id % 2 == 0) s"\nExtra tok${(id * 13) % 89} prose."
-             else "") + "\n\\end{document}\n"
-        warcRespRec(s"http://ex.com/$id/page", "text/html",
-          s"<p>html page $id</p>".getBytes("UTF-8")) ++
-          warcRespRec(s"http://ex.com/$id/paper.tex",
-            "application/x-tex", tex.getBytes("UTF-8"))
-      }
       graft.sources.Warc.warcDocText(
-          graft.sources.Multimodal.asMedia(pay, "doc_id", "warc", "warc"))
+          fixtureMedia(s, d, "warc_q297", "warc"))
         .select("media_id", "record_idx", "url", "carrier", "text")
         .orderBy("media_id", "record_idx")
     }),
@@ -8367,21 +8332,8 @@ object SparkEntry {
     // PDF 1.5 xref-stream generation, even ids the classic table.
     // Map-only: payload bytes never shuffle at any corpus size.
     "q295_pdf_type0" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "composite font? no".getBytes("UTF-8"))
-        else {
-          val pages = (0 until (1 + (id % 3)).toInt).map { p =>
-            (0 until (1 + ((id + p) % 3)).toInt).map { l =>
-              s"doc $id pg $p ln $l tok${(id * 7 + p * 3 + l) % 97}" +
-                (if (l % 2 == 0) " café" else "")
-            }
-          }
-          (id, graft.sources.Pdf.buildType0Pdf(pages, xrefStream = id % 2 == 1))
-        }
-      }.toDF("doc_id", "pdf")
       graft.sources.Pdf.describePdf(
-          graft.sources.Multimodal.asMedia(pay, "doc_id", "pdf", "doc"))
+          fixtureMedia(s, d, "pdf_q295", "doc"))
         .select(col("media_id"), col("pdf_version"), col("n_pages"),
           col("n_chars"), col("text"))
         .orderBy("media_id")
@@ -8397,28 +8349,8 @@ object SparkEntry {
     // without survival (or survival without scrub) fails the row.
     // The before/after differential lives in the unit spec. Map-only.
     "q293_exif_scrub" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "photo? no".getBytes("UTF-8"))
-        else {
-          val tiff = exifTiff((1 + id % 8).toInt, s"Camera${id % 5}",
-            s"Model${id % 4}", f"2020:01:01 00:00:${id % 60}%02d", 16, 9)
-          val base = jpegFlatTileFixture((1 + id % 3).toInt, (1 + id % 2).toInt,
-            (tx, ty) => ((id * 7 + tx * 13 + ty * 29) % 256).toInt,
-            progressive = false)
-          val app1 = java.nio.ByteBuffer.allocate(4 + 6 + tiff.length)
-          app1.putShort(0xffe1.toShort).putShort((2 + 6 + tiff.length).toShort)
-            .put("Exif".getBytes("US-ASCII")).put(0.toByte).put(0.toByte)
-            .put(tiff)
-          val comBody = s"secret note $id".getBytes("US-ASCII")
-          val com = java.nio.ByteBuffer.allocate(4 + comBody.length)
-          com.putShort(0xfffe.toShort)
-            .putShort((2 + comBody.length).toShort).put(comBody)
-          (id, base.take(2) ++ app1.array() ++ com.array() ++ base.drop(2))
-        }
-      }.toDF("doc_id", "img")
       val scrubbed = graft.sources.Multimodal.scrubJpegMetadata(
-        graft.sources.Multimodal.asMedia(pay, "doc_id", "img", "image"))
+        fixtureMedia(s, d, "img_q293", "image"))
       val ex = graft.sources.Multimodal.describeExif(
         scrubbed.select(col("media_id"), col("payload")))
       val px = graft.sources.Multimodal.inspectMedia(
@@ -8439,9 +8371,8 @@ object SparkEntry {
     // three carriers' texts and both windows. Plan shape: one flatMap
     // kernel + two keyed windows — no join, nothing global.
     "q292_curation_v9" -> ((s, d) => {
-      val pay = warcPayloads(s, d)(warcV9Fixture)
       val pages = graft.sources.Warc.warcDocText(
-        graft.sources.Multimodal.asMedia(pay, "doc_id", "warc", "warc"))
+        fixtureMedia(s, d, "warc_q292", "warc"))
       val kept = pages.where(length(col("text")) >= 20)
         .withColumn("url_canon", graft.functions.CanonicalUrl(col("url")))
       val urlW = org.apache.spark.sql.expressions.Window
@@ -8494,23 +8425,9 @@ object SparkEntry {
     // contract. Every 50th document is junk. Codegen'd end to end
     // except the markdown expression; no shuffle.
     "q291_notebook_text" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "not a notebook at all")
-        else {
-          val extra =
-            if (id % 2 == 0)
-              s""",{"cell_type":"code","source":["y = ${id % 5}"]}"""
-            else ""
-          (id,
-            s"""{"cells":[""" +
-              s"""{"cell_type":"markdown","source":["# Note $id\\n","cell ${id % 7} **bold**\\n"]},""" +
-              s"""{"cell_type":"code","source":["x = $id\\n","print(x)"]},""" +
-              s"""{"cell_type":"raw","source":["ignored $id"]}""" +
-              extra + "]}")
-        }
-      }.toDF("doc_id", "nb")
-      graft.sources.Notebooks.notebookText(pay, "doc_id", "nb")
+      val nb = fixtureMedia(s, d, "nb_q291", "doc").select(
+        col("media_id").as("doc_id"), col("payload").cast("string").as("nb"))
+      graft.sources.Notebooks.notebookText(nb, "doc_id", "nb")
         .orderBy("doc_id")
     }),
 
@@ -8551,26 +8468,8 @@ object SparkEntry {
     // paragraph/chapter text with string_agg; n_members pins the
     // container structure. Map-only; containers never shuffle.
     "q286_office_text" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "office doc? no".getBytes("UTF-8"))
-        else if (id % 2 == 0) {
-          val paras = (0 until (1 + (id % 4)).toInt).map { p =>
-            s"docx $id para $p word${(id * 3 + p) % 31} & more"
-          }
-          (id, graft.sources.OfficeText.buildDocx(paras))
-        } else {
-          val chapters = (0 until (1 + (id % 3)).toInt).map { c =>
-            (s"Chapter $c of $id",
-              (0 until (1 + ((id + c) % 2)).toInt).map { p =>
-                s"epub $id ch $c para $p"
-              })
-          }
-          (id, graft.sources.OfficeText.buildEpub(chapters))
-        }
-      }.toDF("doc_id", "office")
       graft.sources.OfficeText.describeOfficeText(
-          graft.sources.Multimodal.asMedia(pay, "doc_id", "office", "doc"))
+          fixtureMedia(s, d, "office_q286", "doc"))
         .orderBy("media_id")
     }),
 
@@ -8585,9 +8484,8 @@ object SparkEntry {
     // every 50th container is junk (loud fence, zero rows). flatMap
     // kernel; bodies never shuffle.
     "q289_warc_doc_text" -> ((s, d) => {
-      val pay = warcPayloads(s, d)(id => gzipEvery4th(id, warcMixedFixture(id)))
       graft.sources.Warc.warcDocText(
-          graft.sources.Multimodal.asMedia(pay, "doc_id", "warc", "warc"))
+          fixtureMedia(s, d, "warc_docs_v1", "warc"))
         .select("media_id", "record_idx", "url", "carrier", "text")
         .orderBy("media_id", "record_idx")
     }),
@@ -8602,16 +8500,8 @@ object SparkEntry {
     // overflow a signed BIGINT literal in the oracle). Fixtures are
     // 18×16 BMPs (exact 2×2 blocks). Map-only.
     "q251_image_dhash" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "image? unlikely".getBytes("UTF-8"))
-        else (id, bmp24Fixture(18, 16, (x, y) => (
-          ((id * 7 + x * 13 + y * 29) % 256).toInt,
-          ((id * 5 + x * 3 + y * 11) % 256).toInt,
-          ((id * 3 + x + y * 7) % 256).toInt)))
-      }.toDF("doc_id", "img")
       graft.sources.Multimodal.describeImageHash(
-          graft.sources.Multimodal.asMedia(pay, "doc_id", "img", "image"))
+          fixtureMedia(s, d, "img_q251", "image"))
         .select(col("media_id"),
           shiftrightunsigned(col("dhash"), 32).as("dhash_hi"),
           (col("dhash").bitwiseAND(lit(0xffffffffL))).as("dhash_lo"))
@@ -8629,21 +8519,8 @@ object SparkEntry {
     // pairwise XOR bit counts — equality pins both the hash AND the
     // pigeonhole completeness.
     "q252_image_neardup" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "image? unlikely".getBytes("UTF-8"))
-        else {
-          val g = id / 7 // septet base
-          (id, bmp24Fixture(18, 16, (x, y) => {
-            val bump = if (x == (id % 7) * 2 && y == 3) 40 else 0
-            (math.min(255, ((g * 11 + x * 17 + y * 23) % 200) + bump).toInt,
-              ((g * 13 + x * 5 + y * 19) % 256).toInt,
-              ((g * 17 + x * 7 + y * 3) % 256).toInt)
-          }))
-        }
-      }.toDF("doc_id", "img")
       val hashes = graft.sources.Multimodal.describeImageHash(
-        graft.sources.Multimodal.asMedia(pay, "doc_id", "img", "image"))
+        fixtureMedia(s, d, "img_q252", "image"))
       graft.sources.Multimodal.hammingPairs64(hashes, "media_id", "dhash", 3)
         .select(col("id1"), col("id2"), col("hamming").cast("long").as("hamming"))
         .orderBy("id1", "id2")
@@ -8659,49 +8536,8 @@ object SparkEntry {
     // the per-tier replays. Every 50th payload is junk → null format.
     // Map-only; payloads never shuffle.
     "q250_media_inspect" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "multimodal? not today".getBytes("UTF-8"))
-        else (id % 8).toInt match {
-          case 0 => // PNG (q242 formulas, same builder)
-            (id, pngRgbFixture((2 + id % 5).toInt, (1 + id % 3).toInt, (x, y) => (
-              ((id * 5 + x * 7 + y * 13) % 256).toInt,
-              ((id * 3 + x * 11 + y) % 256).toInt,
-              ((id + x + y * 19) % 256).toInt)))
-          case 1 => // baseline JPEG (q243 formulas, same builder)
-            (id, jpegFlatTileFixture((1 + id % 3).toInt, (1 + id % 2).toInt,
-              (tx, ty) => ((id * 7 + tx * 13 + ty * 29) % 256).toInt,
-              progressive = false))
-          case 2 => // GIF (q245 formulas, same builder)
-            val k = (1 + id % 3).toInt
-            (id, gifFixture(k, (2 + id % 6).toInt, (1 + id % 4).toInt,
-              (x, y) => ((id * 3 + x * 7 + y * 11) % (1 << k)).toInt))
-          case 3 => // BMP 24bpp (same builder as q251/q252)
-            (id, bmp24Fixture((2 + id % 5).toInt, (1 + id % 4).toInt,
-              (x, y) => (((id + x * 3 + y * 5) % 256).toInt,
-                ((id * 5 + x * 7 + y) % 256).toInt,
-                ((id * 9 + x + y * 11) % 256).toInt)))
-          case 4 => // TIFF uncompressed (q247 formulas, same builder)
-            (id, tiffRgbFixture((2 + id % 7).toInt, (1 + id % 5).toInt,
-              packBits = false,
-              (x, y) => (((id * 3 + x * 5 + y * 7) % 256).toInt,
-                ((id * 7 + x * 11 + y) % 256).toInt,
-                ((id + x + y * 13) % 256).toInt)))
-          case 5 => // ICO 32bpp DIB (q249 formulas, same builder)
-            (id, icoDib32Fixture((3 + id % 5).toInt, (2 + id % 3).toInt,
-              (x, y) => (((id * 5 + x * 7 + y * 13) % 256).toInt << 16) |
-                (((id * 3 + x * 11 + y) % 256).toInt << 8) |
-                ((id + x + y * 19) % 256).toInt))
-          case 6 => // AU mu-law (q248 formulas, same builder)
-            (id, auFixture(1, (40 + id % 30).toInt,
-              i => ((id * 7 + i * 13) % 256).toInt))
-          case _ => // AIFF PCM16 (q248 formulas, same builder)
-            (id, aiffFixture((40 + id % 30).toInt, 22050,
-              i => (((id * 11 + i * 17) % 65536) - 32768).toInt))
-        }
-      }.toDF("doc_id", "payload")
       graft.sources.Multimodal.inspectMedia(
-        graft.sources.Multimodal.asMedia(pay, "doc_id", "payload", "mixed"))
+        fixtureMedia(s, d, "mixed_q250", "mixed"))
         .orderBy("media_id")
     }),
 
@@ -8715,31 +8551,8 @@ object SparkEntry {
     // parity-independent and only `inner`/`bpp` switch. Every 50th
     // payload is non-ICO → nulls. Map-only; payloads never shuffle.
     "q249_ico_decode" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "ico? no".getBytes("UTF-8"))
-        else {
-          val w = (3 + id % 5).toInt; val h = (2 + id % 3).toInt
-          def r(x: Int, y: Int) = ((id * 5 + x * 7 + y * 13) % 256).toInt
-          def g(x: Int, y: Int) = ((id * 3 + x * 11 + y) % 256).toInt
-          def b(x: Int, y: Int) = ((id + x + y * 19) % 256).toInt
-          if (id % 2 == 0) // classic 32bpp DIB
-            (id, icoDib32Fixture(w, h, (x, y) =>
-              (((x + y) % 256) << 24) | (r(x, y) << 16) | (g(x, y) << 8) | b(x, y)))
-          else { // PNG-embedded (modern favicon)
-            val png = pngRgbFixture(w, h, (x, y) => (r(x, y), g(x, y), b(x, y)))
-            val bb = java.nio.ByteBuffer.allocate(6 + 16 + png.length)
-              .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-            bb.putShort(0).putShort(1).putShort(1)
-            bb.put(w.toByte).put(h.toByte).put(0.toByte).put(0.toByte)
-              .putShort(1).putShort(32).putInt(png.length).putInt(6 + 16)
-            bb.put(png)
-            (id, bb.array())
-          }
-        }
-      }.toDF("doc_id", "ico")
       graft.sources.Multimodal.describeIco(
-        graft.sources.Multimodal.asMedia(pay, "doc_id", "ico", "image"))
+        fixtureMedia(s, d, "ico_q249", "image"))
         .orderBy("media_id")
     }),
 
@@ -8756,23 +8569,8 @@ object SparkEntry {
     // / AIFF-PCM16 by id. Every 50th payload is non-audio → nulls.
     // Map-only; payloads never shuffle.
     "q248_audio_decode" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "audio? silence".getBytes("UTF-8"))
-        else {
-          val n = (40 + id % 30).toInt
-          def pcm16(i: Int) = (((id * 11 + i * 17) % 65536) - 32768).toInt
-          def g711(i: Int) = ((id * 7 + i * 13) % 256).toInt
-          (id, (id % 4).toInt match {
-            case 0 => auFixture(1, n, g711)
-            case 1 => auFixture(27, n, g711)
-            case 2 => auFixture(3, n, pcm16)
-            case _ => aiffFixture(n, 22050, pcm16)
-          })
-        }
-      }.toDF("doc_id", "snd")
       graft.sources.Multimodal.describeAudio(
-        graft.sources.Multimodal.asMedia(pay, "doc_id", "snd", "audio"))
+        fixtureMedia(s, d, "snd_q248", "audio"))
         .orderBy("media_id")
     }),
 
@@ -8788,17 +8586,8 @@ object SparkEntry {
     // plugin output under none/LZW/PackBits. Every 50th payload is
     // non-TIFF → nulls. Map-only; payloads never shuffle.
     "q247_tiff_decode" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "tiff? nope".getBytes("UTF-8"))
-        else (id, tiffRgbFixture((2 + id % 7).toInt, (1 + id % 5).toInt,
-          packBits = id % 2 == 1,
-          (x, y) => (((id * 3 + x * 5 + y * 7) % 256).toInt,
-            ((id * 7 + x * 11 + y) % 256).toInt,
-            ((id + x + y * 13) % 256).toInt)))
-      }.toDF("doc_id", "tif")
       graft.sources.Multimodal.describeTiff(
-        graft.sources.Multimodal.asMedia(pay, "doc_id", "tif", "image"))
+        fixtureMedia(s, d, "tif_q247", "image"))
         .orderBy("media_id")
     }),
 
@@ -8817,15 +8606,8 @@ object SparkEntry {
     // spec pins SOF2 emission). Every 50th payload is non-JPEG →
     // nulls. Map-only; payloads never shuffle.
     "q246_jpeg_progressive" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "jpeg? progressively not".getBytes("UTF-8"))
-        else (id, jpegFlatTileFixture((1 + id % 4).toInt, (1 + (id / 2) % 2).toInt,
-          (tx, ty) => ((id * 11 + tx * 23 + ty * 31) % 256).toInt,
-          progressive = true))
-      }.toDF("doc_id", "jpg")
       graft.sources.Multimodal.describeJpeg(
-        graft.sources.Multimodal.asMedia(pay, "doc_id", "jpg", "image"))
+        fixtureMedia(s, d, "jpg_q246", "image"))
         .orderBy("media_id")
     }),
 
@@ -8842,17 +8624,8 @@ object SparkEntry {
     // sums directly. Every 50th payload is non-GIF → nulls. Map-only;
     // payloads never shuffle.
     "q245_gif_decode" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "gif? afraid not".getBytes("UTF-8"))
-        else {
-          val k = (1 + id % 3).toInt // palette 2^k entries: 2, 4, 8
-          (id, gifFixture(k, (2 + id % 6).toInt, (1 + id % 4).toInt,
-            (x, y) => ((id * 3 + x * 7 + y * 11) % (1 << k)).toInt))
-        }
-      }.toDF("doc_id", "gif")
       graft.sources.Multimodal.describeGifPixels(
-        graft.sources.Multimodal.asMedia(pay, "doc_id", "gif", "image"))
+        fixtureMedia(s, d, "gif_q245", "image"))
         .orderBy("media_id")
     }),
 
@@ -8871,15 +8644,8 @@ object SparkEntry {
     // restart-interval fixtures cover the lossy general case the
     // formula can't. Map-only; payloads never shuffle.
     "q243_jpeg_decode" -> ((s, d) => {
-      import s.implicits._
-      val pay = docIds(s, d).map { id =>
-        if (id % 50 == 0) (id, "jpeg? hardly".getBytes("UTF-8"))
-        else (id, jpegFlatTileFixture((1 + id % 3).toInt, (1 + id % 2).toInt,
-          (tx, ty) => ((id * 7 + tx * 13 + ty * 29) % 256).toInt,
-          progressive = false))
-      }.toDF("doc_id", "jpg")
       graft.sources.Multimodal.describeJpeg(
-        graft.sources.Multimodal.asMedia(pay, "doc_id", "jpg", "image"))
+        fixtureMedia(s, d, "jpg_q243", "image"))
         .orderBy("media_id")
     }),
 

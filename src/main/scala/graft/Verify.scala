@@ -42,8 +42,7 @@ object Verify {
     // (every query is deterministic and caches are never
     // correctness-bearing); under concurrency an individual
     // timings.json wall includes neighbor overlap, so read the slow
-    // list comparatively, not absolutely. SPARK_GRAFT_VERIFY_THREADS=1
-    // restores the strict r19 sequential behavior.
+    // list comparatively, not absolutely.
     // WAVE-synchronized: queries run `nThreads` at a time, but the
     // per-query clearCache of the sequential harness moves to the
     // wave BARRIER, where nothing is in flight. clearCache while a
@@ -56,8 +55,7 @@ object Verify {
     // controls were each 100% clean). Caches therefore accumulate
     // only within one wave (bounded — the r8 eviction-churn concern
     // was cross-356-query accumulation).
-    val nThreads = math.max(1,
-      sys.env.getOrElse("SPARK_GRAFT_VERIFY_THREADS", "4").toInt)
+    val nThreads = 4
     val entries = SparkEntry.queries.toSeq.filter(kv => keep(kv._1))
     val walls = new java.util.concurrent.ConcurrentHashMap[String, Double]()
     entries.grouped(nThreads).foreach { wave =>

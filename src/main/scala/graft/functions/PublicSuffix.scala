@@ -156,82 +156,18 @@ object PublicSuffix {
     * private sections — r17 verdict item 6 retired the hand-picked
     * subset: hosts under un-bundled multi-label suffixes, most
     * private-section platforms especially, mis-keyed as registered
-    * domains). Parsed once per JVM. Falls back to [[SnapshotLines]]
-    * (the legacy subset) only if the resource is unreadable —
-    * loudly, since silent fallback would change every eTLD+1 key. */
+    * domains). Parsed once per JVM. A missing resource is an error:
+    * every eTLD+1 key depends on the list. */
   def loadBundledList(): Seq[String] = {
-    val in = getClass.getResourceAsStream("/graft/public_suffix_list.dat")
-    if (in == null) return null
+    val name = "/graft/public_suffix_list.dat"
+    val in = getClass.getResourceAsStream(name)
+    if (in == null)
+      throw new IllegalStateException(s"bundled resource $name is missing")
     try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector
     finally in.close()
   }
 
-  /** The legacy hand-picked subset (kept for spec fixtures and as the
-    * loud fallback when the bundled resource is missing). Public data
-    * from publicsuffix.org. */
-  val SnapshotLines: Seq[String] = Seq(
-    // ICANN section (multi-label families)
-    "co.uk", "org.uk", "net.uk", "ac.uk", "gov.uk", "sch.uk", "nhs.uk",
-    "police.uk", "me.uk", "ltd.uk", "plc.uk",
-    "com.au", "net.au", "org.au", "edu.au", "gov.au", "asn.au", "id.au",
-    "co.jp", "or.jp", "ne.jp", "ac.jp", "ad.jp", "ed.jp", "go.jp",
-    "gr.jp", "lg.jp",
-    "*.kawasaki.jp", "!city.kawasaki.jp",
-    "*.kitakyushu.jp", "!city.kitakyushu.jp",
-    "*.kobe.jp", "!city.kobe.jp",
-    "*.nagoya.jp", "!city.nagoya.jp",
-    "*.sapporo.jp", "!city.sapporo.jp",
-    "*.sendai.jp", "!city.sendai.jp",
-    "*.yokohama.jp", "!city.yokohama.jp",
-    "co.nz", "net.nz", "org.nz", "govt.nz", "ac.nz", "school.nz",
-    "geek.nz", "gen.nz", "maori.nz",
-    "co.za", "org.za", "net.za", "gov.za", "ac.za", "web.za",
-    "com.br", "net.br", "org.br", "gov.br", "edu.br", "blog.br", "art.br",
-    "co.in", "net.in", "org.in", "firm.in", "gen.in", "ind.in",
-    "ac.in", "edu.in", "res.in", "gov.in", "nic.in",
-    "com.cn", "net.cn", "org.cn", "gov.cn", "edu.cn", "ac.cn",
-    "com.mx", "net.mx", "org.mx", "gob.mx", "edu.mx",
-    "com.ar", "net.ar", "org.ar", "gob.ar", "edu.ar",
-    "co.kr", "ne.kr", "or.kr", "re.kr", "go.kr", "ac.kr", "pe.kr",
-    "com.tw", "net.tw", "org.tw", "gov.tw", "edu.tw", "idv.tw",
-    "com.tr", "net.tr", "org.tr", "gov.tr", "edu.tr", "bel.tr", "web.tr",
-    "co.il", "org.il", "net.il", "ac.il", "gov.il", "muni.il", "k12.il",
-    "com.ua", "net.ua", "org.ua", "edu.ua", "gov.ua", "in.ua",
-    "com.pl", "net.pl", "org.pl", "edu.pl", "gov.pl", "info.pl",
-    "biz.pl", "waw.pl",
-    "co.id", "or.id", "net.id", "ac.id", "web.id", "sch.id", "go.id",
-    "my.id", "biz.id",
-    "co.th", "or.th", "net.th", "ac.th", "go.th", "in.th",
-    "com.sg", "net.sg", "org.sg", "edu.sg", "gov.sg", "per.sg",
-    "com.my", "net.my", "org.my", "edu.my", "gov.my",
-    "com.ph", "net.ph", "org.ph", "edu.ph", "gov.ph",
-    "com.vn", "net.vn", "org.vn", "edu.vn", "gov.vn",
-    "com.hk", "net.hk", "org.hk", "edu.hk", "gov.hk", "idv.hk",
-    "com.sa", "edu.sa", "gov.sa", "med.sa",
-    "co.ae", "net.ae", "org.ae", "ac.ae", "gov.ae",
-    "com.eg", "net.eg", "org.eg", "edu.eg", "gov.eg",
-    "com.ng", "net.ng", "org.ng", "edu.ng", "gov.ng",
-    "co.ke", "or.ke", "ne.ke", "ac.ke", "go.ke",
-    "gc.ca",
-    "*.ck", "!www.ck",
-    "*.bd",
-    // private section (hosting platforms — one "domain", many sites)
-    "github.io", "githubusercontent.com", "gitlab.io", "blogspot.com",
-    "wordpress.com", "tumblr.com", "herokuapp.com", "netlify.app",
-    "vercel.app", "web.app", "firebaseapp.com", "appspot.com",
-    "cloudfront.net", "azurewebsites.net", "pages.dev", "workers.dev",
-    "onrender.com", "fly.dev", "surge.sh", "neocities.org",
-    "readthedocs.io", "s3.amazonaws.com", "glitch.me", "bitbucket.io")
-
-  lazy val Default: Rules = {
-    val bundled = loadBundledList()
-    if (bundled == null) {
-      System.err.println("[graft] WARNING: bundled public_suffix_list.dat " +
-        "resource missing - falling back to the legacy subset; eTLD+1 " +
-        "keys under un-bundled suffixes will differ")
-      parse(SnapshotLines)
-    } else parse(bundled)
-  }
+  lazy val Default: Rules = parse(loadBundledList())
 
   private def labelsOf(host: String): Array[String] = {
     if (host == null) return null

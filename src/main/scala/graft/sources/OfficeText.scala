@@ -720,11 +720,21 @@ object OfficeText {
       case c => c.toString
     }
 
+  /** A ZIP entry stamped with one fixed local time: the JDK would
+    * stamp the write time, and a fixture's bytes must be a pure
+    * function of its inputs. setTimeLocal, not setTime(long): the
+    * latter converts through the default time zone. */
+  private[graft] def zipEntry(name: String): java.util.zip.ZipEntry = {
+    val e = new java.util.zip.ZipEntry(name)
+    e.setTimeLocal(java.time.LocalDateTime.of(2020, 1, 1, 0, 0))
+    e
+  }
+
   private def zip(entries: Seq[(String, String)]): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
     val z = new java.util.zip.ZipOutputStream(bos)
     entries.foreach { case (name, content) =>
-      z.putNextEntry(new java.util.zip.ZipEntry(name))
+      z.putNextEntry(zipEntry(name))
       z.write(content.getBytes("UTF-8"))
       z.closeEntry()
     }
@@ -740,14 +750,14 @@ object OfficeText {
     val z = new java.util.zip.ZipOutputStream(bos)
     val (name, content) = first
     val bytes = content.getBytes("UTF-8")
-    val e = new java.util.zip.ZipEntry(name)
+    val e = zipEntry(name)
     e.setMethod(java.util.zip.ZipEntry.STORED)
     e.setSize(bytes.length)
     val crc = new java.util.zip.CRC32(); crc.update(bytes)
     e.setCrc(crc.getValue)
     z.putNextEntry(e); z.write(bytes); z.closeEntry()
     rest.foreach { case (n, c) =>
-      z.putNextEntry(new java.util.zip.ZipEntry(n))
+      z.putNextEntry(zipEntry(n))
       z.write(c.getBytes("UTF-8"))
       z.closeEntry()
     }

@@ -5,9 +5,11 @@ import graft.SparkSpec
 /** Fuzzes the one WARC record walk ([[Warc.WarcStream]]) through the
   * cell door: seeded random bytes (bare, behind a WARC header and
   * behind each compression magic), plus truncations and byte flips
-  * of every WARC fixture ([[graft.SparkEntry.diskFixtures]] — plain,
-  * gzip, zstd, bzip2 and brotli bodies), at maxBody {16 MiB, 4, 0}
-  * and maxRecords {4096, 1}. Every input is built here, all small.
+  * of every WARC fixture ([[graft.SparkEntry.fixtures]] tagged
+  * `warc_`, on-disk and in-plan — plain, gzip, zstd, bzip2, brotli,
+  * chunked, charset, redirect, revisit and mixed-carrier bodies), at
+  * maxBody {16 MiB, 4, 0} and maxRecords {4096, 1}. Every input is
+  * built here, all small.
   *
   * Per input and setting the walk must not throw, must end with a
   * reason from the [[Warc.WarcParse]] vocabulary, number its records
@@ -33,8 +35,8 @@ class WarcFuzzSpec extends SparkSpec {
     val random = (0 until 200).map(i => noise(i * 3)) ++
       (0 until 100).map(i => head ++ noise(i)) ++
       magics.flatMap(m => (0 until 25).map(i => m ++ noise(i * 4)))
-    val fixtures = graft.SparkEntry.diskFixtures.toSeq.sortBy(_._1)
-      .collect { case (tag, (_, mk)) if tag.startsWith("warc_") => mk }
+    val fixtures = graft.SparkEntry.fixtures.toSeq.sortBy(_._1)
+      .collect { case (tag, mk) if tag.startsWith("warc_") => mk }
       .flatMap(mk => (1L to 4L).map(mk))
     val cut = fixtures.flatMap { f =>
       ((0 until f.length by math.max(1, f.length / 64)) ++
@@ -59,7 +61,7 @@ class WarcFuzzSpec extends SparkSpec {
   }
 
   test("the walk never throws and keeps its invariants on hostile bytes") {
-    assert(inputs.size > 4000)
+    assert(inputs.size > 15000)
     for ((maxBody, maxRecords) <- settings; (b, i) <- inputs.zipWithIndex) {
       val ctx = s"input $i at maxBody $maxBody, maxRecords $maxRecords"
       val (recs, reason, truncated, undecodable) =

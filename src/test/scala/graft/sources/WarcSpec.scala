@@ -754,7 +754,7 @@ class WarcSpec extends SparkSpec {
   // ==== one walk, both doors ===========================================
 
   test("a gzip cell cut 5 bytes short keeps its records and counts as truncated") {
-    val whole = graft.SparkEntry.diskFixtures("warc_stream_v1")._2(1L)
+    val whole = graft.SparkEntry.fixtures("warc_stream_v1")(1L)
     assert(whole.length == 278 && (whole(0) & 0xff) == 0x1f) // id 1: gzipped
     assert(parseWarcOutcome(whole).records.size == 7)
     val cut = whole.dropRight(5) // the deflate data whole, the trailer cut

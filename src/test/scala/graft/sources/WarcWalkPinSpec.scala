@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Pins what [[Warc.parseWarcOutcome]] yields on the plain and gzip
   * WARC fixtures, so the walk behind it can change only on purpose.
   *
-  * Each digest covers ids 0–299 of one [[graft.SparkEntry.diskFixtures]]
+  * Each digest covers ids 0–299 of one [[graft.SparkEntry.fixtures]]
   * tag at one fence setting. Per id it takes the record count, every
   * field of every record and the end reason, each as an 8-byte
   * big-endian length (-1 for null/None) and then its UTF-8 bytes (the
@@ -89,7 +89,7 @@ class WarcWalkPinSpec extends AnyFunSuite {
 
   pinned.keys.map(_._1).toSeq.distinct.sorted.foreach { tag =>
     test(s"$tag: records and end reasons of ids 0-299 match the pinned digests") {
-      val (_, mk) = graft.SparkEntry.diskFixtures(tag)
+      val mk = graft.SparkEntry.fixtures(tag)
       settings.toSeq.sortBy(_._1).foreach { case (name, (maxRecords, maxBody)) =>
         assert(digest(mk, maxRecords, maxBody) == pinned((tag, name)), s"$tag $name")
       }
@@ -97,7 +97,7 @@ class WarcWalkPinSpec extends AnyFunSuite {
   }
 
   test("the junk ids read as not_warc: dropped, no records") {
-    val (_, mk) = graft.SparkEntry.diskFixtures("warc_v15_v1")
+    val mk = graft.SparkEntry.fixtures("warc_v15_v1")
     assert(Warc.parseWarcOutcome(mk(50L)) == Warc.WarcParse(Nil, "not_warc"))
   }
 }
