@@ -8,9 +8,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * fan-in, speculative execution — reference
   * hadoop-mapreduce-client-core/.../mapred/MapTask.java:889-1861) is all
   * supplied by Tungsten/AQE; what we own is the configuration posture:
-  * AQE on (runtime coalesce + skew-join), zstd-compressed shuffle and
-  * parquet, shuffle partitions sized for the active cluster rather than
-  * the 200 default.
+  * AQE on (runtime coalesce + skew-join), zstd-compressed parquet
+  * output (shuffle blocks keep Spark's default lz4 codec), shuffle
+  * partitions sized for the active cluster rather than the 200
+  * default.
   */
 object Engine {
   /** Executor-side Hadoop Configuration, constructed ONCE per JVM.
@@ -49,7 +50,7 @@ object Engine {
       .getOrCreate()
     // getOrCreate() silently ignores withExtensions and every .config
     // when a session already exists in the JVM (tests, notebooks,
-    // thriftserver). Re-register the SQL functions on the live session
+    // thriftserver). Register the SQL functions the live session lacks
     // and re-assert the runtime-settable confs so the engine posture
     // holds either way; warn on the ones fixed at session build.
     GraftExtensions.register(spark)

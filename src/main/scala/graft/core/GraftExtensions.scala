@@ -130,9 +130,15 @@ object GraftExtensions {
         "strip_tracking_params(url) - drop utm_* and well-known click/campaign ids (fbclid, gclid, mc_cid, ...) from the query; surviving params keep their order; compose with canonical_url for the dedup key"),
       (es: Seq[Expression]) => graft.functions.StripTrackingParams(es.head)))
 
-  /** Register the functions on an already-built session. */
-  def register(spark: SparkSession): Unit =
-    definitions.foreach { case (name, _, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "scala_udf")
+  /** Register the functions an already-built session lacks. A session
+    * built `withExtensions(new GraftExtensions)` has them all, so this
+    * registers nothing there — replacing them would log one "replaced
+    * a previously registered function" WARN per name. */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    definitions.foreach { case (name, info, builder) =>
+      val id = FunctionIdentifier(name)
+      if (!registry.functionExists(id)) registry.registerFunction(id, info, builder)
     }
+  }
 }

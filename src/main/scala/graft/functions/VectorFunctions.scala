@@ -34,8 +34,6 @@ object VectorFunctions {
   def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
 
-  def norm(a: Column): Column = sqrt(dot(a, a))
-
   /** Cosine similarity via higher-order functions (oracle-parity tier). */
   def cosine(a: Column, b: Column): Column = {
     val (ad, bd) = (toDoubleArray(a), toDoubleArray(b))

@@ -15,10 +15,20 @@ import graft.functions.TextFunctions
   * candidate-bucket join. Nothing here ever compares all-pairs: exact
   * and prefix dedup group on a fingerprint; Jaccard joins only pairs
   * sharing a shingle; MinHash-LSH joins only pairs sharing a band
-  * bucket. AQE's skew-join handles hot buckets (stopword-like shingles)
-  * at 100 TB.
+  * bucket. Hot shingles are capped by `dfCap` and hot buckets are
+  * fenced by [[Dedup.bucketPairs]]: AQE's skew join would only split a
+  * hot bucket, and a split bucket's self-join stays quadratic.
   */
 object Dedup {
+
+  /** Distinct fingerprints the partial-aggregate map holds before
+    * flushing partials downstream — bounds task heap on mostly-unique
+    * corpora (where keys ≈ rows and a map with no cap would hold the
+    * whole partition as boxed objects, with no spill path). Flushing
+    * early is always correct: the final merge combines any number of
+    * partials per key (count sums; smallest-N of smallest-Ns is the
+    * global smallest-N). */
+  val ExactGroupsFlushKeys = 1 << 16
 
   /** Exact duplicate groups on a full-text fingerprint. The id list is
     * capped at the `maxIds` SMALLEST ids per group (count stays exact):
@@ -35,15 +45,6 @@ object Dedup {
     * formulation shipped and sorted EVERY duplicate row of a hot
     * fingerprint through one task — a disk-spilling straggler at
     * exactly the billion-fold-dup scale this caps.) */
-  /** Distinct fingerprints the partial-aggregate map holds before
-    * flushing partials downstream — bounds task heap on mostly-unique
-    * corpora (where keys ≈ rows and a map with no cap would hold the
-    * whole partition as boxed objects, with no spill path). Flushing
-    * early is always correct: the final merge combines any number of
-    * partials per key (count sums; smallest-N of smallest-Ns is the
-    * global smallest-N). */
-  val ExactGroupsFlushKeys = 1 << 16
-
   def exactGroups(df: DataFrame, idCol: String, textCol: String,
                   maxIds: Int = 100): DataFrame = {
     import org.apache.spark.sql.types._
@@ -394,7 +395,8 @@ object Dedup {
     * [[candidatesFromSignatures]]'s scale note. */
   def bandedPairs(sigs: DataFrame, bands: Int, rowsPerBand: Int,
                                maxBucketSize: Int): DataFrame =
-    pairsFromBandRows(bandRows(sigs, bands, rowsPerBand), maxBucketSize)
+    bucketPairs(bandRows(sigs, bands, rowsPerBand), Seq("band", "bkey"), "doc_id",
+      maxBucketSize)
 
   /** The (doc_id, band, bkey) band table: `bands` rows per doc, ids and
     * two ints only — the narrow frame every candidate branch consumes. */
@@ -409,39 +411,63 @@ object Dedup {
 
   /** Over-occupied buckets of `rows` keyed by `keys`: one row per
     * bucket whose member count exceeds `maxBucketSize`, with the count
-    * as `bucket_size`. This is the hot-bucket side output every banded
-    * pair join in the engine exposes — at crawl scale a bucket this
-    * large is a boilerplate cluster (identical templates, flat
-    * thumbnails, black lead-in frames) whose right treatment is a
-    * per-bucket representative pass, not a pairwise join. The frame is
-    * tiny (usually empty) by construction: it is the tail of a
-    * partial-agg count above a large threshold. */
+    * as `bucket_size`. This is the hot-bucket side output of
+    * [[bucketPairs]]' fence — at crawl scale a bucket this large is a
+    * boilerplate cluster (identical templates, flat thumbnails, black
+    * lead-in frames) whose right treatment is a per-bucket
+    * representative pass, not a pairwise join. The frame is tiny
+    * (usually empty) by construction: it is the tail of a partial-agg
+    * count above a large threshold. */
   def hotBuckets(rows: DataFrame, keys: Seq[String],
                  maxBucketSize: Int): DataFrame =
     rows.groupBy(keys.map(col): _*).agg(count(lit(1)).as("bucket_size"))
       .where(col("bucket_size") > maxBucketSize)
 
-  /** `rows` minus every member of an over-occupied bucket — the ONE
-    * hot-bucket fence shared by every banded candidate join (MinHash
-    * bands here; 16-bit pigeonhole chunks in
-    * [[graft.sources.Multimodal.hammingPairs64]] /
-    * `videoNearDupPairs`). The hot-bucket list is broadcast (tiny by
-    * construction) and removed with a left anti join, so the
-    * downstream self-join's candidate volume is bounded by
-    * buckets × maxBucketSize², never corpus². */
-  def fenceHotBuckets(rows: DataFrame, keys: Seq[String],
-                      maxBucketSize: Int): DataFrame =
-    rows.join(broadcast(hotBuckets(rows, keys, maxBucketSize).select(keys.map(col): _*)),
-      keys, "left_anti")
-
-  /** Distinct (id1, id2) pairs sharing ≥1 (band, bkey) bucket. */
-  private def pairsFromBandRows(banded: DataFrame, maxBucketSize: Int): DataFrame = {
-    val kept = fenceHotBuckets(banded, Seq("band", "bkey"), maxBucketSize)
-    kept.alias("a").join(kept.alias("b"),
-        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"))
-      .dropDuplicates("id1", "id2")
+  /** The ONE banded-pair operator behind every bucket join in the
+    * engine — MinHash bands ([[bandedPairs]], [[minHashVerifiedPairs]],
+    * [[incrementalNearDupsFrame]]), 16-bit hash chunks
+    * ([[simHashPairs]], [[graft.sources.Multimodal.hammingPairs64]],
+    * `videoNearDupPairs`) and multi-probe cosine buckets
+    * ([[Similarity.cosineNearDupsLsh]]): fence → join on the bucket
+    * key → project → gate → ONE `dropDuplicates(identity)`.
+    *
+    *  - Sides: `rows` is side `a`; side `b` is `against` when that is
+    *    another frame (the incremental index, the exact cosine
+    *    buckets), else the fenced `rows` (a self-join). `measures` and
+    *    `gate` read both as `a.<col>` / `b.<col>`.
+    *  - Fence: buckets with more than `maxBucketSize` members on side
+    *    `b` leave side `a` by a left anti join against the broadcast
+    *    hot list ([[hotBuckets]] lists them). The join is an equi-join
+    *    on `keys`, so no pair forms through a hot bucket, and a
+    *    bucket's candidates are at most its `a` rows × cap — never
+    *    corpus².
+    *  - Join: equal `keys` and `idOrder(a.id, b.id)`: `<` emits each
+    *    unordered pair once, `=!=` every cross pair of two frames.
+    *  - Output: `a.id`, `b.id` named by the first two `identity`
+    *    names, then `measures`, filtered by `gate` BEFORE the dedup.
+    *    Duplicates of a pair differ only in the bucket that matched,
+    *    never in its measures, so the gate commutes with the dedup —
+    *    and drops the non-matching majority map-side, before the
+    *    exchange. */
+  def bucketPairs(rows: DataFrame, keys: Seq[String], id: String,
+                  maxBucketSize: Int,
+                  measures: Seq[Column] = Nil,
+                  gate: Option[Column] = None,
+                  identity: Seq[String] = Seq("id1", "id2"),
+                  against: Option[DataFrame] = None,
+                  idOrder: (Column, Column) => Column = _ < _): DataFrame = {
+    val hot = hotBuckets(against.getOrElse(rows), keys, maxBucketSize)
+      .select(keys.map(col): _*)
+    val fenced = rows.join(broadcast(hot), keys, "left_anti")
+    // the id order is a filter, not join-condition text, so it stays
+    // AHEAD of the gate when the optimizer pushes both into the join:
+    // the cheap comparison then skips the gate on half the candidates
+    val pairs = fenced.alias("a")
+      .join(against.getOrElse(fenced).alias("b"),
+        keys.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _))
+      .where(idOrder(col(s"a.$id"), col(s"b.$id")))
+      .select(col(s"a.$id").as(identity(0)) +: col(s"b.$id").as(identity(1)) +: measures: _*)
+    gate.fold(pairs)(pairs.where).dropDuplicates(identity)
   }
 
   /** Sketch→verify near-dup pipeline: MinHash-LSH proposes candidate
@@ -494,12 +520,10 @@ object Dedup {
     // both self-join sides); it is tiny (id + 2 ints, `bands` rows per
     // doc) and primitive-typed, so cache it too. Recall-oriented 32×2
     // banding — see the s-curve note in the scaladoc.
-    val banded = base.select(col("doc_id"),
-        posexplode(SE.bandKeys(col("sigb"), 32, 2)))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bkey")
+    val banded = packedBandRows(base)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     banded.count()
-    val cand = pairsFromBandRows(banded, DefaultMaxBucketSize)
+    val cand = bucketPairs(banded, Seq("band", "bkey"), "doc_id", DefaultMaxBucketSize)
     cand
       .join(base.select(col("doc_id").as("id1"), col("sigb").as("sig1"), col("shhb").as("sh1")), "id1")
       .join(base.select(col("doc_id").as("id2"), col("sigb").as("sig2"), col("shhb").as("sh2")), "id2")
@@ -514,6 +538,14 @@ object Dedup {
       .where(col("jaccard") >= threshold)
       .select(col("id1"), col("id2"), round(col("jaccard"), 4).as("jaccard"))
   }
+
+  /** The (doc_id, band, bkey) table of a packed-signature frame: the
+    * recall-oriented 32×2 banding of [[minHashVerifiedPairs]] and the
+    * incremental join. */
+  private def packedBandRows(sketch: DataFrame): DataFrame =
+    sketch.select(col("doc_id"),
+        posexplode(graft.functions.SketchExpressions.bandKeys(col("sigb"), 32, 2)))
+      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bkey")
 
   /** Sketch passes are CPU-bound map work — spread small inputs over
     * the cores; see [[graft.core.Engine.widen]] for the policy. */
@@ -620,19 +652,10 @@ object Dedup {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     inc0.count() // materialize once: the plan fans out below
     val inc = inc0.where(length(col("shhb")) > 0)
-    def bandsOf(d: DataFrame) = d
-      .select(col("doc_id"), posexplode(SE.bandKeys(col("sigb"), 32, 2)))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bkey")
-    val idxBands = bandsOf(idx)
-    val hot = hotBuckets(idxBands, Seq("band", "bkey"), maxBucketSize)
-      .select("band", "bkey")
-    val cand = bandsOf(inc).join(broadcast(hot), Seq("band", "bkey"), "left_anti")
-      .alias("a")
-      .join(idxBands.alias("b"),
-        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-          col("a.doc_id") =!= col("b.doc_id"))
-      .select(col("a.doc_id").as("new_id"), col("b.doc_id").as("hist_id"))
-      .dropDuplicates("new_id", "hist_id")
+    // hot buckets are counted on the index (history is the big side)
+    val cand = bucketPairs(packedBandRows(inc), Seq("band", "bkey"), "doc_id",
+      maxBucketSize, identity = Seq("new_id", "hist_id"),
+      against = Some(packedBandRows(idx)), idOrder = _ =!= _)
     cand
       .join(inc.select(col("doc_id").as("new_id"), col("sigb").as("sig1"), col("shhb").as("sh1")), "new_id")
       .join(idx.select(col("doc_id").as("hist_id"), col("sigb").as("sig2"), col("shhb").as("sh2")), "hist_id")
@@ -843,8 +866,11 @@ object Dedup {
     * simhash into 4 chunks of 16 bits; any pair within Hamming
     * distance 3 shares ≥1 exact chunk (pigeonhole), so candidates are
     * found with a hash join on (chunk index, chunk value) — never an
-    * all-pairs scan. `maxHamming` then exact-filters candidates.
-    * Output: (id1, id2, hamming), id1 < id2. */
+    * all-pairs scan. `maxHamming` then exact-filters candidates,
+    * before the pair dedup. Chunk buckets larger than
+    * [[DefaultMaxBucketSize]] are fenced out by [[bucketPairs]]: a
+    * template family sharing one simhash chunk would otherwise pair
+    * quadratically. Output: (id1, id2, hamming), id1 < id2. */
   def simHashPairs(df: DataFrame, idCol: String, textCol: String,
                    maxHamming: Int = 3): DataFrame = {
     // the simhash frame feeds both sides of the chunk self-join:
@@ -858,17 +884,26 @@ object Dedup {
       explode(array((0 until 4).map(i =>
         struct(lit(i).as("ci"),
           shiftright(col("sh"), i * 16).bitwiseAND(lit(0xFFFFL)).as("cv"))): _*)).as("ch"))
-    chunked.alias("a")
-      .join(chunked.alias("b"),
-        col("a.ch.ci") === col("b.ch.ci") && col("a.ch.cv") === col("b.ch.cv") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"),
-        hammingDistance(col("a.sh"), col("b.sh")).as("hamming"))
-      .dropDuplicates("id1", "id2")
-      .where(col("hamming") <= maxHamming)
+      .select(col("doc_id"), col("sh"), col("ch.ci"), col("ch.cv"))
+    bucketPairs(chunked, Seq("ci", "cv"), "doc_id", DefaultMaxBucketSize,
+      measures = Seq(hammingDistance(col("a.sh"), col("b.sh")).as("hamming")),
+      gate = Some(col("hamming") <= maxHamming))
   }
 
   // ------------------------------------------------------- components
+
+  /** Lineage cut with an explicit RDD handle, shared by the two
+    * component loops: Dataset.localCheckpoint hides its cached RDD,
+    * so a loop over it LEAKS one checkpoint's storage per iteration
+    * for the life of the session. Holding the RDD ourselves lets each
+    * round free the previous round's blocks. (On an unreliable
+    * cluster swap localCheckpoint for checkpoint here — ONE place.) */
+  private def cutCheckpoint(df: DataFrame)
+      : (DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]) = {
+    val rdd = df.rdd.localCheckpoint()
+    rdd.count() // eager: materialize before the source frame changes
+    (df.sparkSession.createDataFrame(rdd, df.schema), rdd)
+  }
 
   /** Resolve near-dup PAIRS into duplicate GROUPS — the step a real
     * dedup pipeline runs after any pair generator above (keep one
@@ -893,19 +928,6 @@ object Dedup {
     * the right tool is the O(log²n)-round large-star/small-star
     * algorithm (Kiveris et al., "Connected Components in MapReduce and
     * Beyond"), not silent truncation. */
-  /** Lineage cut with an explicit RDD handle, shared by the two
-    * component loops: Dataset.localCheckpoint hides its cached RDD,
-    * so a loop over it LEAKS one checkpoint's storage per iteration
-    * for the life of the session. Holding the RDD ourselves lets each
-    * round free the previous round's blocks. (On an unreliable
-    * cluster swap localCheckpoint for checkpoint here — ONE place.) */
-  private def cutCheckpoint(df: DataFrame)
-      : (DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]) = {
-    val rdd = df.rdd.localCheckpoint()
-    rdd.count() // eager: materialize before the source frame changes
-    (df.sparkSession.createDataFrame(rdd, df.schema), rdd)
-  }
-
   def components(pairs: DataFrame, id1: String = "id1", id2: String = "id2",
                  maxIter: Int = 25): DataFrame = {
     // ids keep their source type: min/least order strings and numerics

@@ -157,8 +157,11 @@ object Similarity {
     * still compared; pairs differing in ≥2 sign bits are the LSH
     * recall loss (rare at near-dup similarity: P(plane splits a pair)
     * = angle/π ≈ 0.14 at cos 0.9, so P(≥2 of 8 planes split) is
-    * small). Candidate volume is (nPlanes+1)·Σ bucket², never
-    * corpus². Output: (id1, id2, sim), id1 < id2, sim ≥ threshold.
+    * small). Exact buckets larger than [[Dedup.DefaultMaxBucketSize]]
+    * are fenced by [[Dedup.bucketPairs]] (no pair forms through
+    * them), so candidate volume is bounded by (nPlanes+1)·corpus·cap,
+    * never corpus². Output: (id1, id2, sim), id1 < id2,
+    * sim ≥ threshold.
     *
     * `scopeCols` (optional) join the bucket key: pairs form only
     * WITHIN equal scope values — the language-/tenant-/shard-scoped
@@ -177,25 +180,19 @@ object Similarity {
     // explicitly.
     val b = emb.withColumn("blk", lshBucket(col("embedding"), dim, nPlanes))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val left = b.select(col("vec_id").as("id1") +: col("embedding").as("e1") +:
-      col("blk") +: scopeCols.map(col): _*)
-    val right = b.select(col("vec_id").as("id2") +: col("embedding").as("e2") +:
+    val exact = b.select(col("vec_id") +: col("embedding") +: col("blk") +:
+      scopeCols.map(col): _*)
+    val probes = b.select(col("vec_id") +: col("embedding") +:
       explode(array((col("blk") +: (0 until nPlanes).map(i =>
         col("blk").bitwiseXOR(lit(1 << i)))): _*)).as("blk") +:
       scopeCols.map(col): _*)
-    left.join(right, "blk" +: scopeCols)
-      .where(col("id1") < col("id2"))
-      // Cosine and threshold BEFORE the multi-probe dedup: a duplicate
-      // (id1,id2) candidate has the identical similarity on every
-      // probe, so projecting to (id1,id2,s) and filtering first is
-      // equivalent — and the dropDuplicates exchange then carries 3
-      // scalars per surviving pair instead of two dim-length double
-      // arrays (~40× less dedup-shuffle volume at dim=64). Pinned by
-      // SimilaritySpec (dedup-exchange schema has no array column).
-      .select(col("id1"), col("id2"),
-        VectorFunctions.cosineFast(col("e1"), col("e2")).as("s"))
-      .where(col("s") >= threshold)
-      .dropDuplicates("id1", "id2")
+    // Occupancy is counted on the exact buckets. The similarity gate
+    // runs before the multi-probe dedup, so its exchange carries 3
+    // scalars per surviving pair, not two dim-length arrays (~40× less
+    // at dim=64; pinned by LshNearDupSpec).
+    Dedup.bucketPairs(probes, "blk" +: scopeCols, "vec_id", Dedup.DefaultMaxBucketSize,
+        measures = Seq(VectorFunctions.cosineFast(col("a.embedding"), col("b.embedding")).as("s")),
+        gate = Some(col("s") >= threshold), against = Some(exact))
       .select(col("id1"), col("id2"), round(col("s"), 4).as("sim"))
   }
 

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
 
 /** Point lookup on a keyed table — `MapFileOutputFormat.getEntry`
   * (.../lib/output/MapFileOutputFormat.java:49,115): the reference
@@ -18,12 +17,6 @@ object Lookup {
 
   def pointLookup(df: DataFrame, key: Column, value: Any): DataFrame =
     df.where(key === value)
-
-  /** Lookup over a bucketed table: additionally prunes to the single
-    * bucket file set owning the key's hash. */
-  def pointLookupTable(spark: SparkSession, table: String,
-                       keyCol: String, value: Any): DataFrame =
-    spark.table(table).where(col(keyCol) === value)
 
   /** BloomMapFile analog (io/BloomMapFile.java:54): the reference bolts
     * a DynamicBloomFilter onto MapFile so a miss is answered without

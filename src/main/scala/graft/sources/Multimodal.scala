@@ -2,7 +2,6 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal-column plumbing: image/audio/video payloads as opaque
   * `binary` columns with typed metadata, plus decode / feature-extract
@@ -25,17 +24,6 @@ import org.apache.spark.sql.types._
   * a wide dependency.
   */
 object Multimodal {
-
-  /** Canonical media schema: payload + typed metadata. */
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("media_type", StringType, nullable = false), // image|audio|video
-    StructField("payload", BinaryType, nullable = true),
-    StructField("meta", StructType(Seq(
-      StructField("format", StringType, nullable = true),
-      StructField("width", IntegerType, nullable = true),
-      StructField("height", IntegerType, nullable = true),
-      StructField("duration_ms", LongType, nullable = true))), nullable = true)))
 
   /** Wrap any table into the media shape (payload from a binary or
     * string column) — used by tests and by ingestion glue. */
@@ -2609,8 +2597,8 @@ object Multimodal {
     * index, chunk value), never an all-pairs scan; `bit_count` of the
     * XOR then filters exactly. Output (id1, id2, hamming), id1 < id2.
     * Scale: chunk buckets larger than `maxBucketSize` are excluded
-    * via [[graft.llm.Dedup.fenceHotBuckets]] (broadcast anti-join) —
-    * the same posture as every banded join in this engine — so the
+    * by [[graft.llm.Dedup.bucketPairs]]' fence (broadcast anti-join) —
+    * the same operator as every banded join in this engine — so the
     * candidate volume is bounded by buckets × cap², never corpus².
     * Degenerate hashes make this fence load-bearing at crawl scale:
     * every flat/solid image dHashes to 0, so one bucket would
@@ -2623,22 +2611,10 @@ object Multimodal {
   def hammingPairs64(df: DataFrame, idCol: String, hashCol: String,
                      maxHamming: Int = 3,
                      maxBucketSize: Int = graft.llm.Dedup.DefaultMaxBucketSize): DataFrame = {
-    val chunks = graft.llm.Dedup.fenceHotBuckets(
-      chunkRows(df, idCol, hashCol), Seq("ci", "cv"), maxBucketSize)
-    chunks.alias("a")
-      .join(chunks.alias("b"),
-        col("a.ci") === col("b.ci") && col("a.cv") === col("b.cv") &&
-          col("a.hp_id") < col("b.hp_id"))
-      .select(col("a.hp_id").as("id1"), col("b.hp_id").as("id2"),
-        bit_count(col("a.hp_hash").bitwiseXOR(col("b.hp_hash"))).as("hamming"))
-      // gate BEFORE the dedup exchange: every duplicate of an
-      // (id1, id2) candidate carries the SAME hash pair (the dup rows
-      // differ only in which chunk matched), so the Hamming filter
-      // commutes with dropDuplicates — and map-side it drops the
-      // overwhelming non-matching majority before anything shuffles
-      // (optimization r20, guide §2.3)
-      .where(col("hamming") <= maxHamming)
-      .dropDuplicates("id1", "id2")
+    graft.llm.Dedup.bucketPairs(chunkRows(df, idCol, hashCol), Seq("ci", "cv"),
+      "hp_id", maxBucketSize,
+      measures = Seq(bit_count(col("a.hp_hash").bitwiseXOR(col("b.hp_hash"))).as("hamming")),
+      gate = Some(col("hamming") <= maxHamming))
   }
 
   /** Channel-0 16-bit samples of an AU payload (μ-law / A-law /
@@ -3756,7 +3732,7 @@ object Multimodal {
     * (`2·matched ≥ min(n1,n2)`), no ratio column. Output (id1, id2,
     * matched_frames, n1, n2), id1 < id2.
     * Scale: (frame_idx, chunk) buckets larger than `maxBucketSize`
-    * are excluded via [[graft.llm.Dedup.fenceHotBuckets]] — the fence
+    * are excluded by [[graft.llm.Dedup.bucketPairs]]' fence — the fence
     * matters MORE here than for stills, because black lead-in frames
     * shared by every video in a crawl put the whole corpus into one
     * (frame_idx=0, chunk=0) bucket; without the fence the join is
@@ -3772,24 +3748,15 @@ object Multimodal {
       .select(col("media_id").cast("long").as("vid"),
         col("frame_idx").cast("int").as("fi"), col("dhash").as("vh"))
     val counts = hashed.groupBy(col("vid")).agg(count(lit(1)).as("nf"))
-    val chunks = graft.llm.Dedup.fenceHotBuckets(
-      videoChunkRows(hashed), Seq("fi", "ci", "cv"), maxBucketSize)
-    val framePairs = chunks.alias("a")
-      .join(chunks.alias("b"),
-        col("a.fi") === col("b.fi") && col("a.ci") === col("b.ci") &&
-          col("a.cv") === col("b.cv") && col("a.vid") < col("b.vid"))
-      .select(col("a.vid").as("id1"), col("b.vid").as("id2"),
-        col("a.fi").as("fi"),
-        bit_count(col("a.vh").bitwiseXOR(col("b.vh"))).as("hamming"))
-      // gate BEFORE the dedup exchange — duplicates of an
-      // (id1, id2, fi) candidate differ only in which chunk matched,
-      // never in the frame-hash pair, so the Hamming filter commutes
-      // with dropDuplicates; map-side it cuts the exchange to the
-      // matching minority (optimization r20, guide §2.3: q266's
-      // neardup leg was 33 of its 67 cpu-s, candidate rows shuffling
-      // just to be dropped)
-      .where(col("hamming") <= maxHamming)
-      .dropDuplicates("id1", "id2", "fi")
+    // the Hamming gate runs before the dedup exchange: without it,
+    // q266's neardup leg spent 33 of its 67 cpu-s shuffling candidate
+    // rows just to drop them (optimization r20)
+    val framePairs = graft.llm.Dedup.bucketPairs(videoChunkRows(hashed),
+      Seq("fi", "ci", "cv"), "vid", maxBucketSize,
+      measures = Seq(col("a.fi").as("fi"),
+        bit_count(col("a.vh").bitwiseXOR(col("b.vh"))).as("hamming")),
+      gate = Some(col("hamming") <= maxHamming),
+      identity = Seq("id1", "id2", "fi"))
     framePairs.groupBy(col("id1"), col("id2"))
       .agg(count(lit(1)).as("matched_frames"))
       .join(counts.withColumnRenamed("vid", "id1").withColumnRenamed("nf", "n1"), "id1")

@@ -30,6 +30,23 @@ class EngineSpec extends SparkSpec {
     assert(fps.nonEmpty)
   }
 
+  test("Engine.session registers only the SQL functions the session lacks") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val registry = spark.sessionState.functionRegistry
+    graft.core.GraftExtensions.register(spark)
+    val names = graft.core.GraftExtensions.definitions.map(_._1)
+    val before = names.map(n => n -> registry.lookupFunction(FunctionIdentifier(n)).get).toMap
+    registry.dropFunction(FunctionIdentifier("simhash64"))
+    Engine.session(shufflePartitions = 8)
+    // a registered function is left as it is (replacing it logs a WARN
+    // per function on every session start) ...
+    names.filterNot(_ == "simhash64").foreach { n =>
+      assert(registry.lookupFunction(FunctionIdentifier(n)).get eq before(n), n)
+    }
+    // ... and a missing one is registered again
+    assert(spark.sql("SELECT simhash64(array('alpha')) AS h").count() == 1)
+  }
+
   test("Engine.session re-asserts runtime confs on a reused session") {
     val s = Engine.session(shufflePartitions = 8)
     assert(s.conf.get("spark.sql.adaptive.enabled") == "true")

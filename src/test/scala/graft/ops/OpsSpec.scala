@@ -77,6 +77,32 @@ class SamplingSpec extends SparkSpec {
     assert(s > n / 30 && s < n / 3) // loose 1/10 bound
   }
 
+  test("md5Filter keeps keys whose 7-hex-digit md5 prefix is ≡ 0 (mod f)") {
+    import spark.implicits._
+    val keys = (0 until 2000).map(i => s"key-$i")
+    def keep(k: String, f: Int): Boolean = {
+      val md5 = java.security.MessageDigest.getInstance("MD5").digest(k.getBytes("UTF-8"))
+      java.lang.Long.parseLong(md5.map("%02x".format(_)).mkString.take(7), 16) % f == 0
+    }
+    val got = Sampling.md5Filter(keys.toDF("k"), col("k"), 7).as[String].collect().toSet
+    assert(got.nonEmpty && got.size < keys.size)
+    assert(got == keys.filter(keep(_, 7)).toSet)
+  }
+
+  test("randomSample is a seeded Bernoulli sample without replacement") {
+    import spark.implicits._
+    val base = spark.range(20000).toDF("id")
+    val s = Sampling.randomSample(base, 0.1).as[Long].collect()
+    // the default seed is 42 and a seed replays the same rows
+    assert(s.toSeq == Sampling.randomSample(base, 0.1, 42L).as[Long].collect().toSeq)
+    assert(Sampling.randomSample(base, 0.1, 7L).as[Long].collect().toSet != s.toSet)
+    assert(s.distinct.length == s.length && s.forall(i => i >= 0 && i < 20000))
+    // per-row Bernoulli(0.1): 2000 expected, sd ≈ 42
+    assert(math.abs(s.length - 2000) < 300, s.length)
+    assert(Sampling.randomSample(base, 0.0).count() == 0)
+    assert(Sampling.randomSample(base, 1.0).count() == 20000)
+  }
+
   test("regexFilter matches pattern") {
     val docs = graft.core.Tables.documents(spark, sf)
     val out = Sampling.regexFilter(docs, col("text"), "spark")
